@@ -7,6 +7,8 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.UnsafeProjection
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, BooleanType, ByteType, DataType, DateType, DecimalType, DoubleType, FloatType, IntegerType, LongType, MapType, NumericType, ShortType, StringType, StructField, StructType, TimestampType}
 
@@ -85,6 +87,12 @@ final class GraftCatalog(val spark: SparkSession, val warehouse: String) {
     try s.iterator().asScala.toList finally s.close()
   }
 
+  /** Recursive delete of `p` (a file or a directory tree); absent is fine. */
+  private def deleteTree(p: Path): Unit = {
+    if (Files.isDirectory(p)) listDir(p).foreach(deleteTree)
+    Files.deleteIfExists(p): Unit
+  }
+
   // ---- DDL (C4, C5, C6) ----
 
   /** Names match the LISTING contract: listTables/listNamespaces filter
@@ -120,11 +128,7 @@ final class GraftCatalog(val spark: SparkSession, val warehouse: String) {
   }
 
   def dropTable(ns: String, name: String): Unit = {
-    def rm(p: Path): Unit = {
-      if (Files.isDirectory(p)) listDir(p).foreach(rm)
-      Files.deleteIfExists(p)
-    }
-    rm(tableDir(ns, name))
+    deleteTree(tableDir(ns, name))
     // a re-created table restarts at v0 on the same paths — drop any
     // cached snapshots/manifests under this table's meta dir
     val prefix = metaDir(ns, name).toAbsolutePath
@@ -289,13 +293,7 @@ final class GraftCatalog(val spark: SparkSession, val warehouse: String) {
   def dropView(ns: String, name: String): Boolean = {
     val d = viewDir(ns, name)
     if (!Files.isDirectory(d)) false
-    else {
-      def rm(p: Path): Unit = {
-        if (Files.isDirectory(p)) listDir(p).foreach(rm)
-        Files.deleteIfExists(p): Unit
-      }
-      rm(d); true
-    }
+    else { deleteTree(d); true }
   }
 
   /** View RENAME: one atomic directory move (the whole version history
@@ -667,87 +665,124 @@ final class GraftCatalog(val spark: SparkSession, val warehouse: String) {
 
   // ---- commits ----
 
-  /** Stage `df` as data files and return their (relative path, size)
-    * entries — distributed executor writes, driver lists ONLY this
-    * commit's staging dir (O(batch), never O(table)). */
-  /** Run `body` with parquet timestamps forced to INT64 micros — the
-    * physical type the Iceberg spec mandates (Spark's default is the
-    * non-standard INT96), so every data file the CATALOG lands is
-    * spec-exportable without rewrite ([[IcebergExport]] verifies the
-    * footers physically). Scoped to catalog writes rather than set at
-    * session bootstrap because the driver's correctness harness
-    * hash-compares Verify's RESULT dumps as naive INT96 timestamps —
-    * a session-wide flip would change the dump dtype, not the data.
-    * Ref-counted PER SESSION (spark.conf is session-scoped, and one JVM
-    * may run catalogs on several sessions — a global count would let the
-    * first-exiting session skip its restore): commits may stage
-    * concurrently (CAS contention), so the conf holds while any stager
-    * of THAT session is active and restores after its last. */
-  private def withMicrosTimestamps[T](body: => T): T = {
-    val key = "spark.sql.parquet.outputTimestampType"
-    GraftCatalog.microsLock.synchronized {
-      val st = GraftCatalog.microsBySession.computeIfAbsent(spark,
-        s => new GraftCatalog.MicrosState(s.conf.get(key))) // fresh at depth 0
-      st.depth += 1
-      spark.conf.set(key, "TIMESTAMP_MICROS")
-    }
-    try body finally GraftCatalog.microsLock.synchronized {
-      val st = GraftCatalog.microsBySession.get(spark)
-      st.depth -= 1
-      if (st.depth == 0) {
-        spark.conf.set(key, st.prev)
-        GraftCatalog.microsBySession.remove(spark): Unit
-      }
-    }
-  }
-
+  /** Stage `df` as data files through ONE Spark job and return each
+    * file's (table-relative path, account), sorted by path. Every task
+    * writes its partition through [[RowParquetWriter]], which records
+    * the file's row count and bounds, the `derived` stats (stat key ->
+    * expression over `df`) and the Bloom bitsets of `bloomCols` while it
+    * writes — no stats job re-reads the staged bytes, the driver lists
+    * no directory, and the session conf is never touched (the writer
+    * pins INT64 micros itself).
+    *
+    * File layout: a `df` whose optimized plan is a driver-local
+    * `LocalRelation` lands in ceil(exact bytes / the table's
+    * `write.target-file-size-bytes`) files — one for any realistic local
+    * batch, where Spark's local-scan slicing would land one tiny file
+    * per core. Any other input keeps its partitioning (one file per
+    * non-empty task), so deliberate layouts (range clustering,
+    * compaction widths) stand. `alignCols` (partition-ALIGNED staging,
+    * for spec'd tables and property-honoring writers) sorts each task by
+    * the partition-value expressions and starts a new file at every
+    * tuple boundary: each file holds exactly ONE partition tuple, which
+    * no range clustering can guarantee (a sampled range boundary can
+    * straddle a tuple). That is what makes per-file day bounds exact and
+    * bucket derived stats single-valued (min == max) — what the Iceberg
+    * export derives provable partition tuples from. An empty unaligned
+    * input still lands one zero-row file. */
   private def stageDataFiles(ns: String, name: String, df: DataFrame,
-                             alignCols: Seq[Column] = Seq.empty): Seq[(String, Long)] = {
-    val stagingId = UUID.randomUUID().toString.take(8)
-    val outDir = dataDir(ns, name).resolve(stagingId)
-    if (alignCols.isEmpty) {
-      withMicrosTimestamps { df.write.parquet(outDir.toString) }
-      listDir(outDir)
-        .map(_.getFileName.toString).filter(_.endsWith(".parquet")).sorted
-        .map(f => s"data/$stagingId/$f" -> Files.size(outDir.resolve(f)))
-    } else {
-      // partition-ALIGNED staging (spec'd tables, property-honoring
-      // writers): each data file holds exactly ONE partition tuple, by
-      // construction — `partitionBy` on temporary transform-value
-      // columns splits every task's output at tuple boundaries, which
-      // no amount of range clustering can guarantee (a range boundary
-      // sampled mid-value straddles it). The temp columns become
-      // directory keys and are STRIPPED from the files, so the data
-      // schema is untouched; manifests list leaf files explicitly, so
-      // the dirs are cosmetic (reads never partition-infer: they open
-      // leaf files). This is what makes per-file day bounds exact and
-      // bucket derived stats single-valued (min == max), i.e. what the
-      // Iceberg export derives provable partition tuples from.
-      val tmp = alignCols.indices.map(i => s"__ptw_$i")
-      require(!df.schema.fieldNames.exists(_.startsWith("__ptw_")),
-        "column names starting with '__ptw_' are reserved for partition-" +
-          "aligned staging")
-      val aug = tmp.zip(alignCols).foldLeft(df) { case (d, (n, c)) =>
-        d.withColumn(n, c) }
-      withMicrosTimestamps {
-        aug.write.partitionBy(tmp: _*).parquet(outDir.toString)
-      }
-      val s = Files.walk(outDir)
-      val leaves = try {
-        s.iterator().asScala.filter(p => p.toString.endsWith(".parquet") &&
-          Files.isRegularFile(p)).toList
-      } finally s.close()
-      leaves.map(p => s"data/$stagingId/${outDir.relativize(p)}")
-        .sorted.map(rel =>
-          rel -> Files.size(tableDir(ns, name).resolve(rel)))
+                             props: Map[String, String],
+                             alignCols: Seq[Column] = Seq.empty,
+                             derived: Seq[(String, Column)] = Seq.empty,
+                             bloomCols: Seq[String] = Seq.empty)
+      : Seq[(String, RowParquetWriter.Written)] = {
+    val fields = df.schema.fieldNames
+    // the reserved pseudo-column must stay reserved: a REAL column named
+    // __rows would have its bounds overwritten by the row count and
+    // readWhere would then prune files on bogus bounds — reject loudly
+    require(!fields.contains(GraftCatalog.RowsStatKey),
+      s"column name '${GraftCatalog.RowsStatKey}' is reserved for manifest row counts")
+    val blooms = bloomCols.filter(fields.contains)
+    // versioned key namespace for micros-form timestamp blooms (see
+    // GraftCatalog.bloomKeyOf); a REAL column under it would alias a
+    // timestamp's bloom and mis-prune — refuse loudly like __pt_/__ptw_
+    require(blooms.isEmpty || !fields.exists(_.startsWith("__tsb_")),
+      "column names starting with '__tsb_' are reserved for timestamp " +
+        "bloom keys")
+    require(alignCols.isEmpty || !fields.exists(_.startsWith("__ptw_")),
+      "column names starting with '__ptw_' are reserved for partition-" +
+        "aligned staging")
+    val laid = df.queryExecution.optimizedPlan match {
+      case local: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
+        val toUnsafe = UnsafeProjection.create(local.schema)
+        val bytes = local.data.iterator.map(r => toUnsafe(r).getSizeInBytes.toLong).sum
+        val n = math.ceil(bytes.toDouble /
+          GraftCatalog.targetFileSizeOf(s"$ns.$name", props)).max(1.0).min(Int.MaxValue).toInt
+        if (n == 1) df.coalesce(1) else df.repartition(n)
+      case _ => df
+    }
+    // recorded values ride the task's projection AFTER the data fields
+    // (the writer never writes them): derived stats, Bloom positions —
+    // pmod(xxhash64(i, value), BloomBits) over the value's string form,
+    // timestamps hashing their tz-stable micros form (see
+    // stagedFileBlooms) — and last the partition-tuple values
+    val bloomTs = blooms.map(c => c -> (df.schema(c).dataType == TimestampType))
+    val bloomPositions = bloomTs.map { case (c, isTs) =>
+      val hashed =
+        if (isTs) unix_micros(col(c)).cast("string") else col(c).cast("string")
+      array((0 until GraftCatalog.BloomHashes).map(i =>
+        pmod(xxhash64(lit(i), hashed), lit(GraftCatalog.BloomBits.toLong)).cast("int")): _*)
+    }
+    val align = alignCols.indices.map(i => s"__ptw_$i")
+    val extras = derived.zipWithIndex.map { case ((_, e), j) => e.as(s"__ptd_$j") } ++
+      bloomPositions.zipWithIndex.map { case (e, j) => e.as(s"__ptb_$j") } ++
+      alignCols.zip(align).map { case (c, n) => c.as(n) }
+    val rows0 = laid.select(col("*") +: extras: _*)
+    val rows =
+      if (align.isEmpty) rows0 else rows0.sortWithinPartitions(align.map(col): _*)
+    val stagingRel = s"data/${UUID.randomUUID().toString.take(8)}"
+    val tableAbs = tableDir(ns, name).toAbsolutePath.toString
+    val conf = new org.apache.spark.util.SerializableConfiguration(
+      spark.sparkContext.hadoopConfiguration)
+    val task = new RowParquetWriter.StageTask(tableAbs, stagingRel,
+      rows.schema.json, fields.length, derived.map(_._1),
+      bloomTs.map { case (c, isTs) =>
+        GraftCatalog.bloomKeyOf(if (isTs) Some(TimestampType) else None, c) },
+      align.size, conf)
+    val qe = rows.queryExecution
+    val written = try {
+      SQLExecution.withNewExecutionId(qe, Some(s"stage $ns.$name")) {
+        spark.sparkContext.runJob(qe.toRdd, task.run _)
+      }.toSeq.flatten
+    } catch { case e: Throwable =>
+      deleteTree(tableDir(ns, name).resolve(stagingRel)); throw e
+    }
+    if (written.nonEmpty || align.nonEmpty) written.sortBy(_._1)
+    else {
+      val rel = s"$stagingRel/part-empty.parquet"
+      Seq(rel -> new RowParquetWriter(s"$tableAbs/$rel",
+        StructType(rows.schema.fields.take(fields.length)), conf.value).close())
     }
   }
 
-  /** Per-file column bounds for a freshly-staged batch — ONE distributed
-    * aggregate over the staged files (grouped by input_file_name, map-side
-    * combined), keyed back to the manifest-relative paths. Only atomic,
-    * orderable column types carry bounds; anything else is simply never
-    * pruned. All-null columns in a file record no bound (same effect). */
+  /** (path, size) entries of staged files. */
+  private def entriesOf(files: Seq[(String, RowParquetWriter.Written)]): Seq[(String, Long)] =
+    files.map { case (p, f) => p -> f.size }
+
+  /** The manifest of freshly staged data files, carrying the stats and
+    * blooms their writers recorded. */
+  private def writeStagedManifest(ns: String, name: String,
+                                  files: Seq[(String, RowParquetWriter.Written)]): String =
+    writeManifest(ns, name, entriesOf(files),
+      files.map { case (p, f) => p -> f.stats }.toMap,
+      files.map { case (p, f) => p -> f.blooms }.toMap)
+
+  /** Per-file column bounds for files graft did NOT write (stats
+    * backfill, REST-landed files) — ONE distributed aggregate over the
+    * files (grouped by input_file_name, map-side combined), keyed back to
+    * the manifest-relative paths. Files graft stages get the same stats
+    * from their writer ([[stageDataFiles]]). Only atomic, orderable
+    * column types carry bounds; anything else is simply never pruned.
+    * All-null columns in a file record no bound (same effect). */
   private def stagedFileStats(ns: String, name: String,
                               entries: Seq[(String, Long)],
                               schema: StructType,
@@ -1033,13 +1068,13 @@ final class GraftCatalog(val spark: SparkSession, val warehouse: String) {
         Seq.empty
       else {
         val liveDf = live.toDF("file_path")
-        stageDataFiles(ns, name, spark.read
+        entriesOf(stageDataFiles(ns, name, spark.read
           .parquet(posEntries.map(e => tableDir(ns, name).resolve(e._1).toString): _*)
           .select(col("file_path"), col("pos").cast("long").as("pos"))
           .distinct()
           .join(broadcast(liveDf), Seq("file_path"), "left_semi")
           .repartitionByRange(parts, col("file_path"), col("pos"))
-          .sortWithinPartitions(col("file_path"), col("pos")))
+          .sortWithinPartitions(col("file_path"), col("pos")), head.properties))
       }
     var staged: Seq[String] = Seq.empty
     try {
@@ -1340,8 +1375,9 @@ final class GraftCatalog(val spark: SparkSession, val warehouse: String) {
     }
   }
 
-  /** Per-file Bloom filters for `bloomCols` over a freshly-staged batch —
-    * one distributed job per column: the k bit positions are a codegen'd
+  /** Per-file Bloom filters for `bloomCols` over files graft did NOT
+    * write (REST-landed files, COW replacements) — one distributed job
+    * per column: the k bit positions are a codegen'd
     * projection, exploded and collapsed to ≤ BloomBits distinct ints per
     * file by collect_set (bounded however many rows the file has), then
     * packed into a base64 bitset on the driver. Membership is over the
@@ -1361,12 +1397,10 @@ final class GraftCatalog(val spark: SparkSession, val warehouse: String) {
                                bloomCols: Seq[String]): Map[String, Map[String, String]] = {
     val cols = bloomCols.filter(c => schema.fieldNames.contains(c))
     if (cols.isEmpty || entries.isEmpty) return Map.empty
-    // FULL-path matching, exactly like stagedFileStats' byAbs:
-    // partition-ALIGNED staging writes the same task's output into
-    // several __ptw_* directories with IDENTICAL part-file basenames
-    // (data/s/__ptw_0=a/part-0.parquet and .../__ptw_0=b/part-0.parquet
-    // from one task) — a basename map silently keeps ONE of them and
-    // drops every colliding file's bloom (pruning rots, no error)
+    // FULL-path matching, exactly like stagedFileStats' byAbs: landed
+    // files from different directories can share a basename — a
+    // basename map silently keeps ONE of them and drops every colliding
+    // file's bloom (pruning rots, no error)
     val byAbs = entries.map { case (p, _) =>
       tableDir(ns, name).resolve(p).toAbsolutePath.toString -> p }.toMap
     val df = spark.read.schema(schema)
@@ -1418,17 +1452,9 @@ final class GraftCatalog(val spark: SparkSession, val warehouse: String) {
   private def cleanupStaged(ns: String, name: String,
                             entries: Seq[(String, Long)], manifests: Seq[String]): Unit = {
     // staged files share one per-commit staging dir — remove it whole
-    // (including Spark's _SUCCESS / checksum siblings)
+    // (including the writers' checksum siblings)
     entries.map { case (p, _) => tableDir(ns, name).resolve(p).getParent }
-      .distinct.foreach { dir =>
-        if (Files.isDirectory(dir)) {
-          def rm(p: Path): Unit = {
-            if (Files.isDirectory(p)) listDir(p).foreach(rm)
-            Files.deleteIfExists(p): Unit
-          }
-          rm(dir)
-        }
-      }
+      .distinct.foreach(deleteTree)
     manifests.foreach { m =>
       val ap = tableDir(ns, name).resolve(m).toAbsolutePath
       manifestCache.remove(ap)
@@ -1504,7 +1530,9 @@ final class GraftCatalog(val spark: SparkSession, val warehouse: String) {
       blockedBy = () => Files.isRegularFile(txnBarrierFile(ns, name)))(mkSnapshot)
 
   /** C3/C12: append `df` as a new version with optimistic CAS on the
-    * version number. Data files land distributed (executor writes); one
+    * version number. Data files land in ONE Spark job whose tasks write
+    * them and record their stats and blooms as they go
+    * ([[stageDataFiles]]; a driver-local batch lands as one file); one
     * manifest records the added files; the version JSON carries pointers
     * and summary stats only. Schema is validated additively against the
     * current version and recorded (a mismatched append is REJECTED before
@@ -1536,24 +1564,23 @@ final class GraftCatalog(val spark: SparkSession, val warehouse: String) {
     // derived-stat derivation
     val pspec = GraftCatalog.validatedPartitionSpec(s"$ns.$name", props, curSchema)
     // property-honoring writers (SQL INSERT, compact) align files to
-    // partition tuples; raw commitAppend keeps the caller's layout
-    val entries = stageDataFiles(ns, name, pdf,
-      if (alignSpec) GraftCatalog.partitionAlignColumnsOf(pspec, curSchema)
-      else Seq.empty)
-    // partitioned tables record the per-file bucket value as a derived
+    // partition tuples; raw commitAppend keeps the caller's layout.
+    // Partitioned tables record the per-file bucket value as a derived
     // stat (what the Iceberg export derives partition tuples from)
-    val derived = GraftCatalog.partitionDerivedStatsOf(pspec, curSchema)
-    // the stats aggregate and manifest write sit INSIDE the cleanup
-    // scope: a failure there (executor loss mid-stats, disk error) must
-    // reclaim the staged data dir too, not only a failed CAS
+    val files = stageDataFiles(ns, name, pdf, props,
+      if (alignSpec) GraftCatalog.partitionAlignColumnsOf(pspec, curSchema)
+      else Seq.empty,
+      GraftCatalog.partitionDerivedStatsOf(pspec, curSchema),
+      bloomCols.map(c => pm.getOrElse(c, c)))
+    val entries = entriesOf(files)
+    // the manifest write sits INSIDE the cleanup scope: a failure there
+    // (disk error) must reclaim the staged data dir too, not only a
+    // failed CAS
     var staged: Seq[String] = Seq.empty
     try {
       val newManifest =
         if (entries.isEmpty) None
-        else Some(writeManifest(ns, name, entries,
-          stagedFileStats(ns, name, entries, pdf.schema, derived),
-          stagedFileBlooms(ns, name, entries, pdf.schema,
-            bloomCols.map(c => pm.getOrElse(c, c)))))
+        else Some(writeStagedManifest(ns, name, files))
       staged = newManifest.toSeq
       casCommit(ns, name, maxRetries) { parent =>
         // re-check inside the CAS closure: a concurrent duplicate that won
@@ -1612,22 +1639,21 @@ final class GraftCatalog(val spark: SparkSession, val warehouse: String) {
     val pm = curSchema.map(GraftCatalog.physicalMap).getOrElse(Map.empty)
     val props = parent0.map(_.properties).getOrElse(Map.empty)
     val pspec = GraftCatalog.validatedPartitionSpec(s"$ns.$name", props, curSchema)
-    val entries = stageDataFiles(ns, name, pdf,
+    val files = stageDataFiles(ns, name, pdf, props,
       if (alignSpec) GraftCatalog.partitionAlignColumnsOf(pspec, curSchema)
-      else Seq.empty)
-    val derived = GraftCatalog.partitionDerivedStatsOf(pspec, curSchema)
+      else Seq.empty,
+      GraftCatalog.partitionDerivedStatsOf(pspec, curSchema),
+      bloomCols.map(c => pm.getOrElse(c, c)))
+    val entries = entriesOf(files)
     // an aborted conditional replace (or exhausted CAS) must not orphan
     // its staged data + manifest — they are reachable from no version.
-    // The stats/manifest steps sit inside the cleanup scope too: a
-    // failure there must reclaim the staged data dir
+    // The manifest step sits inside the cleanup scope too: a failure
+    // there must reclaim the staged data dir
     var staged: Seq[String] = Seq.empty
     try {
       val manifest =
         if (entries.isEmpty) Seq.empty
-        else Seq(writeManifest(ns, name, entries,
-          stagedFileStats(ns, name, entries, pdf.schema, derived),
-          stagedFileBlooms(ns, name, entries, pdf.schema,
-            bloomCols.map(c => pm.getOrElse(c, c)))))
+        else Seq(writeStagedManifest(ns, name, files))
       staged = manifest
       casCommit(ns, name, maxRetries, allowMaintenanceId = maintenance) { parent =>
         expectedParentSeq.foreach { exp =>
@@ -1702,7 +1728,7 @@ final class GraftCatalog(val spark: SparkSession, val warehouse: String) {
       require(prior == pkeys.columns.toSet,
         s"equality-delete columns ${pkeys.columns.toSet} differ from the table's existing $prior")
     }
-    val entries = stageDataFiles(ns, name, pkeys)
+    val entries = entriesOf(stageDataFiles(ns, name, pkeys, parent0.properties))
     var staged: Seq[String] = Seq.empty
     try {
       val newManifest =
@@ -1765,12 +1791,13 @@ final class GraftCatalog(val spark: SparkSession, val warehouse: String) {
     }
     require(positions.columns.toSeq.sorted == Seq("file_path", "pos"),
       s"position deletes carry exactly (file_path, pos); got ${positions.columns.toSeq}")
-    require(latest(ns, name).isDefined,
-      s"cannot delete from empty table $ns.$name")
+    val parent0 = latest(ns, name)
+    require(parent0.isDefined, s"cannot delete from empty table $ns.$name")
     val referenced = positions.select("file_path").distinct()
       .collect().map(_.getString(0))
-    val entries = stageDataFiles(ns, name,
-      positions.select(col("file_path"), col("pos").cast("long").as("pos")))
+    val entries = entriesOf(stageDataFiles(ns, name,
+      positions.select(col("file_path"), col("pos").cast("long").as("pos")),
+      parent0.get.properties))
     var staged: Seq[String] = Seq.empty
     try {
       val newManifest =
@@ -1856,9 +1883,10 @@ final class GraftCatalog(val spark: SparkSession, val warehouse: String) {
             s"upsert key columns ${pKeyCols.toSet} differ from the table's delete columns $prior")
         }
         val prows = toPhysicalDf(rows, curSchema)
-        val delEntries = stageDataFiles(ns, name,
-          prows.select(pKeyCols.map(col): _*).distinct())
-        val dataEntries = stageDataFiles(ns, name, prows)
+        val delEntries = entriesOf(stageDataFiles(ns, name,
+          prows.select(pKeyCols.map(col): _*).distinct(), parent0.properties))
+        val rowFiles = stageDataFiles(ns, name, prows, parent0.properties)
+        val dataEntries = entriesOf(rowFiles)
         var staged: Seq[String] = Seq.empty
         try {
           val dManifest =
@@ -1866,8 +1894,7 @@ final class GraftCatalog(val spark: SparkSession, val warehouse: String) {
             else Some(writeManifest(ns, name, delEntries, prefix = "d"))
           val mManifest =
             if (dataEntries.isEmpty) None
-            else Some(writeManifest(ns, name, dataEntries,
-              stagedFileStats(ns, name, dataEntries, prows.schema)))
+            else Some(writeStagedManifest(ns, name, rowFiles))
           staged = dManifest.toSeq ++ mManifest.toSeq
           casCommit(ns, name, maxRetries) { parent =>
             commitId.flatMap(byCommitId(ns, name, _)).foreach { prior =>
@@ -1943,7 +1970,7 @@ final class GraftCatalog(val spark: SparkSession, val warehouse: String) {
           .unionByName(toPhysicalDf(deleteKeys, curSchema)
             .select(pKeyCols.map(col): _*))
           .distinct()
-        val delEntries = stageDataFiles(ns, name, allKeys)
+        val delEntries = entriesOf(stageDataFiles(ns, name, allKeys, parent0.properties))
         // the streaming cdc sink is a PROPERTY-HONORING writer like the
         // SQL INSERT path: a partitioned/bloom-indexed replica keeps its
         // declared layout batch over batch (aligned files, derived
@@ -1954,8 +1981,10 @@ final class GraftCatalog(val spark: SparkSession, val warehouse: String) {
           props, curSchema)
         val bloomCols = GraftCatalog.writeBloomColumnsOf(props, pspec)
           .map(c => pm.getOrElse(c, c))
-        val dataEntries = stageDataFiles(ns, name, prows,
-          GraftCatalog.partitionAlignColumnsOf(pspec, curSchema))
+        val rowFiles = stageDataFiles(ns, name, prows, props,
+          GraftCatalog.partitionAlignColumnsOf(pspec, curSchema),
+          GraftCatalog.partitionDerivedStatsOf(pspec, curSchema), bloomCols)
+        val dataEntries = entriesOf(rowFiles)
         var staged: Seq[String] = Seq.empty
         try {
           val dManifest =
@@ -1963,11 +1992,7 @@ final class GraftCatalog(val spark: SparkSession, val warehouse: String) {
             else Some(writeManifest(ns, name, delEntries, prefix = "d"))
           val mManifest =
             if (dataEntries.isEmpty) None
-            else Some(writeManifest(ns, name, dataEntries,
-              stagedFileStats(ns, name, dataEntries, prows.schema,
-                GraftCatalog.partitionDerivedStatsOf(pspec, curSchema)),
-              stagedFileBlooms(ns, name, dataEntries, prows.schema,
-                bloomCols)))
+            else Some(writeStagedManifest(ns, name, rowFiles))
           staged = dManifest.toSeq ++ mManifest.toSeq
           casCommit(ns, name, maxRetries) { parent =>
             commitId.flatMap(byCommitId(ns, name, _)).foreach { prior =>
@@ -2202,15 +2227,7 @@ final class GraftCatalog(val spark: SparkSession, val warehouse: String) {
     * unset); malformed values refuse loudly rather than silently
     * compacting to a default. */
   def targetFileSizeBytes(ns: String, name: String): Long =
-    tableProperties(ns, name).get(GraftCatalog.TargetFileSizeProp) match {
-      case Some(v) =>
-        val n = try v.trim.toLong catch { case _: NumberFormatException =>
-          throw new IllegalArgumentException(
-            s"$ns.$name: ${GraftCatalog.TargetFileSizeProp} = '$v' is not a byte count") }
-        require(n > 0, s"$ns.$name: ${GraftCatalog.TargetFileSizeProp} must be positive, got $n")
-        n
-      case None => 512L * 1024 * 1024
-    }
+    GraftCatalog.targetFileSizeOf(s"$ns.$name", tableProperties(ns, name))
 
   /** Metadata-only MIN/MAX of a prunable column: fold the per-file
     * bounds the commit job recorded — exact (file bounds ARE the file's
@@ -2530,8 +2547,8 @@ final class GraftCatalog(val spark: SparkSession, val warehouse: String) {
       s"position deletes carry exactly (file_path, pos); got ${p.columns.toSeq}"))
     val referenced = posDeletes.toSeq.flatMap(_.select("file_path")
       .distinct().collect().map(_.getString(0)))
-    val posEntries = posDeletes.toSeq.flatMap(p => stageDataFiles(ns, name,
-      p.select(col("file_path"), col("pos").cast("long").as("pos"))))
+    val posEntries = posDeletes.toSeq.flatMap(p => entriesOf(stageDataFiles(ns, name,
+      p.select(col("file_path"), col("pos").cast("long").as("pos")), props)))
     require(dataEntries.nonEmpty || eqEntries.nonEmpty || posEntries.nonEmpty,
       "MoR commit carries no data files and no deletes")
     var staged: Seq[String] = Seq.empty
@@ -3128,13 +3145,13 @@ final class GraftCatalog(val spark: SparkSession, val warehouse: String) {
     validatedSchemaJson(ns, name, Some(head0), df.schema)
     val pdf = toPhysicalDf(df,
       head0.schemaJson.map(DataType.fromJson(_).asInstanceOf[StructType]))
-    val entries = stageDataFiles(ns, name, pdf)
+    val files = stageDataFiles(ns, name, pdf, head0.properties)
+    val entries = entriesOf(files)
     var staged: Seq[String] = Seq.empty
     try {
       val newManifest =
         if (entries.isEmpty) None
-        else Some(writeManifest(ns, name, entries,
-          stagedFileStats(ns, name, entries, pdf.schema)))
+        else Some(writeStagedManifest(ns, name, files))
       staged = newManifest.toSeq
       casCommitAt(ns, name, maxRetries,
           () => Some(branchHead(ns, name, branch)),
@@ -3304,12 +3321,7 @@ final class GraftCatalog(val spark: SparkSession, val warehouse: String) {
     * the orphan sweep, exactly like files of expired versions. */
   def dropBranch(ns: String, name: String, branch: String): Unit = {
     requireBranchName(branch)
-    val bd = branchDir(ns, name, branch)
-    def rm(p: Path): Unit = {
-      if (Files.isDirectory(p)) listDir(p).foreach(rm)
-      Files.deleteIfExists(p): Unit
-    }
-    rm(bd)
+    deleteTree(branchDir(ns, name, branch))
   }
 
   // ---- multi-table transactions (atomic cross-table publish) ----
@@ -4485,17 +4497,6 @@ object GraftCatalog {
     case other => throw new IllegalArgumentException(s"unknown manifest-unit kind $other")
   }
 
-  // withMicrosTimestamps ref-count (JVM-global: the conf is per-session
-  // but tests share one session across many catalogs; prev is the
-  // INT96 default everywhere in practice)
-  // per-session staging ref count for withMicrosTimestamps (identity
-  // keys: sessions hash by content-free default object identity; a
-  // WeakHashMap would also work but sessions are few and short-lived
-  // entries self-remove at depth 0)
-  private[catalog] final class MicrosState(var prev: String) { var depth: Int = 0 }
-  private[catalog] val microsLock = new Object
-  private[catalog] val microsBySession =
-    new java.util.IdentityHashMap[SparkSession, MicrosState]()
   /** Column types whose manifest bounds support pruning: atomic and
     * totally ordered with an order-preserving string form (numerics are
     * re-parsed before comparison). Timestamps are deliberately EXCLUDED:
@@ -4602,6 +4603,18 @@ object GraftCatalog {
   /** Engine-consulted property keys (Iceberg's names, so a migrating
     * user's runbooks keep working). */
   val TargetFileSizeProp = "write.target-file-size-bytes"
+
+  /** [[TargetFileSizeProp]] of a table's properties (512 MiB when unset). */
+  private[catalog] def targetFileSizeOf(table: String, props: Map[String, String]): Long =
+    props.get(TargetFileSizeProp) match {
+      case Some(v) =>
+        val n = try v.trim.toLong catch { case _: NumberFormatException =>
+          throw new IllegalArgumentException(
+            s"$table: $TargetFileSizeProp = '$v' is not a byte count") }
+        require(n > 0, s"$table: $TargetFileSizeProp must be positive, got $n")
+        n
+      case None => 512L * 1024 * 1024
+    }
   /** Comma-separated column list the SQL INSERT path bloom-indexes. */
   val BloomColumnsProp = "write.bloom-columns"
   /** Comma-separated column list the SQL INSERT path range-clusters by

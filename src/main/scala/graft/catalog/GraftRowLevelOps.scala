@@ -463,7 +463,7 @@ private[catalog] object CowPruning {
     def form(c: String, v: Any): String =
       dtOf(c).map(GraftCatalog.statForm(_, v)).getOrElse(v.toString)
     // timestamps are bloom-safe since the build side hashes the epoch-
-    // micros form (GraftCatalog.stagedFileBlooms) — `form` renders the
+    // micros form (GraftCatalog.stageDataFiles) — `form` renders the
     // probe identically, so bucket(n, timestampCol) point lookups prune
     def bloomSafe(c: String): Boolean = dtOf(c).exists {
       case org.apache.spark.sql.types.ByteType | org.apache.spark.sql.types.ShortType |
@@ -759,12 +759,12 @@ private[catalog] final class GraftDeltaDataWriter(tableDirAbs: String,
   override def commit(): WriterCommitMessage = {
     val data =
       if (dataW == null) Nil
-      else { val (size, _, stats) = dataW.close(); dataW = null
-             Seq((dataRel, size, stats)) }
+      else { val f = dataW.close(); dataW = null
+             Seq((dataRel, f.size, f.stats)) }
     val dels =
       if (delW == null) Nil
-      else { val (size, _, _) = delW.close(); delW = null
-             Seq((delRel, size)) }
+      else { val f = delW.close(); delW = null
+             Seq((delRel, f.size)) }
     GraftDeltaFilesMessage(data, dels, referenced.toSet)
   }
 
@@ -814,9 +814,9 @@ private[catalog] final class GraftCowDataWriter(tableDirAbs: String,
   override def commit(): WriterCommitMessage =
     if (w == null) GraftCowFilesMessage(Nil)
     else {
-      val (size, _, stats) = w.close()
+      val f = w.close()
       w = null
-      GraftCowFilesMessage(Seq((rel, size, stats)))
+      GraftCowFilesMessage(Seq((rel, f.size, f.stats)))
     }
 
   override def abort(): Unit = if (w != null) { w.abort(); w = null }

@@ -54,9 +54,8 @@ import org.apache.spark.sql.types._
   *
   * Scope and honesty:
   *  - the Iceberg spec mandates INT64-micros timestamps; the catalog
-  *    stages every data file with `spark.sql.parquet.
-  *    outputTimestampType=TIMESTAMP_MICROS` (GraftCatalog.
-  *    withMicrosTimestamps), so natively-written files are always
+  *    stages every data file through [[RowParquetWriter]], which pins
+  *    INT64-micros timestamps, so natively-written files are always
   *    spec-physical. The copy tasks still verify each file's FOOTER and
   *    `timestampInt96Risk` reports true only if a foreign/pre-upgrade
   *    INT96 file is physically present (a strict Iceberg reader may
@@ -464,7 +463,7 @@ object IcebergExport {
     //    each copy task also checks its file's parquet footer for the
     //    INT96 physical type the Iceberg spec forbids — a PHYSICAL
     //    verdict, not a schema guess: the catalog's STAGING path forces
-    //    TIMESTAMP_MICROS (GraftCatalog.withMicrosTimestamps), so this is
+    //    TIMESTAMP_MICROS (RowParquetWriter pins it), so this is
     //    structurally false for catalog-staged files and can only fire
     //    for files a foreign / non-staging writer landed.
     val tableRoot = Paths.get(cat.warehouse, ns, name)

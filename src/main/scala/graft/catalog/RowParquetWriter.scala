@@ -6,30 +6,43 @@ import org.apache.parquet.hadoop.ParquetWriter
 import org.apache.parquet.hadoop.api.WriteSupport
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
 import org.apache.parquet.hadoop.util.HadoopOutputFile
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Cast, Literal}
+import org.apache.spark.TaskContext
+import org.apache.spark.sql.catalyst.{InternalRow, ProjectingInternalRow}
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast, Literal, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.execution.datasources.parquet.ParquetWriteSupport
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.util.SerializableConfiguration
 
 /** Executor-side single-file parquet writer for [[InternalRow]]s — the
-  * write half a DSv2 `BatchWrite` needs (Spark's V1 write bridge covers
-  * only INSERT paths; `ReplaceData` / `WriteDelta` physical plans hand
-  * each task raw InternalRows). Delegates encoding to Spark's OWN
+  * one writer every graft data file goes through: every staged commit
+  * (append, replace, compaction, upsert, cdc, delete files, branch
+  * appends — [[RowParquetWriter.StageTask]]) and the DSv2 row-level
+  * `BatchWrite`s. Delegates encoding to Spark's OWN
   * `ParquetWriteSupport`, so files are byte-compatible with what
   * `df.write.parquet` produces — with timestamps pinned to INT64 micros
-  * (the catalog's Iceberg-exportable convention, GraftCatalog
-  * `withMicrosTimestamps`) independent of any session conf.
+  * (the Iceberg spec's physical type, so every file is exportable
+  * without rewrite) independent of any session conf.
   *
-  * While writing it tracks, at zero extra IO, exactly the per-file
-  * metadata the catalog's commit paths record in manifests: row count
-  * plus min/max bounds for every prunable column (same type set as
-  * `GraftCatalog.prunableType`; stringified through the same Catalyst
-  * `Cast` the staged-stats job's `.cast("string")` uses, so bounds are
-  * comparable across both producers). */
+  * While writing it records, at zero extra IO, exactly the per-file
+  * metadata the catalog's manifests carry: row count plus min/max
+  * bounds for every prunable column (same type set as
+  * `GraftCatalog.prunableType`; compared in Spark's SQL order and
+  * stringified through the same Catalyst `Cast` as the re-read job
+  * `GraftCatalog.stagedFileStats` uses for files graft did not write,
+  * so both producers record identical bounds).
+  *
+  * Rows may be WIDER than `schema`: the fields after it carry values
+  * the commit records but never writes — first one value per `derived`
+  * stat (min/max recorded under its key, e.g. a partition's bucket),
+  * then one array of Bloom bit positions per `blooms` record key. Only
+  * the first `schema.length` fields reach the file. */
 private[graft] final class RowParquetWriter(absPath: String,
                                             schema: StructType,
-                                            conf: Configuration) {
+                                            conf: Configuration,
+                                            derived: Seq[(String, DataType)] = Nil,
+                                            blooms: Seq[String] = Nil) {
 
   private val writer: ParquetWriter[InternalRow] = {
     val c = new Configuration(conf)
@@ -52,16 +65,23 @@ private[graft] final class RowParquetWriter(absPath: String,
       .build()
   }
 
+  private val nData = schema.length
   private var rows = 0L
-  // min/max per prunable field, tracked as CATALYST values (every
-  // prunable type is Comparable with catalyst-order semantics: boxed
-  // numerics, UTF8String, Boolean, Int days for dates)
-  private val statFields: Array[(Int, StructField)] =
-    schema.fields.zipWithIndex.collect {
-      case (f, i) if GraftCatalog.prunableType(f.dataType) => (i, f)
-    }
-  private val mins = new Array[Any](statFields.length)
-  private val maxs = new Array[Any](statFields.length)
+  // (row ordinal, type, manifest stat key) per tracked bound: prunable
+  // data fields, then the derived values
+  private val statCols: Array[(Int, DataType, String)] =
+    (schema.fields.toSeq.zipWithIndex.collect {
+      case (f, i) if GraftCatalog.prunableType(f.dataType) => (i, f.dataType, f.name)
+    } ++ derived.zipWithIndex.map { case ((k, dt), j) => (nData + j, dt, k) }).toArray
+  private val orders: Array[(Any, Any) => Int] =
+    statCols.map { case (_, dt, _) => RowParquetWriter.sqlOrder(dt) }
+  // min/max tracked as CATALYST values
+  private val mins = new Array[Any](statCols.length)
+  private val maxs = new Array[Any](statCols.length)
+  private val bloomBase = nData + derived.size
+  private val bloomBits = blooms.map(_ => new Array[Byte](GraftCatalog.BloomBits / 8)).toArray
+  // the file sees only the data fields of a wider row
+  private val view = ProjectingInternalRow(schema, 0 until nData)
 
   // UnsafeRow getters return views into reused task buffers — a
   // RETAINED value must be copied or later rows corrupt the bound
@@ -71,43 +91,61 @@ private[graft] final class RowParquetWriter(absPath: String,
     case other => other
   }
 
-  private def cmp(a: Any, b: Any): Int =
-    a.asInstanceOf[Comparable[Any]].compareTo(b)
-
   def write(row: InternalRow): Unit = {
     var j = 0
-    while (j < statFields.length) {
-      val (i, f) = statFields(j)
+    while (j < statCols.length) {
+      val (i, dt, _) = statCols(j)
       if (!row.isNullAt(i)) {
-        val v = row.get(i, f.dataType)
-        if (mins(j) == null || cmp(v, mins(j)) < 0) mins(j) = retained(v)
-        if (maxs(j) == null || cmp(v, maxs(j)) > 0) maxs(j) = retained(v)
+        val v = row.get(i, dt)
+        // ties keep the first value seen, like Spark's min/max (it
+        // matters for -0.0 vs 0.0, which SQL order calls equal)
+        if (mins(j) == null || orders(j)(v, mins(j)) < 0) mins(j) = retained(v)
+        if (maxs(j) == null || orders(j)(v, maxs(j)) > 0) maxs(j) = retained(v)
       }
       j += 1
     }
+    var b = 0
+    while (b < bloomBits.length) {
+      val bits = bloomBits(b)
+      val pos = row.getArray(bloomBase + b)
+      var k = 0
+      while (k < pos.numElements()) {
+        val p = pos.getInt(k)
+        bits(p >> 3) = (bits(p >> 3) | (1 << (p & 7))).toByte
+        k += 1
+      }
+      b += 1
+    }
     rows += 1
-    writer.write(row)
+    if (row.numFields == nData) writer.write(row)
+    else { view.project(row); writer.write(view) }
   }
 
-  /** Close and return (file size bytes, row count, manifest stats map
-    * incl. the reserved `__rows` count). All-null columns record no
-    * bound — exactly the staged-stats job's behavior. */
-  def close(): (Long, Long, Map[String, (String, String)]) = {
+  /** Close and return the file's account: size, row count, manifest
+    * stats incl. the reserved `__rows` count, and the base64 Bloom
+    * bitsets. All-null columns record no bound and a zero-row file no
+    * bloom — exactly the re-read job's behavior. */
+  def close(): RowParquetWriter.Written = {
     writer.close()
     val p = new HPath(absPath)
     val size = p.getFileSystem(conf).getFileStatus(p).getLen
     def str(v: Any, dt: DataType): String = dt match {
       // timestamps record tz-stable epoch MICROS — the catalyst value
-      // itself — matching the staged-stats job's unix_micros form
-      case org.apache.spark.sql.types.TimestampType => v.toString
+      // itself — matching the re-read job's unix_micros form
+      case TimestampType => v.toString
       case _ => Cast(Literal(v, dt), StringType, Some("UTC")).eval(null).toString
     }
-    val bounds = statFields.zipWithIndex.flatMap { case ((_, f), j) =>
+    val bounds = statCols.zipWithIndex.flatMap { case ((_, dt, key), j) =>
       if (mins(j) == null) None
-      else Some(f.name -> ((str(mins(j), f.dataType), str(maxs(j), f.dataType))))
+      else Some(key -> ((str(mins(j), dt), str(maxs(j), dt))))
     }.toMap
-    (size, rows,
-      bounds + (GraftCatalog.RowsStatKey -> ((rows.toString, rows.toString))))
+    val bloomMap =
+      if (rows == 0) Map.empty[String, String]
+      else blooms.zip(bloomBits).map { case (k, bits) =>
+        k -> java.util.Base64.getEncoder.encodeToString(bits) }.toMap
+    RowParquetWriter.Written(size, rows,
+      bounds + (GraftCatalog.RowsStatKey -> ((rows.toString, rows.toString))),
+      bloomMap)
   }
 
   def abort(): Unit = {
@@ -119,7 +157,94 @@ private[graft] final class RowParquetWriter(absPath: String,
   }
 }
 
-private[catalog] object RowParquetWriter {
+private[graft] object RowParquetWriter {
+  /** One closed file's account (see [[RowParquetWriter.close]]). */
+  final case class Written(size: Long, rows: Long,
+                           stats: Map[String, (String, String)],
+                           blooms: Map[String, String])
+
+  /** Spark's SQL ordering for one stat type: doubles/floats order
+    * -0.0 == 0.0 and NaN above everything (what min/max aggregates
+    * use); every other prunable catalyst value is Comparable in the
+    * same order (boxed numerics, UTF8String, Boolean, Decimal, Int
+    * days, Long micros). */
+  private def sqlOrder(dt: DataType): (Any, Any) => Int = dt match {
+    case DoubleType => (a, b) =>
+      SQLOrderingUtil.compareDoubles(a.asInstanceOf[Double], b.asInstanceOf[Double])
+    case FloatType => (a, b) =>
+      SQLOrderingUtil.compareFloats(a.asInstanceOf[Float], b.asInstanceOf[Float])
+    case _ => (a, b) => a.asInstanceOf[Comparable[Any]].compareTo(b)
+  }
+
+  /** The task side of `GraftCatalog`'s one-job staging: writes one
+    * partition's rows under `tableDirAbs/stagingRel` and returns each
+    * file's (table-relative path, [[Written]]) to the driver. An empty
+    * partition writes nothing. File names carry the task attempt id, so
+    * a retried attempt never collides with a failed one's leftovers.
+    *
+    * Row layout (`rowSchemaJson`): the `nData` data fields, one value
+    * per `derived` key, one Bloom position array per `blooms` key, then
+    * `nAlign` partition-tuple values. With `nAlign > 0` the rows arrive
+    * sorted by those values and a new file starts at every tuple
+    * boundary, so each file holds exactly ONE partition tuple. */
+  final class StageTask(tableDirAbs: String,
+                        stagingRel: String,
+                        rowSchemaJson: String,
+                        nData: Int,
+                        derivedKeys: Seq[String],
+                        blooms: Seq[String],
+                        nAlign: Int,
+                        conf: SerializableConfiguration) extends Serializable {
+
+    def run(ctx: TaskContext, it: Iterator[InternalRow]): Seq[(String, Written)] = {
+      if (!it.hasNext) return Nil
+      val rowSchema = DataType.fromJson(rowSchemaJson).asInstanceOf[StructType]
+      val dataSchema = StructType(rowSchema.fields.take(nData))
+      val derived = derivedKeys.zip(
+        rowSchema.fields.slice(nData, nData + derivedKeys.size).map(_.dataType))
+      val alignFrom = rowSchema.length - nAlign
+      val tupleOf: UnsafeProjection =
+        if (nAlign == 0) null
+        else UnsafeProjection.create(rowSchema.fields.toSeq.zipWithIndex.drop(alignFrom)
+          .map { case (f, i) => BoundReference(i, f.dataType, f.nullable) })
+      val out = scala.collection.mutable.ArrayBuffer.empty[(String, Written)]
+      var w: RowParquetWriter = null
+      var rel: String = null
+      var tuple: UnsafeRow = null
+      def open(): Unit = {
+        rel = s"$stagingRel/part-${ctx.partitionId()}-${ctx.taskAttemptId()}-${out.size}.parquet"
+        w = new RowParquetWriter(s"$tableDirAbs/$rel", dataSchema, conf.value, derived, blooms)
+      }
+      def finish(): Unit = { out += rel -> w.close(); w = null }
+      try {
+        while (it.hasNext) {
+          val row = it.next()
+          if (tupleOf != null) {
+            val t = tupleOf(row)
+            if (tuple == null || t != tuple) {
+              if (w != null) finish()
+              tuple = t.copy()
+            }
+          }
+          if (w == null) open()
+          w.write(row)
+        }
+        if (w != null) finish()
+        out.toSeq
+      } catch { case e: Throwable =>
+        if (w != null) w.abort()
+        // this attempt's finished files are referenced by no result
+        out.foreach { case (r, _) =>
+          try {
+            val p = new HPath(s"$tableDirAbs/$r")
+            p.getFileSystem(conf.value).delete(p, false): Unit
+          } catch { case _: Exception => () }
+        }
+        throw e
+      }
+    }
+  }
+
   private final class Builder(file: org.apache.parquet.io.OutputFile)
       extends ParquetWriter.Builder[InternalRow, Builder](file) {
     override def self(): Builder = this

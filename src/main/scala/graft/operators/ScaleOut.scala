@@ -42,9 +42,24 @@ object ScaleOut {
   /** Default per-task byte budget; env-overridable
     * (SPARK_GRAFT_SCALEOUT_BPT) so deployments can match it to their
     * cores' measured throughput — and so optimization rounds can A/B the
-    * whole suite without a rebuild. Local default: 16 KB (see scaladoc). */
-  private val defaultBytesPerTask: Long =
-    sys.env.get("SPARK_GRAFT_SCALEOUT_BPT").map(_.toLong).getOrElse(16L * 1024)
+    * whole suite without a rebuild. Local default: 16 KB (see scaladoc).
+    * Lazy, so a malformed value fails the first caller with an error
+    * naming the variable instead of an opaque initializer error. */
+  private lazy val defaultBytesPerTask: Long =
+    bytesPerTaskOf(sys.env.get(BytesPerTaskEnv))
+
+  private[graft] val BytesPerTaskEnv = "SPARK_GRAFT_SCALEOUT_BPT"
+
+  /** The per-task byte budget an env value asks for (16 KB when unset);
+    * anything but a positive integer refuses, naming the variable. */
+  private[graft] def bytesPerTaskOf(raw: Option[String]): Long = raw match {
+    case None => 16L * 1024
+    case Some(v) =>
+      val n = v.trim.toLongOption.getOrElse(throw new IllegalArgumentException(
+        s"$BytesPerTaskEnv = '$v' is not a byte count"))
+      require(n > 0, s"$BytesPerTaskEnv must be positive, got $n")
+      n
+  }
 
   /** `df` hash-repartitioned on `keys` (round-robin when empty) to
     * min(session default parallelism, data-sized width), iff its current

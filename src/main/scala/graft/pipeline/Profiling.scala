@@ -4,19 +4,25 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.NumericType
 
-/** Deequ-style single-pass column profiling — the data-quality report a
-  * pipeline runs on every ingest batch before admitting it: null
-  * fractions, exact distinct counts, ranges and means per column, all
-  * from ONE scan of the table.
+/** Deequ-style column profiling — the data-quality report a pipeline
+  * runs on every ingest batch before admitting it: null fractions,
+  * exact distinct counts, ranges and means per column.
   *
-  * Scale shape: every statistic is an aggregate expression in a single
-  * groupBy-less agg — one job, one pass, map-side partial combine; the
-  * multiple exact countDistincts expand the aggregate (Spark's Expand:
-  * rows × profiled columns), which is the standard cost of exact
-  * multi-column distincts — swap in approx_count_distinct per column
-  * when profiling runs on the 100 TB raw tier rather than a batch.
-  * The result is |columns| rows — metadata-scale — reshaped from the
-  * one-row aggregate with a stack() projection, never a driver collect.
+  * Scale shape: TWO groupBy-less aggregation passes over one spread
+  * exchange (reused, so the input is shuffled once), cross-joined into
+  * one row. The first carries the plain stats (count, nulls, min, max,
+  * mean: one global buffer, map-side partial combine); the second the
+  * exact countDistincts, which Spark plans as an Expand (rows ×
+  * profiled columns) — the standard cost of exact multi-column
+  * distincts; swap in approx_count_distinct per column when profiling
+  * runs on the 100 TB raw tier rather than a batch. The result is
+  * |columns| rows — metadata-scale — reshaped from the one-row
+  * aggregate with a stack() projection, never a driver collect.
+  *
+  * The two passes evaluate `df0` twice, so the input must be
+  * DETERMINISTIC (a re-evaluation yields the same rows): a sampled or
+  * rand()-filtered frame can report an n_distinct that is inconsistent
+  * with its n_rows. Checkpoint such an input before profiling it.
   */
 object Profiling {
 

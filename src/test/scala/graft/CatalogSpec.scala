@@ -1330,8 +1330,8 @@ class CatalogSpec extends SparkSpec {
     assert(cat.sweepOrphanManifests("ns", "t", graceMs = -1L) === Seq.empty)
   }
 
-  test("the staging micros conf is ref-counted PER SESSION: concurrent commits " +
-       "on two sessions each restore their own prior value") {
+  test("staging never touches the session's parquet timestamp conf: " +
+       "concurrent commits on two sessions keep their own values") {
     import java.util.concurrent.{CountDownLatch, Executors, TimeUnit}
     val key = "spark.sql.parquet.outputTimestampType"
     val s1 = spark.newSession(); s1.conf.set(key, "INT96")
@@ -1345,8 +1345,7 @@ class CatalogSpec extends SparkSpec {
         (i.toLong, java.sql.Timestamp.valueOf(f"2024-01-01 00:00:${i % 50}%02d")))
         .toDF("id", "ts")
     }
-    // interleave: both sessions stage at the same time — a JVM-global
-    // ref count would let the first-exiting session skip its restore
+    // interleave: both sessions stage at the same time
     val pool = Executors.newFixedThreadPool(2)
     val start = new CountDownLatch(1)
     val f1 = pool.submit(new Runnable { def run(): Unit = {
@@ -1356,12 +1355,133 @@ class CatalogSpec extends SparkSpec {
     start.countDown()
     f1.get(120, TimeUnit.SECONDS); f2.get(120, TimeUnit.SECONDS)
     pool.shutdown()
-    assert(s1.conf.get(key) === "INT96",
-      "session 1 must get ITS OWN prior value back")
-    assert(s2.conf.get(key) === "TIMESTAMP_MILLIS",
-      "session 2 must get ITS OWN prior value back")
+    assert(s1.conf.get(key) === "INT96", "session 1 must keep ITS OWN value")
+    assert(s2.conf.get(key) === "TIMESTAMP_MILLIS", "session 2 must keep ITS OWN value")
     // and the staged files are still spec-physical INT64 micros
     assert(cat1.read("ns", "t").count() === 150L)
+    val tsTypes = cat1.dataFiles("ns", "t", cat1.latest("ns", "t").get).map { f =>
+      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(cat1.tablePath("ns", "t").resolve(f).toString),
+        spark.sparkContext.hadoopConfiguration)
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+      try r.getFileMetaData.getSchema.getFields.asScala.find(_.getName == "ts")
+        .get.asPrimitiveType.getPrimitiveTypeName.toString
+      finally r.close()
+    }.distinct
+    assert(tsTypes === Seq("INT64"))
+  }
+
+  test("writer-recorded stats are bit-identical to the re-read job's: " +
+       "bounds of every prunable type, bucket-derived stats, Bloom bitsets") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val cat = freshCatalog()
+    val schema = StructType(Seq(
+      StructField("i", IntegerType), StructField("l", LongType),
+      StructField("dec", DecimalType(12, 3)), StructField("d", DoubleType),
+      StructField("s", StringType), StructField("dt", DateType),
+      StructField("ts", TimestampType), StructField("b", BooleanType),
+      StructField("n", LongType)))
+    val cols = schema.fieldNames.toSeq
+    def frame(rows: Seq[Row]) =
+      spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
+    def day(s: String) = java.sql.Date.valueOf(s)
+    def ts(s: String) = java.sql.Timestamp.valueOf(s)
+    val batches = Seq(
+      // signed zeros in both orders, NaN, empty and non-ASCII strings
+      Seq(Row(1, 10L, BigDecimal("1.500").bigDecimal, 0.0, "", day("2024-02-29"),
+              ts("2024-02-29 12:34:56.123456"), true, null),
+          Row(-7, -3L, BigDecimal("-2.250").bigDecimal, -0.0, "日本語", day("1969-12-31"),
+              ts("1969-12-31 23:59:59.999999"), false, null),
+          Row(42, Long.MaxValue, BigDecimal("999999999.999").bigDecimal, Double.NaN,
+              "é", day("2000-01-01"), ts("2000-01-01 00:00:00"), true, null)),
+      Seq(Row(3, 0L, BigDecimal("0.000").bigDecimal, -0.0, "zz\uD83D\uDE00", day("2024-01-01"),
+              ts("2024-01-01 00:00:00.000001"), false, null),
+          Row(null, null, null, 0.0, null, null, null, null, null),
+          Row(9, 1L, BigDecimal("0.001").bigDecimal, -1.5, "a", day("2024-01-02"),
+              ts("2024-01-02 00:00:00"), false, null)),
+      // a zero-row input lands one zero-row file
+      Seq.empty[Row])
+    val props = Map(
+      GraftCatalog.PartitionSpecProp -> GraftCatalog.partitionSpecJson(
+        Seq(GraftCatalog.PartitionField("bucket", "i", 4))),
+      GraftCatalog.BloomColumnsProp -> cols.mkString(","))
+    // `w` stages through the writer; `r` registers byte-identical copies
+    // of w's files as landed files, which the re-read job stats
+    Seq("w", "r").foreach { t =>
+      cat.createTable("ns", t)
+      cat.commitAppend("ns", t, frame(Nil), propsSet = props)
+    }
+    val v0 = cat.dataFiles("ns", "w", cat.latest("ns", "w").get).toSet
+    cat.commitAppend("ns", "w", frame(batches(0)), bloomCols = cols)
+    cat.commitAppend("ns", "w", frame(batches(1)).repartition(2), bloomCols = cols)
+    cat.commitAppend("ns", "w", frame(batches(0) ++ batches(1)), bloomCols = cols,
+      alignSpec = true)
+    cat.commitAppend("ns", "w", frame(batches(2)), bloomCols = cols)
+    val wHead = cat.latest("ns", "w").get
+    val staged = cat.dataFiles("ns", "w", wHead).filterNot(v0)
+    staged.foreach { f =>
+      val dst = cat.tablePath("ns", "r").resolve(f)
+      Files.createDirectories(dst.getParent)
+      Files.copy(cat.tablePath("ns", "w").resolve(f), dst)
+    }
+    cat.commitLandedFiles("ns", "r", staged, "local")
+    def entries(t: String) = cat.prunedDataEntries("ns", t, cat.latest("ns", t).get,
+      Array.empty).map(e => e.path -> e).toMap
+    val (w, r) = (entries("w"), entries("r"))
+    assert(staged.size >= 5, s"expected several staged files, got $staged")
+    staged.foreach { f =>
+      assert(w(f).stats === r(f).stats, s"bounds differ for $f")
+      assert(w(f).blooms === r(f).blooms, s"bloom bitsets differ for $f")
+    }
+    // the comparison is not vacuous: every prunable column bounded, the
+    // derived bucket stat recorded, every column bloom-indexed, the
+    // all-null column unbounded and the zero-row file counted
+    val full = staged.map(w).filter(_.stats.get("__rows").exists(_._1 != "0"))
+    assert(full.exists(e => Seq("i", "l", "dec", "d", "s", "dt", "ts", "b")
+      .forall(e.stats.contains)))
+    assert(full.filter(_.stats.contains("i"))
+      .forall(_.stats.keys.exists(_.startsWith("__pt_bucket"))))
+    assert(full.forall(_.blooms.size === cols.size))
+    assert(full.forall(e => !e.stats.contains("n")))
+    assert(staged.map(w).exists(_.stats.get("__rows").contains(("0", "0"))))
+    assert(cat.read("ns", "w").count() === cat.read("ns", "r").count())
+  }
+
+  test("an unpartitioned bloom-less append is ONE Spark job and a local " +
+       "batch lands as ONE file") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val cat = freshCatalog()
+    cat.createTable("ns", "t")
+    cat.commitAppend("ns", "t", Seq((0L, "warm")).toDF("id", "v"))
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        groups.add(Option(j.properties).flatMap(p =>
+          Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    val snap = try {
+      sc.setJobGroup("graft-one-job-append", "guard")
+      val s = try cat.commitAppend("ns", "t",
+        (1 to 250).map(i => (i.toLong, s"v$i")).toDF("id", "v"))
+      finally sc.clearJobGroup()
+      // the listener bus is FIFO: once the fence job shows up, every
+      // event of the commit has been delivered
+      sc.setJobGroup("graft-one-job-fence", "fence")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30e9.toLong
+      while (!groups.contains("graft-one-job-fence") && System.nanoTime() < deadline)
+        Thread.sleep(20)
+      s
+    } finally sc.removeSparkListener(listener)
+    assert(groups.contains("graft-one-job-fence"), "listener bus never drained")
+    assert(groups.asScala.count(_ == "graft-one-job-append") === 1,
+      s"commitAppend ran ${groups.asScala.count(_ == "graft-one-job-append")} jobs")
+    assert(cat.addedFiles("ns", "t", snap).size === 1,
+      "a driver-local batch must land as one file")
+    assert(cat.read("ns", "t").count() === 251L)
   }
 
   test("rewrite_position_deletes: churned p-files consolidate to one " +

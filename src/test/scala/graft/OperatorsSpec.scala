@@ -36,6 +36,15 @@ class OperatorsSpec extends SparkSpec {
     assert(drift("s").isNullAt(3))                // no mean for strings
   }
 
+  test("ScaleOut's SPARK_GRAFT_SCALEOUT_BPT parses defensively and names itself") {
+    assert(ScaleOut.bytesPerTaskOf(None) === 16L * 1024)
+    assert(ScaleOut.bytesPerTaskOf(Some(" 65536 ")) === 65536L)
+    Seq("16k", "", "1.5", "0", "-3").foreach { bad =>
+      val e = intercept[IllegalArgumentException](ScaleOut.bytesPerTaskOf(Some(bad)))
+      assert(e.getMessage.contains("SPARK_GRAFT_SCALEOUT_BPT"), e.getMessage)
+    }
+  }
+
   test("SnapshotDiff added/removed are exact set differences") {
     val v1 = Seq("a", "b", "c").toDF("path")
     val v2 = Seq("b", "c", "d", "e").toDF("path")

@@ -234,18 +234,43 @@ class PlanSpec extends SparkSpec {
     // Spark must collapse them (ReusedExchange), i.e. the expensive
     // minhash_signature scan runs ONCE however large the corpus. Pin
     // that by forcing the no-broadcast regime.
+    // The band table is localCheckpointed, so the signature pipeline
+    // runs in the checkpoint's own execution and the query's plan scans
+    // the checkpoint: count it across EVERY execution the query ran.
+    import scala.jdk.CollectionConverters._
     val thr = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[
+      (org.apache.spark.sql.execution.QueryExecution, String)]
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, durationNs: Long): Unit =
+        plans.add(qe -> qe.executedPlan.toString.split("== Initial Plan ==").head)
+      override def onFailure(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
     try {
       val df = SparkEntry.queries("dedup_minhash_pairs")(spark, sf())
       df.collect()
+      // the final collect is the query's last execution: once it is
+      // delivered, so is every checkpoint execution before it
+      val deadline = System.nanoTime() + 30e9.toLong
+      while (!plans.asScala.exists(_._1 eq df.queryExecution) &&
+             System.nanoTime() < deadline) Thread.sleep(20)
       val p = df.queryExecution.executedPlan.toString.split("== Initial Plan ==").head
       val reused = "ReusedExchange".r.findAllIn(p).size
       // band legs + the two shingle-set verify legs both collapse
       assert(reused >= 2, s"expected >=2 reused exchanges (bands, shingle sets), got $reused:\n$p")
-      val sigScans = "minhash_signature".r.findAllIn(p).size
-      assert(sigScans == 1, s"signature pipeline computed $sigScans times, want 1:\n$p")
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thr)
+      assert(plans.asScala.exists(_._1 eq df.queryExecution), "query execution never delivered")
+      val all = plans.asScala.map(_._2).toSeq
+      val sigScans = all.map("minhash_signature".r.findAllIn(_).size).sum
+      assert(sigScans == 1, s"signature pipeline computed $sigScans times, want 1:\n" +
+        all.mkString("\n----\n"))
+    } finally {
+      spark.listenerManager.unregister(listener)
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thr)
+    }
   }
 
   test("PQ scoring broadcasts the query LUTs; the codes table is the streamed side") {

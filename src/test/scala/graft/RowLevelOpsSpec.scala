@@ -499,7 +499,7 @@ class RowLevelOpsSpec extends SparkSpec {
     // copy: collect() on a codegen'd local plan yields REUSED UnsafeRow
     // references (the real write path consumes each row before reuse)
     df.queryExecution.toRdd.map(_.copy()).collect().foreach(w.write)
-    val (size, rows, stats) = w.close()
+    val graft.catalog.RowParquetWriter.Written(size, rows, stats, _) = w.close()
     assert(rows === 5L && size > 0L)
 
     // byte-level read-back equality via Spark's own reader
