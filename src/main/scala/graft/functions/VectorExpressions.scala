@@ -203,11 +203,11 @@ case class JaccardSimilarity(left: Expression, right: Expression)
   *
   * The string-set JaccardSimilarity spends ~15µs/pair building two
   * UTF8String hash sets; at 200k+ LSH candidate pairs that is the whole
-  * verify stage. Pre-hash each document's shingle set ONCE
-  * (sort_array(array_distinct(transform(shingles, xxhash64)))) and the
-  * per-pair cost collapses to one merge over ~2·|set| longs. Distinct
-  * counts over 64-bit shingle hashes equal the string counts unless two
-  * distinct shingles of the same pair collide (~3e-16 per pair) — the
+  * verify stage. Pre-hash each document's shingle set ONCE (the sorted
+  * distinct xxhash64 set ShingleMinHash emits) and the per-pair cost
+  * collapses to one merge over ~2·|set| longs. Distinct counts over
+  * 64-bit shingle hashes equal the string counts unless two distinct
+  * shingles of the same pair collide (~3e-16 per pair) — the
   * DuckDB oracle computes the string form and has always hash-matched.
   * Mirrors JaccardSimilarity's edges: 0/0 → NaN. */
 case class SortedLongJaccard(left: Expression, right: Expression)

@@ -4,14 +4,17 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.MinHashFunctions
+
 /** Document deduplication for training-data pipelines: exact, MinHash+LSH,
   * SimHash, and n-gram Jaccard.
   *
   * Scale design (100 TB corpus):
   *  - exact dedup is one hash-aggregate on a fingerprint (map-side combine
   *    shrinks the shuffle to one row per distinct document);
-  *  - MinHash signatures are a narrow projection (higher-order array
-  *    functions, codegen'd, no UDF); LSH banding turns the quadratic
+  *  - MinHash signatures are a narrow projection (one codegen'd kernel
+  *    that hashes word shingles straight from the text's bytes, no UDF,
+  *    no per-shingle string); LSH banding turns the quadratic
   *    pair search into an equi-join on (band, bandHash) — the only
   *    shuffle is on band keys, and skewed buckets (boilerplate docs) are
   *    handled by AQE skew-join splitting;
@@ -39,39 +42,21 @@ object Dedup {
       .agg(min(col(idCol)).as("keeper"), count(lit(1)).as("copies"))
 
   // ---------- MinHash + LSH ----------
-
-  /** Word k-shingles of the text (k consecutive words, space-joined). */
-  def shingles(text: Column, k: Int): Column = {
-    val toks = split(text, " ")
-    transform(
-      sequence(lit(1), greatest(size(toks) - (k - 1), lit(1))),
-      i => concat_ws(" ", slice(toks, i, lit(k))))
-  }
+  //
+  // Word k-shingles and their hashes come from the ShingleMinHash kernel,
+  // whose scaladoc states the shingle rule; PipelineSpec pins it to the
+  // composable string form (DedupReference, test scope).
 
   /** MinHash signatures as a table — ONE narrow projection per document
-    * via the codegen'd MinHashSignature expression: no shingle explode,
-    * no groupBy shuffle (the aggregate form shuffled one row per
+    * via the codegen'd ShingleMinHash kernel: no shingle strings, no
+    * explode, no groupBy shuffle (the aggregate form shuffled one row per
     * (doc, shingle) only to min-reduce them back). Signatures are
     * bit-identical to min(xxhash64(lit(i), shingle)) per slot, so they
     * are independent of partitioning and cluster size.
     * Returns (idCol, sig: array<long>). */
   def minhashSignatures(docs: DataFrame, idCol: String, textCol: String,
                         numHashes: Int, shingleK: Int): DataFrame =
-    docs.select(col(idCol),
-      graft.functions.MinHashFunctions
-        .minhashSignature(shingles(col(textCol), shingleK), numHashes).as("sig"))
-
-  /** Aggregate-form reference of [[minhashSignatures]] (explode + min
-    * aggregates) — cross-checked for bit-equality in PipelineSpec. */
-  def minhashSignaturesRef(docs: DataFrame, idCol: String, textCol: String,
-                           numHashes: Int, shingleK: Int): DataFrame = {
-    val exploded = docs
-      .select(col(idCol), explode(array_distinct(shingles(col(textCol), shingleK))).as("s"))
-    val mins = (0 until numHashes).map(i => min(xxhash64(lit(i), col("s"))).as(s"m$i"))
-    exploded.groupBy(col(idCol))
-      .agg(mins.head, mins.tail: _*)
-      .select(col(idCol), array((0 until numHashes).map(i => col(s"m$i")): _*).as("sig"))
-  }
+    docs.select(col(idCol), MinHashFunctions.shingleSignature(col(textCol), shingleK, numHashes).as("sig"))
 
   /** Explode a signature into LSH bands: (band_id, band_hash) rows.
     * bands × rowsPerBand must equal the signature length.
@@ -108,18 +93,10 @@ object Dedup {
     * candidates (and directly for n-gram similarity). Hot path: the fused
     * codegen'd expression counts both sets in one pass instead of
     * materializing intersect+union arrays per candidate pair (identical
-    * semantics — see JaccardSimilarity; the composable form is kept below
-    * as the cross-checked reference). */
+    * semantics — see JaccardSimilarity; ExtensionsSpec cross-checks it
+    * against the composable array_intersect/array_union form). */
   def jaccard(setA: Column, setB: Column): Column =
     round(graft.functions.VectorFunctions.jaccardSim(setA, setB), 4)
-
-  /** Composable-built-ins reference form of [[jaccard]] (interpreted
-    * array_intersect/array_union) — cross-checked in ExtensionsSpec. */
-  def jaccardRef(setA: Column, setB: Column): Column = {
-    val inter = size(array_intersect(setA, setB)).cast("double")
-    val union = size(array_union(setA, setB)).cast("double")
-    round(inter / union, 4)
-  }
 
   /** Full MinHash-LSH near-dup pipeline: signature → bands → candidate
     * pairs → shingle-set Jaccard verification at `threshold` (sets
@@ -132,34 +109,29 @@ object Dedup {
     // single-split local corpus otherwise computes them in one task
     // (ScaleOut scaladoc)
     val docs = graft.operators.ScaleOut.forCompute(docs0, idCol)
-    val sigs = minhashSignatures(docs, idCol, textCol, numHashes, shingleK)
-    // MATERIALIZE the band table and shingle sets once (round-16, VERDICT
-    // r15 #3): both feed both sides of self-joins, and the committed plan
-    // dump proved the four references do NOT collapse — the expensive
-    // signature/shingle projections are above the reusable exchange, so
-    // the corpus was signature-hashed twice and shingle-hashed twice.
-    // One localCheckpoint per table halves the heavy compute. This
-    // RETIRES the r13 "13× slower cached" note: that measurement was
-    // .persist()'s COLUMNAR in-memory encoding of array<string> sets;
-    // localCheckpoint stores plain serialized rows (no columnar encode)
-    // and the sets are array<long> since r13 — measured 0.90→0.57 s
-    // (BenchOne min-of-3, this host) with the checkpoints. At warehouse
-    // scale these are persisted Parquet tables (buildLshIndexTables).
-    val bandsTbl = lshBands(sigs, idCol, "sig", bands, numHashes / bands)
-      .localCheckpoint()
-    val pairs = lshCandidatePairs(bandsTbl, idCol)
-    // verify sets pre-hashed ONCE per doc to sorted distinct longs: the
-    // per-pair check becomes a primitive merge (SortedLongJaccard,
-    // ~200ns) instead of two UTF8String hash sets (~15µs) — at 200k+
-    // candidates that was the entire verify stage. Distinct counts over
-    // 64-bit shingle hashes equal the string counts unless two distinct
+    // ONE projection tokenizes each text once and emits both the
+    // signature and the verify set, and ONE localCheckpoint materializes
+    // them: the band table and the set legs of the self-joins all read
+    // it, so neither the spread shuffle nor the text scan runs twice (the
+    // references do not collapse on their own — the heavy projection sits
+    // above any reusable exchange). localCheckpoint stores plain
+    // serialized rows, no columnar encode. At warehouse scale these are
+    // persisted Parquet tables (buildLshIndexTables).
+    // The verify sets are sorted distinct shingle hashes: the per-pair
+    // check is a primitive merge (SortedLongJaccard, ~200ns) instead of
+    // two UTF8String hash sets (~15µs). Distinct counts over 64-bit
+    // shingle hashes equal the string counts unless two distinct
     // shingles of one pair collide (~3e-16/pair); the DuckDB oracle
     // computes the string form and hash-matches.
-    val sets = docs.select(col(idCol), shingleSet(textCol, shingleK).as("shingle_set"))
+    val hashed = docs
+      .select(col(idCol),
+        MinHashFunctions.shingleSignatureAndSet(col(textCol), shingleK, numHashes).as("mh"))
+      .select(col(idCol), col("mh.sig").as("sig"), col("mh.shingle_set").as("shingle_set"))
       .localCheckpoint()
+    val pairs = lshCandidatePairs(lshBands(hashed, idCol, "sig", bands, numHashes / bands), idCol)
     pairs
-      .join(sets.select(col(idCol).as("id_a"), col("shingle_set").as("set_a")), "id_a")
-      .join(sets.select(col(idCol).as("id_b"), col("shingle_set").as("set_b")), "id_b")
+      .join(hashed.select(col(idCol).as("id_a"), col("shingle_set").as("set_a")), "id_a")
+      .join(hashed.select(col(idCol).as("id_b"), col("shingle_set").as("set_b")), "id_b")
       .withColumn("jaccard",
         round(graft.functions.VectorFunctions.sortedLongJaccard(col("set_a"), col("set_b")), 4))
       .filter(col("jaccard") >= threshold)
@@ -203,11 +175,12 @@ object Dedup {
 
   // ---------- persisted LSH dedup index ----------
 
-  /** Sorted distinct shingle-hash set per doc — the exact-verify payload
+  /** Sorted distinct shingle-hash set per doc (xxhash64 of each word
+    * k-shingle, via the ShingleMinHash kernel) — the exact-verify payload
     * stored beside the band index (and the projection every serve-side
     * verification uses). */
   private def shingleSet(textCol: String, shingleK: Int) =
-    sort_array(array_distinct(transform(shingles(col(textCol), shingleK), xxhash64(_))))
+    MinHashFunctions.shingleSet(col(textCol), shingleK)
 
   /** Build (replace) the PERSISTED MinHash-LSH dedup index of the
     * admitted corpus — the production shape minhashNearDupsAgainst's

@@ -6,10 +6,11 @@ import org.apache.spark.sql.functions._
 /** Text analysis for large-scale training-data pipelines: tokenization,
   * quality scoring, language-ID heuristics, document fingerprinting.
   *
-  * Everything is Column-level (codegen'd higher-order array functions, no
-  * UDFs) so the operators scale linearly over a 100 TB documents table:
-  * one narrow projection per document, no shuffle until the caller
-  * aggregates. Token model: whitespace words (the corpus is pre-cleaned);
+  * Everything is Column-level (built-in expressions and higher-order array
+  * functions, no UDFs; Spark interprets the higher-order functions'
+  * lambdas per element) so the operators scale linearly over a 100 TB
+  * documents table: one narrow projection per document, no shuffle until
+  * the caller aggregates. Token model: whitespace words (the corpus is pre-cleaned);
   * a BPE-ish regex variant is provided for raw text.
   */
 object TextAnalysis {

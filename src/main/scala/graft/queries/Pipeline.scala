@@ -1647,7 +1647,8 @@ object Pipeline {
          range(1, greatest(length($textExpr) - 2, 1) + 1),
          i -> substr($textExpr, CAST(i AS INT), 3)))"""
 
-  /** Distinct word 2-shingles (mirrors Dedup.shingles with k=2). */
+  /** Distinct word 2-shingles: the shingle rule Dedup's ShingleMinHash
+    * kernel hashes, with k=2, as strings. */
   private def wordShinglesSql(textExpr: String): String =
     s"""list_distinct(list_transform(
          range(1, greatest(len(string_split($textExpr, ' ')) - 1, 1) + 1),

@@ -30,7 +30,7 @@ class ExtensionsSpec extends SparkSpec {
     ).toDF("id", "sa", "sb")
     val both = cases.select(col("id"),
         Dedup.jaccard(col("sa"), col("sb")).as("fused"),
-        Dedup.jaccardRef(col("sa"), col("sb")).as("ref"))
+        DedupReference.jaccardRef(col("sa"), col("sb")).as("ref"))
       .as[(Long, Double, Double)].collect()
     both.foreach { case (id, fused, ref) => assert(fused === ref, s"case $id") }
     // SQL registration path

@@ -213,10 +213,59 @@ class PipelineSpec extends SparkSpec {
     val docs500 = Tables.documents(spark, sf()).limit(120)
     val fused = Dedup.minhashSignatures(docs500, "doc_id", "text", 16, 2)
       .as[(Long, Seq[Long])].collect().toMap
-    val ref = Dedup.minhashSignaturesRef(docs500, "doc_id", "text", 16, 2)
+    val ref = DedupReference.minhashSignaturesRef(docs500, "doc_id", "text", 16, 2)
       .as[(Long, Seq[Long])].collect().toMap
     assert(fused.keySet === ref.keySet)
     ref.foreach { case (id, sig) => assert(fused(id) === sig, s"doc $id") }
+  }
+
+  test("ShingleMinHash kernel equals the composable shingle forms (edge texts, every sf0.01 doc)") {
+    import graft.functions.{MinHashFunctions, ShingleMinHash}
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.types.StringType
+    val edge = Seq(null, "", " ", "a  b c", " a b c d ", "x  ",
+      "one", "one two", "one two three",                       // < k and == k words
+      "naïve café über straße", "中文 文本 去重 测试 数据", "😀 x 🎉", "tab\tsep line\nbreak  end")
+    val edgeDocs = edge.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
+    val corpus = Tables.documents(spark, sf("sf0.01")).select("doc_id", "text")
+    for ((name, docs) <- Seq("edge" -> edgeDocs, "sf0.01" -> corpus); k <- Seq(2, 3); n <- Seq(16, 32)) {
+      val ctx = s"$name k=$k n=$n"
+      val got = docs.select(col("doc_id"), col("text"),
+          MinHashFunctions.shingleSignatureAndSet(col("text"), k, n).as("mh"),
+          MinHashFunctions.shingleSet(col("text"), k).as("set"),
+          DedupReference.shingleSetRef(col("text"), k).as("set_ref"),
+          // the SQL function over the string shingles shares the kernel's min-hash loop
+          MinHashFunctions.minhashSignature(DedupReference.shingles(col("text"), k), n).as("sql_sig"))
+        .select(col("doc_id"), col("text"), col("mh.sig"), col("mh.shingle_set"),
+          col("set"), col("set_ref"), col("sql_sig"))
+        .as[(Long, String, Seq[Long], Seq[Long], Seq[Long], Seq[Long], Seq[Long])].collect()
+      val sigs = Dedup.minhashSignatures(docs, "doc_id", "text", n, k)
+        .as[(Long, Seq[Long])].collect().toMap
+      val sigRef = DedupReference.minhashSignaturesRef(docs, "doc_id", "text", n, k)
+        .as[(Long, Seq[Long])].collect().toMap
+      assert(sigRef.size == got.length && sigs.size == got.length, ctx)
+      got.foreach { case (id, text, mhSig, mhSet, set, setRef, sqlSig) =>
+        val doc = s"$ctx doc $id '$text'"
+        assert(mhSig === sigRef(id), doc)
+        assert(sigs(id) === sigRef(id), doc)
+        assert(sqlSig === sigRef(id), doc)
+        assert(mhSet === setRef, doc)
+        assert(set === setRef, doc)
+        if (name == "edge") {
+          // the interpreted path agrees with the generated code
+          val row = ShingleMinHash(Literal.create(text, StringType), k, n, withSet = true)
+            .eval().asInstanceOf[InternalRow]
+          assert(row.getArray(0).toLongArray().toSeq === sigRef(id), doc)
+          assert(row.getArray(1).toLongArray().toSeq === setRef, doc)
+        }
+      }
+      if (name == "edge") {
+        val sets = got.map(r => r._2 -> r._4).toMap
+        assert(sets(null) === sets(""), "a null text is one empty shingle")
+        assert(sets(null).size == 1, ctx)
+      }
+    }
   }
 
   test("SimHash: identical docs distance 0; near dup close; unrelated far") {

@@ -234,9 +234,12 @@ class PlanSpec extends SparkSpec {
     // Spark must collapse them (ReusedExchange), i.e. the expensive
     // minhash_signature scan runs ONCE however large the corpus. Pin
     // that by forcing the no-broadcast regime.
-    // The band table is localCheckpointed, so the signature pipeline
-    // runs in the checkpoint's own execution and the query's plan scans
-    // the checkpoint: count it across EVERY execution the query ran.
+    // The signatures and shingle sets are localCheckpointed, so their
+    // pipeline runs in the checkpoint's own execution and the query's
+    // plan scans the checkpoint: count it across EVERY execution the
+    // query ran. The corpus text is tokenized in ONE projection, so the
+    // shingle sets are computed once too, and the forCompute spread
+    // shuffle runs once.
     import scala.jdk.CollectionConverters._
     val thr = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
@@ -266,6 +269,12 @@ class PlanSpec extends SparkSpec {
       val all = plans.asScala.map(_._2).toSeq
       val sigScans = all.map("minhash_signature".r.findAllIn(_).size).sum
       assert(sigScans == 1, s"signature pipeline computed $sigScans times, want 1:\n" +
+        all.mkString("\n----\n"))
+      val setScans = all.map("shingle_set\\(".r.findAllIn(_).size).sum
+      assert(setScans == 1, s"shingle sets computed $setScans times, want 1:\n" +
+        all.mkString("\n----\n"))
+      val spreads = all.map("REPARTITION_BY_NUM".r.findAllIn(_).size).sum
+      assert(spreads == 1, s"forCompute spread ran $spreads times, want 1:\n" +
         all.mkString("\n----\n"))
     } finally {
       spark.listenerManager.unregister(listener)
