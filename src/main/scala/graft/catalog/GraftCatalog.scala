@@ -7,8 +7,12 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.UnsafeProjection
+import org.apache.spark.sql.catalyst.util.CharVarcharUtils
 import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.execution.datasources.HadoopFsRelation
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetReadSupport, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, BooleanType, ByteType, DataType, DateType, DecimalType, DoubleType, FloatType, IntegerType, LongType, MapType, NumericType, ShortType, StringType, StructField, StructType, TimestampType}
 
@@ -665,21 +669,27 @@ final class GraftCatalog(val spark: SparkSession, val warehouse: String) {
 
   // ---- commits ----
 
-  /** Stage `df` as data files through ONE Spark job and return each
-    * file's (table-relative path, account), sorted by path. Every task
-    * writes its partition through [[RowParquetWriter]], which records
-    * the file's row count and bounds, the `derived` stats (stat key ->
-    * expression over `df`) and the Bloom bitsets of `bloomCols` while it
-    * writes — no stats job re-reads the staged bytes, the driver lists
-    * no directory, and the session conf is never touched (the writer
-    * pins INT64 micros itself).
+  /** Stage `df` as data files and return each file's (table-relative
+    * path, account), sorted by path. Every file is written through
+    * [[RowParquetWriter]], which records the file's row count and
+    * bounds, the `derived` stats (stat key -> expression over `df`) and
+    * the Bloom bitsets of `bloomCols` while it writes — no stats job
+    * re-reads the staged bytes, the driver lists no directory, and the
+    * session conf is never touched (the writer pins INT64 micros
+    * itself).
     *
-    * File layout: a `df` whose optimized plan is a driver-local
-    * `LocalRelation` lands in ceil(exact bytes / the table's
-    * `write.target-file-size-bytes`) files — one for any realistic local
-    * batch, where Spark's local-scan slicing would land one tiny file
-    * per core. Any other input keeps its partitioning (one file per
-    * non-empty task), so deliberate layouts (range clustering,
+    * Where the rows are written: a `df` whose optimized plan is a
+    * driver-local `LocalRelation`, staged unaligned, whose exact bytes
+    * fit one `write.target-file-size-bytes` file, is written ON THE
+    * DRIVER — the staging projection (derived stats, Bloom positions)
+    * folds into the `LocalRelation` (Catalyst's `ConvertToLocalRelation`)
+    * and its rows go through the same [[RowParquetWriter.StageTask]]
+    * code with no Spark job at all. That is every control-plane commit
+    * (a `_system` event append, a watermark advance) and every small
+    * `toDF` batch. Any other input runs ONE Spark job whose tasks write
+    * their partitions: a larger local batch lands in ceil(exact bytes /
+    * target) files; a distributed input keeps its partitioning (one file
+    * per non-empty task), so deliberate layouts (range clustering,
     * compaction widths) stand. `alignCols` (partition-ALIGNED staging,
     * for spec'd tables and property-honoring writers) sorts each task by
     * the partition-value expressions and starts a new file at every
@@ -688,13 +698,14 @@ final class GraftCatalog(val spark: SparkSession, val warehouse: String) {
     * straddle a tuple). That is what makes per-file day bounds exact and
     * bucket derived stats single-valued (min == max) — what the Iceberg
     * export derives provable partition tuples from. An empty unaligned
-    * input still lands one zero-row file. */
+    * input lands one zero-row file, written on the driver. */
   private def stageDataFiles(ns: String, name: String, df: DataFrame,
                              props: Map[String, String],
                              alignCols: Seq[Column] = Seq.empty,
                              derived: Seq[(String, Column)] = Seq.empty,
                              bloomCols: Seq[String] = Seq.empty)
       : Seq[(String, RowParquetWriter.Written)] = {
+    import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, Project}
     val fields = df.schema.fieldNames
     // the reserved pseudo-column must stay reserved: a REAL column named
     // __rows would have its bounds overwritten by the row count and
@@ -711,16 +722,19 @@ final class GraftCatalog(val spark: SparkSession, val warehouse: String) {
     require(alignCols.isEmpty || !fields.exists(_.startsWith("__ptw_")),
       "column names starting with '__ptw_' are reserved for partition-" +
         "aligned staging")
-    val laid = df.queryExecution.optimizedPlan match {
-      case local: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
+    // files a driver-local batch needs (None: not driver-local)
+    val localFiles = df.queryExecution.optimizedPlan match {
+      case local: LocalRelation =>
         val toUnsafe = UnsafeProjection.create(local.schema)
         val bytes = local.data.iterator.map(r => toUnsafe(r).getSizeInBytes.toLong).sum
-        val n = math.ceil(bytes.toDouble /
-          GraftCatalog.targetFileSizeOf(s"$ns.$name", props)).max(1.0).min(Int.MaxValue).toInt
-        if (n == 1) df.coalesce(1) else df.repartition(n)
-      case _ => df
+        Some(math.ceil(bytes.toDouble /
+          GraftCatalog.targetFileSizeOf(s"$ns.$name", props)).max(1.0).min(Int.MaxValue).toInt)
+      case _ => None
     }
-    // recorded values ride the task's projection AFTER the data fields
+    // an aligned local batch is sorted by ONE task; an unaligned one is
+    // projected on the driver (below)
+    val laid = if (localFiles.nonEmpty && alignCols.nonEmpty) df.coalesce(1) else df
+    // recorded values ride the staging projection AFTER the data fields
     // (the writer never writes them): derived stats, Bloom positions —
     // pmod(xxhash64(i, value), BloomBits) over the value's string form,
     // timestamps hashing their tz-stable micros form (see
@@ -749,18 +763,36 @@ final class GraftCatalog(val spark: SparkSession, val warehouse: String) {
         GraftCatalog.bloomKeyOf(if (isTs) Some(TimestampType) else None, c) },
       align.size, conf)
     val qe = rows.queryExecution
-    val written = try {
-      SQLExecution.withNewExecutionId(qe, Some(s"stage $ns.$name")) {
-        spark.sparkContext.runJob(qe.toRdd, task.run _)
-      }.toSeq.flatten
+    // an unaligned local batch's staging projection, evaluated right
+    // here: folded into the relation by the optimizer, or bound when it
+    // was not
+    val localRows = if (align.nonEmpty) None else (localFiles, qe.optimizedPlan) match {
+      case (Some(_), local: LocalRelation) => Some(local.data.iterator)
+      case (Some(_), Project(list, local: LocalRelation)) =>
+        val project = UnsafeProjection.create(list, local.output)
+        Some(local.data.iterator.map(project))
+      case _ => None
+    }
+    try {
+      val written = (localRows, localFiles) match {
+        case (Some(it), Some(1)) => task.writeLocal(it)
+        case (Some(it), Some(n)) =>
+          // past one target file: n slices of the projected rows, one
+          // file per task of one job
+          val toUnsafe = UnsafeProjection.create(rows.schema)
+          val data = it.map(r => toUnsafe(r).copy(): InternalRow).toVector
+          spark.sparkContext.runJob(
+            spark.sparkContext.parallelize(data, n.min(data.size)), task.run _).toSeq.flatten
+        case _ =>
+          val fromJob = SQLExecution.withNewExecutionId(qe, Some(s"stage $ns.$name")) {
+            spark.sparkContext.runJob(qe.toRdd, task.run _)
+          }.toSeq.flatten
+          if (fromJob.isEmpty && align.isEmpty) task.writeLocal(Iterator.empty)
+          else fromJob
+      }
+      written.sortBy(_._1)
     } catch { case e: Throwable =>
       deleteTree(tableDir(ns, name).resolve(stagingRel)); throw e
-    }
-    if (written.nonEmpty || align.nonEmpty) written.sortBy(_._1)
-    else {
-      val rel = s"$stagingRel/part-empty.parquet"
-      Seq(rel -> new RowParquetWriter(s"$tableAbs/$rel",
-        StructType(rows.schema.fields.take(fields.length)), conf.value).close())
     }
   }
 
@@ -1530,9 +1562,10 @@ final class GraftCatalog(val spark: SparkSession, val warehouse: String) {
       blockedBy = () => Files.isRegularFile(txnBarrierFile(ns, name)))(mkSnapshot)
 
   /** C3/C12: append `df` as a new version with optimistic CAS on the
-    * version number. Data files land in ONE Spark job whose tasks write
-    * them and record their stats and blooms as they go
-    * ([[stageDataFiles]]; a driver-local batch lands as one file); one
+    * version number. Data files are written, recording their stats and
+    * blooms as they go, by the tasks of ONE Spark job — or, for a
+    * driver-local batch that fits one file, on the driver with no job
+    * ([[stageDataFiles]]); one
     * manifest records the added files; the version JSON carries pointers
     * and summary stats only. Schema is validated additively against the
     * current version and recorded (a mismatched append is REJECTED before
@@ -1617,7 +1650,17 @@ final class GraftCatalog(val spark: SparkSession, val warehouse: String) {
     * `expectedParentSeq` turns the overwrite into a conditional commit:
     * if a concurrent append landed since the caller derived `df`, the
     * CAS aborts instead of silently dropping that append's rows (the
-    * compact-vs-append race). */
+    * compact-vs-append race).
+    *
+    * `rebaseOn` = Some(seq) is the rebasing form of the same guard
+    * (Iceberg's `RewriteFiles` validation): `df` replaces exactly
+    * version `seq`'s rows, and every manifest appended since `seq`
+    * rides on after the new one, so a racing append survives and the
+    * replace still lands. It aborts with a
+    * `ConcurrentModificationException` only when `seq`'s manifests were
+    * rewritten meanwhile (another replace, a rollback), when a delete
+    * manifest was added since (it could target rows `df` rewrote), or
+    * when the schema changed since. */
   def commitReplace(ns: String, name: String, df: DataFrame,
                     sourceRegion: String = "local", maxRetries: Int = 5,
                     expectedParentSeq: Option[Long] = None,
@@ -1625,8 +1668,14 @@ final class GraftCatalog(val spark: SparkSession, val warehouse: String) {
                     alignSpec: Boolean = false,
                     propsSet: Map[String, String] = Map.empty,
                     propsUnset: Seq[String] = Seq.empty,
-                    maintenance: Boolean = false): Snapshot = {
+                    maintenance: Boolean = false,
+                    rebaseOn: Option[Long] = None): Snapshot = {
     require(tableExists(ns, name), s"no such table $ns.$name")
+    require(expectedParentSeq.isEmpty || rebaseOn.isEmpty,
+      "a replace is either strict (expectedParentSeq) or rebasing (rebaseOn)")
+    val base = rebaseOn.map(seq => snapshots(ns, name).find(_.seq == seq).getOrElse(
+      throw new java.util.ConcurrentModificationException(
+        s"rebasing replace of $ns.$name: base v$seq is gone")))
     val parent0 = latest(ns, name)
     validatedSchemaJson(ns, name, parent0, df.schema, replacesAll = true)
     // even a full overwrite keeps the physical mapping: the recorded
@@ -1661,6 +1710,19 @@ final class GraftCatalog(val spark: SparkSession, val warehouse: String) {
           if (cur != exp) throw new java.util.ConcurrentModificationException(
             s"conditional replace of $ns.$name expected parent v$exp but found v$cur")
         }
+        // the manifests appended since the base, carried over unchanged
+        val tail = base.fold(Seq.empty[String]) { b =>
+          val par = parent.getOrElse(throw new java.util.ConcurrentModificationException(
+            s"rebasing replace of $ns.$name: the table log vanished"))
+          def abort(why: String) = throw new java.util.ConcurrentModificationException(
+            s"rebasing replace of $ns.$name on v${b.seq} (head v${par.seq}): $why")
+          if (!par.manifests.startsWith(b.manifests)) abort("its manifests were rewritten")
+          val t = par.manifests.drop(b.manifests.size)
+          if (t.exists(isDeleteManifest)) abort("a delete manifest was added")
+          if (par.schemaJson != b.schemaJson) abort("the schema changed")
+          t
+        }
+        val tailEntries = tail.flatMap(manifestEntries(ns, name, _))
         Snapshot(
           parent.map(_.seq + 1).getOrElse(0L),
           // `maintenance` = the caller ASSERTS this replace is row-
@@ -1670,10 +1732,10 @@ final class GraftCatalog(val spark: SparkSession, val warehouse: String) {
            else s"commit-${UUID.randomUUID()}"),
           parent.map(_.commitId),
           System.currentTimeMillis(),
-          manifest,
+          manifest ++ tail,
           sourceRegion,
-          entries.size,
-          entries.map(_._2).sum,
+          entries.size + tailEntries.size,
+          (entries ++ tailEntries).map(_._2).sum,
           Some(validatedSchemaJson(ns, name, parent, df.schema, replacesAll = true)),
           // propsSet rides the SAME snapshot as the data (a materialized
           // view's refresh watermark must never be a second commit — a
@@ -1724,7 +1786,7 @@ final class GraftCatalog(val spark: SparkSession, val warehouse: String) {
       .map(DataType.fromJson(_).asInstanceOf[StructType])
     val pkeys = toPhysicalDf(keys, curSchema)
     equalityDeleteFileEntries(ns, name, parent0).headOption.foreach { case (p, _) =>
-      val prior = spark.read.parquet(tableDir(ns, name).resolve(p).toString).columns.toSet
+      val prior = parquetFileSchema(ns, name, p).fieldNames.toSet
       require(prior == pkeys.columns.toSet,
         s"equality-delete columns ${pkeys.columns.toSet} differ from the table's existing $prior")
     }
@@ -1878,7 +1940,7 @@ final class GraftCatalog(val spark: SparkSession, val warehouse: String) {
         val pm = curSchema.map(GraftCatalog.physicalMap).getOrElse(Map.empty)
         val pKeyCols = keyCols.map(c => pm.getOrElse(c, c))
         equalityDeleteFileEntries(ns, name, parent0).headOption.foreach { case (p, _) =>
-          val prior = spark.read.parquet(tableDir(ns, name).resolve(p).toString).columns.toSet
+          val prior = parquetFileSchema(ns, name, p).fieldNames.toSet
           require(prior == pKeyCols.toSet,
             s"upsert key columns ${pKeyCols.toSet} differ from the table's delete columns $prior")
         }
@@ -1961,7 +2023,7 @@ final class GraftCatalog(val spark: SparkSession, val warehouse: String) {
         val pm = curSchema.map(GraftCatalog.physicalMap).getOrElse(Map.empty)
         val pKeyCols = keyCols.map(c => pm.getOrElse(c, c))
         equalityDeleteFileEntries(ns, name, parent0).headOption.foreach { case (p, _) =>
-          val prior = spark.read.parquet(tableDir(ns, name).resolve(p).toString).columns.toSet
+          val prior = parquetFileSchema(ns, name, p).fieldNames.toSet
           require(prior == pKeyCols.toSet,
             s"cdc key columns ${pKeyCols.toSet} differ from the table's delete columns $prior")
         }
@@ -2021,6 +2083,47 @@ final class GraftCatalog(val spark: SparkSession, val warehouse: String) {
     }
   }
 
+  /** A scan of `entries` (table-relative path, recorded size) planned
+    * from the manifests alone: a `HadoopFsRelation` over a
+    * [[ManifestFileIndex]] of the qualified paths, read under `schema`
+    * (nullable at every depth, as `DataSource` reads a user schema) —
+    * no existence probe, no listing, no listing job. `_metadata`
+    * columns resolve as on any file scan, except
+    * `_metadata.file_modification_time`, which reads 0 (nothing graft
+    * reads). Without a recorded schema the files are read through
+    * `spark.read.parquet`, which infers it. */
+  private def scanFiles(ns: String, name: String, entries: Seq[(String, Long)],
+                        schema: Option[StructType]): DataFrame = {
+    def abs(rel: String) = tableDir(ns, name).resolve(rel).toString
+    schema match {
+      case Some(st) =>
+        val fs = new HPath(tableDir(ns, name).toString)
+          .getFileSystem(spark.sparkContext.hadoopConfiguration)
+        val files = entries.map { case (rel, size) =>
+          fs.makeQualified(new HPath(abs(rel))) -> size }
+        val dataSchema = GraftCatalog.erasedNullability(
+          CharVarcharUtils.replaceCharVarcharWithStringInSchema(st)).asInstanceOf[StructType]
+        spark.baseRelationToDataFrame(HadoopFsRelation(new ManifestFileIndex(files),
+          new StructType(), dataSchema, None, new ParquetFileFormat, Map.empty)(spark))
+      case None => spark.read.parquet(entries.map(e => abs(e._1)): _*)
+    }
+  }
+
+  /** The Spark schema one parquet file's footer records (the schema
+    * `spark.read.parquet` would infer from it), read on the driver. */
+  private def parquetFileSchema(ns: String, name: String, rel: String): StructType = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new HPath(tableDir(ns, name).resolve(rel).toString), conf))
+    try {
+      val meta = reader.getFileMetaData
+      Option(meta.getKeyValueMetaData.get(ParquetReadSupport.SPARK_METADATA_KEY))
+        .map(DataType.fromJson(_).asInstanceOf[StructType])
+        .getOrElse(new ParquetToSparkSchemaConverter(conf).convert(meta.getSchema))
+    } finally reader.close()
+  }
+
   /** The merge-on-read scan: group data manifests by the set of delete
     * manifests committed AFTER them and anti-join exactly that set —
     * Iceberg's sequence-number rule, realized through the snapshot's
@@ -2039,7 +2142,10 @@ final class GraftCatalog(val spark: SparkSession, val warehouse: String) {
     * entries (stats/bloom scan planning); delete files are always read
     * in full. The delete side is small, so each epoch's anti-joins
     * broadcast under the scan — deletes cost a broadcast, never a
-    * table shuffle. */
+    * table shuffle. Every file list — data, position- and
+    * equality-delete files — is planned from the manifests
+    * ([[scanFiles]]): planning a read lists nothing and starts no job,
+    * however many files the version holds. */
   private def morScan(ns: String, name: String, snap: Snapshot,
                       keep: ManifestEntry => Boolean,
                       carryPosition: Boolean = false): DataFrame = {
@@ -2057,11 +2163,9 @@ final class GraftCatalog(val spark: SparkSession, val warehouse: String) {
     // alias back to THIS snapshot's logical names happens at the end,
     // which is what makes RENAME COLUMN metadata-only and lets time
     // travel read each version under its own names
-    val reader = schema.map(st => spark.read.schema(GraftCatalog.physicalSchema(st)))
-      .getOrElse(spark.read)
+    val physical = schema.map(GraftCatalog.physicalSchema)
     val indexed = snap.manifests.zipWithIndex
     val delsOrdered = indexed.filter(p => isDeleteManifest(p._1))
-    def abs(rel: String) = tableDir(ns, name).resolve(rel).toString
     // scan-side relative path: _metadata.file_path is URI-ENCODED
     // (space -> %20, verified empirically), so the match token must be
     // the table dir's ENCODED URI path, and the extracted rel is
@@ -2081,10 +2185,11 @@ final class GraftCatalog(val spark: SparkSession, val warehouse: String) {
       .groupBy(_._2).toSeq.sortBy(_._1)
       .flatMap { case (nAfter, mans) =>
         val files = mans.map(_._1)
-          .flatMap(manifestEntriesFull(ns, name, _)).filter(keep).map(e => abs(e.path))
+          .flatMap(manifestEntriesFull(ns, name, _)).filter(keep)
+          .map(e => e.path -> e.sizeBytes)
         if (files.isEmpty) None
         else {
-          val scan = reader.parquet(files: _*)
+          val scan = scanFiles(ns, name, files, physical)
           // reserved names: a user table may legitimately carry columns
           // called file_path/pos (inventory fixtures do)
           val base =
@@ -2097,18 +2202,21 @@ final class GraftCatalog(val spark: SparkSession, val warehouse: String) {
               .withColumn("__graft_pos", col("_metadata.row_index"))
           val (posMans, eqMans) = delsOrdered.takeRight(nAfter).map(_._1)
             .partition(isPosDeleteManifest)
-          val eqFiles = eqMans.flatMap(manifestEntries(ns, name, _)).map(e => abs(e._1))
-          val posFiles = posMans.flatMap(manifestEntries(ns, name, _)).map(e => abs(e._1))
+          val eqFiles = eqMans.flatMap(manifestEntries(ns, name, _))
+          val posFiles = posMans.flatMap(manifestEntries(ns, name, _))
           val afterPos =
             if (posFiles.isEmpty) base
-            else base.join(spark.read.parquet(posFiles: _*)
+            else base.join(scanFiles(ns, name, posFiles, Some(GraftCatalog.PosDeleteSchema))
                 .select(col("file_path").as("__graft_file"),
                   col("pos").as("__graft_pos")),
               Seq("__graft_file", "__graft_pos"), "left_anti")
           val applied =
             if (eqFiles.isEmpty) afterPos
             else {
-              val d = spark.read.parquet(eqFiles: _*)
+              // equality-delete files record no schema: their key columns
+              // are read off one footer, on the driver
+              val d = scanFiles(ns, name, eqFiles,
+                Some(parquetFileSchema(ns, name, eqFiles.head._1)))
               afterPos.join(d, d.columns.toSeq, "left_anti")
             }
           Some(if (needsPos && !carryPosition)
@@ -4062,14 +4170,12 @@ final class GraftCatalog(val spark: SparkSession, val warehouse: String) {
     // delete manifests never contribute rows to an incremental DATA read
     val addedM = toSnap.map(_.manifests.filterNot(fromManifests))
       .getOrElse(Seq.empty).filterNot(isDeleteManifest)
-    val files = addedM.flatMap(manifestEntries(ns, name, _)).map(_._1)
+    val files = addedM.flatMap(manifestEntries(ns, name, _))
     val schema = toSnap.flatMap(_.schemaJson).map(DataType.fromJson(_).asInstanceOf[StructType])
     if (files.isEmpty) spark.emptyDataFrame
     else {
       // files spell PHYSICAL names; emit the end snapshot's logical ones
-      val reader = schema.map(st => spark.read.schema(GraftCatalog.physicalSchema(st)))
-        .getOrElse(spark.read)
-      val raw = reader.parquet(files.map(f => tableDir(ns, name).resolve(f).toString): _*)
+      val raw = scanFiles(ns, name, files, schema.map(GraftCatalog.physicalSchema))
       schema.filter(GraftCatalog.hasColumnMapping) match {
         case Some(st) => raw.select(st.fields.toSeq.map(f =>
           col(GraftCatalog.physicalName(f))
@@ -4596,6 +4702,11 @@ object GraftCatalog {
     * row count (min==max==count) — powers [[GraftCatalog.countFast]]
     * without a manifest-format change. Never matches a query column. */
   private[catalog] val RowsStatKey = "__rows"
+
+  /** The columns a position-delete file is read under: the spec's
+    * (table-relative data file, 0-based row ordinal). */
+  private[catalog] val PosDeleteSchema = StructType(Seq(
+    StructField("file_path", StringType), StructField("pos", LongType)))
 
   // shared mapper for the per-version TBLPROPERTIES JSON (thread-safe)
   private[catalog] val propsMapper = new com.fasterxml.jackson.databind.ObjectMapper()

@@ -15,11 +15,11 @@ import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.SerializableConfiguration
 
-/** Executor-side single-file parquet writer for [[InternalRow]]s — the
-  * one writer every graft data file goes through: every staged commit
-  * (append, replace, compaction, upsert, cdc, delete files, branch
-  * appends — [[RowParquetWriter.StageTask]]) and the DSv2 row-level
-  * `BatchWrite`s. Delegates encoding to Spark's OWN
+/** Single-file parquet writer for [[InternalRow]]s — the one writer
+  * every graft data file goes through, in a task or on the driver:
+  * every staged commit (append, replace, compaction, upsert, cdc,
+  * delete files, branch appends — [[RowParquetWriter.StageTask]]) and
+  * the DSv2 row-level `BatchWrite`s. Delegates encoding to Spark's OWN
   * `ParquetWriteSupport`, so files are byte-compatible with what
   * `df.write.parquet` produces — with timestamps pinned to INT64 micros
   * (the Iceberg spec's physical type, so every file is exportable
@@ -176,11 +176,14 @@ private[graft] object RowParquetWriter {
     case _ => (a, b) => a.asInstanceOf[Comparable[Any]].compareTo(b)
   }
 
-  /** The task side of `GraftCatalog`'s one-job staging: writes one
-    * partition's rows under `tableDirAbs/stagingRel` and returns each
-    * file's (table-relative path, [[Written]]) to the driver. An empty
-    * partition writes nothing. File names carry the task attempt id, so
-    * a retried attempt never collides with a failed one's leftovers.
+  /** The writer side of `GraftCatalog`'s staging: writes rows under
+    * `tableDirAbs/stagingRel` and returns each file's (table-relative
+    * path, [[Written]]). [[run]] is the task body of the one staging job
+    * (an empty partition writes nothing; file names carry the task
+    * attempt id, so a retried attempt never collides with a failed
+    * one's leftovers); [[writeLocal]] is the same code on the driver for
+    * a driver-local batch, and always lands one file, even a zero-row
+    * one.
     *
     * Row layout (`rowSchemaJson`): the `nData` data fields, one value
     * per `derived` key, one Bloom position array per `blooms` key, then
@@ -196,8 +199,15 @@ private[graft] object RowParquetWriter {
                         nAlign: Int,
                         conf: SerializableConfiguration) extends Serializable {
 
-    def run(ctx: TaskContext, it: Iterator[InternalRow]): Seq[(String, Written)] = {
-      if (!it.hasNext) return Nil
+    def run(ctx: TaskContext, it: Iterator[InternalRow]): Seq[(String, Written)] =
+      if (!it.hasNext) Nil
+      else write(s"part-${ctx.partitionId()}-${ctx.taskAttemptId()}", it)
+
+    def writeLocal(rows: Iterator[InternalRow]): Seq[(String, Written)] =
+      write("part-local", rows, atLeastOne = true)
+
+    private def write(prefix: String, it: Iterator[InternalRow],
+                      atLeastOne: Boolean = false): Seq[(String, Written)] = {
       val rowSchema = DataType.fromJson(rowSchemaJson).asInstanceOf[StructType]
       val dataSchema = StructType(rowSchema.fields.take(nData))
       val derived = derivedKeys.zip(
@@ -212,7 +222,7 @@ private[graft] object RowParquetWriter {
       var rel: String = null
       var tuple: UnsafeRow = null
       def open(): Unit = {
-        rel = s"$stagingRel/part-${ctx.partitionId()}-${ctx.taskAttemptId()}-${out.size}.parquet"
+        rel = s"$stagingRel/$prefix-${out.size}.parquet"
         w = new RowParquetWriter(s"$tableDirAbs/$rel", dataSchema, conf.value, derived, blooms)
       }
       def finish(): Unit = { out += rel -> w.close(); w = null }
@@ -229,6 +239,7 @@ private[graft] object RowParquetWriter {
           if (w == null) open()
           w.write(row)
         }
+        if (w == null && out.isEmpty && atLeastOne) open()
         if (w != null) finish()
         out.toSeq
       } catch { case e: Throwable =>

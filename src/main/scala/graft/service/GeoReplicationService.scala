@@ -141,7 +141,7 @@ final class GeoReplicationService(spark: SparkSession,
 
   /** Current status per event = latest appended row (ranked window;
     * same-millisecond appends resolve by the monotonic seq). */
-  def eventLog: DataFrame = latestRows("sync_events", Seq("event_id"))
+  def eventLog: DataFrame = latestRows(sysRead("sync_events"), Seq("event_id"))
 
   def pendingEvents(region: String): DataFrame =
     eventLog.filter(col("status") === "Pending" && col("target_region") === region)
@@ -158,66 +158,71 @@ final class GeoReplicationService(spark: SparkSession,
   // is UNCHANGED (checkpointed rows keep their original ts/seq, so newer
   // tail appends still win the ranking).
 
-  /** Latest row per `keys`, FULL original schema (ts/seq retained — they
-    * order the checkpoint against post-compaction tail appends). */
-  private def latestRows(name: String, keys: Seq[String]): DataFrame = {
+  /** Latest row per `keys` of `log`, FULL original schema (ts/seq
+    * retained — they order the checkpoint against post-compaction tail
+    * appends). */
+  private def latestRows(log: DataFrame, keys: Seq[String]): DataFrame = {
     val w = Window.partitionBy(keys.map(col): _*).orderBy(col("ts").desc, col("seq").desc)
-    sysRead(name)
-      .withColumn("rn", row_number().over(w)).filter(col("rn") === 1).drop("rn")
+    log.withColumn("rn", row_number().over(w)).filter(col("rn") === 1).drop("rn")
   }
 
-  /** Conditionally replace `name`'s history with `compacted`: the CAS is
-    * pinned to the version the checkpoint was derived from, so an append
-    * racing the compaction ABORTS it (returns false — caller may retry)
-    * rather than losing the event. `compacted` is BY-NAME: reads pin
-    * their file list at DataFrame construction, so the plan must be
-    * built after `cur` is read — then a racing append can only make the
-    * checkpoint NEWER than `cur`, which the CAS rejects (safe), never
-    * older (silent loss). */
-  private def compactSystem(name: String, compacted: => DataFrame): Boolean = {
-    val cur = sys.latest("_system", name) match {
-      case Some(s) => s.seq
-      case None    => return true // nothing to compact
-    }
+  /** Each compactable log's checkpoint, as a function of the history it
+    * replaces. */
+  private val checkpoints: Map[String, DataFrame => DataFrame] = Map(
+    "sync_events" -> { log => latestRows(log, Seq("event_id")) },
+    // the MAX watermark per (table, region) — NOT the latest row: a stale
+    // advance appended late (see consistencyTokens) would otherwise
+    // become the checkpoint and silently regress the mark
+    "consistency_tokens" -> { log =>
+      val w = Window.partitionBy(col("table_entry"), col("region"))
+        .orderBy(col("high_watermark_ms").desc, col("ts").desc, col("seq").desc)
+      log.withColumn("rn", row_number().over(w)).filter(col("rn") === 1).drop("rn")
+    },
+    // the latest vote per (commit, region). The voting deadline lives on
+    // the REQUEST row, which the latest vote shadows — carry the key's
+    // MAX deadline onto the checkpoint row (matching approvalStatus'
+    // extended-window semantics) so the TimedOut computation survives
+    "approvals" -> { log =>
+      val deadlines = log.groupBy("commit_id", "region").agg(max("deadline_ms").as("_dl"))
+      latestRows(log, Seq("commit_id", "region")).drop("deadline_ms")
+        .join(deadlines, Seq("commit_id", "region"), "left")
+        .withColumnRenamed("_dl", "deadline_ms")
+    })
+
+  /** Replace `name`'s history up to its current version with that
+    * version's checkpoint. */
+  private def compactSystem(name: String): Boolean =
+    sys.latest("_system", name).forall(s => compactSystemAt(name, s.seq))
+
+  /** Replace version `cur`'s history with its checkpoint, computed from
+    * `cur` itself (`readVersion`), and rebase: the commit keeps every
+    * manifest appended since `cur` after the checkpoint's, so an event
+    * append racing the compaction survives it and the compaction still
+    * lands. It aborts (returns false — the caller may retry) only when
+    * `cur`'s manifests were rewritten meanwhile (a racing compaction) or
+    * a delete manifest was added since. */
+  private[graft] def compactSystemAt(name: String, cur: Long): Boolean =
     try {
-      sys.commitReplace("_system", name, compacted, expectedParentSeq = Some(cur))
+      sys.commitReplace("_system", name,
+        checkpoints(name)(sys.readVersion("_system", name, cur)),
+        maxRetries = SystemRetries, rebaseOn = Some(cur))
       true
     } catch { case _: java.util.ConcurrentModificationException => false }
-  }
 
   /** Physical row count of a `_system` log (ops introspection: how much
     * history a read actually scans — compaction drops it to live keys). */
   def rawSystemCount(name: String): Long = sysRead(name).count()
 
   /** Checkpoint `_system.sync_events` to its live rows (one per event). */
-  def compactSyncEvents(): Boolean =
-    compactSystem("sync_events", latestRows("sync_events", Seq("event_id")))
+  def compactSyncEvents(): Boolean = compactSystem("sync_events")
 
   /** Checkpoint consistency tokens to the MAX watermark per (table,
-    * region) — NOT the latest row: a stale advance appended late (see
-    * consistencyTokens) would otherwise become the checkpoint and
-    * silently regress the mark through compaction. */
-  def compactConsistencyTokens(): Boolean =
-    compactSystem("consistency_tokens", {
-      val w = Window.partitionBy(col("table_entry"), col("region"))
-        .orderBy(col("high_watermark_ms").desc, col("ts").desc, col("seq").desc)
-      sysRead("consistency_tokens")
-        .withColumn("rn", row_number().over(w)).filter(col("rn") === 1).drop("rn")
-    })
+    * region). */
+  def compactConsistencyTokens(): Boolean = compactSystem("consistency_tokens")
 
-  /** Checkpoint approvals to the latest vote per (commit, region). The
-    * voting deadline lives on the REQUEST row, which the latest vote
-    * shadows — carry the key's MAX deadline onto the checkpoint row
-    * (matching approvalStatus' extended-window semantics) so the
-    * TimedOut computation survives compaction. */
-  def compactApprovals(): Boolean = compactSystem("approvals", {
-    val latest = latestRows("approvals", Seq("commit_id", "region"))
-    val deadlines = sysRead("approvals")
-      .groupBy("commit_id", "region").agg(max("deadline_ms").as("_dl"))
-    latest.drop("deadline_ms")
-      .join(deadlines, Seq("commit_id", "region"), "left")
-      .withColumnRenamed("_dl", "deadline_ms")
-  })
+  /** Checkpoint approvals to the latest vote per (commit, region),
+    * carrying each key's voting deadline. */
+  def compactApprovals(): Boolean = compactSystem("approvals")
 
   /** Y8: only Failed events may be reset to Pending. */
   def retryFailedEvents(region: String): Int = {

@@ -1448,40 +1448,198 @@ class CatalogSpec extends SparkSpec {
     assert(cat.read("ns", "w").count() === cat.read("ns", "r").count())
   }
 
-  test("an unpartitioned bloom-less append is ONE Spark job and a local " +
-       "batch lands as ONE file") {
+  /** Run `body` under a private job group and return its result with
+    * the description of every Spark job it started (the listener bus is
+    * FIFO: once a fence job shows up, every event of `body` has been
+    * delivered). */
+  private def withJobs[T](body: => T): (T, Seq[String]) = {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val cat = freshCatalog()
-    cat.createTable("ns", "t")
-    cat.commitAppend("ns", "t", Seq((0L, "warm")).toDF("id", "v"))
-    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val group = s"graft-jobs-${java.util.UUID.randomUUID()}"
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]
     val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        groups.add(Option(j.properties).flatMap(p =>
-          Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
+      override def onJobStart(j: SparkListenerJobStart): Unit = {
+        def prop(k: String) =
+          Option(j.properties).flatMap(p => Option(p.getProperty(k))).getOrElse("")
+        jobs.add(prop("spark.jobGroup.id") -> prop("spark.job.description"))
+      }
     }
     val sc = spark.sparkContext
     sc.addSparkListener(listener)
-    val snap = try {
-      sc.setJobGroup("graft-one-job-append", "guard")
-      val s = try cat.commitAppend("ns", "t",
-        (1 to 250).map(i => (i.toLong, s"v$i")).toDF("id", "v"))
-      finally sc.clearJobGroup()
-      // the listener bus is FIFO: once the fence job shows up, every
-      // event of the commit has been delivered
-      sc.setJobGroup("graft-one-job-fence", "fence")
+    try {
+      sc.setJobGroup(group, "measured")
+      val out = try body finally sc.clearJobGroup()
+      sc.setJobGroup(s"$group-fence", "fence")
       try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
       val deadline = System.nanoTime() + 30e9.toLong
-      while (!groups.contains("graft-one-job-fence") && System.nanoTime() < deadline)
+      while (!jobs.asScala.exists(_._1 == s"$group-fence") && System.nanoTime() < deadline)
         Thread.sleep(20)
-      s
+      assert(jobs.asScala.exists(_._1 == s"$group-fence"), "listener bus never drained")
+      out -> jobs.asScala.toSeq.filter(_._1 == group).map(_._2)
     } finally sc.removeSparkListener(listener)
-    assert(groups.contains("graft-one-job-fence"), "listener bus never drained")
-    assert(groups.asScala.count(_ == "graft-one-job-append") === 1,
-      s"commitAppend ran ${groups.asScala.count(_ == "graft-one-job-append")} jobs")
+  }
+
+  test("an unpartitioned bloom-less append is ONE Spark job and a local " +
+       "batch lands as ONE file") {
+    val cat = freshCatalog()
+    cat.createTable("ns", "t")
+    cat.commitAppend("ns", "t", Seq((0L, "warm")).toDF("id", "v"))
+    // a driver-local batch is staged on the driver: no job at all
+    val (snap, localJobs) = withJobs(cat.commitAppend("ns", "t",
+      (1 to 250).map(i => (i.toLong, s"v$i")).toDF("id", "v")))
+    assert(localJobs.isEmpty, s"a local batch ran jobs: $localJobs")
     assert(cat.addedFiles("ns", "t", snap).size === 1,
       "a driver-local batch must land as one file")
-    assert(cat.read("ns", "t").count() === 251L)
+    // a non-local input is written by the tasks of exactly one job
+    val (_, rangeJobs) = withJobs(cat.commitAppend("ns", "t",
+      spark.range(1000, 1250).select(col("id"), lit("r").as("v"))))
+    assert(rangeJobs.size === 1, s"a non-local append ran ${rangeJobs.size} jobs: $rangeJobs")
+    assert(cat.read("ns", "t").count() === 501L)
+  }
+
+  test("driver-staged files equal job-staged ones: counts, bounds, derived " +
+       "stats, Bloom bitsets and rows; spec'd, empty and oversized local batches") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(
+      StructField("i", IntegerType), StructField("l", LongType),
+      StructField("dec", DecimalType(12, 3)), StructField("d", DoubleType),
+      StructField("f", FloatType), StructField("s", StringType),
+      StructField("dt", DateType), StructField("ts", TimestampType),
+      StructField("b", BooleanType), StructField("n", LongType)))
+    val cols = schema.fieldNames.toSeq
+    def day(s: String) = java.sql.Date.valueOf(s)
+    def ts(s: String) = java.sql.Timestamp.valueOf(s)
+    val rows = Seq(
+      Row(1, 10L, BigDecimal("1.500").bigDecimal, 0.0, 0.0f, "", day("2024-02-29"),
+          ts("2024-02-29 12:34:56.123456"), true, null),
+      Row(-7, -3L, BigDecimal("-2.250").bigDecimal, -0.0, -0.0f, "日本語", day("1969-12-31"),
+          ts("1969-12-31 23:59:59.999999"), false, null),
+      Row(42, Long.MaxValue, BigDecimal("999999999.999").bigDecimal, Double.NaN, Float.NaN,
+          "é", day("2000-01-01"), ts("2000-01-01 00:00:00"), true, null),
+      Row(null, null, null, -0.0, 0.0f, null, null, null, null, null),
+      Row(9, 1L, BigDecimal("0.001").bigDecimal, -1.5, 2.5f, "zz\uD83D\uDE00",
+          day("2024-01-02"), ts("2024-01-02 00:00:00"), false, null))
+    def local(rs: Seq[Row]) = spark.createDataFrame(rs.asJava, schema)
+    def distributed(rs: Seq[Row]) =
+      spark.createDataFrame(spark.sparkContext.parallelize(rs, 1), schema)
+    val specProps = Map(
+      GraftCatalog.PartitionSpecProp -> GraftCatalog.partitionSpecJson(Seq(
+        GraftCatalog.PartitionField("bucket", "i", 4),
+        GraftCatalog.PartitionField("day", "ts"))))
+    val cat = freshCatalog()
+    def entriesOf(t: String, snap: cat.Snapshot) = {
+      val added = cat.addedFiles("ns", t, snap).toSet
+      cat.prunedDataEntries("ns", t, snap, Array.empty).filter(e => added(e.path))
+        .toSeq.sortBy(_.path)
+    }
+    // one table per staging form; each case commits the same rows to both
+    Seq("loc", "job").foreach { t =>
+      cat.createTable("ns", t)
+      cat.commitAppend("ns", t, local(Nil), propsSet = specProps)
+    }
+    Seq(rows, Nil).foreach { rs =>
+      val (ls, lJobs) = withJobs(cat.commitAppend("ns", "loc", local(rs), bloomCols = cols))
+      assert(lJobs.isEmpty, s"the local batch ran jobs: $lJobs")
+      val (js, jJobs) = withJobs(
+        cat.commitAppend("ns", "job", distributed(rs), bloomCols = cols))
+      assert(jJobs.size === 1, s"the distributed batch ran ${jJobs.size} jobs")
+      val (l, j) = (entriesOf("loc", ls), entriesOf("job", js))
+      assert(l.size === 1 && j.size === 1, s"one file each: $l / $j")
+      assert(l.head.stats === j.head.stats, "row counts, bounds, derived stats")
+      assert(l.head.blooms === j.head.blooms, "Bloom bitsets")
+      if (rs.nonEmpty) {
+        // not vacuous: every prunable column bounded, the bucket stat
+        // recorded, every column (the timestamp too) bloom-indexed, the
+        // all-null column unbounded
+        assert(cols.filterNot(_ == "n").forall(l.head.stats.contains))
+        assert(l.head.stats.keys.exists(_.startsWith("__pt_bucket")))
+        assert(l.head.blooms.size === cols.size)
+        assert(!l.head.stats.contains("n"))
+      } else assert(l.head.stats.get("__rows").contains(("0", "0")))
+    }
+    def sorted(t: String) = cat.read("ns", t).collect().map(_.toString).sorted.toSeq
+    assert(sorted("loc") === sorted("job"))
+    assert(sorted("loc").size === 5)
+    // aligned staging of a local batch keeps the job path (one file per
+    // partition tuple) on both forms
+    val (al, alJobs) = withJobs(
+      cat.commitAppend("ns", "loc", local(rows), bloomCols = cols, alignSpec = true))
+    val aj = cat.commitAppend("ns", "job", distributed(rows), bloomCols = cols, alignSpec = true)
+    assert(alJobs.size === 1)
+    assert(entriesOf("loc", al).map(e => e.stats -> e.blooms) ===
+      entriesOf("job", aj).map(e => e.stats -> e.blooms))
+    assert(sorted("loc") === sorted("job"))
+    // a local batch past write.target-file-size-bytes lands n files
+    // through ONE job
+    cat.createTable("ns", "big")
+    cat.commitAppend("ns", "big", local(Nil),
+      propsSet = Map(GraftCatalog.TargetFileSizeProp -> "1024"))
+    val many = (0 until 250).map(k => Row(k, k.toLong, null, k.toDouble, k.toFloat,
+      s"row-$k", null, null, k % 2 == 0, null))
+    val (bs, bJobs) = withJobs(cat.commitAppend("ns", "big", local(many)))
+    assert(bJobs.size === 1, s"an oversized local batch ran ${bJobs.size} jobs")
+    assert(cat.addedFiles("ns", "big", bs).size > 1, "an oversized local batch is split")
+    assert(cat.read("ns", "big").count() === 250L)
+  }
+
+  test("reads plan from manifests: no listing job, the same input files and " +
+       "_metadata paths, exchange reuse, position deletes under an encodable " +
+       "dir, a deleted file fails at action time") {
+    import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    val wh = Files.createTempDirectory("graft wh+plus").toString
+    val cat = new GraftCatalog(spark, wh)
+    cat.createTable("ns", "t40")
+    cat.commitAppend("ns", "t40",
+      spark.range(0, 400, 1, 40).select(col("id"), (col("id") % 7).as("k")))
+    val snap = cat.latest("ns", "t40").get
+    val paths = cat.dataFiles("ns", "t40", snap)
+      .map(f => cat.tablePath("ns", "t40").resolve(f).toString)
+    assert(paths.size === 40)
+    def listings(jobs: Seq[String]) = jobs.filter(_.startsWith("Listing leaf files"))
+    val (n, readJobs) = withJobs(cat.read("ns", "t40").count())
+    assert(n === 400L)
+    assert(listings(readJobs).isEmpty, s"a read listed files: $readJobs")
+    // the form it replaced lists 40 paths in a parallel job: not vacuous
+    val (old, oldJobs) = withJobs {
+      val df = spark.read.parquet(paths: _*); df.count(); df
+    }
+    assert(listings(oldJobs).nonEmpty, s"expected a listing job: $oldJobs")
+    assert(cat.read("ns", "t40").inputFiles.toSet === old.inputFiles.toSet)
+    def metaPaths(df: org.apache.spark.sql.DataFrame) =
+      df.select(col("_metadata.file_path")).distinct().collect().map(_.getString(0)).toSet
+    assert(metaPaths(cat.read("ns", "t40")) === metaPaths(old))
+    assert(cat.read("ns", "t40").queryExecution.optimizedPlan.stats.sizeInBytes ===
+      old.queryExecution.optimizedPlan.stats.sizeInBytes, "broadcast sizing unchanged")
+
+    // a self-join of two reads reuses one exchange
+    val thr = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try {
+      val a = cat.read("ns", "t40").groupBy("k").count()
+      val b = cat.read("ns", "t40").groupBy("k").count()
+      val joined = a.join(b, "k")
+      assert(joined.collect().length === 7)
+      val reused = new AdaptiveSparkPlanHelper {}.collectWithSubqueries(
+        joined.queryExecution.executedPlan) { case r: ReusedExchangeExec => r }
+      assert(reused.nonEmpty, s"no ReusedExchange:\n${joined.queryExecution.executedPlan}")
+    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thr)
+
+    // position deletes under a dir whose URI needs encoding (space, '+')
+    cat.createTable("ns", "pd")
+    cat.commitAppend("ns", "pd", Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "v"))
+    val pos = cat.positionsWhere("ns", "pd", col("id") === 2L)
+    assert(pos.count() === 1L)
+    cat.commitDeletePositions("ns", "pd", pos)
+    assert(cat.read("ns", "pd").select("id").as[Long].collect().toSet === Set(1L, 3L))
+
+    // a missing file is not probed at planning time; the scan fails loudly
+    Files.delete(java.nio.file.Paths.get(paths.head))
+    val gone = cat.read("ns", "t40")
+    val err = intercept[Exception](gone.count())
+    assert(Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+      .exists(e => String.valueOf(e.getMessage).contains(new java.io.File(paths.head).getName)),
+      s"the failure must name the missing file: $err")
   }
 
   test("rewrite_position_deletes: churned p-files consolidate to one " +

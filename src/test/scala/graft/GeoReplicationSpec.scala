@@ -405,6 +405,51 @@ class GeoReplicationSpec extends SparkSpec {
     assert(svc.freshRegions("ns", "t", 0L) === freshBefore)
   }
 
+  test("a compaction rebases over an event append racing it; a racing compaction still aborts") {
+    val svc = freshService("us-east-1", "eu-west-1")
+    val sys = svc.regions("us-east-1")
+    sys.createTable("ns", "t")
+    svc.registerTable("ns", "t", "us-east-1")
+    svc.registerTable("ns", "t", "eu-west-1")
+    svc.coordinateWrite("ns", "t", Seq(1L).toDF("id"), "us-east-1")
+    svc.coordinateWrite("ns", "t", Seq(2L).toDF("id"), "us-east-1")
+    svc.processPendingEvents("eu-west-1")
+
+    // the compaction reads version `cur`; an event append lands before
+    // it commits
+    val cur = sys.latest("_system", "sync_events").get.seq
+    val live = svc.eventLog.count()
+    assert(svc.rawSystemCount("sync_events") > live, "history must hold more rows than live events")
+    svc.coordinateWrite("ns", "t", Seq(3L).toDF("id"), "us-east-1")
+    val head = sys.latest("_system", "sync_events").get.seq
+    val tail = sys.readIncremental("_system", "sync_events", cur, head).count()
+    assert(tail === 2L, "the racing write appends its two pending events")
+    def log() = svc.eventLog.collect().map(r => r.getString(0) -> r.toString).toMap
+    val before = log()
+    val pendingBefore = svc.pendingEvents("eu-west-1").select("event_id").as[String]
+      .collect().toSet
+    assert(pendingBefore.size === 2)
+
+    assert(svc.compactSystemAt("sync_events", cur), "the compaction must rebase, not abort")
+    assert(svc.pendingEvents("eu-west-1").select("event_id").as[String].collect().toSet
+      === pendingBefore, "the racing events are still pending")
+    assert(log() === before, "compaction must not change the logical event log")
+    assert(svc.rawSystemCount("sync_events") === live + tail,
+      "the log is the checkpoint of v$cur plus the tail appended since")
+
+    // a second compaction from the same base finds v$cur's manifests
+    // rewritten: it aborts and changes nothing
+    val afterFirst = sys.latest("_system", "sync_events").get.seq
+    assert(!svc.compactSystemAt("sync_events", cur), "a racing compaction must abort")
+    assert(sys.latest("_system", "sync_events").get.seq === afterFirst)
+    assert(log() === before)
+
+    svc.processPendingEvents("eu-west-1")
+    assert(svc.pendingEvents("eu-west-1").count() === 0)
+    assert(svc.regions("eu-west-1").read("ns", "t").as[Long].collect().sorted
+      === Array(1L, 2L, 3L))
+  }
+
   test("storage listing fans prefixes out to executors; deep trees list without driver buffering") {
     val root = Files.createTempDirectory("list-tree")
     // root-level files + many nested prefixes, several levels deep
