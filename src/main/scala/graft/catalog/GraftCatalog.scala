@@ -6,12 +6,13 @@ import java.util.UUID
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.{Path => HPath}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.paths.SparkPath
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.expressions.UnsafeProjection
 import org.apache.spark.sql.catalyst.util.CharVarcharUtils
 import org.apache.spark.sql.execution.SQLExecution
-import org.apache.spark.sql.execution.datasources.HadoopFsRelation
+import org.apache.spark.sql.execution.datasources.{FileFormat, HadoopFsRelation, PartitionedFile}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetReadSupport, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, BooleanType, ByteType, DataType, DateType, DecimalType, DoubleType, FloatType, IntegerType, LongType, MapType, NumericType, ShortType, StringType, StructField, StructType, TimestampType}
@@ -380,8 +381,13 @@ final class GraftCatalog(val spark: SparkSession, val warehouse: String) {
     if (!Files.isDirectory(md)) return Seq.empty
     listDir(md)
       .filter(_.getFileName.toString.matches("v\\d+\\.json"))
-      .map(p => snapshotCache.computeIfAbsent(p.toAbsolutePath, ap =>
-        parseJson(new String(Files.readAllBytes(ap), StandardCharsets.UTF_8))))
+      .flatMap { p =>
+        // a version an expiry deletes between the listing and the read
+        // is simply gone
+        try Some(snapshotCache.computeIfAbsent(p.toAbsolutePath, ap =>
+          parseJson(new String(Files.readAllBytes(ap), StandardCharsets.UTF_8))))
+        catch { case _: java.nio.file.NoSuchFileException => None }
+      }
       .sortBy(_.seq)
   }
 
@@ -680,7 +686,8 @@ final class GraftCatalog(val spark: SparkSession, val warehouse: String) {
     *
     * Where the rows are written: a `df` whose optimized plan is a
     * driver-local `LocalRelation`, staged unaligned, whose exact bytes
-    * fit one `write.target-file-size-bytes` file, is written ON THE
+    * fit one `write.target-file-size-bytes` file (the metadata-scale
+    * rule, [[GraftCatalog.driverScale]]), is written ON THE
     * DRIVER — the staging projection (derived stats, Bloom positions)
     * folds into the `LocalRelation` (Catalyst's `ConvertToLocalRelation`)
     * and its rows go through the same [[RowParquetWriter.StageTask]]
@@ -722,18 +729,16 @@ final class GraftCatalog(val spark: SparkSession, val warehouse: String) {
     require(alignCols.isEmpty || !fields.exists(_.startsWith("__ptw_")),
       "column names starting with '__ptw_' are reserved for partition-" +
         "aligned staging")
-    // files a driver-local batch needs (None: not driver-local)
-    val localFiles = df.queryExecution.optimizedPlan match {
+    // exact bytes of a driver-local batch (None: not driver-local)
+    val localBytes = df.queryExecution.optimizedPlan match {
       case local: LocalRelation =>
         val toUnsafe = UnsafeProjection.create(local.schema)
-        val bytes = local.data.iterator.map(r => toUnsafe(r).getSizeInBytes.toLong).sum
-        Some(math.ceil(bytes.toDouble /
-          GraftCatalog.targetFileSizeOf(s"$ns.$name", props)).max(1.0).min(Int.MaxValue).toInt)
+        Some(local.data.iterator.map(r => toUnsafe(r).getSizeInBytes.toLong).sum)
       case _ => None
     }
     // an aligned local batch is sorted by ONE task; an unaligned one is
     // projected on the driver (below)
-    val laid = if (localFiles.nonEmpty && alignCols.nonEmpty) df.coalesce(1) else df
+    val laid = if (localBytes.nonEmpty && alignCols.nonEmpty) df.coalesce(1) else df
     // recorded values ride the staging projection AFTER the data fields
     // (the writer never writes them): derived stats, Bloom positions —
     // pmod(xxhash64(i, value), BloomBits) over the value's string form,
@@ -766,7 +771,7 @@ final class GraftCatalog(val spark: SparkSession, val warehouse: String) {
     // an unaligned local batch's staging projection, evaluated right
     // here: folded into the relation by the optimizer, or bound when it
     // was not
-    val localRows = if (align.nonEmpty) None else (localFiles, qe.optimizedPlan) match {
+    val localRows = if (align.nonEmpty) None else (localBytes, qe.optimizedPlan) match {
       case (Some(_), local: LocalRelation) => Some(local.data.iterator)
       case (Some(_), Project(list, local: LocalRelation)) =>
         val project = UnsafeProjection.create(list, local.output)
@@ -774,11 +779,14 @@ final class GraftCatalog(val spark: SparkSession, val warehouse: String) {
       case _ => None
     }
     try {
-      val written = (localRows, localFiles) match {
-        case (Some(it), Some(1)) => task.writeLocal(it)
-        case (Some(it), Some(n)) =>
+      val written = (localRows, localBytes) match {
+        case (Some(it), Some(bytes)) if GraftCatalog.driverScale(s"$ns.$name", props, bytes) =>
+          task.writeLocal(it)
+        case (Some(it), Some(bytes)) =>
           // past one target file: n slices of the projected rows, one
           // file per task of one job
+          val n = math.ceil(bytes.toDouble /
+            GraftCatalog.targetFileSizeOf(s"$ns.$name", props)).min(Int.MaxValue).toInt
           val toUnsafe = UnsafeProjection.create(rows.schema)
           val data = it.map(r => toUnsafe(r).copy(): InternalRow).toVector
           spark.sparkContext.runJob(
@@ -1540,7 +1548,18 @@ final class GraftCatalog(val spark: SparkSession, val warehouse: String) {
         try {
           Files.createLink(target(snap.seq), tmp)
           Files.deleteIfExists(tmp)
-          return snap
+          // a parent read before an expiry can name a slot the expiry
+          // has since freed: the link then succeeds BELOW the head. Expiry
+          // deletes oldest first, so a slot is free only once its
+          // predecessor is gone too — while that one stands, the link is
+          // a plain commit and no listing is paid
+          val resurrected =
+            (snap.seq == 0 || !Files.exists(target(snap.seq - 1))) &&
+              readParent().exists(_.seq > snap.seq)
+          if (!resurrected) return snap
+          snapshotCache.remove(target(snap.seq).toAbsolutePath)
+          Files.deleteIfExists(target(snap.seq))
+          attempt += 1
         } catch {
           case _: java.nio.file.FileAlreadyExistsException =>
             Files.deleteIfExists(tmp)
@@ -2109,6 +2128,42 @@ final class GraftCatalog(val spark: SparkSession, val warehouse: String) {
     }
   }
 
+  // one driver-side parquet reader per read schema (the reader captures
+  // its broadcast Hadoop conf; building one per read would re-broadcast)
+  private val localReaders = new java.util.concurrent.ConcurrentHashMap[
+    StructType, PartitionedFile => Iterator[InternalRow]]()
+
+  /** The rows of the data files listed by `manifests` (data manifests of
+    * `snap`), read ON THE DRIVER through Spark's own parquet reader under
+    * the version's recorded schema: no job, no listing — the read-side
+    * twin of driver-side staging. For metadata-scale logs only: the
+    * service's incremental `_system` views read exactly the manifests a
+    * head carries beyond theirs. */
+  private[graft] def localRows(ns: String, name: String, snap: Snapshot,
+                               manifests: Seq[String]): Seq[Row] = {
+    require(!manifests.exists(isDeleteManifest),
+      s"$ns.$name: a driver-side read covers data manifests only")
+    val schema = GraftCatalog.erasedNullability(snap.schemaJson
+      .map(DataType.fromJson(_)).getOrElse(new StructType())).asInstanceOf[StructType]
+    val physical = CharVarcharUtils.replaceCharVarcharWithStringInSchema(
+      GraftCatalog.physicalSchema(schema))
+    val read = localReaders.computeIfAbsent(physical, st =>
+      new ParquetFileFormat().buildReaderWithPartitionValues(spark, st, new StructType(), st,
+        Nil, Map(FileFormat.OPTION_RETURNING_BATCH -> "false"),
+        spark.sessionState.newHadoopConf()))
+    val toRow = CatalystTypeConverters.createToScalaConverter(schema)
+    val fs = new HPath(tableDir(ns, name).toString)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    manifests.flatMap(manifestEntries(ns, name, _)).filter(_._2 > 0).flatMap { case (rel, size) =>
+      val path = fs.makeQualified(new HPath(tableDir(ns, name).resolve(rel).toString))
+      val rows = read(PartitionedFile(InternalRow.empty, SparkPath.fromPath(path), 0L, size,
+        Array.empty[String], 0L, size))
+      // the reader hands out one reused row: convert each as it comes
+      try rows.map(r => toRow(r).asInstanceOf[Row]).toVector
+      finally rows match { case c: java.io.Closeable => c.close(); case _ => }
+    }
+  }
+
   /** The Spark schema one parquet file's footer records (the schema
     * `spark.read.parquet` would infer from it), read on the driver. */
   private def parquetFileSchema(ns: String, name: String, rel: String): StructType = {
@@ -2336,6 +2391,11 @@ final class GraftCatalog(val spark: SparkSession, val warehouse: String) {
     * compacting to a default. */
   def targetFileSizeBytes(ns: String, name: String): Long =
     GraftCatalog.targetFileSizeOf(s"$ns.$name", tableProperties(ns, name))
+
+  /** Whether work over `bytes` of this table runs on the driver
+    * ([[GraftCatalog.driverScale]] under the table's current properties). */
+  def driverScale(ns: String, name: String, bytes: Long): Boolean =
+    GraftCatalog.driverScale(s"$ns.$name", tableProperties(ns, name), bytes)
 
   /** Metadata-only MIN/MAX of a prunable column: fold the per-file
     * bounds the commit job recorded — exact (file bounds ARE the file's
@@ -2636,8 +2696,7 @@ final class GraftCatalog(val spark: SparkSession, val warehouse: String) {
       s"equality-delete files disagree on columns: " +
         s"${eqColSets.map(_._2).distinct.mkString(" vs ")}")
     equalityDeleteFileEntries(ns, name, parent0).headOption.foreach { case (p, _) =>
-      val prior = spark.read.parquet(tableDir(ns, name).resolve(p).toString)
-        .columns.toSet
+      val prior = parquetFileSchema(ns, name, p).fieldNames.toSet
       eqColSets.headOption.foreach { case (_, cols) =>
         require(prior == cols,
           s"equality-delete columns $cols differ from the table's existing $prior")
@@ -4341,9 +4400,11 @@ final class GraftCatalog(val spark: SparkSession, val warehouse: String) {
 
     val (posM, eqM) = added.filter(isDeleteManifest)
       .partition(isPosDeleteManifest)
-    def abs(rel: String) = tableDir(ns, name).resolve(rel).toString
-    val eqFiles = eqM.flatMap(manifestEntries(ns, name, _)).map(e => abs(e._1))
-    val posFiles = posM.flatMap(manifestEntries(ns, name, _)).map(e => abs(e._1))
+    val eqFiles = eqM.flatMap(manifestEntries(ns, name, _))
+    val posFiles = posM.flatMap(manifestEntries(ns, name, _))
+    // delete files are planned from the manifests like morScan's: no
+    // schema-inference job, no listing job
+    def posDeletes = scanFiles(ns, name, posFiles, Some(GraftCatalog.PosDeleteSchema))
     if (eqFiles.isEmpty && posFiles.isEmpty)
       return (n, readSnapshot(ns, name, from).limit(0))
 
@@ -4353,10 +4414,11 @@ final class GraftCatalog(val spark: SparkSession, val warehouse: String) {
     // files position deletes reference, by name
     val posRefs: Set[String] =
       if (posFiles.isEmpty) Set.empty
-      else spark.read.parquet(posFiles: _*).select("file_path")
+      else posDeletes.select("file_path")
         .distinct().collect().map(_.getString(0)).toSet
     val eqDf = if (eqFiles.isEmpty) None
-      else Some(spark.read.parquet(eqFiles: _*))
+      else Some(scanFiles(ns, name, eqFiles,
+        Some(parquetFileSchema(ns, name, eqFiles.head._1))))
     // equality-candidate pruning on the FIRST delete column (delete
     // files carry PHYSICAL spellings; stats key on them directly)
     val keepEq: ManifestEntry => Boolean = eqDf match {
@@ -4431,7 +4493,7 @@ final class GraftCatalog(val spark: SparkSession, val warehouse: String) {
       if (posFiles.isEmpty) None
       else {
         val hit = morScanLineage(ns, name, from, e => posRefs(e.path))
-          .join(spark.read.parquet(posFiles: _*)
+          .join(posDeletes
             .select(col("file_path").as("_file"), col("pos").as("_pos")),
             Seq("_file", "_pos"), "left_semi")
           .drop("_file", "_pos")
@@ -4471,8 +4533,10 @@ final class GraftCatalog(val spark: SparkSession, val warehouse: String) {
 
   /** Shared expiry: manifest-granular candidate selection (a manifest
     * referenced only by expired versions is removable), then a
-    * FILE-granular reachability guard before the distributed physical
-    * delete. The guard exists because [[commitFilesReplace]] re-manifests
+    * FILE-granular reachability guard before the physical delete — on
+    * the driver when the removed bytes are metadata-scale
+    * ([[GraftCatalog.driverScale]]), else by the tasks of one job. The
+    * guard exists because [[commitFilesReplace]] re-manifests
     * the files an overwrite KEEPS — so a live file can be referenced by
     * both an expired-only manifest and a kept one, and deleting expired
     * manifests wholesale would destroy it (caught by CatalogSpec's
@@ -4487,11 +4551,19 @@ final class GraftCatalog(val spark: SparkSession, val warehouse: String) {
     val removableManifests = expired.flatMap(_.manifests).distinct.filterNot(keptManifests)
     val keptFiles = keptManifests.toSeq
       .flatMap(manifestEntries(ns, name, _)).map(_._1).toSet
-    val removable = removableManifests.flatMap(manifestEntries(ns, name, _))
-      .map(_._1).distinct.filterNot(keptFiles)
-    if (removable.nonEmpty) {
+    val removableEntries = removableManifests.flatMap(manifestEntries(ns, name, _))
+      .distinctBy(_._1).filterNot(e => keptFiles(e._1))
+    val removable = removableEntries.map(_._1)
+    val base = tableDir(ns, name).toString
+    if (GraftCatalog.driverScale(s"$ns.$name", snaps.last.properties,
+          removableEntries.map(_._2).sum)) {
+      val conf = spark.sparkContext.hadoopConfiguration
+      removable.foreach { p =>
+        val hp = new HPath(s"$base/$p")
+        hp.getFileSystem(conf).delete(hp, false): Unit
+      }
+    } else {
       import spark.implicits._
-      val base = tableDir(ns, name).toString
       val confSer = new org.apache.spark.util.SerializableConfiguration(
         spark.sparkContext.hadoopConfiguration)
       removable.toDF("path").as[String].foreachPartition { (paths: Iterator[String]) =>
@@ -4502,6 +4574,9 @@ final class GraftCatalog(val spark: SparkSession, val warehouse: String) {
         }
       }
     }
+    // ascending: a version file goes only after every older one, which
+    // is what lets a commit detect that it re-created an expired slot
+    // (see casCommitAt)
     expired.foreach { s =>
       snapshotCache.remove(versionFile(ns, name, s.seq).toAbsolutePath)
       Files.deleteIfExists(versionFile(ns, name, s.seq)): Unit
@@ -4513,6 +4588,13 @@ final class GraftCatalog(val spark: SparkSession, val warehouse: String) {
     }
     removable
   }
+
+  /** Expire every version older than `seq` — what a checkpointing
+    * replace (the `_system` log compaction) leaves behind once it has
+    * landed as `seq`: the versions it folded and the files only they
+    * reference. Time travel on the table then starts at `seq`. */
+  def expireBefore(ns: String, name: String, seq: Long): Seq[String] =
+    expire(ns, name, _.seq >= seq)
 
   /** G1: retain the newest `retainLast` versions; drop the rest plus any
     * data files (and manifests) unreachable from a kept version. */
@@ -4714,6 +4796,18 @@ object GraftCatalog {
   /** Engine-consulted property keys (Iceberg's names, so a migrating
     * user's runbooks keep working). */
   val TargetFileSizeProp = "write.target-file-size-bytes"
+
+  /** The one "metadata-scale → driver" rule: work over `bytes` of
+    * `table` runs on the driver, with no Spark job, when the bytes fit
+    * one [[TargetFileSizeProp]] file of the table. Three places key on
+    * it: staging a driver-local batch ([[GraftCatalog.stageDataFiles]]),
+    * the sync worker's copy and verify
+    * ([[graft.service.GeoReplicationService.processPendingEvents]]) and
+    * an expiry's physical delete. Past it the distributed path runs, so a
+    * bulk copy or delete never reaches the driver. */
+  private[graft] def driverScale(table: String, props: Map[String, String],
+                                 bytes: Long): Boolean =
+    bytes <= targetFileSizeOf(table, props)
 
   /** [[TargetFileSizeProp]] of a table's properties (512 MiB when unset). */
   private[catalog] def targetFileSizeOf(table: String, props: Map[String, String]): Long =

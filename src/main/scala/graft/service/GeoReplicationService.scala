@@ -2,11 +2,13 @@ package graft.service
 
 import java.util.UUID
 
+import scala.jdk.CollectionConverters._
+
 import graft.catalog.GraftCatalog
 import graft.operators.{GcExecutor, ReadRouterOps}
 import graft.sources.StorageOps
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
 import org.apache.spark.sql.functions._
 
 /** The reference's application services re-expressed Spark-first
@@ -16,15 +18,22 @@ import org.apache.spark.sql.functions._
   * Architecture (vs the reference's ZIO service mesh):
   *  - each "region" is an independent catalog + storage root (a directory
   *    locally; a bucket+catalog in production);
-  *  - control-plane state is EVENT-SOURCED into a system table
-  *    (`_system.sync_events` in the primary region): every status change
-  *    appends a row; current status = latest row per event (a ranked
-  *    window — the cat_latest pattern). Appends are atomic catalog
-  *    commits, so workers on different executors never lose updates —
-  *    this replaces the reference's Ref[Map] CAS (InMemorySyncAdapter);
-  *  - the data plane (file copy) runs distributed via
-  *    StorageOps.distributedCopy with an exists-guard for idempotence
-  *    (SyncOrchestrator.scala:114-118);
+  *  - control-plane state is EVENT-SOURCED into system tables
+  *    (`_system.sync_events`, `consistency_tokens`, `approvals` in the
+  *    primary region): every status change appends a row. Appends are
+  *    atomic catalog commits, so writers never lose updates — this
+  *    replaces the reference's Ref[Map] CAS (InMemorySyncAdapter);
+  *  - current state = the latest row per key, served from an incremental
+  *    driver view of each log ([[SystemLogView]]): a read applies only the
+  *    manifests appended since the view's last one, on the driver with no
+  *    Spark job. Compaction writes the view's fold as the log's
+  *    checkpoint and expires the versions it replaced, so `_system` time
+  *    travel ends at the last checkpoint;
+  *  - the data plane (file copy) is exists-guarded for idempotence
+  *    (SyncOrchestrator.scala:114-118) and follows the one
+  *    metadata-scale rule ([[GraftCatalog.driverScale]]): a batch whose
+  *    bytes fit one target file copies on the driver pool, a larger one
+  *    runs distributed (StorageOps.distributedCopyStats);
   *  - reads route by registry + health scoring (ReadRouterOps — exact
   *    reference weights) with injectable region failure for testing
   *    (GeoDistributedSystemE2ESpec's simulateRegionFailure pattern).
@@ -44,14 +53,14 @@ final class GeoReplicationService(spark: SparkSession,
     * failing; jittered backoff lives in the catalog's CAS loop. */
   private val SystemRetries = 30
 
-  /** E3 counter/gauge surface, fed from distributed-stage accumulators. */
+  /** E3 counter/gauge surface, fed from the copy paths' counts. */
   val metrics = new graft.operators.Metrics
 
   /** Regions currently failing storage probes (test injection point). */
   @volatile var unavailableRegions: Set[String] = Set.empty
 
   /** Monotonic append sequence: two appends can land in the same
-    * millisecond, so every latest-row window orders by (ts, seq) — a
+    * millisecond, so every latest-row fold orders by (ts, seq) — a
     * wall-clock tie must never let a stale status shadow a newer row.
     * (On a multi-driver deployment the catalog commit seq plays this
     * role; here one driver owns the system tables.) */
@@ -63,7 +72,7 @@ final class GeoReplicationService(spark: SparkSession,
     * filter on it would throw UNRESOLVED_COLUMN on a cold start: a
     * worker polling before the first write, a read routed before the
     * first registration). */
-  private val systemSchemas: Map[String, org.apache.spark.sql.types.StructType] = {
+  private[graft] val systemSchemas: Map[String, org.apache.spark.sql.types.StructType] = {
     import org.apache.spark.sql.types._
     def st(fields: (String, DataType)*) =
       StructType(fields.map { case (n, t) => StructField(n, t) })
@@ -80,6 +89,10 @@ final class GeoReplicationService(spark: SparkSession,
         "approved" -> BooleanType, "ts" -> LongType, "seq" -> LongType,
         "deadline_ms" -> LongType))
   }
+
+  /** Rows of a system log as a typed driver-local frame. */
+  private def localDf(name: String, rows: Seq[Row]): DataFrame =
+    spark.createDataFrame(rows.asJava, systemSchemas(name))
 
   private def sysRead(name: String): DataFrame = {
     val df = sys.read("_system", name)
@@ -139,97 +152,92 @@ final class GeoReplicationService(spark: SparkSession,
         .toDF("event_id", "table_entry", "commit_id", "event_type", "target_region",
               "status", "ts", "seq"), maxRetries = SystemRetries)
 
-  /** Current status per event = latest appended row (ranked window;
-    * same-millisecond appends resolve by the monotonic seq). */
-  def eventLog: DataFrame = latestRows(sysRead("sync_events"), Seq("event_id"))
-
-  def pendingEvents(region: String): DataFrame =
-    eventLog.filter(col("status") === "Pending" && col("target_region") === region)
-
-  def failedEvents(region: String): DataFrame =
-    eventLog.filter(col("status") === "Failed" && col("target_region") === region)
-
-  // ---------------- event-log compaction ----------------
+  // ---------------- event-log views and compaction ----------------
   // The _system tables are append-only event logs: every status change is
-  // a new row and reads window down to the latest row per key — so the
-  // history (and every read's scan) grows forever. Compaction replaces
-  // the history with its latest-row checkpoint: subsequent reads scan
-  // O(live keys) + the post-checkpoint tail, and the window computation
-  // is UNCHANGED (checkpointed rows keep their original ts/seq, so newer
-  // tail appends still win the ranking).
+  // a new row, and current state is one row per key. Each log's driver
+  // view holds that state and folds new rows in as they are appended;
+  // compaction replaces the history with the view's fold (checkpointed
+  // rows keep their original ts/seq, so newer tail appends still win)
+  // and expires the versions it replaced.
 
-  /** Latest row per `keys` of `log`, FULL original schema (ts/seq
-    * retained — they order the checkpoint against post-compaction tail
-    * appends). */
-  private def latestRows(log: DataFrame, keys: Seq[String]): DataFrame = {
-    val w = Window.partitionBy(keys.map(col): _*).orderBy(col("ts").desc, col("seq").desc)
-    log.withColumn("rn", row_number().over(w)).filter(col("rn") === 1).drop("rn")
-  }
+  /** The row of `a` and `b` that orders last on the Long columns `by`
+    * (the held row `a` on a full tie). */
+  private def latestOf(by: String*)(a: Row, b: Row): Row =
+    if (by.iterator.map(c => java.lang.Long.compare(b.getAs[Long](c), a.getAs[Long](c)))
+          .find(_ != 0).exists(_ > 0)) b
+    else a
 
-  /** Each compactable log's checkpoint, as a function of the history it
-    * replaces. */
-  private val checkpoints: Map[String, DataFrame => DataFrame] = Map(
-    "sync_events" -> { log => latestRows(log, Seq("event_id")) },
+  private def view(name: String, keys: String*)(combine: (Row, Row) => Row) =
+    name -> new SystemLogView(sys, name, systemSchemas(name),
+      r => keys.map(r.getAs[Any]), combine, SystemRetries)
+
+  /** Each compactable log's view, with its fold. */
+  private val views: Map[String, SystemLogView] = Map(
+    // current status per event = its latest row (same-millisecond
+    // appends resolve by the monotonic seq)
+    view("sync_events", "event_id")(latestOf("ts", "seq")),
     // the MAX watermark per (table, region) — NOT the latest row: a stale
-    // advance appended late (see consistencyTokens) would otherwise
-    // become the checkpoint and silently regress the mark
-    "consistency_tokens" -> { log =>
-      val w = Window.partitionBy(col("table_entry"), col("region"))
-        .orderBy(col("high_watermark_ms").desc, col("ts").desc, col("seq").desc)
-      log.withColumn("rn", row_number().over(w)).filter(col("rn") === 1).drop("rn")
-    },
+    // advance appended late (see consistencyTokens) must never regress
+    // the mark
+    view("consistency_tokens", "table_entry", "region")(
+      latestOf("high_watermark_ms", "ts", "seq")),
     // the latest vote per (commit, region). The voting deadline lives on
-    // the REQUEST row, which the latest vote shadows — carry the key's
-    // MAX deadline onto the checkpoint row (matching approvalStatus'
-    // extended-window semantics) so the TimedOut computation survives
-    "approvals" -> { log =>
-      val deadlines = log.groupBy("commit_id", "region").agg(max("deadline_ms").as("_dl"))
-      latestRows(log, Seq("commit_id", "region")).drop("deadline_ms")
-        .join(deadlines, Seq("commit_id", "region"), "left")
-        .withColumnRenamed("_dl", "deadline_ms")
+    // the REQUEST row, which the latest vote shadows — the key's MAX
+    // deadline rides on the held row (approvalStatus' extended-window
+    // semantics), so the TimedOut computation survives
+    view("approvals", "commit_id", "region") { (a, b) =>
+      val latest = latestOf("ts", "seq")(a, b)
+      val deadline = Seq(a, b)
+        .flatMap(r => Option(r.getAs[java.lang.Long]("deadline_ms")).map(_.longValue))
+        .maxOption.map(Long.box).orNull
+      new GenericRowWithSchema(
+        latest.toSeq.updated(latest.fieldIndex("deadline_ms"), deadline).toArray, latest.schema)
     })
 
-  /** Replace `name`'s history up to its current version with that
-    * version's checkpoint. */
-  private def compactSystem(name: String): Boolean =
-    sys.latest("_system", name).forall(s => compactSystemAt(name, s.seq))
+  /** A compactable log's current state, one row per key. */
+  private[graft] def viewRows(name: String): Seq[Row] = views(name).rows
 
-  /** Replace version `cur`'s history with its checkpoint, computed from
-    * `cur` itself (`readVersion`), and rebase: the commit keeps every
-    * manifest appended since `cur` after the checkpoint's, so an event
-    * append racing the compaction survives it and the compaction still
-    * lands. It aborts (returns false — the caller may retry) only when
-    * `cur`'s manifests were rewritten meanwhile (a racing compaction) or
-    * a delete manifest was added since. */
+  private def events(status: String, region: String): Seq[Row] =
+    viewRows("sync_events").filter(r =>
+      r.getAs[String]("status") == status && r.getAs[String]("target_region") == region)
+
+  /** Current status per event: its latest appended row. */
+  def eventLog: DataFrame = localDf("sync_events", viewRows("sync_events"))
+
+  def pendingEvents(region: String): DataFrame =
+    localDf("sync_events", events("Pending", region))
+
+  def failedEvents(region: String): DataFrame =
+    localDf("sync_events", events("Failed", region))
+
+  /** Replace version `cur`'s history of log `name` with its fold, rebasing
+    * over the manifests appended since (an event append racing the
+    * compaction survives it, and the compaction still lands), then expire
+    * every older version. Runs no Spark job. Returns false (the caller
+    * may retry) when `cur` was rewritten by a racing compaction or is
+    * already expired. */
   private[graft] def compactSystemAt(name: String, cur: Long): Boolean =
-    try {
-      sys.commitReplace("_system", name,
-        checkpoints(name)(sys.readVersion("_system", name, cur)),
-        maxRetries = SystemRetries, rebaseOn = Some(cur))
-      true
-    } catch { case _: java.util.ConcurrentModificationException => false }
+    views(name).compactAt(cur)
 
   /** Physical row count of a `_system` log (ops introspection: how much
-    * history a read actually scans — compaction drops it to live keys). */
+    * history a scan actually reads — compaction drops it to live keys). */
   def rawSystemCount(name: String): Long = sysRead(name).count()
 
   /** Checkpoint `_system.sync_events` to its live rows (one per event). */
-  def compactSyncEvents(): Boolean = compactSystem("sync_events")
+  def compactSyncEvents(): Boolean = views("sync_events").compact()
 
   /** Checkpoint consistency tokens to the MAX watermark per (table,
     * region). */
-  def compactConsistencyTokens(): Boolean = compactSystem("consistency_tokens")
+  def compactConsistencyTokens(): Boolean = views("consistency_tokens").compact()
 
   /** Checkpoint approvals to the latest vote per (commit, region),
     * carrying each key's voting deadline. */
-  def compactApprovals(): Boolean = compactSystem("approvals")
+  def compactApprovals(): Boolean = views("approvals").compact()
 
   /** Y8: only Failed events may be reset to Pending. */
   def retryFailedEvents(region: String): Int = {
-    val failed = failedEvents(region)
-      .select("event_id", "table_entry", "commit_id", "event_type", "target_region")
-      .collect()
-    if (failed.nonEmpty) appendEvents(failed.toSeq.map(r =>
+    val failed = events("Failed", region)
+    if (failed.nonEmpty) appendEvents(failed.map(r =>
       (r.getString(0), r.getString(1), r.getString(2), r.getString(3), r.getString(4),
        "Pending", System.currentTimeMillis())))
     failed.length
@@ -265,23 +273,29 @@ final class GeoReplicationService(spark: SparkSession,
                                    table: String = "", watermarkMs: Long = 0L,
                                    manifest: Seq[(String, String, String)] = Nil,
                                    schemaJson: Option[String] = None,
-                                   srcSeq: Long = 0L)
+                                   srcSeq: Long = 0L, bytes: Long = 0L)
 
   /** Copy batches launched by processPendingEvents — test observability:
-    * a whole pending backlog must cost O(1) copy jobs, not O(events). */
+    * a whole pending backlog must cost ONE copy batch, not O(events). */
   @volatile private[graft] var copyBatches: Int = 0
 
   /** Process every pending event for a region: metadata sync ensures the
     * replica table + registry entry; data sync copies exactly the files
     * ADDED by the commit (snapshot-diff semantics), then CAS-commits them
-    * on the replica (the t1→t6 DAG of the design doc).
+    * on the replica (the t1→t6 DAG of the design doc). The batch comes
+    * straight from the `sync_events` view's rows.
     *
     * Data-plane parallelism (reference SyncOrchestrator.scala:29
-    * `ZIO.foreachPar`, Spark-shaped): ALL DataSync manifests in the batch
-    * union into ONE distributed exists-guarded copy (per-file failures
-    * tolerated), and per-event success is derived from one distributed
-    * existence probe grouped by event — O(1) Spark jobs per backlog,
-    * never a driver-serial copy loop.
+    * `ZIO.foreachPar`): ALL DataSync manifests in the batch form ONE
+    * exists-guarded copy batch (per-file failures tolerated; a file whose
+    * destination does not end at the source's length fails its event).
+    * Which side copies follows the metadata-scale rule
+    * ([[GraftCatalog.driverScale]]): when the batch's bytes fit one
+    * target file of every replica table in it, the files copy on the
+    * driver's pool and each event's verdict comes from the lengths the
+    * copy itself reports — a steady-state batch runs no Spark job at all.
+    * A larger batch runs one distributed copy job and one distributed
+    * verification probe, so a bulk copy never reaches the driver.
     *
     * Control-plane parallelism: table creation/registration runs ONCE
     * per distinct table (tables << events), which makes the per-event
@@ -296,10 +310,9 @@ final class GeoReplicationService(spark: SparkSession,
     * CAS chains + 2 system appends, not 100k driver-serial round trips.
     * Returns (completed, failed). */
   def processPendingEvents(region: String): (Int, Int) = {
-    val pending = pendingEvents(region)
-      .select("event_id", "table_entry", "commit_id", "event_type")
-      .collect()
-      .map(r => (r.getString(0), r.getString(1), r.getString(2), r.getString(3)))
+    val pending = events("Pending", region)
+      .map(r => (r.getAs[String]("event_id"), r.getAs[String]("table_entry"),
+        r.getAs[String]("commit_id"), r.getAs[String]("event_type")))
       .sortBy(_._1)
     val regionDown = unavailableRegions.contains(region)
 
@@ -335,13 +348,13 @@ final class GeoReplicationService(spark: SparkSession,
             val snap = src.byCommitId(ns, table, commitId).get
             // Y14 delta straight from the commit's ADDED manifests — reads
             // O(this commit's files), never the version's full file set
-            val added = src.addedFiles(ns, table, snap)
-            PreparedEvent(eventId, entry, commitId, eventType, None, added, ns, table,
-              snap.timestampMs,
-              added.map(f => (eventId,
+            val added = src.addedFileEntries(ns, table, snap)
+            PreparedEvent(eventId, entry, commitId, eventType, None, added.map(_._1), ns,
+              table, snap.timestampMs,
+              added.map { case (f, _) => (eventId,
                 src.tablePath(ns, table).resolve(f).toString,
-                regions(region).tablePath(ns, table).resolve(f).toString)),
-              snap.schemaJson, snap.seq)
+                regions(region).tablePath(ns, table).resolve(f).toString) },
+              snap.schemaJson, snap.seq, added.map(_._2).sum)
           case other => throw new IllegalArgumentException(s"unknown event type $other")
         }
       } catch { case _: Exception =>
@@ -349,23 +362,36 @@ final class GeoReplicationService(spark: SparkSession,
       }
     }.seq
 
-    // phase 2: ONE union copy job for the whole batch, then ONE
-    // distributed verification probe → per-event verdicts.
+    // phase 2: ONE copy batch for the whole backlog → per-event
+    // verdicts, size-verified, not existence-only: a truncated dst from a
+    // mid-copy crash must fail the event, not silently complete it
     val dataSyncs = preps.filter(_.status.isEmpty)
     val okEvents: Set[String] = if (dataSyncs.isEmpty) Set.empty else {
-      val manifest = dataSyncs.flatMap(_.manifest)
-        .toDF("event_id", "src_path", "dst_path")
       copyBatches += 1
-      val (files, bytes) = StorageOps.distributedCopyStats(manifest, tolerant = true)
-      metrics.increment("sync.files_copied", files)
-      metrics.increment("sync.bytes_copied", bytes)
-      // size-verified, not existence-only: a truncated dst from a
-      // mid-copy crash must fail the event, not silently complete it
-      val verified = StorageOps.copyVerifyProbe(manifest, "src_path", "dst_path", "event_id")
-        .groupBy(col("event_id"))
-        .agg(min(col("ok").cast("int")).as("all_ok"))
-        .filter(col("all_ok") === 1)
-        .select("event_id").as[String].collect().toSet
+      val manifest = dataSyncs.flatMap(_.manifest)
+      val bytes = dataSyncs.map(_.bytes).sum
+      val onDriver = dataSyncs.map(p => (p.ns, p.table)).distinct
+        .forall { case (ns, t) => regions(region).driverScale(ns, t, bytes) }
+      def copied(files: Long, bytes: Long): Unit = {
+        metrics.increment("sync.files_copied", files)
+        metrics.increment("sync.bytes_copied", bytes)
+      }
+      val verified =
+        if (onDriver) {
+          val (verdicts, files, bytes) =
+            StorageOps.localCopyVerify(manifest, spark.sparkContext.hadoopConfiguration)
+          copied(files, bytes)
+          verdicts.groupBy(_._1).collect { case (e, vs) if vs.forall(_._2) => e }.toSet
+        } else {
+          val df = manifest.toDF("event_id", "src_path", "dst_path")
+          val (files, bytes) = StorageOps.distributedCopyStats(df, tolerant = true)
+          copied(files, bytes)
+          StorageOps.copyVerifyProbe(df, "src_path", "dst_path", "event_id")
+            .groupBy(col("event_id"))
+            .agg(min(col("ok").cast("int")).as("all_ok"))
+            .filter(col("all_ok") === 1)
+            .select("event_id").as[String].collect().toSet
+        }
       // events whose snapshot diff was empty are trivially complete
       verified ++ dataSyncs.filter(_.manifest.isEmpty).map(_.eventId)
     }
@@ -467,17 +493,17 @@ final class GeoReplicationService(spark: SparkSession,
     * the mark. A high-water mark is a max by definition; latest-row-wins
     * is only correct for status-like state. */
   def consistencyTokens: DataFrame =
-    sysRead("consistency_tokens")
-      .groupBy(col("table_entry"), col("region"))
-      .agg(max(col("high_watermark_ms")).as("high_watermark_ms"))
+    localDf("consistency_tokens", viewRows("consistency_tokens"))
+      .select("table_entry", "region", "high_watermark_ms")
 
   /** Q9: regions able to serve `ns.table` at `requiredMs` freshness. The
     * writing source region always qualifies. */
   def freshRegions(ns: String, table: String, requiredMs: Long): Seq[String] = {
     val entry = s"$ns.$table"
-    consistencyTokens
-      .filter(col("table_entry") === entry && col("high_watermark_ms") >= requiredMs)
-      .select("region").as[String].collect().toSeq.sorted
+    viewRows("consistency_tokens")
+      .filter(r => r.getAs[String]("table_entry") == entry &&
+        r.getAs[Long]("high_watermark_ms") >= requiredMs)
+      .map(_.getAs[String]("region")).sorted
   }
 
   private def findSourceCatalog(ns: String, table: String, commitId: String): GraftCatalog =
@@ -511,28 +537,23 @@ final class GeoReplicationService(spark: SparkSession,
         .toDF("commit_id", "region", "approved", "ts", "seq", "deadline_ms"),
       maxRetries = SystemRetries)
 
-  private def latestVotes(commitId: String): DataFrame = {
-    val w = Window.partitionBy(col("commit_id"), col("region"))
-      .orderBy(col("ts").desc, col("seq").desc)
-    sysRead("approvals")
-      .filter(col("commit_id") === commitId)
-      .withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
-  }
+  /** The latest vote per region of `commitId`, each carrying its key's
+    * max deadline. */
+  private def latestVotes(commitId: String): Seq[Row] =
+    viewRows("approvals").filter(_.getAs[String]("commit_id") == commitId)
 
   /** W2/W4 lifecycle: Approved (all true) / Rejected (any false) /
     * TimedOut (unanswered past the deadline) / Pending. */
   def approvalStatus(commitId: String, nowMs: Long = System.currentTimeMillis()): String = {
-    val votes = latestVotes(commitId).select("approved").collect()
-      .map(r => Option(r.get(0)).map(_.asInstanceOf[Boolean]))
+    val latest = latestVotes(commitId)
+    val votes = latest.map(r => Option(r.getAs[java.lang.Boolean]("approved")).map(_.booleanValue))
     if (votes.isEmpty) return "Pending"
     // MAX over the commit's recorded deadlines: a re-request that extends
     // the voting window (or asks another region with a fresh one) must
     // take effect — min would pin the commit to the earliest deadline
     // ever written and turn it sticky-TimedOut
-    val deadline = sysRead("approvals")
-      .filter(col("commit_id") === commitId && col("deadline_ms").isNotNull)
-      .agg(max(col("deadline_ms"))).collect()
-      .headOption.flatMap(r => Option(r.get(0)).map(_.asInstanceOf[Long]))
+    val deadline = latest.flatMap(r => Option(r.getAs[java.lang.Long]("deadline_ms")))
+      .map(_.longValue).maxOption
     if (votes.forall(_.contains(true))) "Approved"
     else if (votes.exists(_.contains(false))) "Rejected"
     else if (deadline.exists(nowMs > _)) "TimedOut"
@@ -542,7 +563,8 @@ final class GeoReplicationService(spark: SparkSession,
   /** W4: all asked regions answered AND all answered true. */
   def isCommitApproved(commitId: String): Boolean = {
     val decided = graft.operators.CommitGate.quorum(
-      latestVotes(commitId).withColumn("approved", coalesce(col("approved"), lit(false))))
+      localDf("approvals", latestVotes(commitId))
+        .withColumn("approved", coalesce(col("approved"), lit(false))))
     decided.select("approved").as[Boolean].collect().headOption.getOrElse(false)
   }
 

@@ -16,7 +16,11 @@ import org.apache.spark.sql.functions._
   *  - `distributedCopy` fans a file manifest out over executors with
   *    foreachPartition — per-partition FileSystem clients, no driver
   *    bottleneck (Y12's foreachPar, Spark-shaped). Idempotent: an
-  *    exists-guard skips files already at the destination.
+  *    exists-guard skips files already at the destination;
+  *  - `localCopyVerify` is the same per-file copy ([[copyFile]]) run on
+  *    the driver's pool, for a manifest whose bytes are metadata-scale —
+  *    the caller's byte rule picks the side, so a bulk copy never reaches
+  *    the driver.
   */
 object StorageOps {
 
@@ -123,8 +127,8 @@ object StorageOps {
     *
     * `tolerant = true` turns a per-file failure (e.g. vanished source)
     * into a skip instead of failing the whole job — callers that batch
-    * many logical events into one manifest (the sync worker) derive
-    * per-event success from [[existsProbe]] afterwards. */
+    * many logical events into one manifest derive per-event success from
+    * [[copyVerifyProbe]] afterwards. */
   def distributedCopy(manifest: DataFrame, srcPathCol: String = "src_path",
                       dstPathCol: String = "dst_path", tolerant: Boolean = false): Long =
     distributedCopyStats(manifest, srcPathCol, dstPathCol, tolerant)._1
@@ -144,50 +148,73 @@ object StorageOps {
         val conf = confSer.value
         rows.foreach { r =>
           try {
-            val src = new HPath(r.getString(0))
-            val dst = new HPath(r.getString(1))
-            val dstFs = dst.getFileSystem(conf)
-            val srcFs = src.getFileSystem(conf)
-            // the exists-guard also re-copies a SIZE-MISMATCHED dst: a
-            // crash mid-copy used to leave a truncated dst that the
-            // guard then treated as done — permanent silent corruption
-            val srcLen = srcFs.getFileStatus(src).getLen
-            val stale = dstFs.exists(dst) && dstFs.getFileStatus(dst).getLen != srcLen
-            if (stale) dstFs.delete(dst, false)
-            if (stale || !dstFs.exists(dst)) {
-              dstFs.mkdirs(dst.getParent)
-              // write to a temp sibling and rename: dst is either absent
-              // or COMPLETE, never a partial file another worker's
-              // exists-guard would wrongly trust
-              val tmp = new HPath(dst.getParent,
-                s"._tmp_${dst.getName}.${java.util.UUID.randomUUID()}")
-              val renamed =
-                try {
-                  FileUtil.copy(srcFs, src, dstFs, tmp, false, conf)
-                  val ok = dstFs.rename(tmp, dst)
-                  if (!ok && !dstFs.exists(dst))
-                    throw new java.io.IOException(s"rename $tmp -> $dst failed")
-                  ok
-                } finally { if (dstFs.exists(tmp)) dstFs.delete(tmp, false): Unit }
-              // a lost rename race (speculative task, retry) means the
-              // OTHER worker owns the copy — counting it here would
-              // double the files/bytes metrics
-              if (renamed) { copied.add(1); bytes.add(srcLen) }
-            }
+            val c = copyFile(new HPath(r.getString(0)), new HPath(r.getString(1)), conf)
+            if (c.copied) { copied.add(1); bytes.add(c.srcLen) }
           } catch { case e: Exception => if (!tolerant) throw e }
         }
     }
     (copied.value, bytes.value)
   }
 
-  /** Distributed existence probe: one boolean per manifest row, evaluated
-    * with executor-side FileSystem clients (no driver HEAD loop). The
-    * string `keyCol` rides along for downstream per-group verdicts. */
+  /** What one exists-guarded file copy did: whether it wrote the file,
+    * and the source's and the destination's length after it. */
+  private final case class FileCopy(copied: Boolean, srcLen: Long, dstLen: Long)
+
+  /** Copy `src` to `dst` unless `dst` already holds src's length — the
+    * per-file body every copy path shares. */
+  private def copyFile(src: HPath, dst: HPath, conf: Configuration): FileCopy = {
+    val dstFs = dst.getFileSystem(conf)
+    val srcFs = src.getFileSystem(conf)
+    // the exists-guard also re-copies a SIZE-MISMATCHED dst: a crash
+    // mid-copy used to leave a truncated dst that the guard then
+    // treated as done — permanent silent corruption
+    val srcLen = srcFs.getFileStatus(src).getLen
+    val stale = dstFs.exists(dst) && dstFs.getFileStatus(dst).getLen != srcLen
+    if (stale) dstFs.delete(dst, false)
+    val renamed = (stale || !dstFs.exists(dst)) && {
+      dstFs.mkdirs(dst.getParent)
+      // write to a temp sibling and rename: dst is either absent or
+      // COMPLETE, never a partial file another worker's exists-guard
+      // would wrongly trust
+      val tmp = new HPath(dst.getParent,
+        s"._tmp_${dst.getName}.${java.util.UUID.randomUUID()}")
+      try {
+        FileUtil.copy(srcFs, src, dstFs, tmp, false, conf)
+        val ok = dstFs.rename(tmp, dst)
+        if (!ok && !dstFs.exists(dst))
+          throw new java.io.IOException(s"rename $tmp -> $dst failed")
+        ok
+      } finally { if (dstFs.exists(tmp)) dstFs.delete(tmp, false): Unit }
+    }
+    // a lost rename race (speculative task, retry) means the OTHER worker
+    // owns the copy — it does not count as copied here
+    FileCopy(renamed, srcLen, dstFs.getFileStatus(dst).getLen)
+  }
+
+  /** The driver form of [[distributedCopyStats]] plus [[copyVerifyProbe]]
+    * for a metadata-scale manifest of (key, src, dst) rows: the files copy
+    * on the driver's pool, and each row's verdict comes from the lengths
+    * its own copy reports — `true` only when dst ends at src's length; a
+    * failed copy (vanished source, I/O error) reads `false`, the
+    * tolerant contract. Returns (verdict per row, files copied, bytes
+    * copied). */
+  def localCopyVerify(manifest: Seq[(String, String, String)], conf: Configuration)
+      : (Seq[(String, Boolean)], Long, Long) = {
+    import scala.collection.parallel.CollectionConverters._
+    val outcomes = manifest.par.map { case (key, s, d) =>
+      key -> (try Some(copyFile(new HPath(s), new HPath(d), conf))
+              catch { case _: Exception => None })
+    }.seq
+    val copied = outcomes.flatMap(_._2).filter(_.copied)
+    (outcomes.map { case (k, c) => k -> c.exists(f => f.dstLen == f.srcLen) },
+      copied.size.toLong, copied.map(_.srcLen).sum)
+  }
+
   /** Copy verification: for each manifest row, `ok` = dst exists AND its
     * length equals src's — existence alone would bless a truncated file
-    * (see the temp+rename note in distributedCopyStats; this probe is
-    * the belt to that suspender, and also catches pre-existing partial
-    * files). One distributed pass, two stats per row. */
+    * (see the temp+rename note in [[copyFile]]; this probe is the belt to
+    * that suspender, and also catches pre-existing partial files). One
+    * distributed pass, two stats per row. */
   def copyVerifyProbe(manifest: DataFrame, srcPathCol: String = "src_path",
                       dstPathCol: String = "dst_path",
                       keyCol: String = "event_id"): DataFrame = {
@@ -211,26 +238,5 @@ object StorageOps {
           (key, d0, ok)
         }
       }.toDF(keyCol, dstPathCol, "ok")
-  }
-
-  def existsProbe(manifest: DataFrame, pathCol: String = "dst_path",
-                  keyCol: String = "event_id"): DataFrame = {
-    val spark = manifest.sparkSession
-    import spark.implicits._
-    val confSer = new org.apache.spark.util.SerializableConfiguration(
-      spark.sparkContext.hadoopConfiguration)
-    manifest.select(col(keyCol).cast("string"), col(pathCol)).as[(String, String)]
-      .mapPartitions { rows =>
-        val conf = confSer.value
-        rows.map { case (key, p0) =>
-          // per-row tolerance (same as copyVerifyProbe): one malformed
-          // path must yield exists=false, not fail the whole probe job
-          val ex = try {
-            val p = new HPath(p0)
-            p.getFileSystem(conf).exists(p)
-          } catch { case _: Exception => false }
-          (key, p0, ex)
-        }
-      }.toDF(keyCol, pathCol, "exists")
   }
 }

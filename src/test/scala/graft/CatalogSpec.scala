@@ -1448,34 +1448,25 @@ class CatalogSpec extends SparkSpec {
     assert(cat.read("ns", "w").count() === cat.read("ns", "r").count())
   }
 
-  /** Run `body` under a private job group and return its result with
-    * the description of every Spark job it started (the listener bus is
-    * FIFO: once a fence job shows up, every event of `body` has been
-    * delivered). */
-  private def withJobs[T](body: => T): (T, Seq[String]) = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val group = s"graft-jobs-${java.util.UUID.randomUUID()}"
-    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = {
-        def prop(k: String) =
-          Option(j.properties).flatMap(p => Option(p.getProperty(k))).getOrElse("")
-        jobs.add(prop("spark.jobGroup.id") -> prop("spark.job.description"))
-      }
+  test("commitLandedMoR's equality-delete column check reads one footer: no job") {
+    val cat = freshCatalog()
+    cat.createTable("ns", "m")
+    cat.commitAppend("ns", "m", Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "v"))
+    val root = cat.tablePath("ns", "m")
+    def landed(dir: String, id: Long): String = {
+      Seq(id).toDF("id").coalesce(1).write.parquet(root.resolve(dir).toString)
+      val s = Files.list(root.resolve(dir))
+      try s"$dir/" + s.iterator().asScala.map(_.getFileName.toString)
+        .find(n => n.startsWith("part-") && n.endsWith(".parquet")).get
+      finally s.close()
     }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "measured")
-      val out = try body finally sc.clearJobGroup()
-      sc.setJobGroup(s"$group-fence", "fence")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      val deadline = System.nanoTime() + 30e9.toLong
-      while (!jobs.asScala.exists(_._1 == s"$group-fence") && System.nanoTime() < deadline)
-        Thread.sleep(20)
-      assert(jobs.asScala.exists(_._1 == s"$group-fence"), "listener bus never drained")
-      out -> jobs.asScala.toSeq.filter(_._1 == group).map(_._2)
-    } finally sc.removeSparkListener(listener)
+    cat.commitLandedMoR("ns", "m", Nil, Seq(landed("landed-1", 1L)), None, "ext")
+    // the second equality-delete commit checks its columns against the
+    // existing delete set
+    val second = landed("landed-2", 2L)
+    val (_, jobs) = withJobs(cat.commitLandedMoR("ns", "m", Nil, Seq(second), None, "ext"))
+    assert(jobs.isEmpty, s"the equality-delete column check ran jobs: $jobs")
+    assert(cat.read("ns", "m").as[(Long, String)].collect().toSeq === Seq((3L, "c")))
   }
 
   test("an unpartitioned bloom-less append is ONE Spark job and a local " +

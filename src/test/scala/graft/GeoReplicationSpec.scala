@@ -325,6 +325,70 @@ class GeoReplicationSpec extends SparkSpec {
     assert(good === Array(true))
   }
 
+  /** A primary and one replica hosting ns.t, warmed by one write and its
+    * sync (the replica table exists, the registry is cached). */
+  private def warmService(): GeoReplicationService = {
+    val svc = freshService("us-east-1", "eu-west-1")
+    svc.regions("us-east-1").createTable("ns", "t")
+    svc.registerTable("ns", "t", "us-east-1")
+    svc.registerTable("ns", "t", "eu-west-1")
+    svc.coordinateWrite("ns", "t", Seq(0L).toDF("id"), "us-east-1")
+    assert(svc.processPendingEvents("eu-west-1") === ((2, 0)))
+    svc
+  }
+
+  test("a steady-state sync batch and a compaction with its expiry run no Spark job") {
+    val svc = warmService()
+    svc.coordinateWrite("ns", "t", Seq(1L, 2L).toDF("id"), "us-east-1")
+    svc.copyBatches = 0
+    val (res, syncJobs) = withJobs(svc.processPendingEvents("eu-west-1"))
+    assert(res === ((2, 0)))
+    assert(syncJobs.isEmpty, s"a metadata-scale sync batch ran jobs: $syncJobs")
+    assert(svc.copyBatches === 1)
+    val (compacted, compactJobs) = withJobs(svc.compactSyncEvents())
+    assert(compacted)
+    assert(compactJobs.isEmpty, s"compaction plus expiry ran jobs: $compactJobs")
+    val sys = svc.regions("us-east-1")
+    assert(sys.snapshots("_system", "sync_events").size === 1,
+      "expiry leaves the checkpoint version only")
+    assert(svc.eventLog.count() === 4L)
+    assert(svc.regions("eu-west-1").read("ns", "t").as[Long].collect().sorted === Array(0L, 1L, 2L))
+  }
+
+  test("a sync batch copies on the driver within the replica's target file size and " +
+       "distributed past it; a truncated destination is re-copied on both paths") {
+    val svc = warmService()
+    val (src, replica) = (svc.regions("us-east-1"), svc.regions("eu-west-1"))
+    // a crashed earlier copy left a truncated file where the commit's
+    // file lands: the copy must replace it, and only then pass the event
+    def writeOverTruncated(ids: Long*): String = {
+      svc.coordinateWrite("ns", "t", ids.toDF("id"), "us-east-1")
+      val f = src.addedFiles("ns", "t", src.latest("ns", "t").get).head
+      val dst = replica.tablePath("ns", "t").resolve(f)
+      Files.createDirectories(dst.getParent)
+      Files.write(dst, Array[Byte](1, 2, 3))
+      f
+    }
+    def sync(f: String): Seq[String] = {
+      svc.copyBatches = 0
+      val (res, jobs) = withJobs(svc.processPendingEvents("eu-west-1"))
+      assert(res === ((2, 0)))
+      assert(svc.copyBatches === 1)
+      assert(Files.size(replica.tablePath("ns", "t").resolve(f)) ===
+        Files.size(src.tablePath("ns", "t").resolve(f)), "the truncated file was trusted")
+      jobs
+    }
+    val f1 = writeOverTruncated(1L, 2L)
+    val driverJobs = sync(f1)
+    assert(driverJobs.isEmpty, s"a metadata-scale batch ran jobs: $driverJobs")
+    // a replica target file smaller than the batch puts it past the rule
+    replica.commitProperties("ns", "t", Map(GraftCatalog.TargetFileSizeProp -> "64"))
+    val f2 = writeOverTruncated(3L)
+    val distributedJobs = sync(f2)
+    assert(distributedJobs.size >= 2, s"expected the copy and verify jobs: $distributedJobs")
+    assert(replica.read("ns", "t").as[Long].collect().sorted === Array(0L, 1L, 2L, 3L))
+  }
+
   test("S6 async copy jobs: submit/progress/cancel with idempotent resume") {
     import graft.sources.CopyJobManager
     val src = Files.createTempDirectory("cj-src")
