@@ -49,10 +49,11 @@ import org.apache.spark.sql.types.{ArrayType, BooleanType, ByteType, DataType, D
   *    out of the log.
   *
   * Scale notes: data files are written by Spark executors (distributed);
-  * manifests are consumed two ways — [[filesTable]] reads them as a
-  * DISTRIBUTED DataFrame (the `t.files` metadata table feeding
-  * SnapshotDiff/GcPlanner/verification joins, never materialized on the
-  * driver), while scan planning reads just the scanned version's
+  * manifests are consumed two ways — [[filesTable]] serves them as a
+  * DataFrame (the `t.files` metadata table feeding
+  * SnapshotDiff/GcPlanner/verification joins: a local frame from the
+  * manifest cache for a few manifests, a DISTRIBUTED scan past Spark's
+  * parallel-discovery threshold), while scan planning reads just the scanned version's
   * manifests through a per-manifest immutable cache (the same transient
   * planning read Iceberg's driver does). Manifests are JSON-lines —
   * row-based like Iceberg's Avro manifests, splittable for Spark, and
@@ -513,9 +514,11 @@ final class GraftCatalog(val spark: SparkSession, val warehouse: String) {
     rel.substring(rel.lastIndexOf('/') + 1).startsWith("p-")
 
   /** (path, size) entries of a version's DATA files — driver-side
-    * SCAN-PLANNING read (transient, per-version), not the metadata-query
-    * path; distributed consumers use [[filesTable]]. Equality-delete
-    * files are excluded — see [[deleteFileEntries]]. */
+    * SCAN-PLANNING read (transient, per-version) through the manifest
+    * cache. Delete files are excluded — see [[deleteFileEntries]]; the
+    * metadata-table form of every entry, delete files included, is
+    * [[filesTable]] (driver-local for a few manifests, a distributed scan
+    * past Spark's parallel-discovery threshold). */
   def dataFileEntries(ns: String, name: String, snap: Snapshot): Seq[(String, Long)] =
     snap.manifests.filterNot(isDeleteManifest).flatMap(manifestEntries(ns, name, _))
 
@@ -4516,14 +4519,22 @@ final class GraftCatalog(val spark: SparkSession, val warehouse: String) {
   }
 
   /** Files metadata table (the `t.files` pattern driving diff/GC ops):
-    * a DISTRIBUTED read of the version's manifest files — the file list
-    * never materializes on the driver, so reconciliation joins scale to
-    * manifest sets far past driver memory. size_bytes is the
-    * AUTHORITATIVE size recorded at commit time. */
+    * (path, size_bytes) of every entry of every manifest of the version,
+    * delete manifests included — a file two manifests carry (a replace
+    * re-manifests what it keeps) appears twice. size_bytes is the
+    * AUTHORITATIVE size recorded at commit time. Which side reads the
+    * manifests is Spark's file-index rule
+    * (`spark.sql.sources.parallelPartitionDiscovery.threshold`): at most
+    * that many manifests, the DRIVER builds the rows from the manifest
+    * cache as a local frame (no job; a GC diff over it folds on the
+    * driver, [[graft.plans.FoldLocalRelations]]); more, a DISTRIBUTED
+    * JSON scan of the manifest files, so reconciliation joins scale to
+    * manifest sets far past driver memory. */
   def filesTable(ns: String, name: String, seq: Long): DataFrame = {
     import spark.implicits._
     val manifests = snapshots(ns, name).find(_.seq == seq).map(_.manifests).getOrElse(Seq.empty)
-    if (manifests.isEmpty) Seq.empty[(String, Long)].toDF("path", "size_bytes")
+    if (manifests.size <= spark.sessionState.conf.parallelPartitionDiscoveryThreshold)
+      manifests.flatMap(manifestEntries(ns, name, _)).toDF("path", "size_bytes")
     else spark.read.schema(ManifestSchema)
       .json(manifests.map(m => tableDir(ns, name).resolve(m).toString): _*)
       .select("path", "size_bytes")
@@ -4542,7 +4553,11 @@ final class GraftCatalog(val spark: SparkSession, val warehouse: String) {
     * manifests wholesale would destroy it (caught by CatalogSpec's
     * replace-then-expire case). Cost is O(kept live files) driver-side
     * through the manifest cache — the same planner-scale read a table
-    * scan does. Returns the removed data-file paths. */
+    * scan does. Each commit stages into its own `data/<dir>/`, so the
+    * delete also removes every such directory it leaves empty — else the
+    * data tree's prefix count, which decides where a listing runs
+    * ([[graft.sources.StorageOps.listing]]), would grow with history
+    * rather than with live commits. Returns the removed data-file paths. */
   private def expire(ns: String, name: String, keep: Snapshot => Boolean): Seq[String] = {
     val snaps = snapshots(ns, name)
     val (kept, expired) = snaps.partition(keep)
@@ -4556,22 +4571,14 @@ final class GraftCatalog(val spark: SparkSession, val warehouse: String) {
     val removable = removableEntries.map(_._1)
     val base = tableDir(ns, name).toString
     if (GraftCatalog.driverScale(s"$ns.$name", snaps.last.properties,
-          removableEntries.map(_._2).sum)) {
-      val conf = spark.sparkContext.hadoopConfiguration
-      removable.foreach { p =>
-        val hp = new HPath(s"$base/$p")
-        hp.getFileSystem(conf).delete(hp, false): Unit
-      }
-    } else {
+          removableEntries.map(_._2).sum))
+      GraftCatalog.deleteDataFiles(base, removable.iterator, spark.sparkContext.hadoopConfiguration)
+    else {
       import spark.implicits._
       val confSer = new org.apache.spark.util.SerializableConfiguration(
         spark.sparkContext.hadoopConfiguration)
       removable.toDF("path").as[String].foreachPartition { (paths: Iterator[String]) =>
-        val conf = confSer.value
-        paths.foreach { p =>
-          val hp = new HPath(s"$base/$p")
-          hp.getFileSystem(conf).delete(hp, false): Unit
-        }
+        GraftCatalog.deleteDataFiles(base, paths, confSer.value)
       }
     }
     // ascending: a version file goes only after every older one, which
@@ -4671,6 +4678,28 @@ final class GraftCatalog(val spark: SparkSession, val warehouse: String) {
 }
 
 object GraftCatalog {
+
+  /** Delete the table-relative files `rels` under `base`, then each
+    * `data/<dir>/` staging directory they came from that is now empty.
+    * The directory delete is non-recursive after an emptiness check, so
+    * a directory still holding any file (an aborted commit's, a
+    * concurrent writer's) stays. */
+  private[catalog] def deleteDataFiles(base: String, rels: Iterator[String],
+                                       conf: org.apache.hadoop.conf.Configuration): Unit = {
+    val dirs = scala.collection.mutable.LinkedHashSet.empty[HPath]
+    rels.foreach { p =>
+      val hp = new HPath(s"$base/$p")
+      hp.getFileSystem(conf).delete(hp, false)
+      val parent = p.substring(0, p.lastIndexOf('/').max(0))
+      if (parent.startsWith("data/") && parent.indexOf('/', 5) < 0) dirs += hp.getParent
+    }
+    dirs.foreach { d =>
+      val f = d.getFileSystem(conf)
+      // a directory that vanished or refilled since the check stays as is
+      try { if (f.listStatus(d).isEmpty) f.delete(d, false) }
+      catch { case _: java.io.IOException => }
+    }
+  }
 
   /** Manifest-unit kinds for [[GraftCatalog.commitFilesMor]] /
     * commitFilesReplaceMor — mapped onto the manifest-name prefixes the

@@ -16,9 +16,16 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    // optimizer rule: constant-width interval joins become bucketed
-    // equi-joins instead of BroadcastNestedLoop (see RangeJoinRewrite)
+    // optimizer rules:
+    //  - constant-width interval joins become bucketed equi-joins instead
+    //    of BroadcastNestedLoop (see RangeJoinRewrite);
+    //  - a count, a union or an equi-key anti/semi join over driver-local
+    //    relations is evaluated on the driver, like Spark's own
+    //    ConvertToLocalRelation does for Project/Filter/Limit — no job for
+    //    a metadata-scale plan such as the orphan-GC diff or a `_system`
+    //    view's count (see FoldLocalRelations)
     ext.injectOptimizerRule(graft.plans.RangeJoinRewrite(_))
+    ext.injectOptimizerRule(_ => graft.plans.FoldLocalRelations)
     // planner strategy: AsOfJoinNode → physical sort-merge as-of join
     // (see plans/AsOfJoinPlan.scala)
     ext.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)

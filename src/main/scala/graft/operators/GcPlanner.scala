@@ -17,10 +17,16 @@ import org.apache.spark.sql.functions._
   *    waterline → delete.
   *
   * Spark-first: reachability difference is a left-anti join over file
-  * listings (metadata scale — millions of rows per PB, one shuffle); the
-  * guard chain is a pure filter conjunction that stays in whole-stage
-  * codegen; the only non-declarative step (the physical delete) happens in
-  * `foreachPartition` downstream and is deliberately not part of planning.
+  * listings; the guard chain is a pure filter conjunction that stays in
+  * whole-stage codegen; the only non-declarative step (the physical
+  * delete) happens in `foreachPartition` downstream and is deliberately
+  * not part of planning. Which side runs the join is the inputs' size,
+  * not a fork here: over driver-local inputs (a shallow
+  * [[graft.sources.StorageOps.listing]], a few-manifest
+  * [[graft.catalog.GraftCatalog.filesTable]]) the anti-join and its
+  * count fold on the driver ([[graft.plans.FoldLocalRelations]]) with no
+  * job; over distributed inputs (millions of rows per PB) it is one
+  * shuffle.
   */
 object GcPlanner {
 

@@ -713,6 +713,36 @@ class CatalogSpec extends SparkSpec {
       === snaps.last.fileCount - snaps(batches / 2).fileCount)
   }
 
+  test("filesTable reads a few manifests on the driver with no job, and returns the " +
+       "JSON scan's multiset: data, equality- and position-delete manifests, a replace") {
+    val cat = freshCatalog()
+    cat.createTable("ns", "fm")
+    cat.commitAppend("ns", "fm", (0 until 40).map(i => (i.toLong, s"v$i")).toDF("id", "v")
+      .repartition(3))
+    cat.commitDelete("ns", "fm", Seq(3L, 4L).toDF("id"))
+    cat.commitDeletePositions("ns", "fm", cat.positionsWhere("ns", "fm", col("id") === 7L))
+    val kept = cat.dataFiles("ns", "fm", cat.latest("ns", "fm").get)
+    // the replace re-manifests the files it keeps
+    cat.commitFilesReplace("ns", "fm", kept.take(2), "r1")
+    cat.commitAppend("ns", "fm", Seq((100L, "w")).toDF("id", "v"))
+    val key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getString(0), r.getLong(1))).toSeq.sorted
+    cat.snapshots("ns", "fm").foreach { s =>
+      val (local, jobs) = withJobs(rows(cat.filesTable("ns", "fm", s.seq)))
+      assert(jobs.isEmpty, s"v${s.seq}: a ${s.manifests.size}-manifest filesTable ran jobs: $jobs")
+      spark.conf.set(key, 0L)
+      val scanned = try {
+        val df = cat.filesTable("ns", "fm", s.seq)
+        assert(df.queryExecution.executedPlan.toString.contains("FileScan json"))
+        rows(df)
+      } finally spark.conf.unset(key)
+      assert(local === scanned, s"v${s.seq}")
+      assert(local.size.toLong ===
+        s.manifests.map(m => Files.readAllLines(cat.tablePath("ns", "fm").resolve(m)).size).sum)
+    }
+  }
+
   test("per-file blooms prune point lookups on hash-distributed keys where min/max cannot") {
     val cat = freshCatalog()
     cat.createTable("ns", "t")

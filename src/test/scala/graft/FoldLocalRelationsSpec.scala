@@ -1,0 +1,126 @@
+package graft
+
+import java.sql.{Date, Timestamp}
+
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+
+/** graft.plans.FoldLocalRelations: a count, a positional union and an
+  * equi-key anti/semi join over driver-local relations evaluate on the
+  * driver, and every query returns exactly the rows it returns with the
+  * rule excluded. */
+class FoldLocalRelationsSpec extends SparkSpec {
+  import spark.implicits._
+
+  private val ExcludedRules = "spark.sql.optimizer.excludedRules"
+
+  /** Rows of `q` (sorted by their string form), asserted equal to the
+    * rows of the same query with the rule excluded; and whether the
+    * rule's run folded the whole plan into one local relation. */
+  private def parity(q: => DataFrame): (Seq[String], Boolean) = {
+    val df = q
+    val got = df.collect().map(_.toString).toSeq.sorted
+    spark.conf.set(ExcludedRules, "graft.plans.FoldLocalRelations")
+    val unfolded =
+      try q.collect().map(_.toString).toSeq.sorted
+      finally spark.conf.unset(ExcludedRules)
+    assert(got === unfolded)
+    got -> df.queryExecution.optimizedPlan.isInstanceOf[LocalRelation]
+  }
+
+  test("count, union and a string-keyed anti-join over local frames run no Spark job") {
+    val listed = Seq(("a", 1L), ("b", 2L), ("_tmp/c", 3L)).toDF("path", "size_bytes")
+    val reachable = Seq(("a", 1L)).toDF("path", "size_bytes")
+    val (n, jobs) = withJobs {
+      listed.join(reachable.select("path"), Seq("path"), "left_anti")
+        .withColumn("tmp", $"path".startsWith("_tmp/"))
+        .count()
+    }
+    assert(n === 2L)
+    assert(jobs.isEmpty, s"a driver-local plan ran jobs: $jobs")
+    val (u, unionJobs) = withJobs(listed.union(reachable).filter($"size_bytes" > 1).collect())
+    assert(u.map(_.getString(0)).sorted === Array("_tmp/c", "b"))
+    assert(unionJobs.isEmpty, s"a local union ran jobs: $unionJobs")
+    val (c, countJobs) = withJobs(listed.filter($"size_bytes" > 1).count())
+    assert(c === 2L)
+    assert(countJobs.isEmpty, s"a local count ran jobs: $countJobs")
+  }
+
+  test("folded count and union match the unfolded plan; grouped counts stay unfolded") {
+    val a = Seq((1L, "x"), (2L, "y"), (2L, "y")).toDF("k", "v")
+    val b = Seq((3L, "z")).toDF("k", "v")
+    assert(parity(a.groupBy().count()) === (Seq("[3]"), true))
+    assert(parity(a.filter($"k" > 5).groupBy().count()) === (Seq("[0]"), true))
+    assert(parity(a.union(b).union(a)) ===
+      (Seq("[1,x]", "[1,x]", "[2,y]", "[2,y]", "[2,y]", "[2,y]", "[3,z]"), true))
+    assert(parity(b.unionByName(a.select("v", "k"))) ===
+      (Seq("[1,x]", "[2,y]", "[2,y]", "[3,z]"), true))
+    val (rows, folded) = parity(a.groupBy("k").count())
+    assert(rows === Seq("[1,1]", "[2,2]"))
+    assert(!folded, "only a global count folds")
+  }
+
+  test("anti and semi joins: null keys never match, duplicate keys, two-column keys") {
+    val l = Seq((Some("a"), 1), (None, 2), (Some("b"), 3), (Some("b"), 4), (Some("c"), 5))
+      .toDF("k", "v")
+    val r = Seq(Some("b"), Some("b"), None, Some("d")).toDF("k")
+    assert(parity(l.join(r, Seq("k"), "left_anti")) === (Seq("[a,1]", "[c,5]", "[null,2]"), true))
+    assert(parity(l.join(r, Seq("k"), "left_semi")) === (Seq("[b,3]", "[b,4]"), true))
+    // null-safe equality: null matches null
+    assert(parity(l.join(r, l("k") <=> r("k"), "left_anti")) === (Seq("[a,1]", "[c,5]"), true))
+
+    val l2 = Seq((1L, "x", 10), (1L, "y", 11), (2L, "x", 12), (2L, null, 13)).toDF("a", "b", "v")
+    val r2 = Seq((1L, "x"), (2L, "y"), (2L, null)).toDF("a", "b")
+    assert(parity(l2.join(r2, Seq("a", "b"), "left_anti")) ===
+      (Seq("[1,y,11]", "[2,null,13]", "[2,x,12]"), true))
+    assert(parity(l2.join(r2, Seq("a", "b"), "left_semi")) === (Seq("[1,x,10]"), true))
+  }
+
+  test("long, decimal, date and timestamp keys fold with binary equality") {
+    val d = Date.valueOf("2024-02-29")
+    val t = Timestamp.valueOf("2024-02-29 12:34:56.789")
+    val l = Seq(
+      (1L, BigDecimal("1.50"), d, t),
+      (2L, BigDecimal("2.25"), Date.valueOf("2024-03-01"), Timestamp.valueOf("2024-03-01 00:00:00")),
+      (3L, BigDecimal("-7"), d, Timestamp.valueOf("1969-12-31 23:59:59.999999")))
+      .toDF("n", "dec", "day", "ts")
+    val r = Seq((1L, BigDecimal("1.5"), d, t), (9L, BigDecimal("-7.000"), d, t))
+      .toDF("n", "dec", "day", "ts")
+    Seq("n" -> Seq(1L), "dec" -> Seq(1L, 3L), "day" -> Seq(1L, 3L), "ts" -> Seq(1L)).foreach {
+      case (c, semi) =>
+        val (rows, folded) = parity(l.join(r.select(c), Seq(c), "left_semi").select("n"))
+        assert(rows === semi.map(n => s"[$n]"), c)
+        assert(folded, s"$c keys must fold")
+        val (anti, antiFolded) = parity(l.join(r.select(c), Seq(c), "left_anti").select("n"))
+        assert(anti === Seq(1L, 2L, 3L).filterNot(semi.contains).map(n => s"[$n]"), c)
+        assert(antiFolded, s"$c keys must fold")
+    }
+  }
+
+  test("double keys, a residual condition and NOT IN stay unfolded and agree") {
+    val l = Seq((0.0, 1), (-0.0, 2), (Double.NaN, 3), (1.5, 4)).toDF("x", "v")
+    val r = Seq((-0.0, 0), (Double.NaN, 0)).toDF("x", "w")
+    val (dbl, dblFolded) = parity(l.join(r.select("x"), Seq("x"), "left_anti"))
+    assert(dbl === Seq("[1.5,4]"), "0.0 = -0.0 and NaN = NaN in Spark's join semantics")
+    assert(!dblFolded)
+
+    val a = Seq(("k", 1), ("k", 5), ("j", 1)).toDF("k", "v")
+    val b = Seq(("k", 3)).toDF("k", "w")
+    val (res, resFolded) = parity(a.join(b, a("k") === b("k") && a("v") > b("w"), "left_anti"))
+    assert(res === Seq("[j,1]", "[k,1]"))
+    assert(!resFolded, "a residual condition stays unfolded")
+
+    Seq((Some(1L), "p"), (Some(2L), "q"), (None, "r")).toDF("k", "v").createOrReplaceTempView("fold_l")
+    Seq(Some(2L)).toDF("k").createOrReplaceTempView("fold_r")
+    Seq(Some(2L), None).toDF("k").createOrReplaceTempView("fold_rn")
+    try {
+      val (notIn, notInFolded) =
+        parity(spark.sql("SELECT v FROM fold_l WHERE k NOT IN (SELECT k FROM fold_r)"))
+      assert(notIn === Seq("[p]"), "NOT IN drops the row whose key is null")
+      assert(!notInFolded)
+      val (withNull, _) =
+        parity(spark.sql("SELECT v FROM fold_l WHERE k NOT IN (SELECT k FROM fold_rn)"))
+      assert(withNull.isEmpty, "a null in the NOT IN list keeps no row")
+    } finally Seq("fold_l", "fold_r", "fold_rn").foreach(spark.catalog.dropTempView)
+  }
+}

@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import graft.catalog.GraftCatalog
 import graft.service.GeoReplicationService
 import graft.sources.StorageOps
@@ -523,14 +525,104 @@ class GeoReplicationSpec extends SparkSpec {
       Files.createDirectories(deep)
       (1 to 25).foreach(i => Files.write(deep.resolve(s"f$i.bin"), Array.fill[Byte](i)(0)))
     }
-    val df = StorageOps.listing(spark, root.toString)
-    assert(df.count() === 3 + 8 * 25)
-    // per-prefix totals survive the fan-out (sizes/paths intact)
-    val bytes = df.agg(org.apache.spark.sql.functions.sum("size_bytes")).head.getLong(0)
-    assert(bytes === 3 + 8 * (1 to 25).sum)
-    // the prefix scan is distributed: one task per top-level prefix, so the
-    // plan must carry >1 partition (driver-buffered listings collapse to 1)
-    assert(df.rdd.getNumPartitions >= 8)
+    // 8 prefixes sit under Spark's parallel-discovery threshold (32), which
+    // lists them on the driver; a threshold below 8 takes the executor path
+    val df = withDiscoveryThreshold(4) {
+      val df = StorageOps.listing(spark, root.toString)
+      assert(df.count() === 3 + 8 * 25)
+      // per-prefix totals survive the fan-out (sizes/paths intact)
+      val bytes = df.agg(org.apache.spark.sql.functions.sum("size_bytes")).head.getLong(0)
+      assert(bytes === 3 + 8 * (1 to 25).sum)
+      // the prefix scan is distributed: one task per top-level prefix, so the
+      // plan must carry >1 partition (driver-buffered listings collapse to 1)
+      assert(df.rdd.getNumPartitions >= 8)
+      df.collect().toSet
+    }
+    // the driver path: the same rows, and no job
+    val (local, jobs) = withJobs(StorageOps.listing(spark, root.toString).collect().toSet)
+    assert(local === df)
+    assert(jobs.isEmpty, s"a shallow listing ran jobs: $jobs")
+  }
+
+  private def withDiscoveryThreshold[T](n: Int)(body: => T): T = {
+    val key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    val prior = spark.conf.getOption(key)
+    spark.conf.set(key, n.toLong)
+    try body finally prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  test("a shallow listing runs on the driver with the executor fan-out's rows: " +
+       "root files, nested and hidden names, empty and missing roots, escaped paths") {
+    def both(root: String): Set[org.apache.spark.sql.Row] = {
+      val (local, jobs) = withJobs(StorageOps.listing(spark, root).collect().toSet)
+      assert(jobs.isEmpty, s"a shallow listing ran jobs: $jobs")
+      assert(local === withDiscoveryThreshold(0)(StorageOps.listing(spark, root).collect().toSet))
+      local
+    }
+    val base = Files.createTempDirectory("list-parity")
+    val root = Files.createDirectories(base.resolve("graft wh+plus/data"))
+    def put(rel: String, n: Int): Unit = {
+      Files.createDirectories(root.resolve(rel).getParent)
+      Files.write(root.resolve(rel), Array.fill[Byte](n)(7))
+    }
+    put("root-1.bin", 1)
+    put("p1/a.parquet", 2)
+    put("p1/deep/er/b.parquet", 3)
+    put("_tmp/x", 4)
+    put("_staging/y", 5)
+    put("p2/._tmp_z", 6)
+    Files.createDirectories(root.resolve("empty-prefix"))
+    val rows = both(root.toString)
+    val uri = root.toUri.toString.stripSuffix("/")
+    assert(rows.map(r => (r.getString(0), r.getLong(1))) === Set(
+      s"$uri/root-1.bin" -> 1L, s"$uri/p1/a.parquet" -> 2L, s"$uri/p1/deep/er/b.parquet" -> 3L,
+      s"$uri/_tmp/x" -> 4L, s"$uri/_staging/y" -> 5L, s"$uri/p2/._tmp_z" -> 6L)
+      .map { case (p, n) => new org.apache.hadoop.fs.Path(new java.net.URI(p)).toString -> n })
+    assert(rows.forall(_.getLong(2) > 0), "every row carries its mtime")
+    assert(both(Files.createDirectories(base.resolve("empty")).toString).isEmpty)
+    assert(both(base.resolve("missing").toString).isEmpty)
+  }
+
+  test("a small table's orphan-GC plan and the pending/failed event counts run no Spark job") {
+    val svc = warmService()
+    svc.coordinateWrite("ns", "t", Seq(1L, 2L).toDF("id"), "us-east-1")
+    val cat = svc.regions("us-east-1")
+    val tableRoot = cat.tablePath("ns", "t")
+    Files.createDirectories(tableRoot.resolve("data/_tmp"))
+    Files.write(tableRoot.resolve("data/_tmp/abandoned.parquet"), Array[Byte](1))
+    val bare = new org.apache.hadoop.fs.Path(tableRoot.toString).toUri.getPath
+    val (orphans, gcJobs) = withJobs {
+      val inventory = StorageOps.listing(spark, tableRoot.resolve("data").toString)
+        .withColumn("path", org.apache.spark.sql.functions.regexp_replace($"path",
+          ".*" + java.util.regex.Pattern.quote(bare + "/"), ""))
+        .withColumn("seen_at", org.apache.spark.sql.functions.current_timestamp())
+      val reachable = cat.filesTable("ns", "t", cat.latest("ns", "t").get.seq)
+      graft.operators.GcPlanner.orphans(inventory, reachable, Seq("path"), "seen_at").count()
+    }
+    assert(orphans === 1L, "the abandoned temp file is the one orphan")
+    assert(gcJobs.isEmpty, s"a small table's GC plan ran jobs: $gcJobs")
+    val (counts, countJobs) = withJobs(
+      (svc.pendingEvents("eu-west-1").count(), svc.failedEvents("eu-west-1").count()))
+    assert(counts === ((2L, 0L)))
+    assert(countJobs.isEmpty, s"event counts ran jobs: $countJobs")
+  }
+
+  test("expiry removes the staging directories it empties: after 20 append, compaction " +
+       "and expiry rounds the event log's data tree holds only live files' directories") {
+    val svc = warmService()
+    (1 to 20).foreach { i =>
+      svc.coordinateWrite("ns", "t", Seq(i.toLong).toDF("id"), "us-east-1")
+      svc.processPendingEvents("eu-west-1")
+      assert(svc.compactSyncEvents())
+    }
+    val sys = svc.regions("us-east-1")
+    val data = sys.tablePath("_system", "sync_events").resolve("data")
+    val listed = Files.list(data)
+    val dirs = try listed.iterator().asScala.map(p => s"data/${p.getFileName}").toSet
+               finally listed.close()
+    val live = sys.dataFiles("_system", "sync_events", sys.latest("_system", "sync_events").get)
+      .map(f => f.substring(0, f.lastIndexOf('/'))).toSet
+    assert(dirs === live)
   }
 
   test("concurrent load: 10 tables written in parallel, synced, 30 routed reads byte-identical (reference WriteSyncReadWorkflow)") {
