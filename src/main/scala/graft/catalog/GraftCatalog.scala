@@ -4523,13 +4523,18 @@ final class GraftCatalog(val spark: SparkSession, val warehouse: String) {
     * delete manifests included — a file two manifests carry (a replace
     * re-manifests what it keeps) appears twice. size_bytes is the
     * AUTHORITATIVE size recorded at commit time. Which side reads the
-    * manifests is Spark's file-index rule
-    * (`spark.sql.sources.parallelPartitionDiscovery.threshold`): at most
-    * that many manifests, the DRIVER builds the rows from the manifest
-    * cache as a local frame (no job; a GC diff over it folds on the
-    * driver, [[graft.plans.FoldLocalRelations]]); more, a DISTRIBUTED
-    * JSON scan of the manifest files, so reconciliation joins scale to
-    * manifest sets far past driver memory. */
+    * manifests follows `spark.sql.sources.parallelPartitionDiscovery.threshold`:
+    *  - at most that many manifests, the DRIVER builds the rows from the
+    *    manifest cache as a local frame (no job; a GC diff over it folds
+    *    on the driver, [[graft.plans.FoldLocalRelations]]);
+    *  - more, a DISTRIBUTED JSON scan of the manifest files, so
+    *    reconciliation joins scale to manifest sets far past driver memory.
+    * The setting is the one that already decides this read's cost: the
+    * JSON scan's own file index stats its paths on the driver up to that
+    * many and runs a listing job past it. Under it, the scan's driver
+    * work is already O(manifests) and its one job reads files the
+    * manifest cache holds; past it, the scan is distributed end to end.
+    * A separate constant would let the two halves of one read disagree. */
   def filesTable(ns: String, name: String, seq: Long): DataFrame = {
     import spark.implicits._
     val manifests = snapshots(ns, name).find(_.seq == seq).map(_.manifests).getOrElse(Seq.empty)

@@ -21,8 +21,8 @@ import org.apache.spark.sql.functions._
   * whole-stage codegen; the only non-declarative step (the physical
   * delete) happens in `foreachPartition` downstream and is deliberately
   * not part of planning. Which side runs the join is the inputs' size,
-  * not a fork here: over driver-local inputs (a shallow
-  * [[graft.sources.StorageOps.listing]], a few-manifest
+  * not a fork here: over driver-local inputs (a
+  * [[graft.sources.StorageOps.listing]] of a tree narrow at every level, a few-manifest
   * [[graft.catalog.GraftCatalog.filesTable]]) the anti-join and its
   * count fold on the driver ([[graft.plans.FoldLocalRelations]]) with no
   * job; over distributed inputs (millions of rows per PB) it is one

@@ -12,9 +12,10 @@ import org.apache.spark.sql.functions._
   * at 100 TB are the table-valued ones:
   *  - `listing` turns a storage prefix into a DataFrame (path/size/mtime)
   *    so existence checks become anti-joins instead of per-file HEADs
-  *    (the reference's inventory pattern, G7). A shallow tree lists on
-  *    the driver into a local frame; past Spark's parallel-discovery
-  *    threshold of sub-prefixes, executor tasks list one prefix each;
+  *    (the reference's inventory pattern, G7). The driver walks the
+  *    tree; a directory with more subdirectories than Spark's
+  *    parallel-discovery threshold hands them to executor tasks, one
+  *    prefix each, so a tree narrow at every level is a local frame;
   *  - `distributedCopy` fans a file manifest out over executors with
   *    foreachPartition — per-partition FileSystem clients, no driver
   *    bottleneck (Y12's foreachPar, Spark-shaped). Idempotent: an
@@ -64,70 +65,50 @@ object StorageOps {
   // ---- S4/S9/S11: listings as DataFrames ----
 
   /** Recursive listing of a prefix as (path, size_bytes, mtime_ms). The
-    * driver reads ONE non-recursive page of the root (O(direct children));
-    * which side lists the child directories is Spark's file-index rule
-    * (`spark.sql.sources.parallelPartitionDiscovery.threshold`, the one
-    * `InMemoryFileIndex` applies):
-    *  - at most that many sub-prefixes: the DRIVER lists each recursively
-    *    and the result is a driver-local frame (`LocalRelation`) — no job,
-    *    and the GC diff over it folds on the driver too
-    *    ([[graft.plans.FoldLocalRelations]]);
-    *  - more: every child directory becomes a prefix listed recursively by
-    *    an EXECUTOR task (the S3-inventory prefix fan-out), and rows flow
-    *    from executor listings straight into the downstream join.
-    * Both sides emit the same rows: fully qualified paths, root-level
-    * files included, and names starting with `_` or `.` kept — Spark's
-    * own file listing hides those, and they are exactly the `_tmp/`,
-    * `_staging/` and `._tmp_` orphans a GC sweep must find. */
+    * driver walks the tree one `listStatus` page per directory, and at
+    * each directory applies the rule Spark's file index applies at every
+    * level (`HadoopFSUtils`, threshold
+    * `spark.sql.sources.parallelPartitionDiscovery.threshold`):
+    *  - at most that many subdirectories: the DRIVER walks each of them
+    *    the same way;
+    *  - more: each of them becomes a prefix listed recursively by an
+    *    EXECUTOR task (the S3-inventory prefix fan-out), one task per
+    *    prefix, and its rows flow straight into the downstream join.
+    * A tree no level of which is wider than the threshold is therefore a
+    * driver-local frame (`LocalRelation`) — no job, and the GC diff over
+    * it folds on the driver too ([[graft.plans.FoldLocalRelations]]).
+    * Like Spark's file index, the driver holds the files of the
+    * directories it walks itself; the fan-out bounds the directories it
+    * visits, not the files in one of them.
+    *
+    * Both sides run the same walk ([[listTree]]) and emit the same rows:
+    * fully qualified paths, root-level files included, and names starting
+    * with `_` or `.` kept — Spark's own file listing hides those, and they
+    * are exactly the `_tmp/`, `_staging/` and `._tmp_` orphans a GC sweep
+    * must find. A directory that is gone by the time it is listed — a
+    * missing root, a staging directory an expiry removed between the
+    * driver's walk and a task — holds no files. */
   def listing(spark: SparkSession, root: String): DataFrame = {
     import spark.implicits._
     val conf = spark.sparkContext.hadoopConfiguration
-    val f = fs(root, conf)
+    val rows = Vector.newBuilder[(String, Long, Long)]
+    val wide = Vector.newBuilder[String]
     val rootPath = new HPath(root)
-    if (!f.exists(rootPath))
-      return Seq.empty[(String, Long, Long)].toDF("path", "size_bytes", "mtime_ms")
-    val top = f.listStatus(rootPath)
-    // paths are emitted FULLY QUALIFIED (scheme + authority): stripping
-    // to the bare key made two buckets indistinguishable and broke every
-    // anti-join against manifest URIs — and a bare key handed to a
-    // FileSystem client resolves against the DEFAULT fs, not the listed one
-    val rootFiles = top.filter(_.isFile)
-      .map(st => (st.getPath.toString, st.getLen, st.getModificationTime)).toSeq
-    val dirs = top.filter(_.isDirectory)
-    if (dirs.length <= spark.sessionState.conf.parallelPartitionDiscoveryThreshold) {
-      val rows = Seq.newBuilder[(String, Long, Long)] ++= rootFiles
-      dirs.foreach(d => listTree(f, d.getPath, rows))
-      return rows.result().toDF("path", "size_bytes", "mtime_ms")
-    }
-    val prefixes = dirs.map(_.getPath.toString).toSeq
+    listTree(rootPath.getFileSystem(conf), rootPath, rows,
+      Some((spark.sessionState.conf.parallelPartitionDiscoveryThreshold, wide)))
+    val local = rows.result().toDF("path", "size_bytes", "mtime_ms")
+    val prefixes = wide.result()
+    if (prefixes.isEmpty) return local
     val confSer = new org.apache.spark.util.SerializableConfiguration(conf)
-    val prefixListing =
-      spark.createDataset(prefixes)
-        .repartition(prefixes.size) // one prefix per task: listings run in parallel
-        .mapPartitions { ps =>
-          val c = confSer.value
-          ps.flatMap { prefix =>
-            val p = new HPath(prefix)
-            val pfs = p.getFileSystem(c)
-            val it = pfs.listFiles(p, true)
-            new Iterator[(String, Long, Long)] {
-              private var nextSt: Option[(String, Long, Long)] = advance()
-              private def advance(): Option[(String, Long, Long)] = {
-                while (it.hasNext) {
-                  val st = it.next()
-                  if (st.isFile)
-                    return Some((st.getPath.toString, st.getLen, st.getModificationTime))
-                }
-                None
-              }
-              def hasNext: Boolean = nextSt.isDefined
-              def next(): (String, Long, Long) = {
-                val r = nextSt.get; nextSt = advance(); r
-              }
-            }
-          }
-        }
-    rootFiles.toDS().union(prefixListing).toDF("path", "size_bytes", "mtime_ms")
+    val fannedOut = spark.sparkContext
+      .parallelize(prefixes, prefixes.size) // one prefix per task: listings run in parallel
+      .flatMap { prefix =>
+        val p = new HPath(prefix)
+        val out = Vector.newBuilder[(String, Long, Long)]
+        listTree(p.getFileSystem(confSer.value), p, out, None)
+        out.result()
+      }
+    local.union(fannedOut.toDF("path", "size_bytes", "mtime_ms"))
   }
 
   /** Every file under `dir`, recursively, by one `listStatus` page per
@@ -135,16 +116,28 @@ object StorageOps {
     * builds a `LocatedFileStatus` per file (block locations, owner,
     * permission), which on the local file system costs about 3 ms a file
     * against 0.04 ms for `listStatus` (25 one-file prefixes: 80 ms
-    * against 1.1 ms a listing). A directory that vanishes mid-walk (an
-    * expiry removing an emptied staging directory) holds no files. */
+    * against 1.1 ms a listing). With `fanOut = Some((threshold, wide))`,
+    * the subdirectories of a directory that has more than `threshold` of
+    * them go to `wide` unlisted instead (an executor task lists each);
+    * with `None` every subdirectory is walked here. Paths are emitted
+    * FULLY QUALIFIED (scheme + authority): a bare key made two buckets
+    * indistinguishable, broke every anti-join against manifest URIs, and
+    * resolves against the DEFAULT fs when handed to a FileSystem client.
+    * A directory that vanished before its page was read holds no files. */
   private def listTree(f: FileSystem, dir: HPath,
-                       out: collection.mutable.Growable[(String, Long, Long)]): Unit = {
+                       out: collection.mutable.Growable[(String, Long, Long)],
+                       fanOut: Option[(Int, collection.mutable.Growable[String])]): Unit = {
     val children =
       try f.listStatus(dir)
       catch { case _: java.io.FileNotFoundException => Array.empty[FileStatus] }
     children.foreach { st =>
-      if (st.isDirectory) listTree(f, st.getPath, out)
-      else if (st.isFile) out += ((st.getPath.toString, st.getLen, st.getModificationTime))
+      if (st.isFile) out += ((st.getPath.toString, st.getLen, st.getModificationTime))
+    }
+    val dirs = children.filter(_.isDirectory)
+    fanOut match {
+      case Some((threshold, wide)) if dirs.length > threshold =>
+        dirs.foreach(d => wide += d.getPath.toString)
+      case _ => dirs.foreach(d => listTree(f, d.getPath, out, fanOut))
     }
   }
 

@@ -553,10 +553,17 @@ class GeoReplicationSpec extends SparkSpec {
 
   test("a shallow listing runs on the driver with the executor fan-out's rows: " +
        "root files, nested and hidden names, empty and missing roots, escaped paths") {
-    def both(root: String): Set[org.apache.spark.sql.Row] = {
+    // threshold 0 sends every subdirectory to an executor task; a root
+    // with no subdirectory (the empty and the missing root) has nothing to
+    // fan out, so there both listings take the driver path and the check
+    // pins only that they list as empty without a job
+    def both(root: String, fansOut: Boolean): Set[org.apache.spark.sql.Row] = {
       val (local, jobs) = withJobs(StorageOps.listing(spark, root).collect().toSet)
       assert(jobs.isEmpty, s"a shallow listing ran jobs: $jobs")
-      assert(local === withDiscoveryThreshold(0)(StorageOps.listing(spark, root).collect().toSet))
+      val (fanned, fannedJobs) =
+        withDiscoveryThreshold(0)(withJobs(StorageOps.listing(spark, root).collect().toSet))
+      assert(fannedJobs.nonEmpty === fansOut, s"executor listing jobs: $fannedJobs")
+      assert(local === fanned)
       local
     }
     val base = Files.createTempDirectory("list-parity")
@@ -572,15 +579,55 @@ class GeoReplicationSpec extends SparkSpec {
     put("_staging/y", 5)
     put("p2/._tmp_z", 6)
     Files.createDirectories(root.resolve("empty-prefix"))
-    val rows = both(root.toString)
+    val rows = both(root.toString, fansOut = true)
     val uri = root.toUri.toString.stripSuffix("/")
     assert(rows.map(r => (r.getString(0), r.getLong(1))) === Set(
       s"$uri/root-1.bin" -> 1L, s"$uri/p1/a.parquet" -> 2L, s"$uri/p1/deep/er/b.parquet" -> 3L,
       s"$uri/_tmp/x" -> 4L, s"$uri/_staging/y" -> 5L, s"$uri/p2/._tmp_z" -> 6L)
       .map { case (p, n) => new org.apache.hadoop.fs.Path(new java.net.URI(p)).toString -> n })
     assert(rows.forall(_.getLong(2) > 0), "every row carries its mtime")
-    assert(both(Files.createDirectories(base.resolve("empty")).toString).isEmpty)
-    assert(both(base.resolve("missing").toString).isEmpty)
+    assert(both(Files.createDirectories(base.resolve("empty")).toString, fansOut = false).isEmpty)
+    assert(both(base.resolve("missing").toString, fansOut = false).isEmpty)
+  }
+
+  /** `prefixes` one-file directories under `root/dir`, file i of i bytes. */
+  private def putPrefixes(root: java.nio.file.Path, dir: String, prefixes: Int): Unit =
+    (1 to prefixes).foreach { i =>
+      val p = Files.createDirectories(root.resolve(s"$dir/p$i"))
+      Files.write(p.resolve("f.bin"), Array.fill[Byte](i)(1))
+    }
+
+  test("the discovery threshold applies at every level: a root with two children " +
+       "and 40 nested prefixes lists them on executors, with the driver walk's rows") {
+    val root = Files.createTempDirectory("list-nested")
+    Files.write(root.resolve("root.bin"), Array[Byte](1))
+    putPrefixes(root, "a", 40)
+    Files.createDirectories(root.resolve("b"))
+    Files.write(root.resolve("b/g.bin"), Array[Byte](1, 2))
+    val df = StorageOps.listing(spark, root.toString)
+    assert(df.rdd.getNumPartitions >= 40, "one task per nested prefix")
+    val (fanned, jobs) = withJobs(df.collect().toSet)
+    assert(jobs.nonEmpty, "40 sibling prefixes are past the threshold of 32")
+    assert(fanned.size === 2 + 40)
+    assert(fanned.toSeq.map(_.getLong(1)).sum === 1 + 2 + (1 to 40).sum)
+    val (walked, walkJobs) =
+      withDiscoveryThreshold(64)(withJobs(StorageOps.listing(spark, root.toString).collect().toSet))
+    assert(walkJobs.isEmpty)
+    assert(walked === fanned)
+  }
+
+  test("the executor listing treats a prefix removed after the driver's walk as empty") {
+    val root = Files.createTempDirectory("list-vanish")
+    putPrefixes(root, "data", 40)
+    // the driver walks the tree when the frame is built; the tasks list
+    // the prefixes when it runs — an expiry removing an emptied staging
+    // directory in between must not fail the listing
+    val df = StorageOps.listing(spark, root.toString)
+    Files.delete(root.resolve("data/p1/f.bin"))
+    Files.delete(root.resolve("data/p1"))
+    val (rows, jobs) = withJobs(df.collect())
+    assert(jobs.nonEmpty, "40 prefixes list on executors")
+    assert(rows.map(_.getLong(1)).sorted.toSeq === (2 to 40).map(_.toLong))
   }
 
   test("a small table's orphan-GC plan and the pending/failed event counts run no Spark job") {
