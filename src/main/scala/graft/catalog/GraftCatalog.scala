@@ -811,14 +811,6 @@ final class GraftCatalog(val spark: SparkSession, val warehouse: String) {
   private def entriesOf(files: Seq[(String, RowParquetWriter.Written)]): Seq[(String, Long)] =
     files.map { case (p, f) => p -> f.size }
 
-  /** The manifest of freshly staged data files, carrying the stats and
-    * blooms their writers recorded. */
-  private def writeStagedManifest(ns: String, name: String,
-                                  files: Seq[(String, RowParquetWriter.Written)]): String =
-    writeManifest(ns, name, entriesOf(files),
-      files.map { case (p, f) => p -> f.stats }.toMap,
-      files.map { case (p, f) => p -> f.blooms }.toMap)
-
   /** Per-file column bounds for files graft did NOT write (stats
     * backfill, REST-landed files) — ONE distributed aggregate over the
     * files (grouped by input_file_name, map-side combined), keyed back to
@@ -1002,60 +994,20 @@ final class GraftCatalog(val spark: SparkSession, val warehouse: String) {
     val head = latest(ns, name).getOrElse(
       throw new IllegalStateException(s"$ns.$name has no committed versions"))
     // everything up to (and including) the last delete manifest is
-    // preserved verbatim; only the trailing data run consolidates
+    // preserved verbatim; only the trailing data run consolidates into
+    // chunks of at most ~targetEntries entries
     val lastDelete = head.manifests.lastIndexWhere(isDeleteManifest)
-    val (frozen, tail) = head.manifests.splitAt(lastDelete + 1)
-    val runs = scala.collection.mutable.ArrayBuffer.empty[Either[String, Seq[String]]]
-    frozen.foreach(m => runs += Left(m))
-    tail.foreach { m =>
-      runs.lastOption match {
-        case Some(Right(run)) => runs(runs.size - 1) = Right(run :+ m)
-        case _ => runs += Right(Seq(m))
-      }
+    val (frozen, run) = head.manifests.splitAt(lastDelete + 1)
+    val entries = run.flatMap(manifestEntriesFull(ns, name, _))
+    val want = math.max(1, (entries.size + targetEntries - 1) / targetEntries)
+    if (want >= run.size) return (head, 0) // already consolidated
+    val chunk = math.max(1, (entries.size + want - 1) / want)
+    val snap = commit(ns, name, maxRetries = maxRetries) { st =>
+      Change("manifest rewrite", frozen ++ entries.grouped(chunk).flatMap(st.carried(_)),
+        replaces = true, expectHead = Some(head.commitId), region = head.sourceRegion,
+        idPrefix = "rwmanifests-")
     }
-    val newList = scala.collection.mutable.ArrayBuffer.empty[String]
-    val written = scala.collection.mutable.ArrayBuffer.empty[String]
-    var eliminated = 0
-    runs.foreach {
-      case Left(del) => newList += del
-      case Right(run) =>
-        val entries = run.map(m => m -> manifestEntriesFull(ns, name, m))
-        val total = entries.map(_._2.size).sum
-        val wantManifests = math.max(1, (total + targetEntries - 1) / targetEntries)
-        if (wantManifests >= run.size) newList ++= run // already consolidated
-        else {
-          val flat = entries.flatMap(_._2)
-          val chunkSize = math.max(1, (total + wantManifests - 1) / wantManifests)
-          flat.grouped(chunkSize).foreach { chunk =>
-            val rel = writeManifest(ns, name,
-              chunk.map(e => (e.path, e.sizeBytes)),
-              chunk.filter(_.stats.nonEmpty).map(e => e.path -> e.stats).toMap,
-              chunk.filter(_.blooms.nonEmpty).map(e => e.path -> e.blooms).toMap)
-            written += rel
-            newList += rel
-          }
-          eliminated += run.size - math.min(wantManifests, run.size)
-        }
-    }
-    if (eliminated == 0) {
-      written.foreach(dropManifest(ns, name, _))
-      return (head, 0)
-    }
-    try {
-      val snap = casCommit(ns, name, maxRetries, allowMaintenanceId = true) { parent =>
-        if (!parent.map(_.commitId).contains(head.commitId))
-          throw new java.util.ConcurrentModificationException(
-            s"rewriteManifests of $ns.$name inspected ${head.commitId} but the head moved")
-        Snapshot(head.seq + 1, s"rwmanifests-${UUID.randomUUID()}", Some(head.commitId),
-          System.currentTimeMillis(), newList.toSeq,
-          head.sourceRegion, head.fileCount, head.totalBytes, head.schemaJson,
-          head.propsJson)
-      }
-      (snap, eliminated)
-    } catch { case e: Throwable =>
-      written.foreach(dropManifest(ns, name, _))
-      throw e
-    }
+    (snap, run.size - want)
   }
 
   /** Position-delete COMPACTION (Iceberg's rewrite_position_delete_files
@@ -1090,11 +1042,11 @@ final class GraftCatalog(val spark: SparkSession, val warehouse: String) {
     import spark.implicits._
     val live = dataFiles(ns, name, head)
     val liveSet = live.toSet
+    def posFiles = spark.read
+      .parquet(posEntries.map(e => tableDir(ns, name).resolve(e._1).toString): _*)
     // ONE small job over the delete side answers both decisions below:
     // the distinct files every position delete references
-    val refs = spark.read
-      .parquet(posEntries.map(e => tableDir(ns, name).resolve(e._1).toString): _*)
-      .select("file_path").distinct().collect().map(_.getString(0))
+    val refs = posFiles.select("file_path").distinct().collect().map(_.getString(0))
     val parts = math.max(1, math.ceil(
       posEntries.map(_._2).sum.toDouble / targetFileSizeBytes(ns, name)).toInt)
     // already-consolidated fast path: ONE all-live p-manifest already at
@@ -1103,46 +1055,23 @@ final class GraftCatalog(val spark: SparkSession, val warehouse: String) {
     // each run. (An all-dead set falls through — pure dead weight.)
     if (posMans.size == 1 && posEntries.size <= parts &&
         refs.nonEmpty && refs.forall(liveSet)) return (head, 0)
-    val entries =
-      if (!refs.exists(liveSet))
-        // entirely-inert delete set: consolidates to NOTHING — staging
-        // the empty frame would land a zero-row p-file the fast path
-        // could never call live, churning no-op versions forever
-        Seq.empty
-      else {
-        val liveDf = live.toDF("file_path")
-        entriesOf(stageDataFiles(ns, name, spark.read
-          .parquet(posEntries.map(e => tableDir(ns, name).resolve(e._1).toString): _*)
-          .select(col("file_path"), col("pos").cast("long").as("pos"))
-          .distinct()
-          .join(broadcast(liveDf), Seq("file_path"), "left_semi")
-          .repartitionByRange(parts, col("file_path"), col("pos"))
-          .sortWithinPartitions(col("file_path"), col("pos")), head.properties))
-      }
-    var staged: Seq[String] = Seq.empty
-    try {
-      val newManifest =
-        if (entries.isEmpty) None
-        else Some(writeManifest(ns, name, entries, prefix = "p"))
-      staged = newManifest.toSeq
-      val snap = casCommit(ns, name, maxRetries, allowMaintenanceId = true) { parent =>
-        if (!parent.map(_.commitId).contains(head.commitId))
-          throw new java.util.ConcurrentModificationException(
-            s"rewritePositionDeletes of $ns.$name inspected ${head.commitId} " +
-              "but the head moved")
-        Snapshot(head.seq + 1, s"rwposdel-${UUID.randomUUID()}",
-          Some(head.commitId), System.currentTimeMillis(),
-          head.manifests.filterNot(isPosDeleteManifest) ++ newManifest,
-          head.sourceRegion,
-          head.fileCount - posEntries.size + entries.size,
-          head.totalBytes - posEntries.map(_._2).sum + entries.map(_._2).sum,
-          head.schemaJson, head.propsJson)
-      }
-      (snap, posEntries.size - entries.size)
-    } catch { case e: Throwable =>
-      staged.foreach(dropManifest(ns, name, _))
-      cleanupStaged(ns, name, entries, Seq.empty); throw e
+    val snap = commit(ns, name, maxRetries = maxRetries) { st =>
+      // an entirely-inert delete set consolidates to NOTHING — staging
+      // the empty frame would land a zero-row p-file the fast path could
+      // never call live, churning no-op versions forever
+      val consolidated = if (!refs.exists(liveSet)) None else st.deletes(posFiles
+        .select(col("file_path"), col("pos").cast("long").as("pos"))
+        .distinct()
+        .join(broadcast(live.toDF("file_path")), Seq("file_path"), "left_semi")
+        .repartitionByRange(parts, col("file_path"), col("pos"))
+        .sortWithinPartitions(col("file_path"), col("pos")), "p")
+      Change("position-delete rewrite",
+        head.manifests.filterNot(isPosDeleteManifest) ++ consolidated, replaces = true,
+        expectHead = Some(head.commitId), region = head.sourceRegion,
+        idPrefix = "rwposdel-")
     }
+    (snap, posEntries.size -
+      snap.manifests.filter(isPosDeleteManifest).map(manifestEntries(ns, name, _).size).sum)
   }
 
   /** File-granular COPY-ON-WRITE commit — the publish half of a SQL
@@ -1172,94 +1101,29 @@ final class GraftCatalog(val spark: SparkSession, val warehouse: String) {
                          addedStats: Map[String, Map[String, (String, String)]] = Map.empty,
                          sourceRegion: String = "local",
                          commitId: Option[String] = None): Snapshot = {
-    require(tableExists(ns, name), s"no such table $ns.$name")
     val dup = added.map(_._1).diff(added.map(_._1).distinct)
     require(dup.isEmpty, s"duplicate added paths: ${dup.take(3).mkString(", ")}")
-    // BLOOM CARRIAGE: replacement files must keep the point-lookup
-    // pruning the files they replace had, or repeated rewrites silently
-    // degrade a bloom-indexed table to unprunable. Recompute blooms for
-    // the added files over the UNION of bloom columns recorded on the
-    // removed entries (one distributed pass per column, the commit
-    // path's own builder). Computed against the expected head — a CAS
-    // mismatch aborts below anyway, so a wasted job is the worst case.
-    val addedBlooms: Map[String, Map[String, String]] = {
-      val headNow = latest(ns, name)
-      val bloomCols = headNow match {
-        case Some(h) if h.commitId == expectedHeadCommitId && added.nonEmpty =>
-          h.manifests.filterNot(isDeleteManifest)
-            .flatMap(manifestEntriesFull(ns, name, _))
-            .filter(e => removed(e.path)).flatMap(_.blooms.keys)
-            // recorded keys -> columns (timestamp blooms key __tsb_<col>)
-            .map(GraftCatalog.bloomColOf).distinct
-        case _ => Seq.empty
-      }
-      if (bloomCols.isEmpty) Map.empty
-      else headNow.get.schemaJson match {
-        case Some(j) => stagedFileBlooms(ns, name, added,
-          DataType.fromJson(j).asInstanceOf[StructType], bloomCols)
-        case None => Map.empty
-      }
-    }
-    val written = scala.collection.mutable.ArrayBuffer.empty[String]
-    try {
-      var committedSet: Set[String] = Set.empty
-      // ONE attempt: the expectedHead condition is the whole retry
-      // policy — a lost race means the scanned rows are stale and only
-      // the CALLER can re-derive them
-      val snap = casCommit(ns, name, maxRetries = 1) { parent =>
-        val p = parent.getOrElse(throw new IllegalStateException(
-          s"$ns.$name has no committed versions"))
-        if (p.commitId != expectedHeadCommitId)
-          throw new java.util.ConcurrentModificationException(
-            s"row-level operation on $ns.$name planned against commit " +
-              s"$expectedHeadCommitId but the head is ${p.commitId} " +
-              s"(v${p.seq}) — re-run the operation")
-        val parentData = dataFiles(ns, name, p).toSet
-        val missing = removed.diff(parentData)
-        require(missing.isEmpty, s"commitRewriteFiles($ns.$name): removed " +
-          s"files not in head: ${missing.take(3).mkString(", ")}")
-        var removedBytes = 0L
-        val rebuilt = p.manifests.flatMap { m =>
-          if (isDeleteManifest(m)) Some(m)
-          else {
-            val entries = manifestEntriesFull(ns, name, m)
-            val (gone, kept) = entries.partition(e => removed(e.path))
-            if (gone.isEmpty) Some(m)
-            else {
-              removedBytes += gone.map(_.sizeBytes).sum
-              if (kept.isEmpty) None
-              else {
-                val rel = writeManifest(ns, name,
-                  kept.map(e => (e.path, e.sizeBytes)),
-                  kept.filter(_.stats.nonEmpty).map(e => e.path -> e.stats).toMap,
-                  kept.filter(_.blooms.nonEmpty).map(e => e.path -> e.blooms).toMap)
-                written += rel
-                Some(rel)
-              }
-            }
-          }
-        }
-        val newManifest =
-          if (added.isEmpty) None
-          else {
-            val rel = writeManifest(ns, name, added, addedStats, addedBlooms)
-            written += rel
-            Some(rel)
-          }
-        committedSet = (parentData -- removed) ++ added.map(_._1)
-        Snapshot(p.seq + 1,
-          commitId.getOrElse(s"commit-${UUID.randomUUID()}"),
-          Some(p.commitId), System.currentTimeMillis(),
-          rebuilt ++ newManifest, sourceRegion,
-          p.fileCount - removed.size + added.size,
-          p.totalBytes - removedBytes + added.map(_._2).sum,
-          p.schemaJson, p.propsJson)
-      }
-      latestFileSet.put((ns, name), (snap.commitId, committedSet))
-      snap
-    } catch { case e: Throwable =>
-      written.foreach(dropManifest(ns, name, _))
-      throw e
+    // ONE attempt: the expectedHead condition is the whole retry policy —
+    // a lost race means the scanned rows are stale and only the CALLER
+    // can re-derive them
+    commit(ns, name, commitId, maxRetries = 1) { st =>
+      // BLOOM CARRIAGE: replacement files must keep the point-lookup
+      // pruning the files they replace had, or repeated rewrites silently
+      // degrade a bloom-indexed table to unprunable. Blooms for the added
+      // files over the UNION of bloom columns recorded on the removed
+      // entries (recorded keys -> columns: timestamp blooms key
+      // __tsb_<col>), computed against the expected head — a mismatch
+      // aborts the commit anyway, so a wasted job is the worst case
+      val bloomCols = st.head.filter(h => h.commitId == expectedHeadCommitId && added.nonEmpty)
+        .toSeq.flatMap(_.manifests.filterNot(isDeleteManifest))
+        .flatMap(manifestEntriesFull(ns, name, _))
+        .filter(e => removed(e.path)).flatMap(_.blooms.keys)
+        .map(GraftCatalog.bloomColOf).distinct
+      val blooms = st.schema.filter(_ => bloomCols.nonEmpty)
+        .fold(Map.empty[String, Map[String, String]])(stagedFileBlooms(ns, name, added, _, bloomCols))
+      Change("row-level operation", st.manifest(added, addedStats, blooms).toSeq,
+        removedFiles = removed, needsParent = true,
+        expectHead = Some(expectedHeadCommitId), region = sourceRegion)
     }
   }
 
@@ -1284,46 +1148,13 @@ final class GraftCatalog(val spark: SparkSession, val warehouse: String) {
                        posDeleteFiles: Seq[(String, Long)],
                        referenced: Set[String],
                        sourceRegion: String = "local",
-                       commitId: Option[String] = None): Snapshot = {
-    require(tableExists(ns, name), s"no such table $ns.$name")
-    val written = scala.collection.mutable.ArrayBuffer.empty[String]
-    try {
-      val snap = casCommit(ns, name, maxRetries = 1) { parent =>
-        val p = parent.getOrElse(throw new IllegalStateException(
-          s"$ns.$name has no committed versions"))
-        if (p.commitId != expectedHeadCommitId)
-          throw new java.util.ConcurrentModificationException(
-            s"row-level delta on $ns.$name planned against commit " +
-              s"$expectedHeadCommitId but the head is ${p.commitId} " +
-              s"(v${p.seq}) — re-run the operation")
-        val live = dataFiles(ns, name, p).toSet
-        val stale = referenced.diff(live)
-        require(stale.isEmpty, s"commitDeltaFiles($ns.$name): position " +
-          s"deletes reference files not live in v${p.seq}: " +
-          stale.take(3).mkString(", "))
-        val dataManifest =
-          if (newData.isEmpty) None
-          else { val r = writeManifest(ns, name, newData, dataStats)
-                 written += r; Some(r) }
-        val posManifest =
-          if (posDeleteFiles.isEmpty) None
-          else { val r = writeManifest(ns, name, posDeleteFiles, prefix = "p")
-                 written += r; Some(r) }
-        Snapshot(p.seq + 1,
-          commitId.getOrElse(s"commit-${UUID.randomUUID()}"),
-          Some(p.commitId), System.currentTimeMillis(),
-          p.manifests ++ dataManifest ++ posManifest, sourceRegion,
-          p.fileCount + newData.size + posDeleteFiles.size,
-          p.totalBytes + (newData ++ posDeleteFiles).map(_._2).sum,
-          p.schemaJson, p.propsJson)
-      }
-      latestFileSet.remove((ns, name)): Unit
-      snap
-    } catch { case e: Throwable =>
-      written.foreach(dropManifest(ns, name, _))
-      throw e
+                       commitId: Option[String] = None): Snapshot =
+    commit(ns, name, commitId, maxRetries = 1) { st =>
+      Change("row-level delta",
+        st.manifest(newData, dataStats).toSeq ++ st.manifest(posDeleteFiles, prefix = "p"),
+        liveRefs = referenced, needsParent = true,
+        expectHead = Some(expectedHeadCommitId), region = sourceRegion)
     }
-  }
   /** Merge-on-read scan RESTRICTED to a data-file subset: `files` are
     * read with exactly their applicable delete files applied (list-
     * position rule, same as a full read). The read half of a COW
@@ -1394,28 +1225,15 @@ final class GraftCatalog(val spark: SparkSession, val warehouse: String) {
       statless.flatMap(_._2).map(e => (e.path, e.sizeBytes)),
       // files spell columns physically; stats key on physical names
       GraftCatalog.physicalSchema(schema))
-    val replaced: Map[String, String] = statless.map { case (m, entries) =>
-      val pairs = entries.map(e => (e.path, e.sizeBytes))
-      m -> writeManifest(ns, name, pairs,
-        pairs.flatMap { case (p, _) => allStats.get(p).map(p -> _) }.toMap,
-        entries.filter(_.blooms.nonEmpty).map(e => e.path -> e.blooms).toMap)
-    }.toMap
-    try {
-      val snap = casCommit(ns, name, maxRetries) { parent =>
-        if (!parent.map(_.commitId).contains(head.commitId))
-          throw new java.util.ConcurrentModificationException(
-            s"stats backfill of $ns.$name inspected ${head.commitId} but the head moved")
-        Snapshot(head.seq + 1, s"commit-${UUID.randomUUID()}", Some(head.commitId),
-          System.currentTimeMillis(),
-          head.manifests.map(m => replaced.getOrElse(m, m)),
-          head.sourceRegion, head.fileCount, head.totalBytes, head.schemaJson,
-          head.propsJson)
-      }
-      (snap, replaced.size)
-    } catch { case e: Throwable =>
-      replaced.values.foreach(dropManifest(ns, name, _))
-      throw e
+    val snap = commit(ns, name, maxRetries = maxRetries) { st =>
+      val replaced = statless.flatMap { case (m, entries) =>
+        st.carried(entries.map(e => e.copy(stats = allStats.getOrElse(e.path, e.stats))))
+          .map(m -> _)
+      }.toMap
+      Change("stats backfill", head.manifests.map(m => replaced.getOrElse(m, m)),
+        replaces = true, expectHead = Some(head.commitId), region = head.sourceRegion)
     }
+    (snap, statless.size)
   }
 
   /** Per-file Bloom filters for `bloomCols` over files graft did NOT
@@ -1487,66 +1305,380 @@ final class GraftCatalog(val spark: SparkSession, val warehouse: String) {
     }
   }
 
-  /** Remove staged artifacts of an ABORTED commit attempt (conditional
-    * replace lost its race, or CAS retries exhausted): without this the
-    * staged data files and manifest are referenced by no version and
-    * accumulate unboundedly under contention — expiry only reclaims
-    * artifacts reachable from expired versions. */
-  private def cleanupStaged(ns: String, name: String,
-                            entries: Seq[(String, Long)], manifests: Seq[String]): Unit = {
-    // staged files share one per-commit staging dir — remove it whole
-    // (including the writers' checksum siblings)
-    entries.map { case (p, _) => tableDir(ns, name).resolve(p).getParent }
-      .distinct.foreach(deleteTree)
-    manifests.foreach { m =>
-      val ap = tableDir(ns, name).resolve(m).toAbsolutePath
-      manifestCache.remove(ap)
-      Files.deleteIfExists(ap): Unit
+  // ---- the commit funnel ----
+  //
+  // Every catalog commit but commitTransaction's journal publish is ONE
+  // pending [[Change]] applied by [[commit]] (Iceberg's
+  // `SnapshotProducer.commit()` over a `PendingUpdate`): a flavor's
+  // public method stages its files through the funnel's [[Stage]], runs
+  // its own checks and describes the new version relative to whatever
+  // parent the CAS loop lands it on. The funnel owns everything else.
+
+  /** What a commit does to the schema it inherits. */
+  private sealed trait SchemaAction
+  /** The parent's schema, unchanged. */
+  private case object KeepSchema extends SchemaAction
+  /** `schema` validated additively against the parent
+    * ([[validatedSchemaJson]]; `replacesAll`: no parent file survives). */
+  private case class AdditiveSchema(schema: StructType, replacesAll: Boolean = false)
+    extends SchemaAction
+  /** A schema recorded elsewhere (a source region's), or the parent's when None. */
+  private case class ExplicitSchema(json: Option[String]) extends SchemaAction
+  /** ALTER TABLE's evolution to `schema` ([[evolvedSchemaJson]]). */
+  private case class EvolvedSchema(schema: StructType, expectedPrev: Option[StructType])
+    extends SchemaAction
+
+  /** One pending commit, relative to the parent it lands on.
+    *  - `op` names the operation in refusals;
+    *  - the parent condition: `needsParent`, `expectSeq` (the parent's
+    *    seq), `expectHead` (its commit id), `rebaseOn` (a replace of that
+    *    version whose later manifests ride on) or `forkSeq` (a
+    *    fast-forward of a branch forked there);
+    *  - the manifest list: the parent's minus the copy-on-write
+    *    `removedFiles`, then `manifests` in order, then one manifest of
+    *    the `register`ed landed files the parent lacks. `replaces` drops
+    *    the parent's list (a rebase keeps its tail); `adopt` takes
+    *    another version's list, counts, schema and properties whole;
+    *  - `liveRefs`: data files position deletes name, live in the parent;
+    *  - `schema`, `propsSet`/`propsUnset`, `region`, and `idPrefix` for a
+    *    generated commit id — the maintenance prefixes come only from
+    *    here, never from a caller's id. */
+  private case class Change(
+      op: String,
+      manifests: Seq[String] = Seq.empty,
+      register: Seq[String] = Seq.empty,
+      removedFiles: Set[String] = Set.empty,
+      replaces: Boolean = false,
+      adopt: Option[Snapshot] = None,
+      liveRefs: Set[String] = Set.empty,
+      needsParent: Boolean = false,
+      expectSeq: Option[Long] = None,
+      expectHead: Option[String] = None,
+      rebaseOn: Option[Snapshot] = None,
+      forkSeq: Option[Long] = None,
+      schema: SchemaAction = KeepSchema,
+      propsSet: Map[String, String] = Map.empty,
+      propsUnset: Seq[String] = Seq.empty,
+      region: String = "local",
+      idPrefix: String = "commit-")
+
+  /** A ref's log as one `_meta/` listing reads it: its head (a branch's
+    * fork point until its first own commit) and the commits a replayed
+    * commit id is looked up in. `ref` None is main. */
+  private case class Log(head: Option[Snapshot], commits: Seq[Snapshot])
+
+  private def readLog(ns: String, name: String, ref: Option[String]): Log = ref match {
+    case None =>
+      val s = snapshots(ns, name)
+      Log(s.lastOption, s)
+    case Some(b) =>
+      val own = branchSnapshots(ns, name, b)
+      Log(Some(branchHeadOf(ns, name, b, own)), own)
+  }
+
+  /** The files one commit writes, and the head it stages against. Every
+    * staging directory and manifest is recorded, so the funnel removes
+    * all of them when the commit fails, however far it got — without
+    * this they are referenced by no version and accumulate under
+    * contention (expiry only reclaims what expired versions reference). */
+  private final class Stage(ns: String, name: String, ref: Option[String]) {
+    private val dirs = scala.collection.mutable.LinkedHashSet.empty[Path]
+    // manifest -> (files, bytes) of everything written, and the
+    // manifests of the current attempt alone
+    private val written = scala.collection.mutable.LinkedHashMap.empty[String, (Long, Long)]
+    private val attempt = scala.collection.mutable.ArrayBuffer.empty[String]
+
+    /** The pre-staging read of the ref's log (the funnel's replay probe
+      * and every flavor's staging share it). */
+    lazy val log: Log = readLog(ns, name, ref)
+    def head: Option[Snapshot] = log.head
+    def parent(op: String): Snapshot = head.getOrElse(throw new IllegalStateException(
+      s"$ns.$name has no committed version — a $op needs one"))
+    lazy val schema: Option[StructType] = head.flatMap(_.schemaJson).map(structOf)
+    lazy val props: Map[String, String] = head.map(_.properties).getOrElse(Map.empty)
+    /** logical -> physical column names (empty unless a column was renamed). */
+    lazy val physical: Map[String, String] =
+      schema.map(GraftCatalog.physicalMap).getOrElse(Map.empty)
+    lazy val spec: Seq[GraftCatalog.PartitionField] =
+      GraftCatalog.validatedPartitionSpec(s"$ns.$name", props, schema)
+
+    /** [[stageDataFiles]] under the head's properties, recording the
+      * staging directory. */
+    private def data(df: DataFrame, alignCols: Seq[Column] = Seq.empty,
+             derived: Seq[(String, Column)] = Seq.empty,
+             bloomCols: Seq[String] = Seq.empty): Seq[(String, RowParquetWriter.Written)] = {
+      val files = stageDataFiles(ns, name, df, props, alignCols, derived, bloomCols)
+      files.foreach { case (p, _) => dirs += tableDir(ns, name).resolve(p).getParent }
+      files
+    }
+
+    /** Rows staged under the head's physical names with the partition
+      * spec's derived stats — partition-aligned when `align` — and the
+      * Bloom filters of `bloomCols` (logical names): their manifest. */
+    def rows(df: DataFrame, align: Boolean = false,
+             bloomCols: Seq[String] = Seq.empty): Option[String] = {
+      val files = data(toPhysicalDf(df, schema),
+        if (align) GraftCatalog.partitionAlignColumnsOf(spec, schema) else Seq.empty,
+        GraftCatalog.partitionDerivedStatsOf(spec, schema),
+        bloomCols.map(c => physical.getOrElse(c, c)))
+      manifest(entriesOf(files), files.map { case (p, f) => p -> f.stats }.toMap,
+        files.map { case (p, f) => p -> f.blooms }.toMap)
+    }
+
+    /** A delete file set (`prefix` "d" equality keys, "p" positions)
+      * staged from `df`, with its manifest. */
+    def deletes(df: DataFrame, prefix: String): Option[String] =
+      manifest(entriesOf(data(df)), prefix = prefix)
+
+    /** Position deletes (exactly `file_path`, `pos`) staged as a `p-`
+      * manifest, and the data files they name. */
+    def positions(df: DataFrame): (Set[String], Option[String]) = {
+      require(df.columns.toSeq.sorted == Seq("file_path", "pos"),
+        s"position deletes carry exactly (file_path, pos); got ${df.columns.toSeq}")
+      (df.select("file_path").distinct().collect().map(_.getString(0)).toSet,
+        deletes(df.select(col("file_path"), col("pos").cast("long").as("pos")), "p"))
+    }
+
+    /** (path, size) of files already landed under the table dir. */
+    def sized(rels: Seq[String]): Seq[(String, Long)] =
+      rels.distinct.map(f => f -> Files.size(tableDir(ns, name).resolve(f)))
+
+    /** Externally written files' manifest, with the stats and Bloom
+      * filters a property-honoring writer records when a schema is known. */
+    def landed(rels: Seq[String]): Option[String] = {
+      val entries = sized(rels)
+      schema match {
+        case Some(s) if entries.nonEmpty => manifest(entries,
+          stagedFileStats(ns, name, entries, s,
+            GraftCatalog.partitionDerivedStatsOf(spec, schema)),
+          stagedFileBlooms(ns, name, entries, s,
+            GraftCatalog.writeBloomColumnsOf(props, spec)))
+        case _ => manifest(entries)
+      }
+    }
+
+    /** Landed `(files, kind)` units, one kind-prefixed manifest each, in order. */
+    def units(us: Seq[(Seq[String], String)]): Seq[String] =
+      us.flatMap { case (fs, kind) =>
+        manifest(sized(fs), prefix = GraftCatalog.unitPrefix(kind)) }
+
+    /** One manifest of `entries` (None when there are none). */
+    def manifest(entries: Seq[(String, Long)],
+                 stats: Map[String, Map[String, (String, String)]] = Map.empty,
+                 blooms: Map[String, Map[String, String]] = Map.empty,
+                 prefix: String = "m", perAttempt: Boolean = false): Option[String] =
+      if (entries.isEmpty) None
+      else {
+        val rel = writeManifest(ns, name, entries, stats, blooms, prefix)
+        written(rel) = (entries.size.toLong, entries.map(_._2).sum)
+        if (perAttempt) attempt += rel
+        Some(rel)
+      }
+
+    /** `entries` re-manifested with their recorded stats and blooms. */
+    def carried(entries: Seq[ManifestEntry], perAttempt: Boolean = false): Option[String] =
+      manifest(entries.map(e => (e.path, e.sizeBytes)),
+        entries.filter(_.stats.nonEmpty).map(e => e.path -> e.stats).toMap,
+        entries.filter(_.blooms.nonEmpty).map(e => e.path -> e.blooms).toMap,
+        perAttempt = perAttempt)
+
+    /** (files, bytes) of a manifest: this commit's own without a read. */
+    def totals(rel: String): (Long, Long) = written.getOrElse(rel, {
+      val es = manifestEntries(ns, name, rel)
+      (es.size.toLong, es.map(_._2).sum)
+    })
+
+    /** Drop the manifests a lost attempt wrote against its parent. */
+    def newAttempt(): Unit = {
+      attempt.foreach { rel => written -= rel; dropManifest(ns, name, rel) }
+      attempt.clear()
+    }
+
+    def cleanup(): Unit = {
+      dirs.foreach(deleteTree)
+      written.keys.foreach(dropManifest(ns, name, _))
     }
   }
 
-  /** CAS publish loop shared by every commit flavor: `mkSnapshot` builds
-    * the candidate from the freshly-read parent; the atomic
+  /** THE commit funnel: the one path from a pending [[Change]] to a
+    * published version on `ref` (main, or a branch). It checks that the
+    * table (and branch) exist and that a caller's `commitId` is neither a
+    * reserved maintenance prefix nor already committed — the replay
+    * probe runs before staging and again in every attempt, each time
+    * from the same `_meta/` listing that yields the parent. `stage`
+    * stages the change's files and returns it; every CAS attempt then
+    * applies it to the freshly read parent ([[nextVersion]]) and
+    * [[casCommitAt]] publishes. On any throwable every manifest and
+    * staging directory the change wrote is removed. */
+  private def commit(ns: String, name: String, commitId: Option[String] = None,
+                     ref: Option[String] = None, maxRetries: Int = 5)
+                    (stage: Stage => Change): Snapshot = {
+    require(tableExists(ns, name), s"no such table $ns.$name")
+    ref.foreach(b => require(branchExists(ns, name, b), s"no branch '$b' on $ns.$name"))
+    // maintenance prefixes mark ROW-NEUTRAL rewrites the changefeed
+    // skips over ([[changesBetween]]'s segmented O(delta) path) — a
+    // caller-supplied commitId spoofing one would silently DROP its rows
+    // from every downstream MV/CDC consumer
+    commitId.foreach(id => require(!GraftCatalog.isMaintenanceCommitId(id),
+      s"commit id '$id' uses an engine-reserved maintenance prefix " +
+        GraftCatalog.MaintenancePrefixes.mkString("(", "/", ")")))
+    // idempotence: a caller-supplied commitId that already committed
+    // (streaming batch replay, retried RPC, replayed sync event) must
+    // not commit twice
+    def probe(log: Log): Unit = commitId.foreach(id =>
+      log.commits.find(_.commitId == id).foreach { prior =>
+        throw new GraftCatalog.DuplicateCommitException(prior.commitId, prior.seq)
+      })
+    val st = new Stage(ns, name, ref)
+    if (commitId.nonEmpty) probe(st.log)
+    try {
+      val change = stage(st)
+      var registered: Option[Set[String]] = None
+      val snap = casCommitAt(ns, name, ref, maxRetries) { log =>
+        probe(log)
+        st.newAttempt()
+        val (next, files) = nextVersion(ns, name, st, change, log.head, commitId)
+        registered = files
+        next
+      }
+      registered.foreach(fs => latestFileSet.put((ns, name), (snap.commitId, fs)))
+      snap
+    } catch { case e: Throwable => st.cleanup(); throw e }
+  }
+
+  /** `change` applied to `parent`: the candidate version, and — when the
+    * change registered landed files — the file set it commits (the
+    * latest-file-set cache entry). */
+  private def nextVersion(ns: String, name: String, st: Stage, change: Change,
+                          parent: Option[Snapshot], commitId: Option[String])
+      : (Snapshot, Option[Set[String]]) = {
+    def conflict(why: String): Nothing = throw new java.util.ConcurrentModificationException(
+      s"${change.op} of $ns.$name $why")
+    val seq = parent.map(_.seq).getOrElse(-1L)
+    if (change.needsParent && parent.isEmpty) throw new IllegalStateException(
+      s"$ns.$name has no committed version — a ${change.op} needs one")
+    change.expectSeq.foreach(e =>
+      if (seq != e) conflict(s"expected parent v$e but found v$seq"))
+    change.expectHead.foreach(h => if (!parent.exists(_.commitId == h))
+      conflict(s"was planned against commit $h but the head is " +
+        parent.fold("empty")(p => s"${p.commitId} (v${p.seq})") + " — re-run the operation"))
+    change.forkSeq.foreach(f => if (seq != f) throw new GraftCatalog.MergeConflictException(
+      s"main of $ns.$name moved to v$seq since the branch forked at v$f"))
+    // a rebased replace carries the manifests appended since its base
+    val tail = change.rebaseOn.fold(Seq.empty[String]) { b =>
+      val par = parent.getOrElse(conflict("lost its table log"))
+      def abort(why: String) = conflict(s"rebased on v${b.seq} (head v${par.seq}): $why")
+      if (!par.manifests.startsWith(b.manifests)) abort("its manifests were rewritten")
+      val t = par.manifests.drop(b.manifests.size)
+      if (t.exists(isDeleteManifest)) abort("a delete manifest was added")
+      if (par.schemaJson != b.schemaJson) abort("the schema changed")
+      t
+    }
+    // position deletes validated against the parent actually landed on:
+    // a concurrent rewrite of the files they name must abort the commit,
+    // never publish ordinals over dead files
+    if (change.liveRefs.nonEmpty) {
+      val live = dataFiles(ns, name, parent.get).toSet
+      val stale = change.liveRefs.filterNot(live)
+      if (stale.nonEmpty) throw new IllegalArgumentException(
+        s"position delete references files not live in $ns.$name v$seq: " +
+          stale.take(3).mkString(", "))
+    }
+    // landed files the parent lacks (a retried sync event must not
+    // register a file twice), manifested against THIS parent
+    val parentFiles = if (change.register.isEmpty) Set.empty[String] else parentFileSet(ns, name, parent)
+    val newFiles = change.register.filterNot(parentFiles)
+    val registered = st.manifest(st.sized(newFiles), perAttempt = true)
+    // copy-on-write: manifests losing entries are re-written with their
+    // survivors in the same list position
+    var removed = (0L, 0L)
+    val kept = if (change.removedFiles.isEmpty) parent.fold(Seq.empty[String])(_.manifests)
+      else {
+        val missing = change.removedFiles.diff(dataFiles(ns, name, parent.get).toSet)
+        require(missing.isEmpty, s"${change.op} of $ns.$name: removed files not in " +
+          s"v$seq: ${missing.take(3).mkString(", ")}")
+        parent.get.manifests.flatMap { m =>
+          val (gone, survive) =
+            if (isDeleteManifest(m)) (Nil, Nil)
+            else manifestEntriesFull(ns, name, m).partition(e => change.removedFiles(e.path))
+          if (gone.isEmpty) Some(m)
+          else {
+            removed = (removed._1 + gone.size, removed._2 + gone.map(_.sizeBytes).sum)
+            st.carried(survive, perAttempt = true)
+          }
+        }
+      }
+    def sum(ms: Seq[String]): (Long, Long) =
+      ms.map(st.totals).foldLeft((0L, 0L)) { case ((f, b), (f1, b1)) => (f + f1, b + b1) }
+    val (list, files, bytes) = change.adopt match {
+      case Some(a) => (a.manifests, a.fileCount, a.totalBytes)
+      case None if change.replaces =>
+        val l = change.manifests ++ tail ++ registered
+        val (f, b) = sum(l)
+        (l, f, b)
+      case None =>
+        val (f, b) = sum(change.manifests ++ registered)
+        (kept ++ change.manifests ++ registered,
+          parent.fold(0L)(_.fileCount) - removed._1 + f,
+          parent.fold(0L)(_.totalBytes) - removed._2 + b)
+    }
+    val schemaJson = change.adopt.fold(change.schema match {
+      case KeepSchema => parent.flatMap(_.schemaJson)
+      case AdditiveSchema(s, all) => Some(validatedSchemaJson(ns, name, parent, s, all))
+      case ExplicitSchema(j) => j.orElse(parent.flatMap(_.schemaJson))
+      case EvolvedSchema(s, prev) => Some(evolvedSchemaJson(ns, name, parent.get, s, prev))
+    })(_.schemaJson)
+    lazy val parentProps = parent.map(_.properties).getOrElse(Map.empty)
+    // a partition spec set here, or a schema evolved under one, must
+    // stay valid against the resulting schema — publishing a bad one
+    // would brick every later write
+    if (change.propsSet.contains(GraftCatalog.PartitionSpecProp) ||
+        change.schema.isInstanceOf[EvolvedSchema]) {
+      val next = (parentProps ++ change.propsSet) -- change.propsUnset
+      if (next.contains(GraftCatalog.PartitionSpecProp))
+        GraftCatalog.validatedPartitionSpec(s"$ns.$name", next, schemaJson.map(structOf)): Unit
+    }
+    val propsJson = change.adopt.fold(
+      if (change.propsSet.isEmpty && change.propsUnset.isEmpty) parent.flatMap(_.propsJson)
+      else GraftCatalog.mergedPropsJson(parentProps, change.propsSet, change.propsUnset)
+    )(_.propsJson)
+    (Snapshot(seq + 1, commitId.getOrElse(s"${change.idPrefix}${UUID.randomUUID()}"),
+      parent.map(_.commitId), System.currentTimeMillis(), list, change.region,
+      files, bytes, schemaJson, propsJson),
+      if (change.register.isEmpty) None else Some(parentFiles ++ newFiles))
+  }
+
+  /** The CAS publish under [[commit]], its only caller: `mkSnapshot`
+    * builds the candidate from the freshly read log of `ref`; the atomic
     * create-if-absent hard link is the commit point (on an object store
     * this becomes a conditional PUT / If-None-Match — same contract).
-    * `readParent`/`target` parameterize WHICH log the commit lands on
-    * (main `_meta/vNNNNN.json` or a branch dir) — the CAS mechanics are
-    * identical for every ref. */
-  private def casCommitAt(ns: String, name: String, maxRetries: Int,
-                          readParent: () => Option[Snapshot],
-                          target: Long => Path,
-                          allowMaintenanceId: Boolean = false,
-                          beforeAttempt: () => Unit = () => (),
-                          blockedBy: () => Boolean = () => false)
-                         (mkSnapshot: Option[Snapshot] => Snapshot): Snapshot = {
+    * The mechanics are identical for main `_meta/vNNNNN.json` and a
+    * branch log; main commits also honor multi-table transaction
+    * barriers. `commitTransaction` does not come through here: it
+    * publishes through its journal. */
+  private def casCommitAt(ns: String, name: String, ref: Option[String], maxRetries: Int)
+                         (mkSnapshot: Log => Snapshot): Snapshot = {
+    def target(seq: Long): Path =
+      ref.fold(versionFile(ns, name, seq))(branchVersionFile(ns, name, _, seq))
     var attempt = 0
     while (attempt < maxRetries) {
       // main commits resolve any multi-table transaction barrier before
       // EVERY attempt (complete a published one, abort an expired one,
       // wait out a fresh one) — the cross-table atomicity handshake
-      beforeAttempt()
-      val snap = mkSnapshot(readParent())
-      // maintenance prefixes mark ROW-NEUTRAL rewrites the changefeed
-      // skips over ([[changesBetween]]'s segmented O(delta) path) — a
-      // caller-supplied commitId spoofing one would silently DROP its
-      // rows from every downstream MV/CDC consumer, so the reservation
-      // is enforced at the single funnel every commit flows through
-      require(allowMaintenanceId ||
-        !GraftCatalog.isMaintenanceCommitId(snap.commitId),
-        s"commit id '${snap.commitId}' uses an engine-reserved " +
-          "maintenance prefix (compact-/rwmanifests-/rwposdel-)")
+      if (ref.isEmpty) awaitTxnBarrier(ns, name)
+      val snap = mkSnapshot(readLog(ns, name, ref))
       val tmp = metaDir(ns, name).resolve(s".tmp-${UUID.randomUUID()}.json")
       Files.write(tmp, writeJson(snap).getBytes(StandardCharsets.UTF_8))
       // final pre-link re-check: a transaction barrier that appeared
-      // AFTER beforeAttempt() (while mkSnapshot ran) must win — without
+      // AFTER the attempt began (while mkSnapshot ran) must win — without
       // this, a committer stalled past the coordinator's grace window
       // could take a slot its journal targets and poison the
       // transaction's completion. Narrows the race to the two syscalls
       // below.
-      if (blockedBy()) {
+      if (ref.isEmpty && Files.isRegularFile(txnBarrierFile(ns, name))) {
         Files.deleteIfExists(tmp)
         attempt += 1
-        // the next beforeAttempt() waits the transaction out properly
+        // the next attempt waits the transaction out properly
       } else {
         try {
           Files.createLink(target(snap.seq), tmp)
@@ -1558,7 +1690,7 @@ final class GraftCatalog(val spark: SparkSession, val warehouse: String) {
           // a plain commit and no listing is paid
           val resurrected =
             (snap.seq == 0 || !Files.exists(target(snap.seq - 1))) &&
-              readParent().exists(_.seq > snap.seq)
+              readLog(ns, name, ref).head.exists(_.seq > snap.seq)
           if (!resurrected) return snap
           snapshotCache.remove(target(snap.seq).toAbsolutePath)
           Files.deleteIfExists(target(snap.seq))
@@ -1574,14 +1706,28 @@ final class GraftCatalog(val spark: SparkSession, val warehouse: String) {
     throw new IllegalStateException(s"commit conflict after $maxRetries retries on $ns.$name")
   }
 
-  private def casCommit(ns: String, name: String, maxRetries: Int,
-                        allowMaintenanceId: Boolean = false)
-                       (mkSnapshot: Option[Snapshot] => Snapshot): Snapshot =
-    casCommitAt(ns, name, maxRetries,
-      () => latest(ns, name), versionFile(ns, name, _),
-      allowMaintenanceId,
-      beforeAttempt = () => awaitTxnBarrier(ns, name),
-      blockedBy = () => Files.isRegularFile(txnBarrierFile(ns, name)))(mkSnapshot)
+  private def structOf(json: String): StructType =
+    DataType.fromJson(json).asInstanceOf[StructType]
+
+  /** Externally written files resolve columns by LOGICAL name: on a
+    * column-mapped (renamed) table they would silently read the renamed
+    * column as null — refused. */
+  private def requireLogicalNames(ns: String, name: String, st: Stage): Unit =
+    require(st.physical.forall { case (l, p) => l == p },
+      s"$ns.$name carries renamed (column-mapped) columns — externally-" +
+        "written files resolve by LOGICAL name and would silently read " +
+        "the renamed column as null; compact() re-materializes the " +
+        "physical names first")
+
+  /** Every equality delete of a table uses one column set, so the
+    * scan-side anti-join stays a single join. */
+  private def requireEqualityColumns(ns: String, name: String, parent: Snapshot,
+                                     cols: Set[String]): Unit =
+    equalityDeleteFileEntries(ns, name, parent).headOption.foreach { case (p, _) =>
+      val prior = parquetFileSchema(ns, name, p).fieldNames.toSet
+      require(prior == cols,
+        s"equality-delete columns $cols differ from the table's existing $prior")
+    }
 
   /** C3/C12: append `df` as a new version with optimistic CAS on the
     * version number. Data files are written, recording their stats and
@@ -1591,79 +1737,27 @@ final class GraftCatalog(val spark: SparkSession, val warehouse: String) {
     * manifest records the added files; the version JSON carries pointers
     * and summary stats only. Schema is validated additively against the
     * current version and recorded (a mismatched append is REJECTED before
-    * any data is staged). */
+    * any data is staged). `toBranch` appends to a branch's log instead
+    * ([[commitAppendToBranch]]). */
   def commitAppend(ns: String, name: String, df: DataFrame,
                    sourceRegion: String = "local", maxRetries: Int = 5,
                    commitId: Option[String] = None,
                    bloomCols: Seq[String] = Seq.empty,
                    alignSpec: Boolean = false,
-                   propsSet: Map[String, String] = Map.empty): Snapshot = {
-    require(tableExists(ns, name), s"no such table $ns.$name")
-    // idempotence fast path: a caller-supplied commitId that already
-    // committed (streaming batch replay, retried RPC) must not re-append
-    commitId.flatMap(byCommitId(ns, name, _)).foreach { prior =>
-      throw new GraftCatalog.DuplicateCommitException(prior.commitId, prior.seq)
+                   propsSet: Map[String, String] = Map.empty,
+                   toBranch: Option[String] = None): Snapshot =
+    commit(ns, name, commitId, toBranch, maxRetries) { st =>
+      // fail fast on an incompatible schema before staging any data; the
+      // funnel re-validates against the re-read parent on every attempt
+      validatedSchemaJson(ns, name, st.head, df.schema)
+      // property-honoring writers (SQL INSERT, compact) align files to
+      // partition tuples; raw commitAppend keeps the caller's layout.
+      // propsSet rides the SAME snapshot as the data (a derived
+      // consumer's watermark must never be a second commit — a crash
+      // between the two would strand the batch watermark-less)
+      Change("append", st.rows(df, alignSpec, bloomCols).toSeq,
+        schema = AdditiveSchema(df.schema), propsSet = propsSet, region = sourceRegion)
     }
-    // fail fast on an incompatible schema before staging any data; the
-    // CAS loop re-validates against the re-read parent on every attempt
-    val parentSchema0 = latest(ns, name)
-    validatedSchemaJson(ns, name, parentSchema0, df.schema)
-    // files are written under PHYSICAL column names (stats/blooms key on
-    // them too) — identity unless a column was renamed
-    val curSchema = parentSchema0.flatMap(_.schemaJson)
-      .map(DataType.fromJson(_).asInstanceOf[StructType])
-    val pdf = toPhysicalDf(df, curSchema)
-    val pm = curSchema.map(GraftCatalog.physicalMap).getOrElse(Map.empty)
-    val props = parentSchema0.map(_.properties).getOrElse(Map.empty)
-    // ONE spec parse+validation per statement, threaded through align +
-    // derived-stat derivation
-    val pspec = GraftCatalog.validatedPartitionSpec(s"$ns.$name", props, curSchema)
-    // property-honoring writers (SQL INSERT, compact) align files to
-    // partition tuples; raw commitAppend keeps the caller's layout.
-    // Partitioned tables record the per-file bucket value as a derived
-    // stat (what the Iceberg export derives partition tuples from)
-    val files = stageDataFiles(ns, name, pdf, props,
-      if (alignSpec) GraftCatalog.partitionAlignColumnsOf(pspec, curSchema)
-      else Seq.empty,
-      GraftCatalog.partitionDerivedStatsOf(pspec, curSchema),
-      bloomCols.map(c => pm.getOrElse(c, c)))
-    val entries = entriesOf(files)
-    // the manifest write sits INSIDE the cleanup scope: a failure there
-    // (disk error) must reclaim the staged data dir too, not only a
-    // failed CAS
-    var staged: Seq[String] = Seq.empty
-    try {
-      val newManifest =
-        if (entries.isEmpty) None
-        else Some(writeStagedManifest(ns, name, files))
-      staged = newManifest.toSeq
-      casCommit(ns, name, maxRetries) { parent =>
-        // re-check inside the CAS closure: a concurrent duplicate that won
-        // the race is visible in the freshly-read log by now
-        commitId.flatMap(byCommitId(ns, name, _)).foreach { prior =>
-          throw new GraftCatalog.DuplicateCommitException(prior.commitId, prior.seq)
-        }
-        Snapshot(
-          parent.map(_.seq + 1).getOrElse(0L),
-          commitId.getOrElse(s"commit-${UUID.randomUUID()}"),
-          parent.map(_.commitId),
-          System.currentTimeMillis(),
-          parent.map(_.manifests).getOrElse(Seq.empty) ++ newManifest,
-          sourceRegion,
-          parent.map(_.fileCount).getOrElse(0L) + entries.size,
-          parent.map(_.totalBytes).getOrElse(0L) + entries.map(_._2).sum,
-          Some(validatedSchemaJson(ns, name, parent, df.schema)),
-          // propsSet rides the SAME snapshot as the data (a derived
-          // consumer's watermark must never be a second commit — a
-          // crash between the two would strand the batch watermark-less)
-          if (propsSet.isEmpty) parent.flatMap(_.propsJson)
-          else GraftCatalog.mergedPropsJson(
-            parent.map(_.properties).getOrElse(Map.empty), propsSet))
-      }
-    } catch { case e: Throwable =>
-      cleanupStaged(ns, name, entries, staged); throw e
-    }
-  }
 
   /** Overwrite commit: the new version references ONLY the files written
     * from `df` (previous files become unreachable → reclaimed by
@@ -1692,82 +1786,26 @@ final class GraftCatalog(val spark: SparkSession, val warehouse: String) {
                     propsUnset: Seq[String] = Seq.empty,
                     maintenance: Boolean = false,
                     rebaseOn: Option[Long] = None): Snapshot = {
-    require(tableExists(ns, name), s"no such table $ns.$name")
     require(expectedParentSeq.isEmpty || rebaseOn.isEmpty,
       "a replace is either strict (expectedParentSeq) or rebasing (rebaseOn)")
-    val base = rebaseOn.map(seq => snapshots(ns, name).find(_.seq == seq).getOrElse(
-      throw new java.util.ConcurrentModificationException(
-        s"rebasing replace of $ns.$name: base v$seq is gone")))
-    val parent0 = latest(ns, name)
-    validatedSchemaJson(ns, name, parent0, df.schema, replacesAll = true)
-    // even a full overwrite keeps the physical mapping: the recorded
-    // schema carries it forward, and normalizing here would desynchronize
-    // a COW statement's kept files from the rewrite's (per-file eras —
-    // exactly the complexity the stable physical name exists to avoid)
-    val curSchema = parent0.flatMap(_.schemaJson)
-      .map(DataType.fromJson(_).asInstanceOf[StructType])
-    val pdf = toPhysicalDf(df, curSchema)
-    val pm = curSchema.map(GraftCatalog.physicalMap).getOrElse(Map.empty)
-    val props = parent0.map(_.properties).getOrElse(Map.empty)
-    val pspec = GraftCatalog.validatedPartitionSpec(s"$ns.$name", props, curSchema)
-    val files = stageDataFiles(ns, name, pdf, props,
-      if (alignSpec) GraftCatalog.partitionAlignColumnsOf(pspec, curSchema)
-      else Seq.empty,
-      GraftCatalog.partitionDerivedStatsOf(pspec, curSchema),
-      bloomCols.map(c => pm.getOrElse(c, c)))
-    val entries = entriesOf(files)
-    // an aborted conditional replace (or exhausted CAS) must not orphan
-    // its staged data + manifest — they are reachable from no version.
-    // The manifest step sits inside the cleanup scope too: a failure
-    // there must reclaim the staged data dir
-    var staged: Seq[String] = Seq.empty
-    try {
-      val manifest =
-        if (entries.isEmpty) Seq.empty
-        else Seq(writeStagedManifest(ns, name, files))
-      staged = manifest
-      casCommit(ns, name, maxRetries, allowMaintenanceId = maintenance) { parent =>
-        expectedParentSeq.foreach { exp =>
-          val cur = parent.map(_.seq).getOrElse(-1L)
-          if (cur != exp) throw new java.util.ConcurrentModificationException(
-            s"conditional replace of $ns.$name expected parent v$exp but found v$cur")
-        }
-        // the manifests appended since the base, carried over unchanged
-        val tail = base.fold(Seq.empty[String]) { b =>
-          val par = parent.getOrElse(throw new java.util.ConcurrentModificationException(
-            s"rebasing replace of $ns.$name: the table log vanished"))
-          def abort(why: String) = throw new java.util.ConcurrentModificationException(
-            s"rebasing replace of $ns.$name on v${b.seq} (head v${par.seq}): $why")
-          if (!par.manifests.startsWith(b.manifests)) abort("its manifests were rewritten")
-          val t = par.manifests.drop(b.manifests.size)
-          if (t.exists(isDeleteManifest)) abort("a delete manifest was added")
-          if (par.schemaJson != b.schemaJson) abort("the schema changed")
-          t
-        }
-        val tailEntries = tail.flatMap(manifestEntries(ns, name, _))
-        Snapshot(
-          parent.map(_.seq + 1).getOrElse(0L),
-          // `maintenance` = the caller ASSERTS this replace is row-
-          // neutral (compaction): the reserved prefix lets the
-          // changefeed's segmented path skip the commit
-          (if (maintenance) s"compact-${UUID.randomUUID()}"
-           else s"commit-${UUID.randomUUID()}"),
-          parent.map(_.commitId),
-          System.currentTimeMillis(),
-          manifest ++ tail,
-          sourceRegion,
-          entries.size + tailEntries.size,
-          (entries ++ tailEntries).map(_._2).sum,
-          Some(validatedSchemaJson(ns, name, parent, df.schema, replacesAll = true)),
-          // propsSet rides the SAME snapshot as the data (a materialized
-          // view's refresh watermark must never be a second commit — a
-          // crash between the two would double-apply the next delta)
-          if (propsSet.isEmpty && propsUnset.isEmpty) parent.flatMap(_.propsJson)
-          else GraftCatalog.mergedPropsJson(
-            parent.map(_.properties).getOrElse(Map.empty), propsSet, propsUnset))
-      }
-    } catch { case e: Throwable =>
-      cleanupStaged(ns, name, entries, staged); throw e
+    commit(ns, name, maxRetries = maxRetries) { st =>
+      val base = rebaseOn.map(seq => st.log.commits.find(_.seq == seq).getOrElse(
+        throw new java.util.ConcurrentModificationException(
+          s"rebasing replace of $ns.$name: base v$seq is gone")))
+      validatedSchemaJson(ns, name, st.head, df.schema, replacesAll = true)
+      // even a full overwrite keeps the physical mapping: the recorded
+      // schema carries it forward, and normalizing here would desynchronize
+      // a COW statement's kept files from the rewrite's. propsSet rides
+      // the SAME snapshot as the data (a materialized view's refresh
+      // watermark must never be a second commit)
+      Change("replace", st.rows(df, alignSpec, bloomCols).toSeq, replaces = true,
+        expectSeq = expectedParentSeq, rebaseOn = base,
+        schema = AdditiveSchema(df.schema, replacesAll = true),
+        propsSet = propsSet, propsUnset = propsUnset, region = sourceRegion,
+        // `maintenance` = the caller ASSERTS this replace is row-neutral
+        // (compaction): the reserved prefix lets the changefeed's
+        // segmented path skip the commit
+        idPrefix = if (maintenance) "compact-" else "commit-")
     }
   }
 
@@ -1789,57 +1827,20 @@ final class GraftCatalog(val spark: SparkSession, val warehouse: String) {
     * scheduled compaction, instead of an immediate full rewrite. */
   def commitDelete(ns: String, name: String, keys: DataFrame,
                    sourceRegion: String = "local", maxRetries: Int = 5,
-                   commitId: Option[String] = None): Snapshot = {
-    require(tableExists(ns, name), s"no such table $ns.$name")
-    commitId.flatMap(byCommitId(ns, name, _)).foreach { prior =>
-      throw new GraftCatalog.DuplicateCommitException(prior.commitId, prior.seq)
+                   commitId: Option[String] = None): Snapshot =
+    commit(ns, name, commitId, maxRetries = maxRetries) { st =>
+      val parent = st.parent("delete")
+      val tblFields = st.schema.map(_.fieldNames.toSet).getOrElse(Set.empty[String])
+      keys.columns.foreach(c => require(tblFields.isEmpty || tblFields.contains(c),
+        s"delete key column $c not in $ns.$name schema $tblFields"))
+      // delete files live in PHYSICAL column names (they anti-join the raw
+      // scan): map the incoming keys, and compare against prior delete
+      // files in physical terms too
+      val pkeys = toPhysicalDf(keys, st.schema)
+      requireEqualityColumns(ns, name, parent, pkeys.columns.toSet)
+      Change("delete", st.deletes(pkeys, "d").toSeq, needsParent = true,
+        region = sourceRegion)
     }
-    val parent0 = latest(ns, name).getOrElse(
-      throw new IllegalStateException(s"cannot delete from empty table $ns.$name"))
-    val tblFields = parent0.schemaJson
-      .map(DataType.fromJson(_).asInstanceOf[StructType].fieldNames.toSet)
-      .getOrElse(Set.empty[String])
-    keys.columns.foreach(c => require(tblFields.isEmpty || tblFields.contains(c),
-      s"delete key column $c not in $ns.$name schema $tblFields"))
-    // delete files live in PHYSICAL column names (they anti-join the raw
-    // scan): map the incoming keys, and compare against prior delete
-    // files in physical terms too
-    val curSchema = parent0.schemaJson
-      .map(DataType.fromJson(_).asInstanceOf[StructType])
-    val pkeys = toPhysicalDf(keys, curSchema)
-    equalityDeleteFileEntries(ns, name, parent0).headOption.foreach { case (p, _) =>
-      val prior = parquetFileSchema(ns, name, p).fieldNames.toSet
-      require(prior == pkeys.columns.toSet,
-        s"equality-delete columns ${pkeys.columns.toSet} differ from the table's existing $prior")
-    }
-    val entries = entriesOf(stageDataFiles(ns, name, pkeys, parent0.properties))
-    var staged: Seq[String] = Seq.empty
-    try {
-      val newManifest =
-        if (entries.isEmpty) None
-        else Some(writeManifest(ns, name, entries, prefix = "d"))
-      staged = newManifest.toSeq
-      casCommit(ns, name, maxRetries) { parent =>
-        commitId.flatMap(byCommitId(ns, name, _)).foreach { prior =>
-          throw new GraftCatalog.DuplicateCommitException(prior.commitId, prior.seq)
-        }
-        val par = parent.getOrElse(
-          throw new IllegalStateException(s"table log for $ns.$name vanished mid-delete"))
-        Snapshot(par.seq + 1,
-          commitId.getOrElse(s"commit-${UUID.randomUUID()}"),
-          Some(par.commitId),
-          System.currentTimeMillis(),
-          par.manifests ++ newManifest,
-          sourceRegion,
-          par.fileCount + entries.size,
-          par.totalBytes + entries.map(_._2).sum,
-          par.schemaJson, // a delete never changes the schema
-          par.propsJson)
-      }
-    } catch { case e: Throwable =>
-      cleanupStaged(ns, name, entries, staged); throw e
-    }
-  }
 
   /** MoR POSITION delete (Iceberg v2's second delete-file kind; the
     * reference file model's POSITION_DELETE content type,
@@ -1868,57 +1869,13 @@ final class GraftCatalog(val spark: SparkSession, val warehouse: String) {
     * nothing is how audit replays rot). */
   def commitDeletePositions(ns: String, name: String, positions: DataFrame,
                             sourceRegion: String = "local", maxRetries: Int = 5,
-                            commitId: Option[String] = None): Snapshot = {
-    require(tableExists(ns, name), s"no such table $ns.$name")
-    commitId.flatMap(byCommitId(ns, name, _)).foreach { prior =>
-      throw new GraftCatalog.DuplicateCommitException(prior.commitId, prior.seq)
+                            commitId: Option[String] = None): Snapshot =
+    commit(ns, name, commitId, maxRetries = maxRetries) { st =>
+      st.parent("position delete")
+      val (referenced, manifest) = st.positions(positions)
+      Change("position delete", manifest.toSeq, liveRefs = referenced,
+        needsParent = true, region = sourceRegion)
     }
-    require(positions.columns.toSeq.sorted == Seq("file_path", "pos"),
-      s"position deletes carry exactly (file_path, pos); got ${positions.columns.toSeq}")
-    val parent0 = latest(ns, name)
-    require(parent0.isDefined, s"cannot delete from empty table $ns.$name")
-    val referenced = positions.select("file_path").distinct()
-      .collect().map(_.getString(0))
-    val entries = entriesOf(stageDataFiles(ns, name,
-      positions.select(col("file_path"), col("pos").cast("long").as("pos")),
-      parent0.get.properties))
-    var staged: Seq[String] = Seq.empty
-    try {
-      val newManifest =
-        if (entries.isEmpty) None
-        else Some(writeManifest(ns, name, entries, prefix = "p"))
-      staged = newManifest.toSeq
-      casCommit(ns, name, maxRetries) { parent =>
-        commitId.flatMap(byCommitId(ns, name, _)).foreach { prior =>
-          throw new GraftCatalog.DuplicateCommitException(prior.commitId, prior.seq)
-        }
-        val par = parent.getOrElse(
-          throw new IllegalStateException(s"table log for $ns.$name vanished mid-delete"))
-        // liveness is validated INSIDE the CAS closure, against the
-        // parent this commit actually lands on: a concurrent replace/
-        // compaction that rewrote the referenced files must abort the
-        // delete loudly, never publish ordinals over dead files (the
-        // silent rot this guard exists to prevent)
-        val live = dataFiles(ns, name, par).toSet
-        val stale = referenced.filterNot(live)
-        if (stale.nonEmpty) throw new IllegalArgumentException(
-          s"position delete references files not live in $ns.$name v${par.seq}: " +
-            stale.take(3).mkString(", "))
-        Snapshot(par.seq + 1,
-          commitId.getOrElse(s"commit-${UUID.randomUUID()}"),
-          Some(par.commitId),
-          System.currentTimeMillis(),
-          par.manifests ++ newManifest,
-          sourceRegion,
-          par.fileCount + entries.size,
-          par.totalBytes + entries.map(_._2).sum,
-          par.schemaJson, // a delete never changes the schema
-          par.propsJson)
-      }
-    } catch { case e: Throwable =>
-      cleanupStaged(ns, name, entries, staged); throw e
-    }
-  }
 
   /** (file_path, pos) of every CURRENT-version row matching `cond` —
     * the predicate-to-positions bridge for [[commitDeletePositions]]
@@ -1946,63 +1903,8 @@ final class GraftCatalog(val spark: SparkSession, val warehouse: String) {
     * makes per-commit CDC ingest into a 100 TB table affordable. */
   def commitUpsert(ns: String, name: String, rows: DataFrame, keyCols: Seq[String],
                    sourceRegion: String = "local", maxRetries: Int = 5,
-                   commitId: Option[String] = None): Snapshot = {
-    require(tableExists(ns, name), s"no such table $ns.$name")
-    require(keyCols.nonEmpty && keyCols.forall(rows.columns.contains),
-      s"upsert key columns $keyCols must be a subset of ${rows.columns.toSeq}")
-    commitId.flatMap(byCommitId(ns, name, _)).foreach { prior =>
-      throw new GraftCatalog.DuplicateCommitException(prior.commitId, prior.seq)
-    }
-    latest(ns, name) match {
-      case None => commitAppend(ns, name, rows, sourceRegion, maxRetries, commitId)
-      case Some(parent0) =>
-        validatedSchemaJson(ns, name, Some(parent0), rows.schema)
-        val curSchema = parent0.schemaJson
-          .map(DataType.fromJson(_).asInstanceOf[StructType])
-        val pm = curSchema.map(GraftCatalog.physicalMap).getOrElse(Map.empty)
-        val pKeyCols = keyCols.map(c => pm.getOrElse(c, c))
-        equalityDeleteFileEntries(ns, name, parent0).headOption.foreach { case (p, _) =>
-          val prior = parquetFileSchema(ns, name, p).fieldNames.toSet
-          require(prior == pKeyCols.toSet,
-            s"upsert key columns ${pKeyCols.toSet} differ from the table's delete columns $prior")
-        }
-        val prows = toPhysicalDf(rows, curSchema)
-        val delEntries = entriesOf(stageDataFiles(ns, name,
-          prows.select(pKeyCols.map(col): _*).distinct(), parent0.properties))
-        val rowFiles = stageDataFiles(ns, name, prows, parent0.properties)
-        val dataEntries = entriesOf(rowFiles)
-        var staged: Seq[String] = Seq.empty
-        try {
-          val dManifest =
-            if (delEntries.isEmpty) None
-            else Some(writeManifest(ns, name, delEntries, prefix = "d"))
-          val mManifest =
-            if (dataEntries.isEmpty) None
-            else Some(writeStagedManifest(ns, name, rowFiles))
-          staged = dManifest.toSeq ++ mManifest.toSeq
-          casCommit(ns, name, maxRetries) { parent =>
-            commitId.flatMap(byCommitId(ns, name, _)).foreach { prior =>
-              throw new GraftCatalog.DuplicateCommitException(prior.commitId, prior.seq)
-            }
-            val par = parent.getOrElse(
-              throw new IllegalStateException(s"table log for $ns.$name vanished mid-upsert"))
-            Snapshot(par.seq + 1,
-              commitId.getOrElse(s"commit-${UUID.randomUUID()}"),
-              Some(par.commitId),
-              System.currentTimeMillis(),
-              // delete BEFORE data: the incoming rows outlive their own key-purge
-              par.manifests ++ dManifest ++ mManifest,
-              sourceRegion,
-              par.fileCount + delEntries.size + dataEntries.size,
-              par.totalBytes + (delEntries ++ dataEntries).map(_._2).sum,
-              Some(validatedSchemaJson(ns, name, Some(par), rows.schema)),
-              par.propsJson)
-          }
-        } catch { case e: Throwable =>
-          cleanupStaged(ns, name, delEntries ++ dataEntries, staged); throw e
-        }
-    }
-  }
+                   commitId: Option[String] = None): Snapshot =
+    commitKeyed(ns, name, rows, keyCols, None, sourceRegion, maxRetries, commitId)
 
   /** CDC-batch apply — the replica-side MERGE of a change feed: ONE
     * atomic commit that equality-deletes (`deleteKeys` ∪ the incoming
@@ -2019,89 +1921,41 @@ final class GraftCatalog(val spark: SparkSession, val warehouse: String) {
                      sourceRegion: String = "local", maxRetries: Int = 5,
                      commitId: Option[String] = None,
                      propsSet: Map[String, String] = Map.empty): Snapshot = {
-    require(tableExists(ns, name), s"no such table $ns.$name")
-    require(keyCols.nonEmpty && keyCols.forall(rows.columns.contains),
-      s"cdc key columns $keyCols must be a subset of ${rows.columns.toSeq}")
     require(deleteKeys.columns.toSeq.sorted == keyCols.sorted,
       s"deleteKeys must carry exactly $keyCols, got ${deleteKeys.columns.toSeq}")
-    commitId.flatMap(byCommitId(ns, name, _)).foreach { prior =>
-      throw new GraftCatalog.DuplicateCommitException(prior.commitId, prior.seq)
-    }
-    latest(ns, name) match {
-      case None =>
-        // deletes against an EMPTY replica erase nothing by definition
-        // (an update's delete(old) half targets a row this replica
-        // never held) — refusing would deadlock the stream on replay
-        // of its own first batch. propsSet rides the same commit: a
-        // second props commit would strand a crashed batch watermark-
-        // less AND consume its deterministic commitId (replays would
-        // throw DuplicateCommitException instead of completing)
-        commitAppend(ns, name, rows, sourceRegion, maxRetries, commitId,
-          propsSet = propsSet)
-      case Some(parent0) =>
-        validatedSchemaJson(ns, name, Some(parent0), rows.schema)
-        val curSchema = parent0.schemaJson
-          .map(DataType.fromJson(_).asInstanceOf[StructType])
-        val pm = curSchema.map(GraftCatalog.physicalMap).getOrElse(Map.empty)
-        val pKeyCols = keyCols.map(c => pm.getOrElse(c, c))
-        equalityDeleteFileEntries(ns, name, parent0).headOption.foreach { case (p, _) =>
-          val prior = parquetFileSchema(ns, name, p).fieldNames.toSet
-          require(prior == pKeyCols.toSet,
-            s"cdc key columns ${pKeyCols.toSet} differ from the table's delete columns $prior")
-        }
-        val prows = toPhysicalDf(rows, curSchema)
-        val allKeys = prows.select(pKeyCols.map(col): _*)
-          .unionByName(toPhysicalDf(deleteKeys, curSchema)
-            .select(pKeyCols.map(col): _*))
-          .distinct()
-        val delEntries = entriesOf(stageDataFiles(ns, name, allKeys, parent0.properties))
-        // the streaming cdc sink is a PROPERTY-HONORING writer like the
-        // SQL INSERT path: a partitioned/bloom-indexed replica keeps its
-        // declared layout batch over batch (aligned files, derived
-        // bucket stats, blooms) instead of rotting until the next
-        // compact — layout is table state, not a writer courtesy
-        val props = parent0.properties
-        val pspec = GraftCatalog.validatedPartitionSpec(s"$ns.$name",
-          props, curSchema)
-        val bloomCols = GraftCatalog.writeBloomColumnsOf(props, pspec)
-          .map(c => pm.getOrElse(c, c))
-        val rowFiles = stageDataFiles(ns, name, prows, props,
-          GraftCatalog.partitionAlignColumnsOf(pspec, curSchema),
-          GraftCatalog.partitionDerivedStatsOf(pspec, curSchema), bloomCols)
-        val dataEntries = entriesOf(rowFiles)
-        var staged: Seq[String] = Seq.empty
-        try {
-          val dManifest =
-            if (delEntries.isEmpty) None
-            else Some(writeManifest(ns, name, delEntries, prefix = "d"))
-          val mManifest =
-            if (dataEntries.isEmpty) None
-            else Some(writeStagedManifest(ns, name, rowFiles))
-          staged = dManifest.toSeq ++ mManifest.toSeq
-          casCommit(ns, name, maxRetries) { parent =>
-            commitId.flatMap(byCommitId(ns, name, _)).foreach { prior =>
-              throw new GraftCatalog.DuplicateCommitException(prior.commitId, prior.seq)
-            }
-            val par = parent.getOrElse(
-              throw new IllegalStateException(s"table log for $ns.$name vanished mid-cdc"))
-            Snapshot(par.seq + 1,
-              commitId.getOrElse(s"commit-${UUID.randomUUID()}"),
-              Some(par.commitId),
-              System.currentTimeMillis(),
-              // delete BEFORE data: incoming rows outlive their key-purge
-              par.manifests ++ dManifest ++ mManifest,
-              sourceRegion,
-              par.fileCount + delEntries.size + dataEntries.size,
-              par.totalBytes + (delEntries ++ dataEntries).map(_._2).sum,
-              Some(validatedSchemaJson(ns, name, Some(par), rows.schema)),
-              // propsSet rides the SAME snapshot as the batch (a derived
-              // index's refresh watermark must never be a second commit)
-              if (propsSet.isEmpty) par.propsJson
-              else GraftCatalog.mergedPropsJson(par.properties, propsSet))
-          }
-        } catch { case e: Throwable =>
-          cleanupStaged(ns, name, delEntries ++ dataEntries, staged); throw e
-        }
+    commitKeyed(ns, name, rows, keyCols, Some(deleteKeys), sourceRegion, maxRetries,
+      commitId, propsSet)
+  }
+
+  /** The one body of [[commitUpsert]] and [[commitCdcApply]]: a `d-`
+    * manifest of the rows' keys (plus `deleteKeys`) ordered BEFORE the
+    * rows' own manifest, so the incoming rows outlive their key-purge.
+    * Keys against an EMPTY table erase nothing and are not staged (an
+    * update's delete(old) half targets a row this replica never held —
+    * refusing would deadlock a stream on replay of its first batch). A
+    * CDC batch is a PROPERTY-HONORING writer like the SQL INSERT path: a
+    * partitioned/bloom-indexed replica keeps its declared layout batch
+    * over batch — layout is table state, not a writer courtesy. */
+  private def commitKeyed(ns: String, name: String, rows: DataFrame, keyCols: Seq[String],
+                          deleteKeys: Option[DataFrame], sourceRegion: String,
+                          maxRetries: Int, commitId: Option[String],
+                          propsSet: Map[String, String] = Map.empty): Snapshot = {
+    require(keyCols.nonEmpty && keyCols.forall(rows.columns.contains),
+      s"key columns $keyCols must be a subset of ${rows.columns.toSeq}")
+    val cdc = deleteKeys.nonEmpty
+    commit(ns, name, commitId, maxRetries = maxRetries) { st =>
+      validatedSchemaJson(ns, name, st.head, rows.schema)
+      val purge = st.head.flatMap { parent =>
+        val pKeyCols = keyCols.map(c => st.physical.getOrElse(c, c))
+        requireEqualityColumns(ns, name, parent, pKeyCols.toSet)
+        st.deletes((rows +: deleteKeys.toSeq)
+          .map(toPhysicalDf(_, st.schema).select(pKeyCols.map(col): _*))
+          .reduce(_ unionByName _).distinct(), "d")
+      }
+      Change(if (cdc) "cdc apply" else "upsert",
+        purge.toSeq ++ st.rows(rows, align = cdc,
+          if (cdc) GraftCatalog.writeBloomColumnsOf(st.props, st.spec) else Seq.empty),
+        schema = AdditiveSchema(rows.schema), propsSet = propsSet, region = sourceRegion)
     }
   }
 
@@ -2311,24 +2165,12 @@ final class GraftCatalog(val spark: SparkSession, val warehouse: String) {
     * concurrent append either lands before (and is rolled back too) or
     * retries on top of the rollback — never silently lost. */
   def rollbackTo(ns: String, name: String, seq: Long,
-                 sourceRegion: String = "local", maxRetries: Int = 5): Snapshot = {
-    val target = snapshots(ns, name).find(_.seq == seq).getOrElse(
-      throw new IllegalArgumentException(s"no version $seq of $ns.$name to roll back to"))
-    casCommit(ns, name, maxRetries) { parent =>
-      val par = parent.getOrElse(
-        throw new IllegalStateException(s"table log for $ns.$name vanished mid-rollback"))
-      Snapshot(par.seq + 1,
-        s"commit-${UUID.randomUUID()}",
-        Some(par.commitId),
-        System.currentTimeMillis(),
-        target.manifests,
-        sourceRegion,
-        target.fileCount,
-        target.totalBytes,
-        target.schemaJson,
-        target.propsJson)
+                 sourceRegion: String = "local", maxRetries: Int = 5): Snapshot =
+    commit(ns, name, maxRetries = maxRetries) { st =>
+      val target = st.log.commits.find(_.seq == seq).getOrElse(throw new IllegalArgumentException(
+        s"no version $seq of $ns.$name to roll back to"))
+      Change("rollback", adopt = Some(target), region = sourceRegion)
     }
-  }
 
   /** Bin-pack compaction (the reference docs' small-file control,
     * 256MB–1GB targets; rewriteDataFiles in Iceberg terms): rewrite the
@@ -2503,58 +2345,11 @@ final class GraftCatalog(val spark: SparkSession, val warehouse: String) {
   def commitFiles(ns: String, name: String, newFiles: Seq[String],
                   sourceRegion: String, maxRetries: Int = 5,
                   schemaJson: Option[String] = None,
-                  commitId: Option[String] = None): Snapshot = {
-    require(tableExists(ns, name), s"no such table $ns.$name")
-    // idempotence fast path (same contract as commitAppend): a replayed
-    // sync event whose commit already landed must not add a new version
-    commitId.flatMap(byCommitId(ns, name, _)).foreach { prior =>
-      throw new GraftCatalog.DuplicateCommitException(prior.commitId, prior.seq)
+                  commitId: Option[String] = None): Snapshot =
+    commit(ns, name, commitId, maxRetries = maxRetries) { _ =>
+      Change("files commit", register = newFiles, schema = ExplicitSchema(schemaJson),
+        region = sourceRegion)
     }
-    // the manifest depends on the freshly-read parent (dedup below), so it
-    // is written INSIDE the retry closure — drop the previous attempt's
-    // manifest first, or every lost CAS race orphans one manifest file
-    var attemptManifest: Option[String] = None
-    def dropAttemptManifest(): Unit = {
-      attemptManifest.foreach(dropManifest(ns, name, _))
-      attemptManifest = None
-    }
-    var committedSet: Set[String] = Set.empty
-    try {
-      val snap = casCommit(ns, name, maxRetries) { parent =>
-        dropAttemptManifest()
-        // re-check inside the CAS closure (concurrent duplicate replays)
-        commitId.flatMap(byCommitId(ns, name, _)).foreach { prior =>
-          throw new GraftCatalog.DuplicateCommitException(prior.commitId, prior.seq)
-        }
-        // dedup against the parent so a retried sync event can't register
-        // the same landed file twice (keeps the one-manifest-per-file
-        // invariant the manifest-set diff and expiry rely on) — O(new
-        // files) amortized via the latest-file-set cache
-        val parentFiles = parentFileSet(ns, name, parent)
-        val landed = newFiles.filterNot(parentFiles)
-          .map(f => f -> Files.size(tableDir(ns, name).resolve(f)))
-        val newManifest =
-          if (landed.isEmpty) None else Some(writeManifest(ns, name, landed))
-        attemptManifest = newManifest
-        committedSet = parentFiles ++ landed.map(_._1)
-        Snapshot(
-          parent.map(_.seq + 1).getOrElse(0L),
-          commitId.getOrElse(s"commit-${UUID.randomUUID()}"),
-          parent.map(_.commitId),
-          System.currentTimeMillis(),
-          parent.map(_.manifests).getOrElse(Seq.empty) ++ newManifest,
-          sourceRegion,
-          parent.map(_.fileCount).getOrElse(0L) + landed.size,
-          parent.map(_.totalBytes).getOrElse(0L) + landed.map(_._2).sum,
-          schemaJson.orElse(parent.flatMap(_.schemaJson)),
-          parent.flatMap(_.propsJson))
-      }
-      latestFileSet.put((ns, name), (snap.commitId, committedSet))
-      snap
-    } catch { case e: Throwable =>
-      dropAttemptManifest(); throw e
-    }
-  }
 
   /** REST-commit landing ([[graft.service.IcebergRestServer]]'s
     * commitTable): register externally-WRITTEN parquet files already
@@ -2569,66 +2364,21 @@ final class GraftCatalog(val spark: SparkSession, val warehouse: String) {
     * honoring writer, so REST-committed files prune like native ones.
     * Refused on column-mapped (renamed) tables: foreign files spell the
     * LOGICAL names while stats/reads key on physical ones — a silent
-    * null-read, not an error, is what the refusal prevents. */
+    * null-read, not an error, is what the refusal prevents. `toBranch`
+    * lands the version on an internal branch instead: the staging half
+    * of a multi-table transaction part ([[commitTransaction]] publishes
+    * the branch atomically with its siblings). */
   def commitLandedFiles(ns: String, name: String, newFiles: Seq[String],
                         sourceRegion: String,
                         expectedParentSeq: Option[Long] = None,
                         commitId: Option[String] = None,
-                        maxRetries: Int = 5): Snapshot = {
-    require(tableExists(ns, name), s"no such table $ns.$name")
-    commitId.flatMap(byCommitId(ns, name, _)).foreach { prior =>
-      throw new GraftCatalog.DuplicateCommitException(prior.commitId, prior.seq)
+                        maxRetries: Int = 5,
+                        toBranch: Option[String] = None): Snapshot =
+    commit(ns, name, commitId, toBranch, maxRetries) { st =>
+      requireLogicalNames(ns, name, st)
+      Change("landed commit", st.landed(newFiles).toSeq, expectSeq = expectedParentSeq,
+        region = sourceRegion)
     }
-    val parent0 = latest(ns, name)
-    val curSchema = parent0.flatMap(_.schemaJson)
-      .map(DataType.fromJson(_).asInstanceOf[StructType])
-    val pm = curSchema.map(GraftCatalog.physicalMap).getOrElse(Map.empty)
-    require(pm.forall { case (l, p) => l == p },
-      s"$ns.$name carries renamed (column-mapped) columns — externally-" +
-        "written files resolve by LOGICAL name and would silently read " +
-        "the renamed column as null; compact() re-materializes the " +
-        "physical names first")
-    val props = parent0.map(_.properties).getOrElse(Map.empty)
-    val pspec = GraftCatalog.validatedPartitionSpec(s"$ns.$name", props, curSchema)
-    val bloomCols = GraftCatalog.writeBloomColumnsOf(props, pspec)
-    val entries = newFiles.distinct.map(f =>
-      f -> Files.size(tableDir(ns, name).resolve(f)))
-    var staged: Seq[String] = Seq.empty
-    try {
-      val manifest = (entries.nonEmpty, curSchema) match {
-        case (false, _) => None
-        case (true, Some(s)) => Some(writeManifest(ns, name, entries,
-          stagedFileStats(ns, name, entries, s,
-            GraftCatalog.partitionDerivedStatsOf(pspec, curSchema)),
-          stagedFileBlooms(ns, name, entries, s, bloomCols)))
-        case (true, None) => Some(writeManifest(ns, name, entries))
-      }
-      staged = manifest.toSeq
-      casCommit(ns, name, maxRetries) { parent =>
-        commitId.flatMap(byCommitId(ns, name, _)).foreach { prior =>
-          throw new GraftCatalog.DuplicateCommitException(prior.commitId, prior.seq)
-        }
-        expectedParentSeq.foreach { exp =>
-          val cur = parent.map(_.seq).getOrElse(-1L)
-          if (cur != exp) throw new java.util.ConcurrentModificationException(
-            s"conditional commit of $ns.$name expected parent v$exp but found v$cur")
-        }
-        Snapshot(
-          parent.map(_.seq + 1).getOrElse(0L),
-          commitId.getOrElse(s"commit-${UUID.randomUUID()}"),
-          parent.map(_.commitId),
-          System.currentTimeMillis(),
-          parent.map(_.manifests).getOrElse(Seq.empty) ++ manifest,
-          sourceRegion,
-          parent.map(_.fileCount).getOrElse(0L) + entries.size,
-          parent.map(_.totalBytes).getOrElse(0L) + entries.map(_._2).sum,
-          parent.flatMap(_.schemaJson),
-          parent.flatMap(_.propsJson))
-      }
-    } catch { case e: Throwable =>
-      staged.foreach(dropManifest(ns, name, _)); throw e
-    }
-  }
 
   /** REST MoR landing — the inbound half of the shim's merge-on-read
     * surface ([[graft.service.IcebergRestServer]]): register externally-
@@ -2650,7 +2400,9 @@ final class GraftCatalog(val spark: SparkSession, val warehouse: String) {
     * the commit loudly, never publishes ordinals over dead files. Same
     * refusals as [[commitLandedFiles]] (renamed tables; schema-unbound
     * equality columns; mixed equality column sets would break the
-    * scan's single-join invariant). */
+    * scan's single-join invariant), and the same `toBranch` staging for
+    * a transaction part (publish adopts the branch head's list
+    * wholesale, so the delete-before-data order survives it). */
   def commitLandedMoR(ns: String, name: String,
                       dataRels: Seq[String],
                       eqDeleteRels: Seq[String],
@@ -2659,153 +2411,44 @@ final class GraftCatalog(val spark: SparkSession, val warehouse: String) {
                       expectedParentSeq: Option[Long] = None,
                       commitId: Option[String] = None,
                       maxRetries: Int = 5,
-                      toBranch: Option[String] = None): Snapshot = {
-    require(tableExists(ns, name), s"no such table $ns.$name")
-    toBranch.foreach { b =>
-      require(branchExists(ns, name, b), s"no branch '$b' on $ns.$name")
-      require(expectedParentSeq.isEmpty && commitId.isEmpty,
-        "branch-staged MoR commits take their publish identity from the " +
-          "transaction — expectedParentSeq/commitId belong to main commits")
-    }
-    commitId.flatMap(byCommitId(ns, name, _)).foreach { prior =>
-      throw new GraftCatalog.DuplicateCommitException(prior.commitId, prior.seq)
-    }
-    val parent0 = toBranch.map(branchHead(ns, name, _)).getOrElse(
-      latest(ns, name).getOrElse(throw new IllegalStateException(
-        s"$ns.$name has no committed version — a MoR delta needs a parent")))
-    val curSchema = parent0.schemaJson
-      .map(DataType.fromJson(_).asInstanceOf[StructType])
-    val pm = curSchema.map(GraftCatalog.physicalMap).getOrElse(Map.empty)
-    require(pm.forall { case (l, p) => l == p },
-      s"$ns.$name carries renamed (column-mapped) columns — externally-" +
-        "written files resolve by LOGICAL name and would silently read " +
-        "the renamed column as null; compact() re-materializes the " +
-        "physical names first")
-    val tblFields = curSchema.map(_.fieldNames.toSet).getOrElse(Set.empty)
-    // equality-delete files: column sets must be self-consistent,
-    // schema-bound, and equal to any EXISTING delete set (the scan-side
-    // anti-join stays one join)
-    val eqColSets = eqDeleteRels.map { r =>
-      r -> IcebergExport.parquetColumnNames(
-        tableDir(ns, name).resolve(r).toString,
-        spark.sparkContext.hadoopConfiguration).toSet
-    }
-    eqColSets.foreach { case (r, cols) =>
-      require(cols.nonEmpty && (tblFields.isEmpty || cols.subsetOf(tblFields)),
-        s"equality-delete file $r columns $cols are not table columns " +
-          s"of $ns.$name ($tblFields)")
-    }
-    require(eqColSets.map(_._2).distinct.size <= 1,
-      s"equality-delete files disagree on columns: " +
-        s"${eqColSets.map(_._2).distinct.mkString(" vs ")}")
-    equalityDeleteFileEntries(ns, name, parent0).headOption.foreach { case (p, _) =>
-      val prior = parquetFileSchema(ns, name, p).fieldNames.toSet
-      eqColSets.headOption.foreach { case (_, cols) =>
-        require(prior == cols,
-          s"equality-delete columns $cols differ from the table's existing $prior")
+                      toBranch: Option[String] = None): Snapshot =
+    commit(ns, name, commitId, toBranch, maxRetries) { st =>
+      val parent = st.parent("MoR delta")
+      requireLogicalNames(ns, name, st)
+      val tblFields = st.schema.map(_.fieldNames.toSet).getOrElse(Set.empty)
+      // equality-delete files: column sets must be self-consistent,
+      // schema-bound, and equal to any EXISTING delete set
+      val eqColSets = eqDeleteRels.map { r =>
+        r -> IcebergExport.parquetColumnNames(
+          tableDir(ns, name).resolve(r).toString,
+          spark.sparkContext.hadoopConfiguration).toSet
       }
+      eqColSets.foreach { case (r, cols) =>
+        require(cols.nonEmpty && (tblFields.isEmpty || cols.subsetOf(tblFields)),
+          s"equality-delete file $r columns $cols are not table columns " +
+            s"of $ns.$name ($tblFields)")
+      }
+      require(eqColSets.map(_._2).distinct.size <= 1,
+        s"equality-delete files disagree on columns: " +
+          s"${eqColSets.map(_._2).distinct.mkString(" vs ")}")
+      eqColSets.headOption.foreach(c => requireEqualityColumns(ns, name, parent, c._2))
+      val (referenced, pManifest) =
+        posDeletes.fold((Set.empty[String], Option.empty[String]))(st.positions)
+      val dManifest = st.manifest(st.sized(eqDeleteRels), prefix = "d")
+      val mManifest = st.landed(dataRels)
+      require(dManifest.nonEmpty || mManifest.nonEmpty || pManifest.nonEmpty,
+        "MoR commit carries no data files and no deletes")
+      // equality BEFORE the new data (strictly-less rule: the landing
+      // rows outlive their own key-purge), position AFTER it (at-or-
+      // before rule; sound AND Iceberg-expressible — (file,pos) identity
+      // is path-scoped and the commit's own files carry fresh staged
+      // paths no client ordinal can name, the same argument as
+      // rewritePositionDeletes' end-of-list move)
+      Change("MoR commit", dManifest.toSeq ++ mManifest ++ pManifest,
+        liveRefs = referenced, needsParent = true, expectSeq = expectedParentSeq,
+        region = sourceRegion)
     }
-    val props = parent0.properties
-    val pspec = GraftCatalog.validatedPartitionSpec(s"$ns.$name", props, curSchema)
-    val bloomCols = GraftCatalog.writeBloomColumnsOf(props, pspec)
-    def sized(rels: Seq[String]): Seq[(String, Long)] =
-      rels.distinct.map(f => f -> Files.size(tableDir(ns, name).resolve(f)))
-    val dataEntries = sized(dataRels)
-    val eqEntries = sized(eqDeleteRels)
-    posDeletes.foreach(p => require(
-      p.columns.toSeq.sorted == Seq("file_path", "pos"),
-      s"position deletes carry exactly (file_path, pos); got ${p.columns.toSeq}"))
-    val referenced = posDeletes.toSeq.flatMap(_.select("file_path")
-      .distinct().collect().map(_.getString(0)))
-    val posEntries = posDeletes.toSeq.flatMap(p => entriesOf(stageDataFiles(ns, name,
-      p.select(col("file_path"), col("pos").cast("long").as("pos")), props)))
-    require(dataEntries.nonEmpty || eqEntries.nonEmpty || posEntries.nonEmpty,
-      "MoR commit carries no data files and no deletes")
-    var staged: Seq[String] = Seq.empty
-    try {
-      val dManifest =
-        if (eqEntries.isEmpty) None
-        else Some(writeManifest(ns, name, eqEntries, prefix = "d"))
-      val pManifest =
-        if (posEntries.isEmpty) None
-        else Some(writeManifest(ns, name, posEntries, prefix = "p"))
-      val mManifest = (dataEntries.nonEmpty, curSchema) match {
-        case (false, _) => None
-        case (true, Some(s)) => Some(writeManifest(ns, name, dataEntries,
-          stagedFileStats(ns, name, dataEntries, s,
-            GraftCatalog.partitionDerivedStatsOf(pspec, curSchema)),
-          stagedFileBlooms(ns, name, dataEntries, s, bloomCols)))
-        case (true, None) => Some(writeManifest(ns, name, dataEntries))
-      }
-      staged = dManifest.toSeq ++ pManifest.toSeq ++ mManifest.toSeq
-      def commitVia(f: (Option[Snapshot] => Snapshot) => Snapshot): Snapshot =
-        f { parent =>
-        commitId.flatMap(byCommitId(ns, name, _)).foreach { prior =>
-          throw new GraftCatalog.DuplicateCommitException(prior.commitId, prior.seq)
-        }
-        val par = parent.getOrElse(throw new IllegalStateException(
-          s"table log for $ns.$name vanished mid-commit"))
-        expectedParentSeq.foreach { exp =>
-          if (par.seq != exp) throw new java.util.ConcurrentModificationException(
-            s"conditional commit of $ns.$name expected parent v$exp but found v${par.seq}")
-        }
-        // liveness INSIDE the CAS, against the parent actually landed on
-        if (referenced.nonEmpty) {
-          val live = dataFiles(ns, name, par).toSet
-          val stale = referenced.filterNot(live)
-          if (stale.nonEmpty) throw new IllegalArgumentException(
-            s"position delete references files not live in $ns.$name " +
-              s"v${par.seq}: ${stale.take(3).mkString(", ")}")
-        }
-        val all = eqEntries ++ posEntries ++ dataEntries
-        Snapshot(par.seq + 1,
-          commitId.getOrElse(s"commit-${UUID.randomUUID()}"),
-          Some(par.commitId),
-          System.currentTimeMillis(),
-          // equality BEFORE the new data (strictly-less rule: the
-          // landing rows outlive their own key-purge), position AFTER
-          // it (at-or-before rule; sound AND Iceberg-expressible —
-          // (file,pos) identity is path-scoped and the commit's own
-          // files carry fresh staged paths no client ordinal can name,
-          // so the widened scope erases exactly the same rows, same
-          // argument as rewritePositionDeletes' end-of-list move)
-          par.manifests ++ dManifest ++ mManifest ++ pManifest,
-          sourceRegion,
-          par.fileCount + all.size,
-          par.totalBytes + all.map(_._2).sum,
-          par.schemaJson, // a MoR delta never changes the schema
-          par.propsJson)
-      }
-      toBranch match {
-        case Some(b) => commitVia(casCommitAt(ns, name, maxRetries,
-          () => Some(branchHead(ns, name, b)),
-          branchVersionFile(ns, name, b, _)))
-        case None => commitVia(casCommit(ns, name, maxRetries))
-      }
-    } catch { case e: Throwable =>
-      // position entries were staged HERE; landed data/equality files
-      // belong to the caller's commit-scoped staging dir (it cleans up)
-      cleanupStaged(ns, name, posEntries, staged); throw e
-    }
-  }
 
-  /** Transactional MoR staging: [[commitLandedMoR]]'s refusals and
-    * manifest ordering, landed on an internal txn `branch` — the branch
-    * head's manifest list extends the fork point's, so
-    * [[commitTransaction]] publishes the MoR delta atomically with its
-    * sibling tables (the positional delete-before-data rule survives the
-    * fast-forward because publish adopts the head's list wholesale).
-    * Position-delete liveness is validated inside the branch CAS against
-    * the branch head; main movement after staging is the transaction's
-    * own fork-conflict refusal. */
-  def commitLandedMoRToBranch(ns: String, name: String, branch: String,
-                              dataRels: Seq[String],
-                              eqDeleteRels: Seq[String],
-                              posDeletes: Option[DataFrame],
-                              sourceRegion: String,
-                              maxRetries: Int = 5): Snapshot =
-    commitLandedMoR(ns, name, dataRels, eqDeleteRels, posDeletes,
-      sourceRegion, maxRetries = maxRetries, toBranch = Some(branch))
 
   /** ALTER TABLE's metadata-only schema commit: publish ONE new version
     * whose schema is `newSchema`, touching no data file — committed
@@ -2831,7 +2474,7 @@ final class GraftCatalog(val spark: SparkSession, val warehouse: String) {
     * Validation is ALTER-grade — the append-path validatedSchemaJson
     * rejects drops/retypes by design (an INSERT must not evolve the
     * schema as a side effect); this is the deliberate front door. Every
-    * check runs INSIDE the CAS closure against the freshly-read parent,
+    * check runs in every commit attempt against the freshly-read parent,
     * and `expectedPrev` (the schema the caller derived its change from)
     * aborts the statement loudly when a concurrent schema change slid
     * in — two racing ALTERs can never silently drop each other's
@@ -2843,95 +2486,84 @@ final class GraftCatalog(val spark: SparkSession, val warehouse: String) {
                             expectedPrev: Option[StructType] = None,
                             propsSet: Map[String, String] = Map.empty,
                             propsUnset: Seq[String] = Seq.empty): Snapshot =
-    casCommit(ns, name, 5) { parentOpt =>
-      // EVERYTHING validates against the freshly-read parent INSIDE the
-      // CAS closure: a concurrent equality delete must re-trip the drop
-      // guard, and a concurrent schema change must abort THIS statement
-      // (its changes were derived against a schema that no longer
-      // exists) — never be silently overwritten
-      val parent = parentOpt.getOrElse(throw new IllegalStateException(
-        s"$ns.$name records no schema to evolve — commit data first"))
-      val prev = parent.schemaJson
-        .map(DataType.fromJson(_).asInstanceOf[StructType])
-        .getOrElse(throw new IllegalStateException(
-          s"$ns.$name records no schema to evolve — commit data first"))
-      // comments participate: two racing comment-bearing ALTERs must not
-      // silently drop each other's — the whole point of expectedPrev
-      def shape(st: StructType) = st.fields.toSeq.map(f =>
-        (f.name, f.dataType, f.nullable, f.getComment()))
-      expectedPrev.foreach(e => require(shape(e) == shape(prev),
-        s"$ns.$name: concurrent schema change — the ALTER was derived " +
-          s"against ${e.simpleString} but the table is now " +
-          s"${prev.simpleString}; re-derive and retry"))
-      // the ONE shared lattice (export's cross-version check uses it too
-      // — the two must never drift or a legal ALTER kills exportability)
-      def promotes(from: DataType, to: DataType): Boolean =
-        GraftCatalog.promotes(from, to)
-      // old and new fields pair by PHYSICAL identity — the stable id the
-      // column-mapping layer gives every field. A RENAME keeps the
-      // physical name, so it pairs here (and is validated as the same
-      // column, nullability and type intact) instead of misreading as
-      // drop+add; logical-name pairing alone cannot tell the two apart.
-      def physOf(f: StructField) = GraftCatalog.physicalName(f)
-      val newByPhys: Map[String, StructField] =
-        newSchema.fields.map(f => physOf(f) -> f).toMap
-      require(newByPhys.size == newSchema.fields.length,
-        s"$ns.$name: duplicate physical column names in " +
-          newSchema.fields.map(f => s"${f.name}(${physOf(f)})").mkString(", "))
-      require(newSchema.fieldNames.distinct.length == newSchema.fields.length,
-        s"$ns.$name: duplicate column names in ${newSchema.simpleString}")
-      val dropped = prev.fields.filter(pf => !newByPhys.contains(physOf(pf)))
-      if (dropped.nonEmpty) {
-        val hasEqDeletes = parent.manifests.exists(m =>
-          isDeleteManifest(m) && !isPosDeleteManifest(m))
-        require(!hasEqDeletes,
-          s"$ns.$name: cannot drop column(s) ${dropped.map(_.name).mkString(", ")} " +
-            "while live equality-delete files may reference them — run compact() " +
-            "to materialize the deletes first")
-      }
-      prev.fields.foreach { pf =>
-        newByPhys.get(physOf(pf)).foreach { nf =>
-          require(promotes(pf.dataType, nf.dataType),
-            s"$ns.$name: illegal type change for '${pf.name}': " +
-              s"${pf.dataType.simpleString} -> ${nf.dataType.simpleString} is not " +
-              "on the promotion lattice (integral widening byte->short->int" +
-              "->long, float->double, decimal precision widening); committed " +
-              "files could not serve the read")
-          require(!pf.nullable || nf.nullable,
-            s"$ns.$name: cannot tighten '${pf.name}' to NOT NULL — existing " +
-              "files are not re-validated and may hold nulls")
-        }
-      }
-      val prevPhys = prev.fields.map(physOf).toSet
-      val added = newSchema.fields.filterNot(f => prevPhys.contains(physOf(f)))
-      added.foreach(f => require(f.nullable,
-        s"$ns.$name: new column '${f.name}' must be nullable — existing rows " +
-          "cannot supply a value"))
-      // bytes in committed files live under PHYSICAL names — the
-      // resurrection hazard is physical
-      assertNoColumnResurrection(ns, name, parent, added.map(physOf).toSeq)
-      // property changes riding the SAME ALTER statement land in the
-      // SAME commit — a DSv2 TableChange batch mixing schema and
-      // properties must be one atomic version (a failed schema half
-      // must never leave the property half already published)
-      val nextProps = (parent.properties ++ propsSet) -- propsUnset
-      // refuse-at-the-ALTER guard (same as commitProperties): the
-      // RESULTING spec must stay valid against the RESULTING schema —
-      // covers a malformed spec riding a mixed batch, a pure-schema
-      // ALTER that adds a reserved __pt_*/__ptw_* column to a
-      // partitioned table, and a DROP COLUMN that orphans a spec
-      // source. Publishing any of those would brick every later write.
-      if (nextProps.contains(GraftCatalog.PartitionSpecProp))
-        GraftCatalog.validatedPartitionSpec(s"$ns.$name", nextProps,
-          Some(newSchema)): Unit
-      val props =
-        if (propsSet.isEmpty && propsUnset.isEmpty) parent.propsJson
-        else GraftCatalog.mergedPropsJson(parent.properties, propsSet, propsUnset)
-      Snapshot(parent.seq + 1, s"commit-${UUID.randomUUID()}",
-        Some(parent.commitId), System.currentTimeMillis(), parent.manifests,
-        "local", parent.fileCount, parent.totalBytes, Some(newSchema.json),
-        props)
+    // property changes riding the SAME ALTER statement land in the SAME
+    // commit — a DSv2 TableChange batch mixing schema and properties must
+    // be one atomic version (a failed schema half must never leave the
+    // property half already published)
+    commit(ns, name) { _ =>
+      Change("schema change", needsParent = true,
+        schema = EvolvedSchema(newSchema, expectedPrev),
+        propsSet = propsSet, propsUnset = propsUnset)
     }
+
+  /** [[commitSchemaEvolution]]'s validation of `newSchema` against the
+    * parent a commit attempt lands on — EVERYTHING validates against the
+    * freshly read parent: a concurrent equality delete must re-trip the
+    * drop guard, and a concurrent schema change must abort the statement
+    * (its changes were derived against a schema that no longer exists),
+    * never be silently overwritten. */
+  private def evolvedSchemaJson(ns: String, name: String, parent: Snapshot,
+                                newSchema: StructType,
+                                expectedPrev: Option[StructType]): String = {
+    val prev = parent.schemaJson.map(structOf).getOrElse(
+      throw new IllegalStateException(
+        s"$ns.$name records no schema to evolve — commit data first"))
+    // comments participate: two racing comment-bearing ALTERs must not
+    // silently drop each other's — the whole point of expectedPrev
+    def shape(st: StructType) = st.fields.toSeq.map(f =>
+      (f.name, f.dataType, f.nullable, f.getComment()))
+    expectedPrev.foreach(e => require(shape(e) == shape(prev),
+      s"$ns.$name: concurrent schema change — the ALTER was derived " +
+        s"against ${e.simpleString} but the table is now " +
+        s"${prev.simpleString}; re-derive and retry"))
+    // old and new fields pair by PHYSICAL identity — the stable id the
+    // column-mapping layer gives every field. A RENAME keeps the
+    // physical name, so it pairs here (and is validated as the same
+    // column, nullability and type intact) instead of misreading as
+    // drop+add; logical-name pairing alone cannot tell the two apart.
+    def physOf(f: StructField) = GraftCatalog.physicalName(f)
+    val newByPhys: Map[String, StructField] =
+      newSchema.fields.map(f => physOf(f) -> f).toMap
+    require(newByPhys.size == newSchema.fields.length,
+      s"$ns.$name: duplicate physical column names in " +
+        newSchema.fields.map(f => s"${f.name}(${physOf(f)})").mkString(", "))
+    require(newSchema.fieldNames.distinct.length == newSchema.fields.length,
+      s"$ns.$name: duplicate column names in ${newSchema.simpleString}")
+    val dropped = prev.fields.filter(pf => !newByPhys.contains(physOf(pf)))
+    if (dropped.nonEmpty) {
+      val hasEqDeletes = parent.manifests.exists(m =>
+        isDeleteManifest(m) && !isPosDeleteManifest(m))
+      require(!hasEqDeletes,
+        s"$ns.$name: cannot drop column(s) ${dropped.map(_.name).mkString(", ")} " +
+          "while live equality-delete files may reference them — run compact() " +
+          "to materialize the deletes first")
+    }
+    prev.fields.foreach { pf =>
+      newByPhys.get(physOf(pf)).foreach { nf =>
+        // the ONE shared lattice (export's cross-version check uses it
+        // too — the two must never drift or a legal ALTER kills
+        // exportability)
+        require(GraftCatalog.promotes(pf.dataType, nf.dataType),
+          s"$ns.$name: illegal type change for '${pf.name}': " +
+            s"${pf.dataType.simpleString} -> ${nf.dataType.simpleString} is not " +
+            "on the promotion lattice (integral widening byte->short->int" +
+            "->long, float->double, decimal precision widening); committed " +
+            "files could not serve the read")
+        require(!pf.nullable || nf.nullable,
+          s"$ns.$name: cannot tighten '${pf.name}' to NOT NULL — existing " +
+            "files are not re-validated and may hold nulls")
+      }
+    }
+    val prevPhys = prev.fields.map(physOf).toSet
+    val added = newSchema.fields.filterNot(f => prevPhys.contains(physOf(f)))
+    added.foreach(f => require(f.nullable,
+      s"$ns.$name: new column '${f.name}' must be nullable — existing rows " +
+        "cannot supply a value"))
+    // bytes in committed files live under PHYSICAL names — the
+    // resurrection hazard is physical
+    assertNoColumnResurrection(ns, name, parent, added.map(physOf).toSeq)
+    newSchema.json
+  }
 
   /** SET / UNSET TBLPROPERTIES as ONE metadata-only CAS commit — a new
     * version whose `propsJson` is the parent's map with `set` applied
@@ -2941,70 +2573,29 @@ final class GraftCatalog(val spark: SparkSession, val warehouse: String) {
     * re-reads the first's map — last-writer-wins PER KEY, never a lost
     * whole-map overwrite). Keys are free-form; the engine consults
     * `write.target-file-size-bytes` ([[compact]]) and
-    * `write.bloom-columns` (the SQL INSERT path's bloom indexing). */
+    * `write.bloom-columns` (the SQL INSERT path's bloom indexing).
+    * `toBranch` stages the change on a transaction part's branch
+    * ([[commitTransaction]] adopts the branch head's properties). */
   def commitProperties(ns: String, name: String, set: Map[String, String],
                        unset: Seq[String] = Seq.empty,
                        maxRetries: Int = 5,
-                       expectedParentSeq: Option[Long] = None): Snapshot = {
+                       expectedParentSeq: Option[Long] = None,
+                       toBranch: Option[String] = None): Snapshot = {
     require(set.nonEmpty || unset.nonEmpty, "nothing to set or unset")
-    casCommit(ns, name, maxRetries) { parentOpt =>
-      val parent = parentOpt.getOrElse(throw new IllegalStateException(
-        s"$ns.$name has no committed version to carry properties — commit " +
-          "data (or CREATE TABLE via SQL, which commits v0) first"))
-      // conditional form for READ-MODIFY-WRITE callers (ADD/DROP/REPLACE
-      // PARTITION FIELD computes the NEXT spec from a prior read): a
-      // value derived from a stale read must abort, not blindly
-      // re-apply over whatever parent the retry loop sees — per-key
-      // last-writer-wins only holds for values that don't ENCODE the
-      // prior map
-      expectedParentSeq.foreach { exp =>
-        if (parent.seq != exp) throw new java.util.ConcurrentModificationException(
-          s"conditional property commit of $ns.$name expected parent " +
-            s"v$exp but found v${parent.seq}")
-      }
-      val next = (parent.properties ++ set) -- unset
-      // partition-spec EVOLUTION via ALTER ... SET TBLPROPERTIES is
-      // legal (new writes cluster by the new spec; committed files keep
-      // their recorded layout, exactly Iceberg's spec-evolution model)
-      // — but a malformed/ill-typed spec must refuse AT THE ALTER, not
-      // at the next INSERT, or the table is bricked for SQL writers
-      if (set.contains(GraftCatalog.PartitionSpecProp))
-        GraftCatalog.validatedPartitionSpec(s"$ns.$name", next,
-          parent.schemaJson.map(DataType.fromJson(_).asInstanceOf[StructType])): Unit
-      val json = GraftCatalog.mergedPropsJson(parent.properties, set, unset)
-      Snapshot(parent.seq + 1, s"commit-${UUID.randomUUID()}",
-        Some(parent.commitId), System.currentTimeMillis(), parent.manifests,
-        "local", parent.fileCount, parent.totalBytes, parent.schemaJson, json)
+    // expectedParentSeq is the conditional form for READ-MODIFY-WRITE
+    // callers (ADD/DROP/REPLACE PARTITION FIELD computes the NEXT spec
+    // from a prior read): a value derived from a stale read must abort —
+    // per-key last-writer-wins only holds for values that don't ENCODE
+    // the prior map. A partition spec set here is validated against the
+    // schema at the ALTER, not at the next INSERT (spec EVOLUTION is
+    // legal: new writes cluster by the new spec, committed files keep
+    // their recorded layout — Iceberg's spec-evolution model)
+    commit(ns, name, ref = toBranch, maxRetries = maxRetries) { _ =>
+      Change("property change", needsParent = true, expectSeq = expectedParentSeq,
+        propsSet = set, propsUnset = unset)
     }
   }
 
-  /** Transactional property staging: [[commitProperties]]' validation,
-    * landed on an internal txn `branch` — [[commitTransaction]] adopts
-    * the branch head's propsJson at publish, so a property change lands
-    * atomically with sibling tables' data/MoR parts. No
-    * expectedParentSeq: main movement after staging is the transaction's
-    * fork-conflict refusal. */
-  def commitPropertiesToBranch(ns: String, name: String, branch: String,
-                               set: Map[String, String],
-                               unset: Seq[String] = Seq.empty,
-                               maxRetries: Int = 5): Snapshot = {
-    require(set.nonEmpty || unset.nonEmpty, "nothing to set or unset")
-    require(branchExists(ns, name, branch), s"no branch '$branch' on $ns.$name")
-    casCommitAt(ns, name, maxRetries,
-        () => Some(branchHead(ns, name, branch)),
-        branchVersionFile(ns, name, branch, _)) { parentOpt =>
-      val parent = parentOpt.getOrElse(throw new IllegalStateException(
-        s"$ns.$name has no committed version to carry properties"))
-      val next = (parent.properties ++ set) -- unset
-      if (set.contains(GraftCatalog.PartitionSpecProp))
-        GraftCatalog.validatedPartitionSpec(s"$ns.$name", next,
-          parent.schemaJson.map(DataType.fromJson(_).asInstanceOf[StructType])): Unit
-      val json = GraftCatalog.mergedPropsJson(parent.properties, set, unset)
-      Snapshot(parent.seq + 1, s"commit-${UUID.randomUUID()}",
-        Some(parent.commitId), System.currentTimeMillis(), parent.manifests,
-        "local", parent.fileCount, parent.totalBytes, parent.schemaJson, json)
-    }
-  }
 
   /** The LATEST version's TBLPROPERTIES (empty for bare tables). */
   def tableProperties(ns: String, name: String): Map[String, String] =
@@ -3084,42 +2675,9 @@ final class GraftCatalog(val spark: SparkSession, val warehouse: String) {
   def commitFilesReplace(ns: String, name: String, liveFiles: Seq[String],
                          sourceRegion: String, maxRetries: Int = 5,
                          schemaJson: Option[String] = None,
-                         commitId: Option[String] = None): Snapshot = {
-    require(tableExists(ns, name), s"no such table $ns.$name")
-    commitId.flatMap(byCommitId(ns, name, _)).foreach { prior =>
-      throw new GraftCatalog.DuplicateCommitException(prior.commitId, prior.seq)
-    }
-    // intra-batch dedup: a repeated path would manifest twice and the
-    // scan would silently double that file's rows
-    val landed = liveFiles.distinct
-      .map(f => f -> Files.size(tableDir(ns, name).resolve(f)))
-    val newManifest =
-      if (landed.isEmpty) Seq.empty
-      else Seq(writeManifest(ns, name, landed))
-    try {
-      val snap = casCommit(ns, name, maxRetries) { parent =>
-        commitId.flatMap(byCommitId(ns, name, _)).foreach { prior =>
-          throw new GraftCatalog.DuplicateCommitException(prior.commitId, prior.seq)
-        }
-        Snapshot(
-          parent.map(_.seq + 1).getOrElse(0L),
-          commitId.getOrElse(s"commit-${UUID.randomUUID()}"),
-          parent.map(_.commitId),
-          System.currentTimeMillis(),
-          newManifest,
-          sourceRegion,
-          landed.size,
-          landed.map(_._2).sum,
-          schemaJson.orElse(parent.flatMap(_.schemaJson)),
-          parent.flatMap(_.propsJson))
-      }
-      latestFileSet.put((ns, name), (snap.commitId, landed.map(_._1).toSet))
-      snap
-    } catch { case e: Throwable =>
-      newManifest.foreach(dropManifest(ns, name, _))
-      throw e
-    }
-  }
+                         commitId: Option[String] = None): Snapshot =
+    commitFilesReplaceMor(ns, name, Seq(liveFiles -> GraftCatalog.UnitData),
+      sourceRegion, maxRetries, schemaJson, commitId)
 
   /** MoR-aware files APPEND: register already-landed files as new
     * manifests appended to the parent's list in the GIVEN unit order —
@@ -3137,19 +2695,9 @@ final class GraftCatalog(val spark: SparkSession, val warehouse: String) {
                      sourceRegion: String, maxRetries: Int = 5,
                      schemaJson: Option[String] = None,
                      commitId: Option[String] = None): Snapshot =
-    commitMorUnits(ns, name, units, maxRetries, commitId) {
-      (parent, newManifests, allLanded) =>
-        Snapshot(
-          parent.map(_.seq + 1).getOrElse(0L),
-          commitId.getOrElse(s"commit-${UUID.randomUUID()}"),
-          parent.map(_.commitId),
-          System.currentTimeMillis(),
-          parent.map(_.manifests).getOrElse(Seq.empty) ++ newManifests,
-          sourceRegion,
-          parent.map(_.fileCount).getOrElse(0L) + allLanded.size,
-          parent.map(_.totalBytes).getOrElse(0L) + allLanded.map(_._2).sum,
-          schemaJson.orElse(parent.flatMap(_.schemaJson)),
-          parent.flatMap(_.propsJson))
+    commit(ns, name, commitId, maxRetries = maxRetries) { st =>
+      Change("files commit", st.units(units), schema = ExplicitSchema(schemaJson),
+        region = sourceRegion)
     }
 
   /** MoR-aware files OVERWRITE: the given ordered units are the COMPLETE
@@ -3162,51 +2710,11 @@ final class GraftCatalog(val spark: SparkSession, val warehouse: String) {
                             sourceRegion: String, maxRetries: Int = 5,
                             schemaJson: Option[String] = None,
                             commitId: Option[String] = None): Snapshot =
-    commitMorUnits(ns, name, units, maxRetries, commitId) {
-      (parent, newManifests, allLanded) =>
-        Snapshot(
-          parent.map(_.seq + 1).getOrElse(0L),
-          commitId.getOrElse(s"commit-${UUID.randomUUID()}"),
-          parent.map(_.commitId),
-          System.currentTimeMillis(),
-          newManifests,
-          sourceRegion,
-          allLanded.size,
-          allLanded.map(_._2).sum,
-          schemaJson.orElse(parent.flatMap(_.schemaJson)),
-          parent.flatMap(_.propsJson))
+    commit(ns, name, commitId, maxRetries = maxRetries) { st =>
+      Change("files replace", st.units(units), replaces = true,
+        schema = ExplicitSchema(schemaJson), region = sourceRegion)
     }
 
-  /** Shared staging/CAS/cleanup envelope of the two MoR unit commits —
-    * only the Snapshot each builds differs (append extends the parent's
-    * manifest list, replace IS the list). */
-  private def commitMorUnits(ns: String, name: String,
-                             units: Seq[(Seq[String], String)],
-                             maxRetries: Int, commitId: Option[String])(
-      build: (Option[Snapshot], Seq[String], Seq[(String, Long)]) => Snapshot)
-      : Snapshot = {
-    require(tableExists(ns, name), s"no such table $ns.$name")
-    commitId.flatMap(byCommitId(ns, name, _)).foreach { prior =>
-      throw new GraftCatalog.DuplicateCommitException(prior.commitId, prior.seq)
-    }
-    val landedUnits = units.filter(_._1.nonEmpty).map { case (fs, kind) =>
-      (fs.distinct.map(f => f -> Files.size(tableDir(ns, name).resolve(f))), kind)
-    }
-    val newManifests = landedUnits.map { case (landed, kind) =>
-      writeManifest(ns, name, landed, prefix = GraftCatalog.unitPrefix(kind))
-    }
-    try {
-      casCommit(ns, name, maxRetries) { parent =>
-        commitId.flatMap(byCommitId(ns, name, _)).foreach { prior =>
-          throw new GraftCatalog.DuplicateCommitException(prior.commitId, prior.seq)
-        }
-        build(parent, newManifests, landedUnits.flatMap(_._1))
-      }
-    } catch { case e: Throwable =>
-      newManifests.foreach(dropManifest(ns, name, _))
-      throw e
-    }
-  }
 
 
   def tablePath(ns: String, name: String): Path = tableDir(ns, name)
@@ -3289,117 +2797,26 @@ final class GraftCatalog(val spark: SparkSession, val warehouse: String) {
 
   /** The branch's current snapshot: its last own commit, or the fork
     * point's main snapshot when the branch has no commits yet. */
-  def branchHead(ns: String, name: String, branch: String): Snapshot = {
+  def branchHead(ns: String, name: String, branch: String): Snapshot =
+    branchHeadOf(ns, name, branch, branchSnapshots(ns, name, branch))
+
+  private def branchHeadOf(ns: String, name: String, branch: String,
+                           own: Seq[Snapshot]): Snapshot = {
     val (forkSeq, forkCommitId) = branchFork(ns, name, branch)
-    branchSnapshots(ns, name, branch).lastOption.getOrElse {
+    own.lastOption.getOrElse {
       snapshots(ns, name).find(_.seq == forkSeq).getOrElse(
         throw new IllegalStateException(
           s"branch '$branch' fork v$forkSeq ($forkCommitId) expired from $ns.$name"))
     }
   }
 
-  /** C3 on a branch: append `df` as a new branch version — same staging,
-    * stats, manifest and CAS machinery as [[commitAppend]], landing on
-    * the branch log. Main is never touched. */
+  /** C3 on a branch: [[commitAppend]] landing on the branch log. Main
+    * is never touched. */
   def commitAppendToBranch(ns: String, name: String, branch: String, df: DataFrame,
                            sourceRegion: String = "local", maxRetries: Int = 5,
-                           commitId: Option[String] = None): Snapshot = {
-    require(tableExists(ns, name), s"no such table $ns.$name")
-    val dup = () => commitId
-      .flatMap(id => branchSnapshots(ns, name, branch).find(_.commitId == id))
-      .foreach { prior =>
-        throw new GraftCatalog.DuplicateCommitException(prior.commitId, prior.seq)
-      }
-    dup()
-    val head0 = branchHead(ns, name, branch)
-    validatedSchemaJson(ns, name, Some(head0), df.schema)
-    val pdf = toPhysicalDf(df,
-      head0.schemaJson.map(DataType.fromJson(_).asInstanceOf[StructType]))
-    val files = stageDataFiles(ns, name, pdf, head0.properties)
-    val entries = entriesOf(files)
-    var staged: Seq[String] = Seq.empty
-    try {
-      val newManifest =
-        if (entries.isEmpty) None
-        else Some(writeStagedManifest(ns, name, files))
-      staged = newManifest.toSeq
-      casCommitAt(ns, name, maxRetries,
-          () => Some(branchHead(ns, name, branch)),
-          branchVersionFile(ns, name, branch, _)) { parent =>
-        dup()
-        val p = parent.get // branchHead is total — fork or newer
-        Snapshot(
-          p.seq + 1,
-          commitId.getOrElse(s"commit-${UUID.randomUUID()}"),
-          Some(p.commitId),
-          System.currentTimeMillis(),
-          p.manifests ++ newManifest,
-          sourceRegion,
-          p.fileCount + entries.size,
-          p.totalBytes + entries.map(_._2).sum,
-          Some(validatedSchemaJson(ns, name, Some(p), df.schema)),
-          p.propsJson)
-      }
-    } catch { case e: Throwable =>
-      cleanupStaged(ns, name, entries, staged); throw e
-    }
-  }
+                           commitId: Option[String] = None): Snapshot =
+    commitAppend(ns, name, df, sourceRegion, maxRetries, commitId, toBranch = Some(branch))
 
-  /** [[commitLandedFiles]] on a branch: register externally-landed
-    * parquet (already under the table dir) as a BRANCH version — the
-    * staging half of a multi-table transaction part
-    * ([[commitTransaction]] publishes the branch atomically with its
-    * siblings). Same stats/bloom manifest machinery as the main-log
-    * form; same column-mapping refusal. */
-  def commitLandedFilesToBranch(ns: String, name: String, branch: String,
-                                newFiles: Seq[String], sourceRegion: String,
-                                maxRetries: Int = 5): Snapshot = {
-    require(tableExists(ns, name), s"no such table $ns.$name")
-    val head0 = branchHead(ns, name, branch)
-    val curSchema = head0.schemaJson
-      .map(DataType.fromJson(_).asInstanceOf[StructType])
-    val pm = curSchema.map(GraftCatalog.physicalMap).getOrElse(Map.empty)
-    require(pm.forall { case (l, p) => l == p },
-      s"$ns.$name carries renamed (column-mapped) columns — externally-" +
-        "written files resolve by LOGICAL name and would silently read " +
-        "the renamed column as null; compact() re-materializes the " +
-        "physical names first")
-    val props = head0.properties
-    val pspec = GraftCatalog.validatedPartitionSpec(s"$ns.$name", props, curSchema)
-    val bloomCols = GraftCatalog.writeBloomColumnsOf(props, pspec)
-    val entries = newFiles.distinct.map(f =>
-      f -> Files.size(tableDir(ns, name).resolve(f)))
-    var staged: Seq[String] = Seq.empty
-    try {
-      val manifest = (entries.nonEmpty, curSchema) match {
-        case (false, _) => None
-        case (true, Some(s)) => Some(writeManifest(ns, name, entries,
-          stagedFileStats(ns, name, entries, s,
-            GraftCatalog.partitionDerivedStatsOf(pspec, curSchema)),
-          stagedFileBlooms(ns, name, entries, s, bloomCols)))
-        case (true, None) => Some(writeManifest(ns, name, entries))
-      }
-      staged = manifest.toSeq
-      casCommitAt(ns, name, maxRetries,
-          () => Some(branchHead(ns, name, branch)),
-          branchVersionFile(ns, name, branch, _)) { parent =>
-        val p = parent.get
-        Snapshot(
-          p.seq + 1,
-          s"commit-${UUID.randomUUID()}",
-          Some(p.commitId),
-          System.currentTimeMillis(),
-          p.manifests ++ manifest,
-          sourceRegion,
-          p.fileCount + entries.size,
-          p.totalBytes + entries.map(_._2).sum,
-          p.schemaJson,
-          p.propsJson)
-      }
-    } catch { case e: Throwable =>
-      cleanupStaged(ns, name, entries, staged); throw e
-    }
-  }
 
   /** Read the branch head (manifest union of the fork point plus every
     * branch commit — shared immutable files, no copies). */
@@ -3408,7 +2825,7 @@ final class GraftCatalog(val spark: SparkSession, val warehouse: String) {
 
   /** Fast-forward merge: publish the branch head back onto main as one
     * commit, iff main still sits at the branch's fork version — checked
-    * INSIDE the CAS closure, so a concurrent main commit aborts the
+    * in every commit attempt, so a concurrent main commit aborts the
     * merge (MergeConflictException) instead of silently dropping it.
     * The branch head's manifest list already extends the fork point's,
     * so adopting it wholesale is exactly main ∪ branch-added. */
@@ -3416,21 +2833,9 @@ final class GraftCatalog(val spark: SparkSession, val warehouse: String) {
                        maxRetries: Int = 5): Snapshot = {
     val (forkSeq, _) = branchFork(ns, name, branch)
     val head = branchHead(ns, name, branch)
-    casCommit(ns, name, maxRetries) { parent =>
-      val cur = parent.map(_.seq).getOrElse(-1L)
-      if (cur != forkSeq) throw new GraftCatalog.MergeConflictException(
-        s"main of $ns.$name moved to v$cur since branch '$branch' forked at v$forkSeq")
-      Snapshot(
-        cur + 1,
-        s"merge-${UUID.randomUUID()}",
-        parent.map(_.commitId),
-        System.currentTimeMillis(),
-        head.manifests,
-        head.sourceRegion,
-        head.fileCount,
-        head.totalBytes,
-        head.schemaJson.orElse(parent.flatMap(_.schemaJson)),
-        head.propsJson.orElse(parent.flatMap(_.propsJson)))
+    commit(ns, name, maxRetries = maxRetries) { _ =>
+      Change("fast-forward merge", adopt = Some(head), forkSeq = Some(forkSeq),
+        region = head.sourceRegion, idPrefix = "merge-")
     }
   }
 
@@ -3509,7 +2914,7 @@ final class GraftCatalog(val spark: SparkSession, val warehouse: String) {
   //            habit). A transaction is "fast-forward N tables at
   //            once".
   //   BARRIER  per-table `.txn-barrier.json`, create-if-absent with a
-  //            lease deadline. casCommit waits on a fresh barrier
+  //            lease deadline. Every main commit waits on a fresh barrier
   //            before EVERY attempt, so once the coordinator holds a
   //            table's barrier and has sat out the grace period, no
   //            same-API writer can take a version slot under it.
@@ -3562,7 +2967,7 @@ final class GraftCatalog(val spark: SparkSession, val warehouse: String) {
     * main log: a PUBLISHED journal is completed (the transaction
     * committed — finishing it unblocks us); an EXPIRED barrier without
     * a journal is aborted (that transaction never happened); a fresh
-    * barrier is waited out. Called by casCommit before every attempt. */
+    * barrier is waited out. Called by casCommitAt before every main attempt. */
   private def awaitTxnBarrier(ns: String, name: String): Unit = {
     var waits = 0
     while (true) {
@@ -4168,9 +3573,9 @@ final class GraftCatalog(val spark: SparkSession, val warehouse: String) {
     *    promotion-lattice-checked act, not a write side effect).
     *
     * SQL `INSERT` cannot reach either half — Spark validates INSERT
-    * column lists against the table schema at analysis — so this is the
-    * programmatic by-name ingestion surface (streaming sinks, sync
-    * replays). */
+    * column lists against the table schema at analysis — so this is a
+    * programmatic by-name ingestion API; nothing in graft itself calls
+    * it. */
   def commitAppendMerge(ns: String, name: String, df: DataFrame,
                         sourceRegion: String = "local",
                         commitId: Option[String] = None,
@@ -4792,8 +4197,9 @@ object GraftCatalog {
     * maintenance rewrites (compact / rewrite_manifests /
     * rewrite_position_deletes). The changefeed's segmented O(delta)
     * path skips these commits — they rewrite layout, never rows — so
-    * the prefixes are refused on every other commit path (enforced at
-    * casCommitAt, the single funnel all commits flow through). */
+    * a caller's commit id may not claim one (enforced by `commit`, the
+    * funnel every commit flows through but commitTransaction's, which
+    * publishes `txn-` ids through its journal). */
   val MaintenancePrefixes: Seq[String] =
     Seq("compact-", "rwmanifests-", "rwposdel-")
 

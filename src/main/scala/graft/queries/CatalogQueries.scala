@@ -1192,8 +1192,8 @@ object CatalogQueries {
     * foreign upsert (new data + equality-delete keys + position deletes
     * against the served tree), table B's part is a foreign delete-only
     * MoR change, and table C's part sets properties — all staged on
-    * internal branches ([[GraftCatalog.commitLandedMoRToBranch]] /
-    * commitPropertiesToBranch) and published through one atomic commit
+    * internal branches ([[GraftCatalog.commitLandedMoR]] /
+    * commitProperties with `toBranch`) and published through one atomic commit
     * point. The fixture REQUIRES transactional commit ids on all three
     * heads and the property landing; the query reads BOTH data tables'
     * post-transaction MoR state and the oracle recomputes each from the

@@ -491,8 +491,8 @@ final class IcebergRestServer(cat: GraftCatalog, exportRoot: String,
             commitSnapshot(ns, t, snap, meta, servedSeq, loc,
               stageToBranch = Some(branch))
           case None =>
-            try cat.commitPropertiesToBranch(ns, t, branch, setProps,
-              unsetProps): Unit
+            try cat.commitProperties(ns, t, setProps, unsetProps,
+              toBranch = Some(branch)): Unit
             catch {
               case e: IllegalArgumentException => bad(e.getMessage)
               case e: IllegalStateException => bad(e.getMessage)
@@ -1063,10 +1063,10 @@ final class IcebergRestServer(cat: GraftCatalog, exportRoot: String,
             // same refusals and manifest ordering as the single-table
             // path.
             if (eqRels.nonEmpty || posDeltas.nonEmpty)
-              cat.commitLandedMoRToBranch(ns, t, branch, dataRels,
-                eqRels, posDeltas, sourceRegion = "rest"): Unit
-            else cat.commitLandedFilesToBranch(ns, t, branch, dataRels,
-              sourceRegion = "rest"): Unit
+              cat.commitLandedMoR(ns, t, dataRels, eqRels, posDeltas,
+                sourceRegion = "rest", toBranch = Some(branch)): Unit
+            else cat.commitLandedFiles(ns, t, dataRels, sourceRegion = "rest",
+              toBranch = Some(branch)): Unit
           case None if eqRels.isEmpty && posDeltas.isEmpty =>
             cat.commitLandedFiles(ns, t, dataRels, sourceRegion = "rest",
               expectedParentSeq = Some(servedSeq),

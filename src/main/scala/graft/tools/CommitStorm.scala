@@ -9,7 +9,7 @@ import org.apache.spark.sql.SparkSession
   * sharing one catalog (its v2 commit gate simulates the multi-region
   * form in-memory — reference/modules/sync-core/.../InMemoryCommitGateAdapter.java:29).
   * Here the catalog's commit point is an atomic create-if-absent of the
-  * next version file (GraftCatalog.casCommit), which needs NO in-process
+  * next version file (GraftCatalog's commit funnel), which needs NO in-process
   * coordination — so two separate JVMs must be able to interleave
   * commits with zero lost updates. GeoReplicationSpec spawns this main
   * as a child process against the spec's own warehouse and asserts the

@@ -2,7 +2,6 @@ package graft.tools
 
 import graft.SparkEntry
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 
 /** Optimization-round diagnostic runner (guide §1/§7): run one declared
   * query and print per-stage wall/executor-cpu/shuffle metrics from a
@@ -16,14 +15,7 @@ object DiagOne {
     require(args.nonEmpty, "usage: DiagOne <queryName> [repeat]")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .withExtensions(new graft.functions.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.autoBroadcastJoinThreshold", "64m")
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      .config("spark.ui.enabled", "false")
+    val builder = graft.GraftSession.builder(cpus.toInt)
     // A/B config experiments: SPARK_GRAFT_EXTRA_CONF="k=v;k=v"
     sys.env.get("SPARK_GRAFT_EXTRA_CONF").foreach(_.split(";").filter(_.nonEmpty)
       .foreach { kv => val Array(k, v) = kv.split("=", 2); builder.config(k, v) })
