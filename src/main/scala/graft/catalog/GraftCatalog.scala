@@ -5,7 +5,7 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.util.UUID
 import scala.jdk.CollectionConverters._
 
-import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.hadoop.fs.{FileStatus, Path => HPath}
 import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
@@ -13,6 +13,7 @@ import org.apache.spark.sql.catalyst.expressions.UnsafeProjection
 import org.apache.spark.sql.catalyst.util.CharVarcharUtils
 import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.execution.datasources.{FileFormat, HadoopFsRelation, PartitionedFile}
+import org.apache.spark.sql.execution.datasources.json.JsonFileFormat
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetReadSupport, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, BooleanType, ByteType, DataType, DateType, DecimalType, DoubleType, FloatType, IntegerType, LongType, MapType, NumericType, ShortType, StringType, StructField, StructType, TimestampType}
@@ -52,8 +53,8 @@ import org.apache.spark.sql.types.{ArrayType, BooleanType, ByteType, DataType, D
   * manifests are consumed two ways — [[filesTable]] serves them as a
   * DataFrame (the `t.files` metadata table feeding
   * SnapshotDiff/GcPlanner/verification joins: a local frame from the
-  * manifest cache for a few manifests, a DISTRIBUTED scan past Spark's
-  * parallel-discovery threshold), while scan planning reads just the scanned version's
+  * manifest cache up to Spark's recommended task size in manifest bytes,
+  * a DISTRIBUTED scan past it), while scan planning reads just the scanned version's
   * manifests through a per-manifest immutable cache (the same transient
   * planning read Iceberg's driver does). Manifests are JSON-lines —
   * row-based like Iceberg's Avro manifests, splittable for Spark, and
@@ -399,7 +400,7 @@ final class GraftCatalog(val spark: SparkSession, val warehouse: String) {
 
   // ---- manifests ----
 
-  private val ManifestSchema = "path STRING, size_bytes LONG"
+  private val ManifestSchema = StructType.fromDDL("path STRING, size_bytes LONG")
 
   /** One manifest row: a data file plus optional per-column min/max
     * (Iceberg's lower_bounds/upper_bounds, the scan-pruning substrate)
@@ -517,8 +518,8 @@ final class GraftCatalog(val spark: SparkSession, val warehouse: String) {
     * SCAN-PLANNING read (transient, per-version) through the manifest
     * cache. Delete files are excluded — see [[deleteFileEntries]]; the
     * metadata-table form of every entry, delete files included, is
-    * [[filesTable]] (driver-local for a few manifests, a distributed scan
-    * past Spark's parallel-discovery threshold). */
+    * [[filesTable]] (driver-local up to Spark's recommended task size in
+    * manifest bytes, a distributed scan past it). */
   def dataFileEntries(ns: String, name: String, snap: Snapshot): Seq[(String, Long)] =
     snap.manifests.filterNot(isDeleteManifest).flatMap(manifestEntries(ns, name, _))
 
@@ -685,7 +686,10 @@ final class GraftCatalog(val spark: SparkSession, val warehouse: String) {
     * the Bloom bitsets of `bloomCols` while it writes — no stats job
     * re-reads the staged bytes, the driver lists no directory, and the
     * session conf is never touched (the writer pins INT64 micros
-    * itself).
+    * itself). Every file lands directly in `data/`, named by the
+    * staging's op-id ([[GraftCatalog.opPrefix]]); a failed staging
+    * deletes its own op-id's files and nothing else
+    * ([[GraftCatalog.deleteStaged]]).
     *
     * Where the rows are written: a `df` whose optimized plan is a
     * driver-local `LocalRelation`, staged unaligned, whose exact bytes
@@ -761,11 +765,11 @@ final class GraftCatalog(val spark: SparkSession, val warehouse: String) {
     val rows0 = laid.select(col("*") +: extras: _*)
     val rows =
       if (align.isEmpty) rows0 else rows0.sortWithinPartitions(align.map(col): _*)
-    val stagingRel = s"data/${UUID.randomUUID().toString.take(8)}"
+    val op = UUID.randomUUID().toString.take(8)
     val tableAbs = tableDir(ns, name).toAbsolutePath.toString
     val conf = new org.apache.spark.util.SerializableConfiguration(
       spark.sparkContext.hadoopConfiguration)
-    val task = new RowParquetWriter.StageTask(tableAbs, stagingRel,
+    val task = new RowParquetWriter.StageTask(tableAbs, GraftCatalog.opPrefix(op),
       rows.schema.json, fields.length, derived.map(_._1),
       bloomTs.map { case (c, isTs) =>
         GraftCatalog.bloomKeyOf(if (isTs) Some(TimestampType) else None, c) },
@@ -803,7 +807,7 @@ final class GraftCatalog(val spark: SparkSession, val warehouse: String) {
       }
       written.sortBy(_._1)
     } catch { case e: Throwable =>
-      deleteTree(tableDir(ns, name).resolve(stagingRel)); throw e
+      GraftCatalog.deleteStaged(tableAbs, op, conf.value); throw e
     }
   }
 
@@ -853,7 +857,7 @@ final class GraftCatalog(val spark: SparkSession, val warehouse: String) {
       }.toMap
     }
     // key the join back by FULL absolute path, not basename: the commit
-    // path's one-staging-dir layout makes basenames unique, but
+    // path's op-id-prefixed names are unique, but
     // backfillStats feeds arbitrary registered manifests through here,
     // where data/a/part-0.parquet and data/b/part-0.parquet coexist —
     // a basename map would hand one file the other's bounds and
@@ -1377,12 +1381,12 @@ final class GraftCatalog(val spark: SparkSession, val warehouse: String) {
   }
 
   /** The files one commit writes, and the head it stages against. Every
-    * staging directory and manifest is recorded, so the funnel removes
+    * staged data file and manifest is recorded, so the funnel removes
     * all of them when the commit fails, however far it got — without
     * this they are referenced by no version and accumulate under
     * contention (expiry only reclaims what expired versions reference). */
   private final class Stage(ns: String, name: String, ref: Option[String]) {
-    private val dirs = scala.collection.mutable.LinkedHashSet.empty[Path]
+    private val staged = scala.collection.mutable.ArrayBuffer.empty[String]
     // manifest -> (files, bytes) of everything written, and the
     // manifests of the current attempt alone
     private val written = scala.collection.mutable.LinkedHashMap.empty[String, (Long, Long)]
@@ -1403,12 +1407,12 @@ final class GraftCatalog(val spark: SparkSession, val warehouse: String) {
       GraftCatalog.validatedPartitionSpec(s"$ns.$name", props, schema)
 
     /** [[stageDataFiles]] under the head's properties, recording the
-      * staging directory. */
+      * staged files. */
     private def data(df: DataFrame, alignCols: Seq[Column] = Seq.empty,
              derived: Seq[(String, Column)] = Seq.empty,
              bloomCols: Seq[String] = Seq.empty): Seq[(String, RowParquetWriter.Written)] = {
       val files = stageDataFiles(ns, name, df, props, alignCols, derived, bloomCols)
-      files.foreach { case (p, _) => dirs += tableDir(ns, name).resolve(p).getParent }
+      staged ++= files.map(_._1)
       files
     }
 
@@ -1495,7 +1499,8 @@ final class GraftCatalog(val spark: SparkSession, val warehouse: String) {
     }
 
     def cleanup(): Unit = {
-      dirs.foreach(deleteTree)
+      GraftCatalog.deleteDataFiles(tableDir(ns, name).toString, staged.iterator,
+        spark.sparkContext.hadoopConfiguration)
       written.keys.foreach(dropManifest(ns, name, _))
     }
   }
@@ -1509,7 +1514,7 @@ final class GraftCatalog(val spark: SparkSession, val warehouse: String) {
     * stages the change's files and returns it; every CAS attempt then
     * applies it to the freshly read parent ([[nextVersion]]) and
     * [[casCommitAt]] publishes. On any throwable every manifest and
-    * staging directory the change wrote is removed. */
+    * data file the change staged is removed. */
   private def commit(ns: String, name: String, commitId: Option[String] = None,
                      ref: Option[String] = None, maxRetries: Int = 5)
                     (stage: Stage => Change): Snapshot = {
@@ -1969,20 +1974,24 @@ final class GraftCatalog(val spark: SparkSession, val warehouse: String) {
     * reads). Without a recorded schema the files are read through
     * `spark.read.parquet`, which infers it. */
   private def scanFiles(ns: String, name: String, entries: Seq[(String, Long)],
-                        schema: Option[StructType]): DataFrame = {
-    def abs(rel: String) = tableDir(ns, name).resolve(rel).toString
+                        schema: Option[StructType]): DataFrame =
     schema match {
       case Some(st) =>
-        val fs = new HPath(tableDir(ns, name).toString)
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val files = entries.map { case (rel, size) =>
-          fs.makeQualified(new HPath(abs(rel))) -> size }
         val dataSchema = GraftCatalog.erasedNullability(
           CharVarcharUtils.replaceCharVarcharWithStringInSchema(st)).asInstanceOf[StructType]
-        spark.baseRelationToDataFrame(HadoopFsRelation(new ManifestFileIndex(files),
+        spark.baseRelationToDataFrame(HadoopFsRelation(fileIndex(ns, name, entries),
           new StructType(), dataSchema, None, new ParquetFileFormat, Map.empty)(spark))
-      case None => spark.read.parquet(entries.map(e => abs(e._1)): _*)
+      case None =>
+        spark.read.parquet(entries.map(e => tableDir(ns, name).resolve(e._1).toString): _*)
     }
+
+  /** A [[ManifestFileIndex]] of table-relative `entries` (path, recorded
+    * size), qualified against the table's file system. */
+  private def fileIndex(ns: String, name: String, entries: Seq[(String, Long)]): ManifestFileIndex = {
+    val fs = new HPath(tableDir(ns, name).toString)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    new ManifestFileIndex(entries.map { case (rel, size) =>
+      fs.makeQualified(new HPath(tableDir(ns, name).resolve(rel).toString)) -> size })
   }
 
   // one driver-side parquet reader per read schema (the reader captures
@@ -3928,27 +3937,40 @@ final class GraftCatalog(val spark: SparkSession, val warehouse: String) {
     * delete manifests included — a file two manifests carry (a replace
     * re-manifests what it keeps) appears twice. size_bytes is the
     * AUTHORITATIVE size recorded at commit time. Which side reads the
-    * manifests follows `spark.sql.sources.parallelPartitionDiscovery.threshold`:
-    *  - at most that many manifests, the DRIVER builds the rows from the
-    *    manifest cache as a local frame (no job; a GC diff over it folds
-    *    on the driver, [[graft.plans.FoldLocalRelations]]);
-    *  - more, a DISTRIBUTED JSON scan of the manifest files, so
+    * manifests follows their bytes, against
+    * [[GraftCatalog.LocalFilesTableBytes]] (Spark's recommended maximum
+    * task size — a driver-local relation ships inside the tasks of any
+    * distributed consumer):
+    *  - at or under it, the DRIVER builds the rows from the manifest
+    *    cache as a local frame (no job; a GC diff over it folds on the
+    *    driver, [[graft.plans.FoldLocalRelations]]). Scan planning loads
+    *    the same manifests into the same cache;
+    *  - over it, a DISTRIBUTED JSON scan of the manifest files planned
+    *    through a [[ManifestFileIndex]] (no listing job), so
     *    reconciliation joins scale to manifest sets far past driver memory.
-    * The setting is the one that already decides this read's cost: the
-    * JSON scan's own file index stats its paths on the driver up to that
-    * many and runs a listing job past it. Under it, the scan's driver
-    * work is already O(manifests) and its one job reads files the
-    * manifest cache holds; past it, the scan is distributed end to end.
-    * A separate constant would let the two halves of one read disagree. */
+    * A version missing from the log (expired, or never committed) is
+    * refused: an empty frame would make every listed file an orphan. */
   def filesTable(ns: String, name: String, seq: Long): DataFrame = {
     import spark.implicits._
-    val manifests = snapshots(ns, name).find(_.seq == seq).map(_.manifests).getOrElse(Seq.empty)
-    if (manifests.size <= spark.sessionState.conf.parallelPartitionDiscoveryThreshold)
-      manifests.flatMap(manifestEntries(ns, name, _)).toDF("path", "size_bytes")
-    else spark.read.schema(ManifestSchema)
-      .json(manifests.map(m => tableDir(ns, name).resolve(m).toString): _*)
-      .select("path", "size_bytes")
+    val manifests = versionManifests(ns, name, seq)
+    if (manifests.map(_._2).sum <= GraftCatalog.LocalFilesTableBytes)
+      manifests.flatMap(m => manifestEntries(ns, name, m._1)).toDF("path", "size_bytes")
+    else manifestScan(ns, name, manifests)
   }
+
+  /** [[filesTable]]'s distributed side, whatever the manifests' bytes. */
+  private[graft] def filesTableScan(ns: String, name: String, seq: Long): DataFrame =
+    manifestScan(ns, name, versionManifests(ns, name, seq))
+
+  /** (manifest, file bytes) of version `seq`; refuses a missing version. */
+  private def versionManifests(ns: String, name: String, seq: Long): Seq[(String, Long)] =
+    snapshots(ns, name).find(_.seq == seq).getOrElse(throw new NoSuchElementException(
+      s"no version $seq of $ns.$name (expired, or never committed)"))
+      .manifests.map(m => m -> Files.size(tableDir(ns, name).resolve(m)))
+
+  private def manifestScan(ns: String, name: String, manifests: Seq[(String, Long)]): DataFrame =
+    spark.baseRelationToDataFrame(HadoopFsRelation(fileIndex(ns, name, manifests),
+      new StructType(), ManifestSchema, None, new JsonFileFormat, Map.empty)(spark))
 
   // ---- G1: snapshot expiry ----
 
@@ -3963,11 +3985,11 @@ final class GraftCatalog(val spark: SparkSession, val warehouse: String) {
     * manifests wholesale would destroy it (caught by CatalogSpec's
     * replace-then-expire case). Cost is O(kept live files) driver-side
     * through the manifest cache — the same planner-scale read a table
-    * scan does. Each commit stages into its own `data/<dir>/`, so the
-    * delete also removes every such directory it leaves empty — else the
-    * data tree's prefix count, which decides where a listing runs
-    * ([[graft.sources.StorageOps.listing]]), would grow with history
-    * rather than with live commits. Returns the removed data-file paths. */
+    * scan does. Files are staged flat under `data/`; a table staged
+    * before that layout keeps per-commit `data/<dir>/` directories, and
+    * the delete also removes every such directory it leaves empty
+    * ([[GraftCatalog.deleteDataFiles]]). Returns the removed data-file
+    * paths. */
   private def expire(ns: String, name: String, keep: Snapshot => Boolean): Seq[String] = {
     val snaps = snapshots(ns, name)
     val (kept, expired) = snaps.partition(keep)
@@ -4090,10 +4112,12 @@ final class GraftCatalog(val spark: SparkSession, val warehouse: String) {
 object GraftCatalog {
 
   /** Delete the table-relative files `rels` under `base`, then each
-    * `data/<dir>/` staging directory they came from that is now empty.
-    * The directory delete is non-recursive after an emptiness check, so
-    * a directory still holding any file (an aborted commit's, a
-    * concurrent writer's) stays. */
+    * `data/<dir>/` directory they came from that is now empty. Files are
+    * staged flat under `data/`, which is never removed; the per-commit
+    * directories are those of tables staged before that layout. The
+    * directory delete is non-recursive after an emptiness check, so a
+    * directory still holding any file (an aborted commit's, a concurrent
+    * writer's) stays. */
   private[catalog] def deleteDataFiles(base: String, rels: Iterator[String],
                                        conf: org.apache.hadoop.conf.Configuration): Unit = {
     val dirs = scala.collection.mutable.LinkedHashSet.empty[HPath]
@@ -4110,6 +4134,30 @@ object GraftCatalog {
       catch { case _: java.io.IOException => }
     }
   }
+
+  /** The table-relative name prefix of the files one staging operation
+    * `op` writes: `data/<op>`, each file `data/<op>-<part>.parquet` —
+    * flat in `data/` (Iceberg's default location layout for an
+    * unpartitioned table), so no level of a table's tree widens with its
+    * commit count. */
+  private[graft] def opPrefix(op: String): String = s"data/$op"
+
+  /** Delete the files a failed staging under op-id `op` wrote: the files
+    * of `base/data/` named `<op>-…` ([[opPrefix]], with their checksum
+    * siblings). `data/` itself and every other commit's files stay. */
+  private[graft] def deleteStaged(base: String, op: String,
+                                  conf: org.apache.hadoop.conf.Configuration): Unit = {
+    val dir = new HPath(s"$base/data")
+    val fs = dir.getFileSystem(conf)
+    val mine = try fs.listStatus(dir, (p: HPath) => p.getName.startsWith(s"$op-"))
+               catch { case _: java.io.FileNotFoundException => Array.empty[FileStatus] }
+    mine.foreach(st => fs.delete(st.getPath, false))
+  }
+
+  /** The manifest bytes up to which [[GraftCatalog.filesTable]] reads a
+    * version on the driver: 1,000 KiB, Spark's recommended maximum task
+    * size (the size at which `TaskSetManager` warns). */
+  val LocalFilesTableBytes: Long = 1000L * 1024
 
   /** Manifest-unit kinds for [[GraftCatalog.commitFilesMor]] /
     * commitFilesReplaceMor — mapped onto the manifest-name prefixes the

@@ -580,10 +580,10 @@ private[catalog] final class GraftCowWrite(ctx: GraftRowLevelContext,
   override def description(): String = op.description()
   override def toBatch: BatchWrite = this
 
-  // one staging dir per statement — the same layout commitAppend's
-  // staging uses, so gc/orphan heuristics treat aborted leftovers
-  // identically
-  private val stagingRel = s"data/cow-${UUID.randomUUID().toString.take(8)}"
+  // one op-id per statement, its files flat under data/ — the same
+  // layout commitAppend's staging uses, so gc/orphan heuristics treat
+  // aborted leftovers identically
+  private val opId = s"cow-${UUID.randomUUID().toString.take(8)}"
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
     val tableSchema = ctx.cat.tableSchema(ctx.ns, ctx.name)
@@ -596,7 +596,7 @@ private[catalog] final class GraftCowWrite(ctx: GraftRowLevelContext,
     // through unchanged
     val physJson = tableSchema.map(GraftCatalog.physicalSchema)
       .getOrElse(writeSchema).json
-    new GraftCowWriterFactory(ctx.tableDirAbs, stagingRel, physJson,
+    new GraftCowWriterFactory(ctx.tableDirAbs, GraftCatalog.opPrefix(opId), physJson,
       new SerializableConfiguration(ctx.spark.sparkContext.hadoopConfiguration))
   }
 
@@ -620,12 +620,8 @@ private[catalog] final class GraftCowWrite(ctx: GraftRowLevelContext,
     }
   }
 
-  override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(ctx.tableDirAbs)
-      .getFileSystem(ctx.spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(s"${ctx.tableDirAbs}/$stagingRel"),
-      true): Unit
-  }
+  override def abort(messages: Array[WriterCommitMessage]): Unit =
+    GraftCatalog.deleteStaged(ctx.tableDirAbs, opId, ctx.spark.sparkContext.hadoopConfiguration)
 }
 
 /** Per-task MoR delta: new data files with in-line stats + position-
@@ -647,7 +643,7 @@ private[catalog] final class GraftDeltaWrite(ctx: GraftRowLevelContext,
   override def description(): String = op.description()
   override def toBatch: org.apache.spark.sql.connector.write.DeltaBatchWrite = this
 
-  private val stagingRel = s"data/mor-${UUID.randomUUID().toString.take(8)}"
+  private val opId = s"mor-${UUID.randomUUID().toString.take(8)}"
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo)
       : org.apache.spark.sql.connector.write.DeltaWriterFactory = {
@@ -659,7 +655,7 @@ private[catalog] final class GraftDeltaWrite(ctx: GraftRowLevelContext,
         s"schema ${tableSchema.map(_.simpleString).getOrElse("<none>")}")
     val writeSchema = tableSchema.getOrElse(rowSchema)
     // physical column names in the staged files (see GraftCowWrite)
-    new GraftDeltaWriterFactory(ctx.tableDirAbs, stagingRel,
+    new GraftDeltaWriterFactory(ctx.tableDirAbs, GraftCatalog.opPrefix(opId),
       GraftCatalog.physicalSchema(writeSchema).json,
       new SerializableConfiguration(ctx.spark.sparkContext.hadoopConfiguration))
   }
@@ -684,22 +680,18 @@ private[catalog] final class GraftDeltaWrite(ctx: GraftRowLevelContext,
     }
   }
 
-  override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(ctx.tableDirAbs)
-      .getFileSystem(ctx.spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(s"${ctx.tableDirAbs}/$stagingRel"),
-      true): Unit
-  }
+  override def abort(messages: Array[WriterCommitMessage]): Unit =
+    GraftCatalog.deleteStaged(ctx.tableDirAbs, opId, ctx.spark.sparkContext.hadoopConfiguration)
 }
 
 private[catalog] final class GraftDeltaWriterFactory(tableDirAbs: String,
-                                                     stagingRel: String,
+                                                     opPrefix: String,
                                                      schemaJson: String,
                                                      conf: SerializableConfiguration)
     extends org.apache.spark.sql.connector.write.DeltaWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long)
       : org.apache.spark.sql.connector.write.DeltaWriter[InternalRow] =
-    new GraftDeltaDataWriter(tableDirAbs, stagingRel, partitionId, taskId,
+    new GraftDeltaDataWriter(tableDirAbs, opPrefix, partitionId, taskId,
       schemaJson, conf)
 }
 
@@ -710,7 +702,7 @@ private[catalog] final class GraftDeltaWriterFactory(tableDirAbs: String,
   * (unsorted — graft's positional anti-join is order-insensitive; the
   * Iceberg spec's sort recommendation is an export-time nicety). */
 private[catalog] final class GraftDeltaDataWriter(tableDirAbs: String,
-                                                  stagingRel: String,
+                                                  opPrefix: String,
                                                   partitionId: Int,
                                                   taskId: Long,
                                                   schemaJson: String,
@@ -732,7 +724,7 @@ private[catalog] final class GraftDeltaDataWriter(tableDirAbs: String,
 
   override def insert(row: InternalRow): Unit = {
     if (dataW == null) {
-      dataRel = s"$stagingRel/part-$partitionId-$taskId.parquet"
+      dataRel = s"$opPrefix-part-$partitionId-$taskId.parquet"
       dataW = new RowParquetWriter(s"$tableDirAbs/$dataRel", rowSchema, conf.value)
     }
     dataW.write(row)
@@ -740,7 +732,7 @@ private[catalog] final class GraftDeltaDataWriter(tableDirAbs: String,
 
   override def delete(meta: InternalRow, id: InternalRow): Unit = {
     if (delW == null) {
-      delRel = s"$stagingRel/del-$partitionId-$taskId.parquet"
+      delRel = s"$opPrefix-del-$partitionId-$taskId.parquet"
       delW = new RowParquetWriter(s"$tableDirAbs/$delRel", delSchema, conf.value)
     }
     val file = id.getUTF8String(0)
@@ -776,12 +768,12 @@ private[catalog] final class GraftDeltaDataWriter(tableDirAbs: String,
 }
 
 private[catalog] final class GraftCowWriterFactory(tableDirAbs: String,
-                                                   stagingRel: String,
+                                                   opPrefix: String,
                                                    schemaJson: String,
                                                    conf: SerializableConfiguration)
     extends DataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new GraftCowDataWriter(tableDirAbs, stagingRel, partitionId, taskId,
+    new GraftCowDataWriter(tableDirAbs, opPrefix, partitionId, taskId,
       schemaJson, conf)
 }
 
@@ -792,7 +784,7 @@ private[catalog] final class GraftCowWriterFactory(tableDirAbs: String,
   * that never reached commit are unreferenced and fall to the orphan
   * sweep. */
 private[catalog] final class GraftCowDataWriter(tableDirAbs: String,
-                                                stagingRel: String,
+                                                opPrefix: String,
                                                 partitionId: Int,
                                                 taskId: Long,
                                                 schemaJson: String,
@@ -805,7 +797,7 @@ private[catalog] final class GraftCowDataWriter(tableDirAbs: String,
 
   override def write(row: InternalRow): Unit = {
     if (w == null) {
-      rel = s"$stagingRel/part-$partitionId-$taskId.parquet"
+      rel = s"$opPrefix-part-$partitionId-$taskId.parquet"
       w = new RowParquetWriter(s"$tableDirAbs/$rel", schema, conf.value)
     }
     w.write(row)

@@ -1164,7 +1164,9 @@ object IcebergExport {
     * store's digests stable across retention). */
   private def snapshotId(graftSeq: Long): Long = 1000L + graftSeq
 
-  /** `data/<stagingId>/<part>.parquet` -> flat unique basename. The
+  /** A table-relative data path (`data/<op-id>-<part>.parquet`, or
+    * `data/<dir>/<part>.parquet` in a table staged before the flat
+    * layout) -> flat unique basename. The
     * hash prefix keys on the FULL relative path: plain '/'->'-'
     * flattening lets distinct rel paths collide (`a/b-c` vs `a-b/c`)
     * and the REPLACE_EXISTING copy would silently overwrite one file

@@ -176,9 +176,10 @@ private[graft] object RowParquetWriter {
     case _ => (a, b) => a.asInstanceOf[Comparable[Any]].compareTo(b)
   }
 
-  /** The writer side of `GraftCatalog`'s staging: writes rows under
-    * `tableDirAbs/stagingRel` and returns each file's (table-relative
-    * path, [[Written]]). [[run]] is the task body of the one staging job
+  /** The writer side of `GraftCatalog`'s staging: writes rows as
+    * `tableDirAbs/<opPrefix>-<part>.parquet` (`GraftCatalog.opPrefix`)
+    * and returns each file's (table-relative path, [[Written]]). [[run]]
+    * is the task body of the one staging job
     * (an empty partition writes nothing; file names carry the task
     * attempt id, so a retried attempt never collides with a failed
     * one's leftovers); [[writeLocal]] is the same code on the driver for
@@ -191,7 +192,7 @@ private[graft] object RowParquetWriter {
     * sorted by those values and a new file starts at every tuple
     * boundary, so each file holds exactly ONE partition tuple. */
   final class StageTask(tableDirAbs: String,
-                        stagingRel: String,
+                        opPrefix: String,
                         rowSchemaJson: String,
                         nData: Int,
                         derivedKeys: Seq[String],
@@ -222,7 +223,7 @@ private[graft] object RowParquetWriter {
       var rel: String = null
       var tuple: UnsafeRow = null
       def open(): Unit = {
-        rel = s"$stagingRel/$prefix-${out.size}.parquet"
+        rel = s"$opPrefix-$prefix-${out.size}.parquet"
         w = new RowParquetWriter(s"$tableDirAbs/$rel", dataSchema, conf.value, derived, blooms)
       }
       def finish(): Unit = { out += rel -> w.close(); w = null }

@@ -974,16 +974,16 @@ final class IcebergRestServer(cat: GraftCatalog, exportRoot: String,
     if (dataFiles.isEmpty && deleteFiles.isEmpty)
       bad(s"snapshot $snapId adds no new files")
 
-    // copy into the warehouse under one commit-scoped staging dir; the
-    // footer probe refuses files that do not carry the table's columns
-    // (they would silently read as null) BEFORE anything commits
+    // copy into the warehouse flat under data/, named by one commit-scoped
+    // op-id; the footer probe refuses files that do not carry the table's
+    // columns (they would silently read as null) BEFORE anything commits
     val schema = cat.tableSchema(ns, t).getOrElse(
       bad(s"$ns.$t has no committed schema to validate against"))
-    val stageId = java.util.UUID.randomUUID().toString.take(8)
+    val op = s"rest-${java.util.UUID.randomUUID().toString.take(8)}"
     val tableRoot = Paths.get(cat.warehouse, ns, t)
-    val stageDir = tableRoot.resolve("data").resolve(s"rest-$stageId")
-    Files.createDirectories(stageDir)
-    def cleanup(): Unit = deleteTree(stageDir)
+    Files.createDirectories(tableRoot.resolve("data"))
+    def cleanup(): Unit = GraftCatalog.deleteStaged(tableRoot.toString, op,
+      cat.spark.sparkContext.hadoopConfiguration)
     try {
       def land(uri: String, i: Int, tag: String,
                requiredCols: Set[String] => Option[String]): String = {
@@ -993,9 +993,9 @@ final class IcebergRestServer(cat: GraftCatalog, exportRoot: String,
         val cols = IcebergExport.parquetColumnNames(src.toString,
           cat.spark.sparkContext.hadoopConfiguration).toSet
         requiredCols(cols).foreach(msg => bad(s"$tag file $uri $msg"))
-        val dest = stageDir.resolve(s"$tag$i-${src.getFileName}")
-        Files.copy(src, dest)
-        s"data/rest-$stageId/$tag$i-${src.getFileName}"
+        val rel = s"${GraftCatalog.opPrefix(op)}-$tag$i-${src.getFileName}"
+        Files.copy(src, tableRoot.resolve(rel))
+        rel
       }
       val dataRels = dataFiles.zipWithIndex.map { case (uri, i) =>
         land(uri, i, "", cols => {
@@ -1086,10 +1086,8 @@ final class IcebergRestServer(cat: GraftCatalog, exportRoot: String,
       }
     } catch { case e: Throwable =>
       // a refusal above the commit call (footer probe, missing file)
-      // must not leak half a staging dir
-      if (Files.isDirectory(stageDir) &&
-          !cat.latest(ns, t).exists(_.commitId == s"rest-snap-$snapId"))
-        cleanup()
+      // must not leak the files it landed so far
+      if (!cat.latest(ns, t).exists(_.commitId == s"rest-snap-$snapId")) cleanup()
       throw e
     }
   }

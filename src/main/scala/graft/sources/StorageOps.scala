@@ -77,6 +77,8 @@ object StorageOps {
     * A tree no level of which is wider than the threshold is therefore a
     * driver-local frame (`LocalRelation`) — no job, and the GC diff over
     * it folds on the driver too ([[graft.plans.FoldLocalRelations]]).
+    * A graft table's `data/` is such a tree whatever its commit count:
+    * every commit stages its files flat in it, with no subdirectory.
     * Like Spark's file index, the driver holds the files of the
     * directories it walks itself; the fan-out bounds the directories it
     * visits, not the files in one of them.
@@ -86,7 +88,8 @@ object StorageOps {
     * with `_` or `.` kept — Spark's own file listing hides those, and they
     * are exactly the `_tmp/`, `_staging/` and `._tmp_` orphans a GC sweep
     * must find. A directory that is gone by the time it is listed — a
-    * missing root, a staging directory an expiry removed between the
+    * missing root, the per-commit staging directory of a table staged
+    * before the flat layout, which an expiry removed between the
     * driver's walk and a task — holds no files. */
   def listing(spark: SparkSession, root: String): DataFrame = {
     import spark.implicits._

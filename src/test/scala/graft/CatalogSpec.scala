@@ -725,22 +725,59 @@ class CatalogSpec extends SparkSpec {
     // the replace re-manifests the files it keeps
     cat.commitFilesReplace("ns", "fm", kept.take(2), "r1")
     cat.commitAppend("ns", "fm", Seq((100L, "w")).toDF("id", "v"))
-    val key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getString(0), r.getLong(1))).toSeq.sorted
     cat.snapshots("ns", "fm").foreach { s =>
       val (local, jobs) = withJobs(rows(cat.filesTable("ns", "fm", s.seq)))
       assert(jobs.isEmpty, s"v${s.seq}: a ${s.manifests.size}-manifest filesTable ran jobs: $jobs")
-      spark.conf.set(key, 0L)
-      val scanned = try {
-        val df = cat.filesTable("ns", "fm", s.seq)
+      val scanned = {
+        val df = cat.filesTableScan("ns", "fm", s.seq)
         assert(df.queryExecution.executedPlan.toString.contains("FileScan json"))
         rows(df)
-      } finally spark.conf.unset(key)
+      }
       assert(local === scanned, s"v${s.seq}")
       assert(local.size.toLong ===
         s.manifests.map(m => Files.readAllLines(cat.tablePath("ns", "fm").resolve(m)).size).sum)
     }
+  }
+
+  test("filesTable past Spark's task-size bound in manifest bytes plans a JSON scan " +
+       "through the manifests and starts no job while the frame is built") {
+    val cat = freshCatalog()
+    cat.createTable("ns", "wide")
+    cat.commitAppend("ns", "wide", Seq((1L, "y")).toDF("id", "v"))
+    // one file whose string bounds (min = max, recorded in full) carry
+    // the version's manifests past the bound
+    cat.commitAppend("ns", "wide", Seq((2L, "x" * 600000)).toDF("id", "v"))
+    val head = cat.latest("ns", "wide").get
+    val bytes = head.manifests.map(m => Files.size(cat.tablePath("ns", "wide").resolve(m))).sum
+    assert(bytes > GraftCatalog.LocalFilesTableBytes)
+    val (df, jobs) = withJobs {
+      val df = cat.filesTable("ns", "wide", head.seq)
+      assert(df.queryExecution.executedPlan.toString.contains("FileScan json"))
+      df
+    }
+    assert(jobs.isEmpty, s"building a scan-side filesTable ran jobs: $jobs")
+    assert(df.collect().map(r => (r.getString(0), r.getLong(1))).toSet ===
+      cat.dataFileEntries("ns", "wide", head).toSet)
+    // the version before it is under the bound: a driver-local frame
+    assert(cat.filesTable("ns", "wide", 0).queryExecution.optimizedPlan
+      .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
+  }
+
+  test("filesTable refuses a version missing from the log, naming the table and seq: " +
+       "an expired one and one never committed") {
+    val cat = freshCatalog()
+    cat.createTable("ns", "gone")
+    (1 to 3).foreach(i => cat.commitAppend("ns", "gone", Seq(i.toLong).toDF("id")))
+    cat.expireSnapshots("ns", "gone", retainLast = 1)
+    Seq(0L, 9L).foreach { seq =>
+      val e = intercept[NoSuchElementException](cat.filesTable("ns", "gone", seq))
+      assert(e.getMessage.contains("ns.gone") && e.getMessage.contains(s"version $seq"),
+        e.getMessage)
+      intercept[NoSuchElementException](cat.filesTableScan("ns", "gone", seq))
+    }
+    assert(cat.filesTable("ns", "gone", 2).count() === 3L)
   }
 
   test("per-file blooms prune point lookups on hash-distributed keys where min/max cannot") {

@@ -248,10 +248,33 @@ class CommitContractSpec extends SparkSpec {
       s
     })
     val bad = rows(1).withColumn("v", boom(col("v")))
+    val data = cat.tablePath(ns, t).resolve("data")
+    val committed = files(data)
     intercept[Exception](cat.commitUpsert(ns, t, bad, Seq("id")))
     assert(unreferenced(cat, t) === Set.empty)
     intercept[Exception](cat.commitCdcApply(ns, t, bad, Seq(9L).toDF("id"), Seq("id")))
     assert(unreferenced(cat, t) === Set.empty)
     assert(cat.snapshots(ns, t).size === 2)
+    // the cleanup removed only the failed commits' own files from data/
+    assert(Files.isDirectory(data) && files(data) === committed)
+  }
+
+  test("a staging job that fails after some of its tasks landed files removes only " +
+       "its own op-id's files from data/: every other commit's files stay") {
+    val t = "part"
+    val cat = fixture(t)
+    val data = cat.tablePath(ns, t).resolve("data")
+    val committed = files(data)
+    assert(committed.filter(_.endsWith(".parquet")).size === 2)
+    // the other three tasks land their files before this one fails
+    val late = udf((s: String) => {
+      if (s == "r7") { Thread.sleep(500); throw new RuntimeException("boom") }
+      s
+    })
+    val rows40 = (1L to 40L).map(i => (i, s"r$i")).toDF("id", "v").repartition(4)
+    intercept[Exception](cat.commitAppend(ns, t, rows40.withColumn("v", late(col("v")))))
+    assert(unreferenced(cat, t) === Set.empty)
+    assert(Files.isDirectory(data) && files(data) === committed)
+    assert(cat.read(ns, t).count() === 4L)
   }
 }

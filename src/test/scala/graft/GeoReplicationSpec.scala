@@ -654,8 +654,35 @@ class GeoReplicationSpec extends SparkSpec {
     assert(countJobs.isEmpty, s"event counts ran jobs: $countJobs")
   }
 
-  test("expiry removes the staging directories it empties: after 20 append, compaction " +
-       "and expiry rounds the event log's data tree holds only live files' directories") {
+  test("a table past 32 staged commits and 32 manifests keeps a job-free orphan-GC " +
+       "plan: its data listing and filesTable are local relations") {
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    val cat = new GraftCatalog(spark, Files.createTempDirectory("graft-gc40").toString)
+    cat.createTable("ns", "t")
+    (1 to 40).foreach(i => cat.commitAppend("ns", "t", Seq((i.toLong, s"v$i")).toDF("id", "v")))
+    val head = cat.latest("ns", "t").get
+    assert(head.manifests.size === 40 && head.fileCount === 40L)
+    val tableRoot = cat.tablePath("ns", "t")
+    val listing = StorageOps.listing(spark, tableRoot.resolve("data").toString)
+    val reachable = cat.filesTable("ns", "t", head.seq)
+    assert(listing.queryExecution.optimizedPlan.isInstanceOf[LocalRelation])
+    assert(reachable.queryExecution.optimizedPlan.isInstanceOf[LocalRelation])
+    Files.write(tableRoot.resolve("data/abandoned.parquet"), Array[Byte](1))
+    val bare = new org.apache.hadoop.fs.Path(tableRoot.toString).toUri.getPath
+    val (orphans, jobs) = withJobs {
+      val inventory = StorageOps.listing(spark, tableRoot.resolve("data").toString)
+        .withColumn("path", org.apache.spark.sql.functions.regexp_replace($"path",
+          ".*" + java.util.regex.Pattern.quote(bare + "/"), ""))
+        .withColumn("seen_at", org.apache.spark.sql.functions.current_timestamp())
+      graft.operators.GcPlanner.orphans(inventory, cat.filesTable("ns", "t", head.seq),
+        Seq("path"), "seen_at").count()
+    }
+    assert(orphans === 1L, "the abandoned file is the one orphan")
+    assert(jobs.isEmpty, s"a 40-commit table's GC plan ran jobs: $jobs")
+  }
+
+  test("expiry keeps the event log's data tree at its live files: after 20 append, " +
+       "compaction and expiry rounds data/ holds exactly the latest version's files") {
     val svc = warmService()
     (1 to 20).foreach { i =>
       svc.coordinateWrite("ns", "t", Seq(i.toLong).toDF("id"), "us-east-1")
@@ -665,11 +692,13 @@ class GeoReplicationSpec extends SparkSpec {
     val sys = svc.regions("us-east-1")
     val data = sys.tablePath("_system", "sync_events").resolve("data")
     val listed = Files.list(data)
-    val dirs = try listed.iterator().asScala.map(p => s"data/${p.getFileName}").toSet
-               finally listed.close()
-    val live = sys.dataFiles("_system", "sync_events", sys.latest("_system", "sync_events").get)
-      .map(f => f.substring(0, f.lastIndexOf('/'))).toSet
-    assert(dirs === live)
+    val onDisk = try listed.iterator().asScala.map(p => s"data/${p.getFileName}")
+                   .filterNot(_.endsWith(".crc")).toSet
+                 finally listed.close()
+    val head = sys.latest("_system", "sync_events").get
+    val live = (sys.dataFileEntries("_system", "sync_events", head) ++
+      sys.deleteFileEntries("_system", "sync_events", head)).map(_._1).toSet
+    assert(onDisk === live)
   }
 
   test("concurrent load: 10 tables written in parallel, synced, 30 routed reads byte-identical (reference WriteSyncReadWorkflow)") {

@@ -873,6 +873,42 @@ class IcebergRestSpec extends SparkSpec {
     } finally server.stop()
   }
 
+  test("a REST commit lands its files flat under data/, and a refused one removes " +
+       "only its own files") {
+    import graft.tools.RestClient
+    val wh = Files.createTempDirectory("graft-restf-wh").toString
+    val cat = new GraftCatalog(spark, wh)
+    cat.createTable("fns", "seed")
+    val server = new IcebergRestServer(cat,
+      Files.createTempDirectory("graft-restf-exp").toString)
+    try {
+      val p = server.boundPort
+      assert(RestClient.createViaRest(p, "fns", "ft",
+        Seq("id" -> "long", "v" -> "double"))._1 === 200)
+      val root = cat.tablePath("fns", "ft")
+      def onDisk(): Set[String] = {
+        val s = Files.walk(root.resolve("data"))
+        try s.iterator().asScala.filter(Files.isRegularFile(_))
+          .map(f => root.relativize(f).toString).filterNot(_.endsWith(".crc")).toSet
+        finally s.close()
+      }
+      val batch = (0 until 50).map(i => (i.toLong, i / 10.0)).toDF("id", "v")
+      val (a, b) = RestClient.appendViaRest(spark, p, "fns", "ft", batch.repartition(2),
+        snapshotId = 555001L, workDir = Files.createTempDirectory("restf-w1").toString)
+      assert(a === 200, b)
+      val landed = onDisk()
+      assert(landed.nonEmpty && landed.forall("data/[^/]+\\.parquet".r.matches), landed)
+      assert(cat.dataFiles("fns", "ft", cat.latest("fns", "ft").get).toSet === landed)
+      // a replayed snapshot id is refused after its files landed: they
+      // go, the committed files stay
+      val (rc, rb) = RestClient.appendViaRest(spark, p, "fns", "ft", batch,
+        snapshotId = 555001L, workDir = Files.createTempDirectory("restf-w2").toString)
+      assert(rc === 409, rb)
+      assert(onDisk() === landed)
+      assert(cat.read("fns", "ft").count() === 50L)
+    } finally server.stop()
+  }
+
   test("REST multi-table TRANSACTION: a foreign client appends to TWO " +
        "tables through one POST /v1/transactions/commit — 204, both " +
        "heads advance with transactional commit ids; a stale " +
@@ -929,19 +965,15 @@ class IcebergRestSpec extends SparkSpec {
       assert(cat.read("ns", "ta").count() === 70L)
       assert(cat.listBranches("ns", "ta").isEmpty,
         "internal txn branches must be reclaimed on refusal")
-      // no stray landed files: the reclaimed stage dir is gone
+      // no stray landed files: every landed file left in data/ is live
       val dataDir = Paths.get(wh, "ns", "ta", "data")
-      val strays = Files.list(dataDir).iterator().asScala
-        .filter(d => d.getFileName.toString.startsWith("rest-"))
-        .filter(d => Files.list(d).iterator().asScala.nonEmpty)
-        .toList
       val liveRels = cat.dataFiles("ns", "ta",
         cat.latest("ns", "ta").get).toSet
-      strays.foreach { d =>
-        val live = Files.list(d).iterator().asScala.exists(f =>
-          liveRels.exists(r => f.toString.endsWith(r.split('/').last)))
-        assert(live, s"stage dir $d holds only reclaimed (dead) files")
-      }
+      val strays = Files.list(dataDir).iterator().asScala
+        .map(f => s"data/${f.getFileName}")
+        .filter(r => r.startsWith("data/rest-") && !liveRels(r))
+        .toList
+      assert(strays.isEmpty, s"landed files of reclaimed parts remain: $strays")
     } finally server.stop()
   }
 

@@ -1,6 +1,7 @@
 package graft
 
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.functions._
 
@@ -464,7 +465,7 @@ class RowLevelOpsSpec extends SparkSpec {
     assert(cat.latest("m", "boom").get.seq === before, "nothing published")
     assert(spark.sql(s"SELECT id, s FROM $c.m.boom ORDER BY id")
       .as[(Long, String)].collect().toSeq === Seq((1L, "a"), (2L, "b")))
-    // the write's staging dir (data/cow-*) must be gone
+    // the write's staged files (data/cow-*) must be gone
     val dataDir = java.nio.file.Paths.get(cat.warehouse, "m", "boom", "data")
     val leftovers = Files.list(dataDir).iterator()
     val cowDirs = new scala.collection.mutable.ArrayBuffer[String]
@@ -634,6 +635,51 @@ class RowLevelOpsSpec extends SparkSpec {
   private def inMorMode[T](body: => T): T = {
     spark.conf.set("spark.graft.rowlevel.mode", "merge-on-read")
     try body finally spark.conf.unset("spark.graft.rowlevel.mode")
+  }
+
+  test("every writer stages its new files flat under data/: driver-local and " +
+       "distributed appends, replace, compact, upsert, COW UPDATE, MOR DELETE") {
+    val (cat, c) = register()
+    cat.createTable("m", "flat")
+    val root = cat.tablePath("m", "flat")
+    def onDisk(): Set[String] = {
+      val s = Files.walk(root.resolve("data"))
+      try s.iterator().asScala.filter(Files.isRegularFile(_))
+        .map(p => root.relativize(p).toString).filterNot(_.endsWith(".crc")).toSet
+      finally s.close()
+    }
+    val flat = "data/[^/]+\\.parquet".r
+    def staged(writer: String)(body: => Any): Unit = {
+      val before = onDisk()
+      body
+      val added = onDisk() -- before
+      assert(added.nonEmpty, s"$writer staged no file")
+      assert(added.forall(flat.matches), s"$writer: $added")
+      val head = cat.latest("m", "flat").get
+      val live = (cat.dataFileEntries("m", "flat", head) ++
+        cat.deleteFileEntries("m", "flat", head)).map(_._1)
+      assert(live.forall(flat.matches), s"$writer: $live")
+    }
+    staged("driver-local append") {
+      cat.commitAppend("m", "flat", Seq((1L, "a"), (2L, "b")).toDF("id", "s"))
+    }
+    staged("distributed append") {
+      cat.commitAppend("m", "flat",
+        (3L to 40L).map(i => (i, s"s$i")).toDF("id", "s").repartition(3))
+    }
+    staged("replace") {
+      cat.commitReplace("m", "flat", cat.read("m", "flat").repartition(2))
+    }
+    staged("compact") { cat.compact("m", "flat", targetFileBytes = 256L * 1024 * 1024) }
+    staged("upsert") {
+      cat.commitUpsert("m", "flat", Seq((2L, "B"), (41L, "n")).toDF("id", "s"), Seq("id"))
+    }
+    staged("COW UPDATE") { spark.sql(s"UPDATE $c.m.flat SET s = 'u' WHERE id = 3") }
+    staged("MOR DELETE") { inMorMode { spark.sql(s"DELETE FROM $c.m.flat WHERE id = 4") } }
+    assert(spark.sql(s"SELECT count(*) FROM $c.m.flat").head().getLong(0) === 40L)
+    val dirs = Files.list(root.resolve("data"))
+    try assert(!dirs.iterator().asScala.exists(Files.isDirectory(_)), "no subdirectory")
+    finally dirs.close()
   }
 
   test("merge-on-read mode: UPDATE appends a delta (new data + position " +
