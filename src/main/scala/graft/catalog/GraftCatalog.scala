@@ -9,7 +9,7 @@ import org.apache.hadoop.fs.{FileStatus, Path => HPath}
 import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
-import org.apache.spark.sql.catalyst.expressions.UnsafeProjection
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, InterpretedUnsafeProjection, UnsafeProjection}
 import org.apache.spark.sql.catalyst.util.CharVarcharUtils
 import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.execution.datasources.{FileFormat, HadoopFsRelation, PartitionedFile}
@@ -693,10 +693,13 @@ final class GraftCatalog(val spark: SparkSession, val warehouse: String) {
     *
     * Where the rows are written: a `df` whose optimized plan is a
     * driver-local `LocalRelation`, staged unaligned, whose exact bytes
-    * fit one `write.target-file-size-bytes` file (the metadata-scale
+    * (counted by an interpreted projection, [[GraftCatalog.localBytes]]:
+    * no code is generated per commit) fit one
+    * `write.target-file-size-bytes` file (the metadata-scale
     * rule, [[GraftCatalog.driverScale]]), is written ON THE
     * DRIVER — the staging projection (derived stats, Bloom positions)
-    * folds into the `LocalRelation` (Catalyst's `ConvertToLocalRelation`)
+    * folds into the `LocalRelation` (Catalyst's `ConvertToLocalRelation`),
+    * or is left out when there is nothing to record beside the data,
     * and its rows go through the same [[RowParquetWriter.StageTask]]
     * code with no Spark job at all. That is every control-plane commit
     * (a `_system` event append, a watermark advance) and every small
@@ -738,9 +741,7 @@ final class GraftCatalog(val spark: SparkSession, val warehouse: String) {
         "aligned staging")
     // exact bytes of a driver-local batch (None: not driver-local)
     val localBytes = df.queryExecution.optimizedPlan match {
-      case local: LocalRelation =>
-        val toUnsafe = UnsafeProjection.create(local.schema)
-        Some(local.data.iterator.map(r => toUnsafe(r).getSizeInBytes.toLong).sum)
+      case local: LocalRelation => Some(GraftCatalog.localBytes(local.schema, local.data.iterator))
       case _ => None
     }
     // an aligned local batch is sorted by ONE task; an unaligned one is
@@ -762,7 +763,10 @@ final class GraftCatalog(val spark: SparkSession, val warehouse: String) {
     val extras = derived.zipWithIndex.map { case ((_, e), j) => e.as(s"__ptd_$j") } ++
       bloomPositions.zipWithIndex.map { case (e, j) => e.as(s"__ptb_$j") } ++
       alignCols.zip(align).map { case (c, n) => c.as(n) }
-    val rows0 = laid.select(col("*") +: extras: _*)
+    // a local batch with nothing to record beside its data reaches the
+    // writer straight from its relation; any job input gets its own plan
+    val rows0 =
+      if (extras.isEmpty && localBytes.nonEmpty) laid else laid.select(col("*") +: extras: _*)
     val rows =
       if (align.isEmpty) rows0 else rows0.sortWithinPartitions(align.map(col): _*)
     val op = UUID.randomUUID().toString.take(8)
@@ -887,6 +891,9 @@ final class GraftCatalog(val spark: SparkSession, val warehouse: String) {
          min(e).cast("string"), max(e).cast("string")) })
     val rows = df.groupBy(input_file_name().as("__file"))
       .agg(aggs.head, aggs.tail: _*).collect()
+    val keys = statFields.map(_.name) ++ derived.map(_._1)
+    // string bounds are cut as the writer cuts them (RowParquetWriter.close)
+    val strings = statFields.filter(_.dataType == StringType).map(_.name).toSet
     val scanned = rows.map { r =>
       // input_file_name returns a PERCENT-ENCODED URI (space -> %20);
       // java.net.URI decodes it back to the raw filesystem path the
@@ -904,9 +911,9 @@ final class GraftCatalog(val spark: SparkSession, val warehouse: String) {
         s"stagedFileStats($ns.$name): scanned file '$abs' matches no staged " +
           s"entry (${byAbs.keys.take(3).mkString(", ")}...) — path round-trip " +
           "broke; refusing to record its rows as 0"))
-      val keys = statFields.map(_.name) ++ derived.map(_._1)
       val colStats = keys.zipWithIndex.flatMap { case (k, i) =>
         (Option(r.getString(2 + 2 * i)), Option(r.getString(3 + 2 * i))) match {
+          case (Some(mn), Some(mx)) if strings(k) => GraftCatalog.stringBounds(mn, mx).map(k -> _)
           case (Some(mn), Some(mx)) => Some(k -> (mn, mx))
           case _ => None
         }
@@ -2255,9 +2262,11 @@ final class GraftCatalog(val spark: SparkSession, val warehouse: String) {
     * bounds the commit job recorded — exact (file bounds ARE the file's
     * min/max), zero data reads, same contract as [[countFast]]: None
     * when the version has delete manifests, any file lacks bounds for
-    * the column (all-null file, foreign commit), or the column is not
-    * stat-recorded — callers fall back to a scan. Numeric columns
-    * compare numerically (bounds are stored as strings). */
+    * the column (all-null file, foreign commit), the column is not
+    * stat-recorded, or it is a string column with a bound that may be a
+    * cut ([[GraftCatalog.stringBounds]]: a prefix or a rounded-up prefix
+    * is not the file's min or max) — callers fall back to a scan.
+    * Numeric columns compare numerically (bounds are stored as strings). */
   def minMaxFast(ns: String, name: String, column: String): Option[(String, String)] =
     latest(ns, name).flatMap { snap =>
       if (snap.manifests.exists(isDeleteManifest)) None
@@ -2275,20 +2284,24 @@ final class GraftCatalog(val spark: SparkSession, val warehouse: String) {
           val bounds = entries.map(_.stats.get(statKey))
           if (bounds.exists(_.isEmpty)) None
           else {
-            val numeric = snap.schemaJson
+            val dt = snap.schemaJson
               .map(DataType.fromJson(_).asInstanceOf[StructType])
-              .flatMap(_.fields.find(_.name == column))
-              .exists(_.dataType.isInstanceOf[org.apache.spark.sql.types.NumericType])
+              .flatMap(_.fields.find(_.name == column)).map(_.dataType)
+            val numeric = dt.exists(_.isInstanceOf[NumericType])
+            if (dt.contains(StringType) &&
+                bounds.exists(b => GraftCatalog.mayBeCut(b.get._1) || GraftCatalog.mayBeCut(b.get._2))) None
             // a double column can record "NaN"/"Infinity" bounds (same
             // guard readWhereAll carries) — metadata min/max is then
             // ill-defined; answer None and let the caller scan
-            if (numeric && bounds.exists(b =>
+            else if (numeric && bounds.exists(b =>
                   scala.util.Try(BigDecimal(b.get._1)).isFailure ||
                   scala.util.Try(BigDecimal(b.get._2)).isFailure)) None
             else {
+              // strings fold in UTF-8 byte order, Spark's string order (a
+              // Java String compare puts U+E000..U+FFFF above emoji)
               implicit val ord: Ordering[String] =
                 if (numeric) Ordering.by((s: String) => BigDecimal(s))
-                else Ordering.String
+                else Ordering.by((s: String) => org.apache.spark.unsafe.types.UTF8String.fromString(s))
               Some((bounds.map(_.get._1).min, bounds.map(_.get._2).max))
             }
           }
@@ -4028,10 +4041,13 @@ final class GraftCatalog(val spark: SparkSession, val warehouse: String) {
     removable
   }
 
-  /** Expire every version older than `seq` — what a checkpointing
-    * replace (the `_system` log compaction) leaves behind once it has
-    * landed as `seq`: the versions it folded and the files only they
-    * reference. Time travel on the table then starts at `seq`. */
+  /** Expire every version older than `seq`, and the files only they
+    * reference. Time travel on the table then starts at `seq`. Two
+    * callers: a checkpointing replace (the `_system` log compaction),
+    * once it has landed as `seq`, drops the versions it folded; the geo
+    * sync worker, once a batch's events are Completed, drops a replica's
+    * versions below the head the batch found
+    * ([[graft.service.GeoReplicationService.processPendingEvents]]). */
   def expireBefore(ns: String, name: String, seq: Long): Seq[String] =
     expire(ns, name, _.seq >= seq)
 
@@ -4272,6 +4288,63 @@ object GraftCatalog {
     * row count (min==max==count) — powers [[GraftCatalog.countFast]]
     * without a manifest-format change. Never matches a query column. */
   private[catalog] val RowsStatKey = "__rows"
+
+  /** Exact `UnsafeRow` bytes of driver-held rows of `schema` — the
+    * metadata-scale rule's measure of a local batch — through an
+    * interpreted projection, so a commit generates no code. */
+  private[catalog] def localBytes(schema: StructType, rows: Iterator[InternalRow]): Long = {
+    val toUnsafe = InterpretedUnsafeProjection.createProjection(
+      schema.fields.toSeq.zipWithIndex.map { case (f, i) => BoundReference(i, f.dataType, true) })
+    rows.map(toUnsafe(_).getSizeInBytes.toLong).sum
+  }
+
+  /** Code points a recorded string bound keeps: Iceberg's default
+    * `write.metadata.metrics.default = truncate(16)`. */
+  private[catalog] val StringBoundChars = 16
+
+  /** The first [[StringBoundChars]] code points of `s`, or None when `s`
+    * has no more than that. */
+  private def boundPrefix(s: String): Option[String] = {
+    var i = 0
+    var k = 0
+    while (k < StringBoundChars && i < s.length) {
+      i += Character.charCount(s.codePointAt(i))
+      k += 1
+    }
+    if (i >= s.length) None else Some(s.substring(0, i))
+  }
+
+  /** The (min, max) a file records for a string column whose values
+    * span `min` .. `max`: each cut to [[StringBoundChars]] code points,
+    * the max rounded up by incrementing its last code point (Iceberg's
+    * `UnicodeUtil.truncateStringMax`, skipping the surrogate range). Both
+    * still bound the file in the UTF-8 order pruning compares in
+    * ([[boundsLt]]), and every cut bound keeps exactly
+    * [[StringBoundChars]] code points, which is what [[mayBeCut]] tests.
+    * None when the cut max ends in U+10FFFF (rounding up would shorten
+    * it): the file then records no bound for the column. */
+  private[catalog] def stringBounds(min: String, max: String): Option[(String, String)] = {
+    val lower = boundPrefix(min).getOrElse(min)
+    boundPrefix(max) match {
+      case None => Some(lower -> max)
+      case Some(p) =>
+        val last = p.codePointBefore(p.length)
+        val next = last + 1
+        val up = if (next >= Character.MIN_SURROGATE && next <= Character.MAX_SURROGATE)
+          Character.MAX_SURROGATE + 1 else next
+        if (last == Character.MAX_CODE_POINT) None
+        else Some(lower -> (p.substring(0, p.length - Character.charCount(last)) +
+          new String(Character.toChars(up))))
+    }
+  }
+
+  /** Whether a recorded string bound may be a [[stringBounds]] cut
+    * rather than a value of the file: it has exactly
+    * [[StringBoundChars]] code points. Longer bounds, recorded before
+    * bounds were cut, are exact. */
+  private[catalog] def mayBeCut(bound: String): Boolean =
+    bound.length >= StringBoundChars &&
+      bound.codePointCount(0, bound.length) == StringBoundChars
 
   /** The columns a position-delete file is read under: the spec's
     * (table-relative data file, 0-based row ordinal). */

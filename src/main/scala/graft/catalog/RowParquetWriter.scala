@@ -28,10 +28,12 @@ import org.apache.spark.util.SerializableConfiguration
   * While writing it records, at zero extra IO, exactly the per-file
   * metadata the catalog's manifests carry: row count plus min/max
   * bounds for every prunable column (same type set as
-  * `GraftCatalog.prunableType`; compared in Spark's SQL order and
+  * `GraftCatalog.prunableType`; compared in Spark's SQL order,
   * stringified through the same Catalyst `Cast` as the re-read job
   * `GraftCatalog.stagedFileStats` uses for files graft did not write,
-  * so both producers record identical bounds).
+  * and string bounds cut to 16 code points by the same
+  * `GraftCatalog.stringBounds`, so both producers record identical
+  * bounds).
   *
   * Rows may be WIDER than `schema`: the fields after it carry values
   * the commit records but never writes — first one value per `derived`
@@ -135,8 +137,10 @@ private[graft] final class RowParquetWriter(absPath: String,
       case TimestampType => v.toString
       case _ => Cast(Literal(v, dt), StringType, Some("UTC")).eval(null).toString
     }
-    val bounds = statCols.zipWithIndex.flatMap { case ((_, dt, key), j) =>
+    val bounds = statCols.zipWithIndex.flatMap { case ((i, dt, key), j) =>
       if (mins(j) == null) None
+      else if (dt == StringType && i < nData)
+        GraftCatalog.stringBounds(str(mins(j), dt), str(maxs(j), dt)).map(key -> _)
       else Some(key -> ((str(mins(j), dt), str(maxs(j), dt))))
     }.toMap
     val bloomMap =

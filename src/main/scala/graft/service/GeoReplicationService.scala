@@ -90,6 +90,11 @@ final class GeoReplicationService(spark: SparkSession,
         "deadline_ms" -> LongType))
   }
 
+  /** Append `rows` to system log `name` under its declared schema, as a
+    * driver-local frame the catalog stages with no Spark job. */
+  private def append(name: String, rows: Seq[Row]): Unit =
+    sys.commitAppend("_system", name, localDf(name, rows), maxRetries = SystemRetries): Unit
+
   /** Rows of a system log as a typed driver-local frame. */
   private def localDf(name: String, rows: Seq[Row]): DataFrame =
     spark.createDataFrame(rows.asJava, systemSchemas(name))
@@ -104,9 +109,7 @@ final class GeoReplicationService(spark: SparkSession,
   // ---------------- registry (R1-R6) ----------------
 
   def registerTable(ns: String, table: String, region: String): Unit = {
-    sys.commitAppend("_system", "registry",
-      Seq((s"$ns.$table", region, "Active", System.currentTimeMillis()))
-        .toDF("entry", "region", "status", "updated_at"), maxRetries = SystemRetries)
+    append("registry", Seq(Row(s"$ns.$table", region, "Active", System.currentTimeMillis())))
     // atomic bump+clear: the epoch and the cached map live in ONE
     // reference, so a reader can never install a map scanned before this
     // invalidation (its CAS below compares the whole (epoch, map) pair)
@@ -147,10 +150,8 @@ final class GeoReplicationService(spark: SparkSession,
   // ---------------- sync events (Y1-Y8, event-sourced) ----------------
 
   private def appendEvents(rows: Seq[(String, String, String, String, String, String, Long)]): Unit =
-    sys.commitAppend("_system", "sync_events",
-      rows.map(r => (r._1, r._2, r._3, r._4, r._5, r._6, r._7, appendSeq.getAndIncrement()))
-        .toDF("event_id", "table_entry", "commit_id", "event_type", "target_region",
-              "status", "ts", "seq"), maxRetries = SystemRetries)
+    append("sync_events",
+      rows.map(r => Row(r._1, r._2, r._3, r._4, r._5, r._6, r._7, appendSeq.getAndIncrement())))
 
   // ---------------- event-log views and compaction ----------------
   // The _system tables are append-only event logs: every status change is
@@ -275,6 +276,9 @@ final class GeoReplicationService(spark: SparkSession,
                                    schemaJson: Option[String] = None,
                                    srcSeq: Long = 0L, bytes: Long = 0L)
 
+  /** A replica version's commit id is this prefix + its source commit's. */
+  private val ReplicaIdPrefix = "sync-"
+
   /** Copy batches launched by processPendingEvents — test observability:
     * a whole pending backlog must cost ONE copy batch, not O(events). */
   @volatile private[graft] var copyBatches: Int = 0
@@ -308,6 +312,17 @@ final class GeoReplicationService(spark: SparkSession,
     * a SUCCESSFUL commit already owns (previously both lived in one
     * try). A 100k-event backlog therefore costs O(tables) sequential
     * CAS chains + 2 system appends, not 100k driver-serial round trips.
+    *
+    * Replica retention, one batch deep: once the batch's statuses are
+    * appended, each synced table's versions below the head phase 3 found
+    * are expired ([[GraftCatalog.expireBefore]]). They came from earlier
+    * batches whose events are Completed, so no replay needs their
+    * `sync-<id>` for the funnel's replay probe; a crash before the status
+    * append skips the expiry. The batch's own versions stay in the
+    * replica's snapshot list until the region's next batch. Expiry never
+    * reaches a version the region committed itself, one whose event did
+    * not complete in this batch, nor the promoted version
+    * ([[verifyAndPromote]]) that [[GraftCatalog.readVisible]] reads.
     * Returns (completed, failed). */
   def processPendingEvents(region: String): (Int, Int) = {
     val pending = events("Pending", region)
@@ -402,6 +417,11 @@ final class GeoReplicationService(spark: SparkSession,
     // CAS never contends, and a watermark append failure can no longer
     // fail (or W8-compensate!) an event whose commit already succeeded.
     val now = System.currentTimeMillis()
+    // replica retention: the (seq, commit id) versions of each table this
+    // batch syncs, as phase 3 finds them
+    val found = dataSyncs.map(p => (p.ns, p.table)).distinct.map { case (ns, t) =>
+      (ns, t) -> regions(region).snapshots(ns, t).map(v => (v.seq, v.commitId))
+    }.filter(_._2.nonEmpty)
     val results = preps.groupBy(_.entry).toSeq.par.map { case (_, evs0) =>
       // replay in SOURCE commit order — wall-clock commit ts first (the
       // only cross-source-comparable key), then the per-source snapshot
@@ -424,7 +444,7 @@ final class GeoReplicationService(spark: SparkSession,
               // commit, before the status append) a no-op duplicate
               // instead of a second version
               regions(region).commitFiles(p.ns, p.table, p.files, sourceRegion = region,
-                schemaJson = p.schemaJson, commitId = Some(s"sync-${p.commitId}"))
+                schemaJson = p.schemaJson, commitId = Some(ReplicaIdPrefix + p.commitId))
               ("Completed", Some(p.entry -> p.watermarkMs))
             } catch {
               case _: GraftCatalog.DuplicateCommitException =>
@@ -464,13 +484,22 @@ final class GeoReplicationService(spark: SparkSession,
     val watermarks = results.flatMap(_._2)
       .groupBy(_._1).map { case (entry, ws) => entry -> ws.map(_._2).max }.toSeq
     if (watermarks.nonEmpty)
-      sys.commitAppend("_system", "consistency_tokens",
-        watermarks.map { case (entry, wmMs) =>
-          (entry, region, wmMs, System.currentTimeMillis(), appendSeq.getAndIncrement()) }
-          .toDF("table_entry", "region", "high_watermark_ms", "ts", "seq"),
-        maxRetries = SystemRetries)
+      append("consistency_tokens", watermarks.map { case (entry, wmMs) =>
+        Row(entry, region, wmMs, System.currentTimeMillis(), appendSeq.getAndIncrement()) })
     val ok = updates.count(_._6 == "Completed")
     if (updates.nonEmpty) appendEvents(updates)
+    // retention: expire below the head phase 3 found, or below the first
+    // version another region may sync from (the region's own), a replay
+    // may still probe (its event did not complete here) or a visible
+    // read serves (the promoted one and every version above it)
+    val unfinished = updates.filter(_._6 != "Completed").map(u => ReplicaIdPrefix + u._3).toSet
+    found.foreach { case ((ns, t), versions) =>
+      val published = regions(region).publishedSeq(ns, t)
+      val keepFrom = versions.init.indexWhere { case (seq, id) =>
+        !id.startsWith(ReplicaIdPrefix) || unfinished(id) || published.exists(seq >= _) }
+      val cut = if (keepFrom < 0) versions.size - 1 else keepFrom
+      if (cut > 0) regions(region).expireBefore(ns, t, versions(cut)._1)
+    }
     (ok, updates.size - ok)
   }
 
@@ -482,10 +511,8 @@ final class GeoReplicationService(spark: SparkSession,
   sys.createTable("_system", "consistency_tokens")
 
   private[graft] def advanceWatermark(entry: String, region: String, watermarkMs: Long): Unit =
-    sys.commitAppend("_system", "consistency_tokens",
-      Seq((entry, region, watermarkMs, System.currentTimeMillis(), appendSeq.getAndIncrement()))
-        .toDF("table_entry", "region", "high_watermark_ms", "ts", "seq"),
-      maxRetries = SystemRetries)
+    append("consistency_tokens",
+      Seq(Row(entry, region, watermarkMs, System.currentTimeMillis(), appendSeq.getAndIncrement())))
 
   /** High-water mark per (table, region) — the MAX over all appended
     * tokens, NOT the latest row: a stale advance landing late (a retried
@@ -523,19 +550,13 @@ final class GeoReplicationService(spark: SparkSession,
   def requestCommitApproval(commitId: String, regionsAsked: Seq[String],
                             timeoutMs: Option[Long] = None): Unit = {
     val deadline = timeoutMs.map(System.currentTimeMillis() + _)
-    sys.commitAppend("_system", "approvals",
-      regionsAsked.map(r => (commitId, r, None: Option[Boolean], System.currentTimeMillis(),
-                             appendSeq.getAndIncrement(), deadline))
-        .toDF("commit_id", "region", "approved", "ts", "seq", "deadline_ms"),
-      maxRetries = SystemRetries)
+    append("approvals", regionsAsked.map(r => Row(commitId, r, null, System.currentTimeMillis(),
+      appendSeq.getAndIncrement(), deadline.map(Long.box).orNull)))
   }
 
   def vote(commitId: String, region: String, approve: Boolean): Unit =
-    sys.commitAppend("_system", "approvals",
-      Seq((commitId, region, Some(approve): Option[Boolean], System.currentTimeMillis(),
-           appendSeq.getAndIncrement(), None: Option[Long]))
-        .toDF("commit_id", "region", "approved", "ts", "seq", "deadline_ms"),
-      maxRetries = SystemRetries)
+    append("approvals", Seq(Row(commitId, region, approve, System.currentTimeMillis(),
+      appendSeq.getAndIncrement(), null)))
 
   /** The latest vote per region of `commitId`, each carrying its key's
     * max deadline. */

@@ -745,10 +745,15 @@ class CatalogSpec extends SparkSpec {
        "through the manifests and starts no job while the frame is built") {
     val cat = freshCatalog()
     cat.createTable("ns", "wide")
-    cat.commitAppend("ns", "wide", Seq((1L, "y")).toDF("id", "v"))
-    // one file whose string bounds (min = max, recorded in full) carry
-    // the version's manifests past the bound
-    cat.commitAppend("ns", "wide", Seq((2L, "x" * 600000)).toDF("id", "v"))
+    // each file's bounds are keyed by 15 column names of 40,000
+    // characters (under the JSON reader's 50,000-character name limit),
+    // so two files carry the version's manifests past the bound (a long
+    // string value no longer can: its bounds are cut to 16 characters)
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val schema = StructType((1 to 15).map(i => StructField(s"c$i" + "v" * 40000, LongType)))
+    Seq(1L, 2L).foreach(k => cat.commitAppend("ns", "wide",
+      spark.createDataFrame(Seq(Row.fromSeq(Seq.fill(15)(k))).asJava, schema)))
     val head = cat.latest("ns", "wide").get
     val bytes = head.manifests.map(m => Files.size(cat.tablePath("ns", "wide").resolve(m))).sum
     assert(bytes > GraftCatalog.LocalFilesTableBytes)
@@ -1638,6 +1643,87 @@ class CatalogSpec extends SparkSpec {
     assert(bJobs.size === 1, s"an oversized local batch ran ${bJobs.size} jobs")
     assert(cat.addedFiles("ns", "big", bs).size > 1, "an oversized local batch is split")
     assert(cat.read("ns", "big").count() === 250L)
+  }
+
+  test("string bounds are cut to 16 code points, the max rounded up; pruning over cut " +
+       "bounds keeps every matching row, and both stats producers agree") {
+    val p16 = "abcdefghijklmnop"
+    val values = Seq(
+      p16, p16 + "XXX", p16 + "YYY", "abcdefghijklmno\u00e9tail",
+      "\u00e9" * 17 + "1", "\u00e9" * 16, "\uD83D\uDE00" * 20, "a" + "\uD83D\uDE00" * 15 + "b",
+      "\uD7FF" * 17, "z" * 15 + "\uDBFF\uDFFF" + "q", "\uDBFF\uDFFF" * 17, "x" * 600000, "")
+    val cat = freshCatalog()
+    cat.createTable("ns", "cut")
+    // one value per file: each file's bounds are that value's cut
+    values.foreach(v => cat.commitAppend("ns", "cut", Seq((v.length.toLong, v)).toDF("n", "s")))
+    val head = cat.latest("ns", "cut").get
+    val entries = cat.prunedDataEntries("ns", "cut", head, Array.empty).toSeq
+    def cps(x: String) = x.codePointCount(0, x.length)
+    entries.flatMap(_.stats.get("s")).foreach { case (mn, mx) =>
+      assert(cps(mn) <= 16 && cps(mx) <= 16, s"an uncut bound: ${mn.take(20)} / ${mx.take(20)}")
+      // a bound that is not a value of its file is a cut of exactly 16
+      Seq(mn, mx).foreach(b => assert(values.contains(b) || cps(b) == 16, s"a short cut: $b"))
+    }
+    val manifestBytes = head.manifests.map(m => Files.size(cat.tablePath("ns", "cut").resolve(m))).sum
+    assert(manifestBytes < 64 * 1024, s"manifests hold $manifestBytes bytes")
+    // a cut max ending in U+10FFFF (17 of them; 15 'z' + U+10FFFF + 'q')
+    // has no round-up of 16 code points, so no bound is recorded
+    assert(entries.count(!_.stats.contains("s")) === 2)
+    assert(entries.flatMap(_.stats.get("s")).contains((p16, "abcdefghijklmnoq")))
+    assert(entries.flatMap(_.stats.get("s")).contains(("\uD7FF" * 16, "\uD7FF" * 15 + "\uE000")))
+    // a cut bound is not the column's min or max
+    assert(cat.minMaxFast("ns", "cut", "s").isEmpty)
+    assert(cat.minMaxFast("ns", "cut", "n").nonEmpty)
+    cat.createTable("ns", "short")
+    cat.commitAppend("ns", "short", Seq((1L, "b"), (2L, "abc")).toDF("n", "s"))
+    cat.commitAppend("ns", "short", Seq((3L, "zz")).toDF("n", "s"))
+    assert(cat.minMaxFast("ns", "short", "s") === Some(("abc", "zz")))
+    // files fold in Spark's (UTF-8) string order: an emoji sorts above U+FFFF
+    cat.commitAppend("ns", "short", Seq((4L, "\uFFFF")).toDF("n", "s"))
+    cat.commitAppend("ns", "short", Seq((5L, "\uD83D\uDE00")).toDF("n", "s"))
+    val scanned = cat.read("ns", "short").selectExpr("min(s)", "max(s)").head()
+    assert(cat.minMaxFast("ns", "short", "s") === Some((scanned.getString(0), scanned.getString(1))))
+    assert(scanned.getString(1) === "\uD83D\uDE00")
+    // a short min beside a max that would round up past U+10FFFF: the file
+    // records no bound, so no short pair can pose as the column's MIN/MAX
+    cat.createTable("ns", "roundup")
+    cat.commitAppend("ns", "roundup", Seq((1L, "a"), (2L, "z" * 15 + "\uDBFF\uDFFF" + "q")).toDF("n", "s"))
+    assert(cat.minMaxFast("ns", "roundup", "s").isEmpty)
+    // pruning parity: every probe finds exactly the rows a full scan does
+    def upTo(v: String, n: Int) = v.substring(0, v.offsetByCodePoints(0, n.min(cps(v)).max(0)))
+    val probes = (values ++ values.flatMap(v => Seq(upTo(v, 15), upTo(v, 16), upTo(v, 17),
+      v + "\u0000", upTo(v, cps(v) - 1) + "\uFFFF")) ++
+      Seq(p16 + "Z", "abcdefghijklmnoq", "abcdefghijklmnp", "zzz", "0")).distinct
+    val all = values.toSet
+    probes.foreach { p =>
+      assert(cat.readWhereEquals("ns", "cut", "s", p).count() === (if (all(p)) 1L else 0L),
+        s"point probe ${p.take(20)}")
+    }
+    // ranges compare in UTF-8 byte order, as Spark's string ordering does
+    def utf8(x: String) = org.apache.spark.unsafe.types.UTF8String.fromString(x)
+    def within(lo: Option[String], hi: Option[String]) = values.count(v =>
+      lo.forall(l => utf8(v).compareTo(utf8(l)) >= 0) && hi.forall(h => utf8(v).compareTo(utf8(h)) <= 0))
+    probes.sortBy(utf8).grouped(3).foreach { g =>
+      Seq((Some(g.head), None), (None, Some(g.last)), (Some(g.head), Some(g.last))).foreach {
+        case (lo, hi) =>
+          assert(cat.readWhereAll("ns", "cut", Seq(("s", lo, hi))).count() === within(lo, hi),
+            s"range ${lo.map(_.take(20))} .. ${hi.map(_.take(20))}")
+      }
+    }
+    // not vacuous: a probe past every bound reads fewer files than the scan
+    val total = cat.read("ns", "cut").inputFiles.length
+    assert(cat.readWhereEquals("ns", "cut", "s", "abcdefghijklmnoq").inputFiles.length < total)
+    // the re-read job records the writer's bounds: the same files
+    // registered as landed ones
+    cat.createTable("ns", "landed")
+    cat.commitAppend("ns", "landed", Seq((0L, "")).toDF("n", "s"))
+    val rels = entries.map(_.path)
+    rels.foreach(r => Files.copy(cat.tablePath("ns", "cut").resolve(r),
+      cat.tablePath("ns", "landed").resolve(r)))
+    val landed = cat.commitLandedFiles("ns", "landed", rels, "local")
+    val byPath = cat.prunedDataEntries("ns", "landed", landed, Array.empty)
+      .map(e => e.path -> e.stats).toMap
+    entries.foreach(e => assert(byPath(e.path) === e.stats, s"stats of ${e.path}"))
   }
 
   test("reads plan from manifests: no listing job, the same input files and " +

@@ -357,6 +357,109 @@ class GeoReplicationSpec extends SparkSpec {
     assert(svc.regions("eu-west-1").read("ns", "t").as[Long].collect().sorted === Array(0L, 1L, 2L))
   }
 
+  test("coordinateWrite of a driver-local slice runs no Spark job") {
+    val svc = warmService()
+    val (res, jobs) = withJobs(svc.coordinateWrite("ns", "t",
+      (1 to 250).map(i => (i.toLong, s"v$i")).toDF("id", "v").select("id"), "us-east-1"))
+    assert(res.syncEvents === 2)
+    assert(jobs.isEmpty, s"a local write ran jobs: $jobs")
+    assert(svc.pendingEvents("eu-west-1").count() === 2L)
+  }
+
+  private def replicaIds(svc: GeoReplicationService): Seq[String] =
+    svc.regions("eu-west-1").snapshots("ns", "t").map(_.commitId)
+
+  test("replica retention: every version a sync batch commits is in the replica's " +
+       "snapshot list when the batch returns; 30 rounds keep the last batch plus one") {
+    val svc = warmService()
+    val (src, replica) = (svc.regions("us-east-1"), svc.regions("eu-west-1"))
+    var next = 1L
+    (1 to 30).foreach { round =>
+      val ids = (1 to 1 + round % 3).map { _ =>
+        next += 1
+        svc.coordinateWrite("ns", "t", Seq(next).toDF("id"), "us-east-1").commitId
+      }
+      assert(svc.processPendingEvents("eu-west-1") === ((2 * ids.size, 0)))
+      val seen = replicaIds(svc)
+      ids.foreach(id => assert(seen.contains(s"sync-$id"), s"round $round: sync-$id is gone"))
+      assert(seen.size <= ids.size + 1, s"round $round keeps ${seen.size} versions")
+    }
+    assert(replica.read("ns", "t").as[Long].collect().sorted ===
+      src.read("ns", "t").as[Long].collect().sorted)
+    assert(replica.dataFiles("ns", "t", replica.latest("ns", "t").get).toSet ===
+      src.dataFiles("ns", "t", src.latest("ns", "t").get).toSet)
+    assert(src.snapshots("ns", "t").size === 61, "the source keeps its own history")
+  }
+
+  test("replica retention: a version whose event is still Pending survives the next " +
+       "batch's expiry and completes as a duplicate, with no second version") {
+    val svc = warmService()
+    val (src, replica) = (svc.regions("us-east-1"), svc.regions("eu-west-1"))
+    (1L to 2L).foreach { i =>
+      svc.coordinateWrite("ns", "t", Seq(i).toDF("id"), "us-east-1")
+      assert(svc.processPendingEvents("eu-west-1") === ((2, 0)))
+    }
+    // the worker died after committing this write's replica version and
+    // before appending its events' statuses: both are still Pending
+    val crashed = svc.coordinateWrite("ns", "t", Seq(3L).toDF("id"), "us-east-1").commitId
+    val files = src.addedFiles("ns", "t", src.byCommitId("ns", "t", crashed).get)
+    files.foreach(f => Files.copy(src.tablePath("ns", "t").resolve(f),
+      replica.tablePath("ns", "t").resolve(f)))
+    val kept = replica.commitFiles("ns", "t", files, "eu-west-1",
+      commitId = Some(s"sync-$crashed")).seq
+    val later = svc.coordinateWrite("ns", "t", Seq(4L).toDF("id"), "us-east-1").commitId
+    assert(svc.pendingEvents("eu-west-1").count() === 4L)
+    assert(svc.processPendingEvents("eu-west-1") === ((4, 0)))
+    val snaps = replica.snapshots("ns", "t")
+    assert(snaps.map(_.seq).min === kept, "versions below the batch's head are expired")
+    assert(snaps.count(_.commitId == s"sync-$crashed") === 1, "a second version was written")
+    assert(snaps.map(_.commitId).contains(s"sync-$later"))
+    assert(svc.pendingEvents("eu-west-1").count() === 0L)
+    assert(replica.read("ns", "t").as[Long].collect().sorted === Array(0L, 1L, 2L, 3L, 4L))
+    // the next batch expires it once its event is Completed
+    svc.coordinateWrite("ns", "t", Seq(5L).toDF("id"), "us-east-1")
+    assert(svc.processPendingEvents("eu-west-1") === ((2, 0)))
+    assert(!replicaIds(svc).contains(s"sync-$crashed"))
+    assert(replica.read("ns", "t").as[Long].collect().sorted === (0L to 5L).toArray)
+  }
+
+  test("replica retention never expires a version the region committed itself") {
+    val svc = warmService()
+    val replica = svc.regions("eu-west-1")
+    // the replica region writes the table too: other regions sync from
+    // its own versions
+    val own = replica.commitAppend("ns", "t", Seq(100L).toDF("id"), "eu-west-1").commitId
+    (1L to 3L).foreach { i =>
+      svc.coordinateWrite("ns", "t", Seq(i).toDF("id"), "us-east-1")
+      assert(svc.processPendingEvents("eu-west-1") === ((2, 0)))
+    }
+    assert(replicaIds(svc).head === own, "expiry stops at the region's own version")
+  }
+
+  test("replica retention keeps the promoted version: visible reads survive later " +
+       "batches, and a later promotion lets the older versions go") {
+    val svc = warmService()
+    val replica = svc.regions("eu-west-1")
+    svc.coordinateWrite("ns", "t", Seq(1L).toDF("id"), "us-east-1")
+    assert(svc.processPendingEvents("eu-west-1") === ((2, 0)))
+    val promoted = replica.latest("ns", "t").get.seq
+    svc.verifyAndPromote("ns", "t", "eu-west-1", promoted, visibleAtMs = 0L)
+    (2L to 5L).foreach { i =>
+      svc.coordinateWrite("ns", "t", Seq(i).toDF("id"), "us-east-1")
+      assert(svc.processPendingEvents("eu-west-1") === ((2, 0)))
+      assert(replica.readVisible("ns", "t").as[Long].collect().sorted === Array(0L, 1L),
+        s"batch $i lost the promoted version")
+    }
+    assert(replica.snapshots("ns", "t").head.seq === promoted)
+    svc.verifyAndPromote("ns", "t", "eu-west-1", promoted, visibleAtMs = 0L)
+    val head = replica.latest("ns", "t").get.seq
+    svc.verifyAndPromote("ns", "t", "eu-west-1", head, visibleAtMs = 0L)
+    svc.coordinateWrite("ns", "t", Seq(6L).toDF("id"), "us-east-1")
+    assert(svc.processPendingEvents("eu-west-1") === ((2, 0)))
+    assert(replica.snapshots("ns", "t").head.seq === head)
+    assert(replica.readVisible("ns", "t").as[Long].collect().sorted === (0L to 5L).toArray)
+  }
+
   test("a sync batch copies on the driver within the replica's target file size and " +
        "distributed past it; a truncated destination is re-copied on both paths") {
     val svc = warmService()
