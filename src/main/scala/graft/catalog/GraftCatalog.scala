@@ -6,13 +6,12 @@ import java.util.UUID
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.{FileStatus, Path => HPath}
-import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, InterpretedUnsafeProjection, UnsafeProjection}
 import org.apache.spark.sql.catalyst.util.CharVarcharUtils
 import org.apache.spark.sql.execution.SQLExecution
-import org.apache.spark.sql.execution.datasources.{FileFormat, HadoopFsRelation, PartitionedFile}
+import org.apache.spark.sql.execution.datasources.HadoopFsRelation
 import org.apache.spark.sql.execution.datasources.json.JsonFileFormat
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetReadSupport, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
@@ -417,7 +416,8 @@ final class GraftCatalog(val spark: SparkSession, val warehouse: String) {
   /** Write one immutable manifest holding `entries` (relative path, size,
     * optional column bounds and blooms). JSON-lines: row-based like
     * Iceberg's Avro manifests, readable distributed by Spark and in one
-    * pass by the driver planner. */
+    * pass by the driver planner. A column whose name is too long to be a
+    * JSON key ([[GraftCatalog.recordableStatKey]]) records neither. */
   private def writeManifest(ns: String, name: String,
                             entries: Seq[(String, Long)],
                             stats: Map[String, Map[String, (String, String)]] = Map.empty,
@@ -425,13 +425,13 @@ final class GraftCatalog(val spark: SparkSession, val warehouse: String) {
                             prefix: String = "m"): String = {
     val rel = s"_meta/manifests/$prefix-${UUID.randomUUID()}.jsonl"
     val body = entries.map { case (p, sz) =>
-      val st = stats.getOrElse(p, Map.empty)
+      val st = stats.getOrElse(p, Map.empty).filter(e => GraftCatalog.recordableStatKey(e._1))
       val statsJson =
         if (st.isEmpty) ""
         else st.toSeq.sortBy(_._1)
           .map { case (c, (mn, mx)) => s"${q(c)}:[${q(mn)},${q(mx)}]" }
           .mkString(""","stats":{""", ",", "}")
-      val bl = blooms.getOrElse(p, Map.empty)
+      val bl = blooms.getOrElse(p, Map.empty).filter(e => GraftCatalog.recordableStatKey(e._1))
       val bloomJson =
         if (bl.isEmpty) ""
         else bl.toSeq.sortBy(_._1)
@@ -1660,6 +1660,10 @@ final class GraftCatalog(val spark: SparkSession, val warehouse: String) {
       if (change.register.isEmpty) None else Some(parentFiles ++ newFiles))
   }
 
+  // Runs between an attempt's read of its parent and its link, with the
+  // candidate version: a test lands commits and an expiry in that window.
+  @volatile private[graft] var beforeLink: Snapshot => Unit = _ => ()
+
   /** The CAS publish under [[commit]], its only caller: `mkSnapshot`
     * builds the candidate from the freshly read log of `ref`; the atomic
     * create-if-absent hard link is the commit point (on an object store
@@ -1679,6 +1683,7 @@ final class GraftCatalog(val spark: SparkSession, val warehouse: String) {
       // wait out a fresh one) — the cross-table atomicity handshake
       if (ref.isEmpty) awaitTxnBarrier(ns, name)
       val snap = mkSnapshot(readLog(ns, name, ref))
+      beforeLink(snap)
       val tmp = metaDir(ns, name).resolve(s".tmp-${UUID.randomUUID()}.json")
       Files.write(tmp, writeJson(snap).getBytes(StandardCharsets.UTF_8))
       // final pre-link re-check: a transaction barrier that appeared
@@ -2001,17 +2006,12 @@ final class GraftCatalog(val spark: SparkSession, val warehouse: String) {
       fs.makeQualified(new HPath(tableDir(ns, name).resolve(rel).toString)) -> size })
   }
 
-  // one driver-side parquet reader per read schema (the reader captures
-  // its broadcast Hadoop conf; building one per read would re-broadcast)
-  private val localReaders = new java.util.concurrent.ConcurrentHashMap[
-    StructType, PartitionedFile => Iterator[InternalRow]]()
-
   /** The rows of the data files listed by `manifests` (data manifests of
     * `snap`), read ON THE DRIVER through Spark's own parquet reader under
-    * the version's recorded schema: no job, no listing — the read-side
-    * twin of driver-side staging. For metadata-scale logs only: the
-    * service's incremental `_system` views read exactly the manifests a
-    * head carries beyond theirs. */
+    * the version's recorded schema ([[ManifestFileIndex.readOnDriver]]):
+    * no job, no listing — the read-side twin of driver-side staging. For
+    * metadata-scale logs only: the service's incremental `_system` views
+    * read exactly the manifests a head carries beyond theirs. */
   private[graft] def localRows(ns: String, name: String, snap: Snapshot,
                                manifests: Seq[String]): Seq[Row] = {
     require(!manifests.exists(isDeleteManifest),
@@ -2020,21 +2020,13 @@ final class GraftCatalog(val spark: SparkSession, val warehouse: String) {
       .map(DataType.fromJson(_)).getOrElse(new StructType())).asInstanceOf[StructType]
     val physical = CharVarcharUtils.replaceCharVarcharWithStringInSchema(
       GraftCatalog.physicalSchema(schema))
-    val read = localReaders.computeIfAbsent(physical, st =>
-      new ParquetFileFormat().buildReaderWithPartitionValues(spark, st, new StructType(), st,
-        Nil, Map(FileFormat.OPTION_RETURNING_BATCH -> "false"),
-        spark.sessionState.newHadoopConf()))
     val toRow = CatalystTypeConverters.createToScalaConverter(schema)
-    val fs = new HPath(tableDir(ns, name).toString)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    manifests.flatMap(manifestEntries(ns, name, _)).filter(_._2 > 0).flatMap { case (rel, size) =>
-      val path = fs.makeQualified(new HPath(tableDir(ns, name).resolve(rel).toString))
-      val rows = read(PartitionedFile(InternalRow.empty, SparkPath.fromPath(path), 0L, size,
-        Array.empty[String], 0L, size))
-      // the reader hands out one reused row: convert each as it comes
-      try rows.map(r => toRow(r).asInstanceOf[Row]).toVector
-      finally rows match { case c: java.io.Closeable => c.close(); case _ => }
+    val rows = Vector.newBuilder[Row]
+    ManifestFileIndex.readOnDriver(spark, new ParquetFileFormat, physical, physical, Map.empty,
+      fileIndex(ns, name, manifests.flatMap(manifestEntries(ns, name, _))).readFiles) { r =>
+      rows += toRow(r).asInstanceOf[Row]
     }
+    rows.result()
   }
 
   /** The Spark schema one parquet file's footer records (the schema
@@ -3102,8 +3094,11 @@ final class GraftCatalog(val spark: SparkSession, val warehouse: String) {
     }
     ps.foreach { p =>
       if (!Files.isRegularFile(p.target)) {
+        // a concurrent completer (any committer's barrier wait) may link
+        // the slot first, or finish and remove the staged file
         try Files.createLink(p.target, p.staged)
-        catch { case _: java.nio.file.FileAlreadyExistsException =>
+        catch { case _: java.nio.file.FileAlreadyExistsException |
+                     _: java.nio.file.NoSuchFileException =>
           require(takenBy(p.target).contains(p.commitId),
             s"transaction $txnId lost v${p.seq} of ${p.ns}.${p.table} " +
               "mid-apply — the barrier lease was breached")
@@ -3340,14 +3335,28 @@ final class GraftCatalog(val spark: SparkSession, val warehouse: String) {
   private def publishedFile(ns: String, name: String): Path =
     metaDir(ns, name).resolve("published.json")
 
-  /** Promote versions up to `seq`, effective at `visibleAtMs`. */
-  def setVisibility(ns: String, name: String, seq: Long, visibleAtMs: Long): Unit = {
-    val tmp = metaDir(ns, name).resolve(s".tmp-${UUID.randomUUID()}.json")
-    Files.write(tmp, s"""{"publishedSeq":$seq,"visibleAtMs":$visibleAtMs}"""
-      .getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, publishedFile(ns, name), StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-  }
+  // One lock per table orders promotion against expiry: an expiry reads
+  // the promoted version and deletes under it, a promotion checks its
+  // version exists and publishes under it, so neither interleaves.
+  private val visibilityLocks =
+    new java.util.concurrent.ConcurrentHashMap[(String, String), AnyRef]()
+
+  private def visibilityLock(ns: String, name: String): AnyRef =
+    visibilityLocks.computeIfAbsent((ns, name), _ => new AnyRef)
+
+  /** Promote versions up to `seq`, effective at `visibleAtMs`. Refuses a
+    * version that no longer exists (expired, or never committed); expiry
+    * never removes the promoted one nor any above it ([[expire]]). */
+  def setVisibility(ns: String, name: String, seq: Long, visibleAtMs: Long): Unit =
+    visibilityLock(ns, name).synchronized {
+      require(snapshots(ns, name).exists(_.seq == seq),
+        s"no version $seq of $ns.$name to promote (expired, or never committed)")
+      val tmp = metaDir(ns, name).resolve(s".tmp-${UUID.randomUUID()}.json")
+      Files.write(tmp, s"""{"publishedSeq":$seq,"visibleAtMs":$visibleAtMs}"""
+        .getBytes(StandardCharsets.UTF_8))
+      Files.move(tmp, publishedFile(ns, name), StandardCopyOption.ATOMIC_MOVE,
+        StandardCopyOption.REPLACE_EXISTING)
+    }
 
   /** Highest published version visible at `asOfMs` (None = nothing promoted). */
   def publishedSeq(ns: String, name: String, asOfMs: Long = Long.MaxValue): Option[Long] = {
@@ -4001,45 +4010,54 @@ final class GraftCatalog(val spark: SparkSession, val warehouse: String) {
     * scan does. Files are staged flat under `data/`; a table staged
     * before that layout keeps per-commit `data/<dir>/` directories, and
     * the delete also removes every such directory it leaves empty
-    * ([[GraftCatalog.deleteDataFiles]]). Returns the removed data-file
-    * paths. */
-  private def expire(ns: String, name: String, keep: Snapshot => Boolean): Seq[String] = {
-    val snaps = snapshots(ns, name)
-    val (kept, expired) = snaps.partition(keep)
-    if (expired.isEmpty) return Seq.empty
-    val keptManifests = kept.flatMap(_.manifests).toSet
-    val removableManifests = expired.flatMap(_.manifests).distinct.filterNot(keptManifests)
-    val keptFiles = keptManifests.toSeq
-      .flatMap(manifestEntries(ns, name, _)).map(_._1).toSet
-    val removableEntries = removableManifests.flatMap(manifestEntries(ns, name, _))
-      .distinctBy(_._1).filterNot(e => keptFiles(e._1))
-    val removable = removableEntries.map(_._1)
-    val base = tableDir(ns, name).toString
-    if (GraftCatalog.driverScale(s"$ns.$name", snaps.last.properties,
-          removableEntries.map(_._2).sum))
-      GraftCatalog.deleteDataFiles(base, removable.iterator, spark.sparkContext.hadoopConfiguration)
-    else {
-      import spark.implicits._
-      val confSer = new org.apache.spark.util.SerializableConfiguration(
-        spark.sparkContext.hadoopConfiguration)
-      removable.toDF("path").as[String].foreachPartition { (paths: Iterator[String]) =>
-        GraftCatalog.deleteDataFiles(base, paths, confSer.value)
+    * ([[GraftCatalog.deleteDataFiles]]). The promoted version
+    * ([[publishedSeq]]) and every version above it are kept whatever
+    * `keep` says, under the lock [[setVisibility]] takes, so a promotion
+    * racing an expiry either is seen and kept, or comes after it and is
+    * refused if its version is gone. Keeping every version above the
+    * promoted one keeps the expired set a prefix of the log, which
+    * [[casCommitAt]]'s freed-slot check relies on. Returns the removed
+    * data-file paths. */
+  private def expire(ns: String, name: String, keep: Snapshot => Boolean): Seq[String] =
+    visibilityLock(ns, name).synchronized {
+      val published = publishedSeq(ns, name)
+      val snaps = snapshots(ns, name)
+      val (kept, expired) = snaps.partition(s => keep(s) || published.exists(_ <= s.seq))
+      if (expired.isEmpty) Seq.empty else {
+        val keptManifests = kept.flatMap(_.manifests).toSet
+        val removableManifests = expired.flatMap(_.manifests).distinct.filterNot(keptManifests)
+        val keptFiles = keptManifests.toSeq
+          .flatMap(manifestEntries(ns, name, _)).map(_._1).toSet
+        val removableEntries = removableManifests.flatMap(manifestEntries(ns, name, _))
+          .distinctBy(_._1).filterNot(e => keptFiles(e._1))
+        val removable = removableEntries.map(_._1)
+        val base = tableDir(ns, name).toString
+        if (GraftCatalog.driverScale(s"$ns.$name", snaps.last.properties,
+              removableEntries.map(_._2).sum))
+          GraftCatalog.deleteDataFiles(base, removable.iterator, spark.sparkContext.hadoopConfiguration)
+        else {
+          import spark.implicits._
+          val confSer = new org.apache.spark.util.SerializableConfiguration(
+            spark.sparkContext.hadoopConfiguration)
+          removable.toDF("path").as[String].foreachPartition { (paths: Iterator[String]) =>
+            GraftCatalog.deleteDataFiles(base, paths, confSer.value)
+          }
+        }
+        // ascending: a version file goes only after every older one, which
+        // is what lets a commit detect that it re-created an expired slot
+        // (see casCommitAt)
+        expired.foreach { s =>
+          snapshotCache.remove(versionFile(ns, name, s.seq).toAbsolutePath)
+          Files.deleteIfExists(versionFile(ns, name, s.seq)): Unit
+        }
+        removableManifests.foreach { m =>
+          val ap = tableDir(ns, name).resolve(m).toAbsolutePath
+          manifestCache.remove(ap)
+          Files.deleteIfExists(ap): Unit
+        }
+        removable
       }
     }
-    // ascending: a version file goes only after every older one, which
-    // is what lets a commit detect that it re-created an expired slot
-    // (see casCommitAt)
-    expired.foreach { s =>
-      snapshotCache.remove(versionFile(ns, name, s.seq).toAbsolutePath)
-      Files.deleteIfExists(versionFile(ns, name, s.seq)): Unit
-    }
-    removableManifests.foreach { m =>
-      val ap = tableDir(ns, name).resolve(m).toAbsolutePath
-      manifestCache.remove(ap)
-      Files.deleteIfExists(ap): Unit
-    }
-    removable
-  }
 
   /** Expire every version older than `seq`, and the files only they
     * reference. Time travel on the table then starts at `seq`. Two
@@ -4170,9 +4188,21 @@ object GraftCatalog {
     mine.foreach(st => fs.delete(st.getPath, false))
   }
 
+  /** Whether a column's bounds and Bloom can be recorded in a manifest:
+    * its name, a JSON key there, is within the JSON readers' name-length
+    * limit (Jackson's default, 50,000; counted here in UTF-8 bytes), so
+    * the manifest's distributed scan reads the entry whole. Past it the
+    * scan returns the entry's path and size as null. Stats are optional:
+    * a file with none for a column is read by every scan. */
+  private[catalog] def recordableStatKey(column: String): Boolean =
+    column.getBytes(StandardCharsets.UTF_8).length <=
+      com.fasterxml.jackson.core.StreamReadConstraints.DEFAULT_MAX_NAME_LEN
+
   /** The manifest bytes up to which [[GraftCatalog.filesTable]] reads a
     * version on the driver: 1,000 KiB, Spark's recommended maximum task
-    * size (the size at which `TaskSetManager` warns). */
+    * size (the size at which `TaskSetManager` warns). The same bound
+    * caps the data-file bytes of the table scans one
+    * [[graft.plans.FoldLocalRelations]] fold reads on the driver. */
   val LocalFilesTableBytes: Long = 1000L * 1024
 
   /** Manifest-unit kinds for [[GraftCatalog.commitFilesMor]] /

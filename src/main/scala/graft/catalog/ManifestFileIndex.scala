@@ -1,9 +1,14 @@
 package graft.catalog
 
+import scala.util.control.NonFatal
+
 import org.apache.hadoop.fs.{FileStatus, Path => HPath}
+import org.apache.spark.paths.SparkPath
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.execution.datasources.{FileIndex, PartitionDirectory}
+import org.apache.spark.sql.execution.datasources.{FileFormat, FileIndex, PartitionDirectory, PartitionedFile}
+import org.apache.spark.sql.execution.datasources.v2.FileDataSourceV2
 import org.apache.spark.sql.types.StructType
 
 /** A Spark [[FileIndex]] over a file list the catalog's manifests
@@ -22,7 +27,7 @@ import org.apache.spark.sql.types.StructType
   * The one difference: a file's modification time is not recorded, so
   * `_metadata.file_modification_time` reads 0. A file that is gone fails
   * the scan when it runs, as a listed-then-deleted file does. */
-private[catalog] final class ManifestFileIndex(files: Seq[(HPath, Long)]) extends FileIndex {
+private[graft] final class ManifestFileIndex(files: Seq[(HPath, Long)]) extends FileIndex {
 
   private val fileSet: Set[(HPath, Long)] = files.toSet
 
@@ -33,6 +38,9 @@ private[catalog] final class ManifestFileIndex(files: Seq[(HPath, Long)]) extend
     Seq(PartitionDirectory(InternalRow.empty, files.collect {
       case (p, len) if len > 0 => new FileStatus(len, false, 0, 0L, 0L, p)
     }.toArray))
+
+  /** The files a scan reads: every entry with bytes. */
+  def readFiles: Seq[FileStatus] = listFiles(Nil, Nil).flatMap(_.files.map(_.fileStatus))
 
   override def inputFiles: Array[String] = files.map(_._1.toUri.toString).toArray
 
@@ -48,4 +56,64 @@ private[catalog] final class ManifestFileIndex(files: Seq[(HPath, Long)]) extend
   }
 
   override def hashCode(): Int = fileSet.hashCode()
+}
+
+private[graft] object ManifestFileIndex {
+
+  /** Read `files` ON THE DRIVER through `format`'s own reader: the one a
+    * scan task builds (`buildReaderWithPartitionValues`) for the same
+    * data and required schemas, options and session, asked for rows,
+    * not batches. Each row goes to `f` before the next is read (the
+    * reader reuses one row); each file is read whole and closed before
+    * the next opens, and a file that fails to read fails the call with
+    * the error a scan task raises for it. No job, no listing. Both driver
+    * reads go through it: [[GraftCatalog.localRows]] and the scan input
+    * of [[graft.plans.FoldLocalRelations]]. */
+  def readOnDriver(spark: SparkSession, format: FileFormat, dataSchema: StructType,
+                   required: StructType, options: Map[String, String],
+                   files: Seq[FileStatus])(f: InternalRow => Unit): Unit = {
+    val read = reader(spark, format, dataSchema, required, options)
+    files.foreach { st =>
+      val file = PartitionedFile(InternalRow.empty, SparkPath.fromPath(st.getPath), 0L,
+        st.getLen, Array.empty[String], st.getModificationTime, st.getLen)
+      // a failed read fails as in a scan task: the error names the file
+      try {
+        val rows = read(file)
+        try rows.foreach(f)
+        finally rows match { case c: java.io.Closeable => c.close(); case _ => }
+      } catch { case NonFatal(e) => throw FileDataSourceV2.attachFilePath(file.urlEncodedPath, e) }
+    }
+  }
+
+  private final case class ReaderKey(conf: Map[String, String], format: Class[_],
+                                     dataSchema: StructType, required: StructType,
+                                     options: Map[String, String])
+
+  private type Reader = PartitionedFile => Iterator[InternalRow]
+
+  // Building a reader broadcasts the Hadoop conf and captures the
+  // session's reader settings, so readers are cached per session (held
+  // weakly: a reader captures no session, so a dropped session takes
+  // its readers and their broadcasts with it) and keyed by its conf;
+  // bounded, least recently used first out.
+  private val readers = new java.util.WeakHashMap[SparkSession,
+      java.util.LinkedHashMap[ReaderKey, Reader]]()
+
+  private def reader(spark: SparkSession, format: FileFormat, dataSchema: StructType,
+                     required: StructType, options: Map[String, String]): Reader = {
+    val key = ReaderKey(spark.sessionState.conf.getAllConfs, format.getClass,
+      dataSchema, required, options)
+    val cache = readers.synchronized(readers.computeIfAbsent(spark, _ =>
+      new java.util.LinkedHashMap[ReaderKey, Reader](16, 0.75f, true) {
+        override def removeEldestEntry(e: java.util.Map.Entry[ReaderKey, Reader]): Boolean =
+          size() > 16
+      }))
+    cache.synchronized(Option(cache.get(key))).getOrElse {
+      val built = format.buildReaderWithPartitionValues(spark, dataSchema, new StructType(),
+        required, Nil, options + (FileFormat.OPTION_RETURNING_BATCH -> "false"),
+        spark.sessionState.newHadoopConfWithOptions(options))
+      cache.synchronized(cache.put(key, built))
+      built
+    }
+  }
 }

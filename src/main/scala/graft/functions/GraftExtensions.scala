@@ -21,9 +21,13 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     //    of BroadcastNestedLoop (see RangeJoinRewrite);
     //  - a count, a union or an equi-key anti/semi join over driver-local
     //    relations is evaluated on the driver, like Spark's own
-    //    ConvertToLocalRelation does for Project/Filter/Limit — no job for
-    //    a metadata-scale plan such as the orphan-GC diff or a `_system`
-    //    view's count (see FoldLocalRelations)
+    //    ConvertToLocalRelation does for Project/Filter/Limit; a count
+    //    also folds over graft table scans whose files total at most
+    //    GraftCatalog.LocalFilesTableBytes (1,000 KiB), their rows read
+    //    and counted there through the reader a scan task would use. No
+    //    job for a metadata-scale plan such as the orphan-GC diff, a
+    //    `_system` view's count or a small routed read's count (see
+    //    FoldLocalRelations)
     ext.injectOptimizerRule(graft.plans.RangeJoinRewrite(_))
     ext.injectOptimizerRule(_ => graft.plans.FoldLocalRelations)
     // planner strategy: AsOfJoinNode → physical sort-merge as-of join

@@ -320,9 +320,10 @@ final class GeoReplicationService(spark: SparkSession,
     * `sync-<id>` for the funnel's replay probe; a crash before the status
     * append skips the expiry. The batch's own versions stay in the
     * replica's snapshot list until the region's next batch. Expiry never
-    * reaches a version the region committed itself, one whose event did
-    * not complete in this batch, nor the promoted version
-    * ([[verifyAndPromote]]) that [[GraftCatalog.readVisible]] reads.
+    * reaches a version the region committed itself nor one whose event
+    * did not complete in this batch, and the catalog's expiry never
+    * removes the promoted version ([[verifyAndPromote]]) that
+    * [[GraftCatalog.readVisible]] reads, nor any version above it.
     * Returns (completed, failed). */
   def processPendingEvents(region: String): (Int, Int) = {
     val pending = events("Pending", region)
@@ -489,14 +490,13 @@ final class GeoReplicationService(spark: SparkSession,
     val ok = updates.count(_._6 == "Completed")
     if (updates.nonEmpty) appendEvents(updates)
     // retention: expire below the head phase 3 found, or below the first
-    // version another region may sync from (the region's own), a replay
-    // may still probe (its event did not complete here) or a visible
-    // read serves (the promoted one and every version above it)
+    // version another region may sync from (the region's own) or a replay
+    // may still probe (its event did not complete here); the catalog's
+    // expiry itself keeps the promoted version a visible read serves
     val unfinished = updates.filter(_._6 != "Completed").map(u => ReplicaIdPrefix + u._3).toSet
     found.foreach { case ((ns, t), versions) =>
-      val published = regions(region).publishedSeq(ns, t)
-      val keepFrom = versions.init.indexWhere { case (seq, id) =>
-        !id.startsWith(ReplicaIdPrefix) || unfinished(id) || published.exists(seq >= _) }
+      val keepFrom = versions.init.indexWhere { case (_, id) =>
+        !id.startsWith(ReplicaIdPrefix) || unfinished(id) }
       val cut = if (keepFrom < 0) versions.size - 1 else keepFrom
       if (cut > 0) regions(region).expireBefore(ns, t, versions(cut)._1)
     }
@@ -593,7 +593,9 @@ final class GeoReplicationService(spark: SparkSession,
 
   /** The v1 happy-path tail: verify every file of the replica snapshot
     * exists with the right size (reconciliation join), then atomically
-    * promote visibility. Throws if any defect — no partial visibility. */
+    * promote visibility. Throws if any defect — no partial visibility —
+    * or if the version was expired meanwhile
+    * ([[GraftCatalog.setVisibility]] refuses it). */
   def verifyAndPromote(ns: String, table: String, region: String,
                        seq: Long, visibleAtMs: Long): Unit = {
     val cat = regions(region)

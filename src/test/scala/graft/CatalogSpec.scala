@@ -770,6 +770,60 @@ class CatalogSpec extends SparkSpec {
       .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
   }
 
+  test("expiry keeps the promoted version and every version above it, so a commit whose " +
+       "parent is the promoted version, linking after such an expiry, retries onto the head") {
+    val cat = freshCatalog()
+    cat.createTable("ns", "t")
+    (1L to 2L).foreach(i => cat.commitAppend("ns", "t", Seq(i).toDF("id")))
+    val promoted = cat.latest("ns", "t").get.seq
+    cat.setVisibility("ns", "t", promoted, 0L)
+    var fired = false
+    // the stale committer has read its parent (the promoted version);
+    // three commits and an expiry land before it links
+    cat.beforeLink = { snap =>
+      if (!fired && snap.seq == promoted + 1) {
+        fired = true
+        (3L to 5L).foreach(i => cat.commitAppend("ns", "t", Seq(i).toDF("id")))
+        cat.expireBefore("ns", "t", cat.latest("ns", "t").get.seq)
+        assert(cat.snapshots("ns", "t").map(_.seq) === (promoted to promoted + 3))
+      }
+    }
+    val landed = try cat.commitAppend("ns", "t", Seq(99L).toDF("id"))
+      finally cat.beforeLink = _ => ()
+    assert(fired)
+    assert(landed.seq === promoted + 4, "the commit linked below the head")
+    assert(cat.latest("ns", "t").get.seq === landed.seq)
+    assert(cat.read("ns", "t").as[Long].collect().sorted === Array(1L, 2L, 3L, 4L, 5L, 99L))
+    // with no promotion the expiry keeps only what it is asked to
+    cat.setVisibility("ns", "t", landed.seq, 0L)
+    cat.expireBefore("ns", "t", landed.seq)
+    assert(cat.snapshots("ns", "t").map(_.seq) === Seq(landed.seq))
+  }
+
+  test("a column name past the JSON key limit records no bounds or Blooms, and both " +
+       "filesTable sides return the same (path, size) rows with no nulls") {
+    val cat = freshCatalog()
+    cat.createTable("ns", "longname")
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val long = "c" + "v" * 60000
+    val schema = StructType(Seq(StructField("id", LongType), StructField(long, LongType)))
+    Seq(1L, 2L).foreach(k => cat.commitAppend("ns", "longname",
+      spark.createDataFrame(Seq(Row(k, k * 10)).asJava, schema)))
+    val head = cat.latest("ns", "longname").get
+    val text = head.manifests
+      .map(m => Files.readString(cat.tablePath("ns", "longname").resolve(m))).mkString
+    assert(!text.contains(long), "the long name was recorded as a stats key")
+    assert(text.contains("\"id\""), "the short column keeps its bounds")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (Option(r.getString(0)), Option(r.get(1)))).toSeq.sortBy(_.toString)
+    val local = rows(cat.filesTable("ns", "longname", head.seq))
+    val scanned = rows(cat.filesTableScan("ns", "longname", head.seq))
+    assert(local.size === 2 && local.forall(r => r._1.nonEmpty && r._2.nonEmpty), s"$local")
+    assert(scanned === local)
+    assert(cat.read("ns", "longname").filter(col(s"`$long`") === 20L).count() === 1L)
+  }
+
   test("filesTable refuses a version missing from the log, naming the table and seq: " +
        "an expired one and one never committed") {
     val cat = freshCatalog()

@@ -1,14 +1,17 @@
 package graft
 
+import java.nio.file.Files
 import java.sql.{Date, Timestamp}
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 
+import graft.catalog.GraftCatalog
+
 /** graft.plans.FoldLocalRelations: a count, a positional union and an
-  * equi-key anti/semi join over driver-local relations evaluate on the
-  * driver, and every query returns exactly the rows it returns with the
-  * rule excluded. */
+  * equi-key anti/semi join over driver-local relations and small table
+  * scans evaluate on the driver, and every query returns exactly the
+  * rows (or the error) it returns with the rule excluded. */
 class FoldLocalRelationsSpec extends SparkSpec {
   import spark.implicits._
 
@@ -122,5 +125,108 @@ class FoldLocalRelationsSpec extends SparkSpec {
         parity(spark.sql("SELECT v FROM fold_l WHERE k NOT IN (SELECT k FROM fold_rn)"))
       assert(withNull.isEmpty, "a null in the NOT IN list keeps no row")
     } finally Seq("fold_l", "fold_r", "fold_rn").foreach(spark.catalog.dropTempView)
+  }
+
+  private def unfolded[T](body: => T): T = {
+    spark.conf.set(ExcludedRules, "graft.plans.FoldLocalRelations")
+    try body finally spark.conf.unset(ExcludedRules)
+  }
+
+  private def freshCatalog(): GraftCatalog =
+    new GraftCatalog(spark, Files.createTempDirectory("graft-fold").toString)
+
+  /** A table of two appends, 150 rows in all. */
+  private def smallTable(): GraftCatalog = {
+    val cat = freshCatalog()
+    cat.createTable("ns", "t")
+    cat.commitAppend("ns", "t", (1L to 100L).toDF("id"))
+    cat.commitAppend("ns", "t", (101L to 150L).toDF("id"))
+    cat
+  }
+
+  private def firstFile(cat: GraftCatalog) =
+    cat.tablePath("ns", "t").resolve(cat.dataFiles("ns", "t", cat.latest("ns", "t").get).head)
+
+  test("a count over a small table's read runs no job and reads every file: a truncated " +
+       "or a missing file fails it with the distributed count's error") {
+    val cat = smallTable()
+    val (n, jobs) = withJobs(cat.read("ns", "t").count())
+    assert(n === 150L)
+    assert(jobs.isEmpty, s"a small table's count ran jobs: $jobs")
+    val f = firstFile(cat)
+    val bytes = Files.readAllBytes(f)
+    def sameFailure(): Unit = {
+      val folded = intercept[org.apache.spark.SparkException](cat.read("ns", "t").count())
+      val distributed =
+        unfolded(intercept[org.apache.spark.SparkException](cat.read("ns", "t").count()))
+      assert(folded.getCondition === distributed.getCondition)
+      assert(folded.getMessage === distributed.getMessage)
+      assert(folded.getMessage.contains(f.getFileName.toString), folded.getMessage)
+    }
+    Files.write(f, bytes.take(bytes.length / 2))
+    sameFailure()
+    Files.delete(f)
+    sameFailure()
+  }
+
+  test("counts over unions and anti/semi joins of small table scans fold and equal the " +
+       "distributed counts; the unions and joins themselves keep their scans") {
+    val cat = smallTable()
+    cat.createTable("ns", "keys")
+    cat.commitAppend("ns", "keys", Seq(5L, 50L, 120L, 500L).toDF("id"))
+    val t = cat.read("ns", "t")
+    val k = cat.read("ns", "keys")
+    Seq(
+      "union" -> t.union(k),
+      "anti join" -> t.join(k, Seq("id"), "left_anti"),
+      "semi join" -> t.join(k, Seq("id"), "left_semi"),
+      "filtered anti join under a union" -> t.filter($"id" % 2 === 0)
+        .join(k, Seq("id"), "left_anti").union(k.select(($"id" + 1).as("id")))
+    ).foreach { case (what, df) =>
+      val c = df.groupBy().count()
+      assert(c.queryExecution.optimizedPlan.isInstanceOf[LocalRelation], s"the $what count")
+      val (n, jobs) = withJobs(c.collect().head.getLong(0))
+      assert(jobs.isEmpty, s"the $what count ran jobs: $jobs")
+      assert(n === unfolded(df.count()), what)
+      assert(!df.queryExecution.optimizedPlan.isInstanceOf[LocalRelation], s"the $what folded")
+      assert(df.inputFiles.nonEmpty, s"the $what lost its input files")
+    }
+  }
+
+  test("with ignoreCorruptFiles or ignoreMissingFiles set the count stands aside and " +
+       "gives the distributed count's answer") {
+    val cat = smallTable()
+    val f = firstFile(cat)
+    val bytes = Files.readAllBytes(f)
+    Files.write(f, bytes.take(bytes.length / 2))
+    Files.deleteIfExists(f.resolveSibling(s".${f.getFileName}.crc"))
+    Seq("spark.sql.files.ignoreCorruptFiles" -> "corrupt",
+        "spark.sql.files.ignoreMissingFiles" -> "missing").foreach { case (key, what) =>
+      if (what == "missing") Files.delete(f)
+      spark.conf.set(key, "true")
+      try {
+        val df = cat.read("ns", "t").groupBy().count()
+        assert(!df.queryExecution.optimizedPlan.isInstanceOf[LocalRelation],
+          s"a count ignoring $what files folded")
+        val n = df.collect().head.getLong(0)
+        assert(n === unfolded(cat.read("ns", "t").count()))
+        assert(n < 150L, s"the $what file was counted")
+      } finally spark.conf.unset(key)
+    }
+  }
+
+  test("a folded count sees the version its frame was built on: a fresh read after a " +
+       "commit or an expiry counts the new head, an older frame its own version") {
+    val cat = smallTable()
+    val before = cat.read("ns", "t")
+    cat.commitAppend("ns", "t", (151L to 160L).toDF("id"))
+    val afterCommit = cat.read("ns", "t")
+    cat.expireSnapshots("ns", "t", retainLast = 1)
+    cat.commitAppend("ns", "t", (161L to 165L).toDF("id"))
+    cat.expireSnapshots("ns", "t", retainLast = 1)
+    val (counts, jobs) = withJobs(
+      (before.count(), afterCommit.count(), cat.read("ns", "t").count()))
+    assert(counts === ((150L, 160L, 165L)))
+    assert(jobs.isEmpty, s"folded counts ran jobs: $jobs")
   }
 }

@@ -460,6 +460,29 @@ class GeoReplicationSpec extends SparkSpec {
     assert(replica.readVisible("ns", "t").as[Long].collect().sorted === (0L to 5L).toArray)
   }
 
+  test("a promotion landing between a retention pass's read of the versions and its " +
+       "expiry survives the expiry with every version above it; a promotion of an " +
+       "expired version is refused") {
+    val svc = warmService()
+    val replica = svc.regions("eu-west-1")
+    (1L to 3L).foreach(i => svc.coordinateWrite("ns", "t", Seq(i).toDF("id"), "us-east-1"))
+    assert(svc.processPendingEvents("eu-west-1") === ((6, 0)))
+    // the retention pass reads the versions, with none promoted yet ...
+    val found = replica.snapshots("ns", "t").map(_.seq)
+    assert(found.size === 4 && replica.publishedSeq("ns", "t").isEmpty)
+    // ... a promotion lands ...
+    val promoted = found(1)
+    svc.verifyAndPromote("ns", "t", "eu-west-1", promoted, visibleAtMs = 0L)
+    // ... and the expiry it computed from its stale read runs
+    replica.expireBefore("ns", "t", found.last)
+    assert(replica.snapshots("ns", "t").map(_.seq) === found.drop(1))
+    assert(replica.readVisible("ns", "t").as[Long].collect().sorted === Array(0L, 1L))
+    // the other order: the version is gone before its promotion
+    val e = intercept[IllegalArgumentException](replica.setVisibility("ns", "t", found(0), 0L))
+    assert(e.getMessage.contains(s"no version ${found(0)}"), e.getMessage)
+    assert(replica.publishedSeq("ns", "t") === Some(promoted))
+  }
+
   test("a sync batch copies on the driver within the replica's target file size and " +
        "distributed past it; a truncated destination is re-copied on both paths") {
     val svc = warmService()
@@ -755,6 +778,21 @@ class GeoReplicationSpec extends SparkSpec {
       (svc.pendingEvents("eu-west-1").count(), svc.failedEvents("eu-west-1").count()))
     assert(counts === ((2L, 0L)))
     assert(countJobs.isEmpty, s"event counts ran jobs: $countJobs")
+  }
+
+  test("a routed read's count on a replica under the driver-read bound starts no Spark " +
+       "job, and its rows still come from a file scan") {
+    val svc = warmService()
+    (1L to 5L).foreach { i =>
+      svc.coordinateWrite("ns", "t", Seq(2 * i, 2 * i + 1).toDF("id"), "us-east-1")
+    }
+    assert(svc.processPendingEvents("eu-west-1") === ((10, 0)))
+    val (n, jobs) = withJobs(svc.readRouted("ns", "t", Some("eu-west-1")).count())
+    assert(n === 11L)
+    assert(jobs.isEmpty, s"a small routed count ran jobs: $jobs")
+    val read = svc.readRouted("ns", "t", Some("eu-west-1"))
+    assert(read.inputFiles.length === 6, "a bare read stays a file scan")
+    assert(read.as[Long].collect().sorted === (0L +: (2L to 11L)).toArray)
   }
 
   test("a table past 32 staged commits and 32 manifests keeps a job-free orphan-GC " +

@@ -553,4 +553,72 @@ class PlanSpec extends SparkSpec {
     assert(p.contains("BroadcastHashJoin"), s"threshold join not broadcast:\n$p")
     assert(!p.contains("SortMergeJoin"), s"per-group threshold degraded to SMJ:\n$p")
   }
+
+  // ---- small catalog reads: FoldLocalRelations' driver-read bound ----
+
+  private def freshCatalog(): graft.catalog.GraftCatalog =
+    new graft.catalog.GraftCatalog(spark,
+      java.nio.file.Files.createTempDirectory("graft-plan").toString)
+
+  /** `df`'s count: its value, whether it folded into one driver-local
+    * relation, and its executed plan. */
+  private def countPlan(df: org.apache.spark.sql.DataFrame): (Long, Boolean, String) = {
+    val c = df.groupBy().count()
+    val n = c.collect().head.getLong(0)
+    (n, c.queryExecution.optimizedPlan
+      .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation],
+      c.queryExecution.executedPlan.toString)
+  }
+
+  test("a count over a table past the driver-read bound still plans FileScan parquet") {
+    import org.apache.spark.sql.functions.col
+    val cat = freshCatalog()
+    cat.createTable("ns", "big")
+    // scrambled longs: incompressible, about 8 bytes a row
+    cat.commitAppend("ns", "big", spark.range(0, 200000, 1, 2)
+      .select((col("id") * 2654435761L % 1000000007L).as("x")))
+    val head = cat.latest("ns", "big").get
+    assert(cat.dataFileEntries("ns", "big", head).map(_._2).sum >
+      graft.catalog.GraftCatalog.LocalFilesTableBytes)
+    val (n, folded, p) = countPlan(cat.read("ns", "big"))
+    assert(n === 200000L)
+    assert(!folded && p.contains("FileScan parquet"), s"a large count left its scan:\n$p")
+  }
+
+  test("a positional-delete read keeps its scan; an equality-delete count over small " +
+       "files folds on the driver with the right answer, and the bare read keeps its scan") {
+    import org.apache.spark.sql.functions.col
+    import spark.implicits._
+    val cat = freshCatalog()
+    Seq("pos", "eq").foreach { t =>
+      cat.createTable("ns", t)
+      cat.commitAppend("ns", t, (1L to 40L).toDF("id"))
+      cat.commitAppend("ns", t, (41L to 60L).toDF("id"))
+    }
+    cat.commitDeletePositions("ns", "pos", cat.positionsWhere("ns", "pos", col("id") <= 5L))
+    val (posN, posFolded, posPlan) = countPlan(cat.read("ns", "pos"))
+    assert(posN === 55L)
+    assert(!posFolded && posPlan.contains("FileScan parquet"),
+      s"a position-delete read left its scan:\n$posPlan")
+
+    cat.commitDelete("ns", "eq", Seq(3L, 45L, 99L).toDF("id"))
+    cat.commitAppend("ns", "eq", Seq(3L, 61L).toDF("id"))
+    val (eqN, eqFolded, eqPlan) = countPlan(cat.read("ns", "eq"))
+    assert(eqN === 60L, "two deleted, one re-appended, one new")
+    assert(eqFolded, s"a small equality-delete count did not fold:\n$eqPlan")
+    val (n, jobs) = withJobs(cat.read("ns", "eq").count())
+    assert(n === 60L)
+    assert(jobs.isEmpty, s"a small equality-delete count ran jobs: $jobs")
+    val (filteredN, filteredFolded, _) = countPlan(cat.read("ns", "eq").filter(col("id") > 40L))
+    assert(filteredN === 20L && filteredFolded, "a filtered equality-delete count")
+    // only a count folds over the scans: the read itself keeps them
+    val read = cat.read("ns", "eq")
+    spark.conf.set("spark.sql.optimizer.excludedRules", "graft.plans.FoldLocalRelations")
+    val unfoldedFiles = try cat.read("ns", "eq").inputFiles.sorted
+      finally spark.conf.unset("spark.sql.optimizer.excludedRules")
+    assert(unfoldedFiles.nonEmpty && read.inputFiles.sorted === unfoldedFiles,
+      s"the bare equality-delete read lost its input files: ${read.inputFiles.toSeq}")
+    assert(read.queryExecution.executedPlan.toString.contains("FileScan parquet"))
+    assert(read.as[Long].collect().sorted === ((1L to 61L).filter(i => i != 45L)).toArray)
+  }
 }
