@@ -1704,10 +1704,16 @@ final class GraftCatalog(val spark: SparkSession, val warehouse: String) {
           // has since freed: the link then succeeds BELOW the head. Expiry
           // deletes oldest first, so a slot is free only once its
           // predecessor is gone too — while that one stands, the link is
-          // a plain commit and no listing is paid
+          // a plain commit and no listing is paid. A version above the
+          // link whose parent IS this commit is a racing committer that
+          // built on it (the first commit of a table has no predecessor
+          // either), not a sign of a freed slot
           val resurrected =
-            (snap.seq == 0 || !Files.exists(target(snap.seq - 1))) &&
-              readLog(ns, name, ref).head.exists(_.seq > snap.seq)
+            (snap.seq == 0 || !Files.exists(target(snap.seq - 1))) && {
+              val log = readLog(ns, name, ref)
+              log.head.exists(_.seq > snap.seq) && !log.commits.exists(s =>
+                s.seq == snap.seq + 1 && s.parentId.contains(snap.commitId))
+            }
           if (!resurrected) return snap
           snapshotCache.remove(target(snap.seq).toAbsolutePath)
           Files.deleteIfExists(target(snap.seq))

@@ -1,13 +1,18 @@
 package graft.catalog
 
+import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, Path => HPath}
+import org.apache.hadoop.mapred.JobConf
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.execution.datasources.{FileFormat, FileIndex, PartitionDirectory, PartitionedFile}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader}
 import org.apache.spark.sql.execution.datasources.v2.FileDataSourceV2
 import org.apache.spark.sql.types.StructType
 
@@ -68,7 +73,12 @@ private[graft] object ManifestFileIndex {
     * the next opens, and a file that fails to read fails the call with
     * the error a scan task raises for it. No job, no listing. Both driver
     * reads go through it: [[GraftCatalog.localRows]] and the scan input
-    * of [[graft.plans.FoldLocalRelations]]. */
+    * of [[graft.plans.FoldLocalRelations]].
+    *
+    * A Parquet read of no column (the scan under a bare count) reads only
+    * each file's footer and emits one empty row per row the footer's row
+    * groups record, as Spark's own Parquet COUNT pushdown does; the rows
+    * a scan task returns for it are the same, since no filter is pushed. */
   def readOnDriver(spark: SparkSession, format: FileFormat, dataSchema: StructType,
                    required: StructType, options: Map[String, String],
                    files: Seq[FileStatus])(f: InternalRow => Unit): Unit = {
@@ -99,6 +109,16 @@ private[graft] object ManifestFileIndex {
   private val readers = new java.util.WeakHashMap[SparkSession,
       java.util.LinkedHashMap[ReaderKey, Reader]]()
 
+  /** The cached driver reader for one (session conf, format, schemas,
+    * options). It is built over a `JobConf`: Spark's per-file
+    * `TaskAttemptContextImpl` wraps a `JobConf` as is and copies any other
+    * `Configuration` whole, once per file read. Every read of this reader,
+    * from any thread, therefore shares that one conf. That is safe
+    * because the reader is built with no pushed filters, and Spark's
+    * Parquet reader mutates its per-file context conf only to push them
+    * (`ParquetInputFormat.setFilterPredicate`); every other use of it is
+    * a read. A column-less Parquet read sums footers instead
+    * ([[footerRows]]) over the same conf. */
   private def reader(spark: SparkSession, format: FileFormat, dataSchema: StructType,
                      required: StructType, options: Map[String, String]): Reader = {
     val key = ReaderKey(spark.sessionState.conf.getAllConfs, format.getClass,
@@ -109,11 +129,28 @@ private[graft] object ManifestFileIndex {
           size() > 16
       }))
     cache.synchronized(Option(cache.get(key))).getOrElse {
-      val built = format.buildReaderWithPartitionValues(spark, dataSchema, new StructType(),
-        required, Nil, options + (FileFormat.OPTION_RETURNING_BATCH -> "false"),
-        spark.sessionState.newHadoopConfWithOptions(options))
+      val conf = new JobConf(spark.sessionState.newHadoopConfWithOptions(options))
+      val built: Reader = format match {
+        case _: ParquetFileFormat if required.isEmpty => footerRows(conf)
+        case _ => format.buildReaderWithPartitionValues(spark, dataSchema, new StructType(),
+          required, Nil, options + (FileFormat.OPTION_RETURNING_BATCH -> "false"), conf)
+      }
       cache.synchronized(cache.put(key, built))
       built
+    }
+  }
+
+  /** A column-less Parquet read: the rows of each file's row groups, as
+    * many empty rows, from its footer alone (the row groups a whole-file
+    * split reads: all of them). */
+  private def footerRows(conf: Configuration)(file: PartitionedFile): Iterator[InternalRow] = {
+    val footer = ParquetFooterReader.readFooter(HadoopInputFile.fromStatus(
+      new FileStatus(file.fileSize, false, 0, 0L, file.modificationTime, file.toPath), conf),
+      ParquetFooterReader.buildFilter(conf, file, false))
+    var left = footer.getBlocks.asScala.map(_.getRowCount).sum
+    new Iterator[InternalRow] {
+      def hasNext: Boolean = left > 0
+      def next(): InternalRow = { left -= 1; InternalRow.empty }
     }
   }
 }

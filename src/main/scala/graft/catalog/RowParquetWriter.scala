@@ -1,11 +1,12 @@
 package graft.catalog
 
+import java.nio.file.{Files, Paths}
+
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.parquet.hadoop.ParquetWriter
 import org.apache.parquet.hadoop.api.WriteSupport
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
-import org.apache.parquet.hadoop.util.HadoopOutputFile
+import org.apache.parquet.io.LocalOutputFile
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.catalyst.{InternalRow, ProjectingInternalRow}
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast, Literal, UnsafeProjection, UnsafeRow}
@@ -35,6 +36,14 @@ import org.apache.spark.util.SerializableConfiguration
   * `GraftCatalog.stringBounds`, so both producers record identical
   * bounds).
   *
+  * Files are created through java.nio (Parquet's `LocalOutputFile`,
+  * buffered, `CREATE_NEW`), not a Hadoop `FileSystem`: every table
+  * path is a local path under the catalog's warehouse, and Hadoop's
+  * `LocalFileSystem` without its native library starts two `chmod`
+  * processes per file (the file and its `.crc` sidecar), about 6.6 ms
+  * a file against 0.45 ms through java.nio. No sidecar is written; a
+  * Hadoop read of a file without one skips checksum verification.
+  *
   * Rows may be WIDER than `schema`: the fields after it carry values
   * the commit records but never writes — first one value per `derived`
   * stat (min/max recorded under its key, e.g. a partition's bucket),
@@ -45,6 +54,8 @@ private[graft] final class RowParquetWriter(absPath: String,
                                             conf: Configuration,
                                             derived: Seq[(String, DataType)] = Nil,
                                             blooms: Seq[String] = Nil) {
+
+  private val file = Paths.get(absPath)
 
   private val writer: ParquetWriter[InternalRow] = {
     val c = new Configuration(conf)
@@ -60,8 +71,8 @@ private[graft] final class RowParquetWriter(absPath: String,
     c.set("spark.sql.parquet.int96RebaseModeInWrite", "CORRECTED")
     c.set("spark.sql.parquet.fieldId.write.enabled", "true")
     c.set("spark.sql.parquet.variant.annotateLogicalType.enabled", "false")
-    new RowParquetWriter.Builder(
-      HadoopOutputFile.fromPath(new HPath(absPath), c))
+    Files.createDirectories(file.getParent)
+    new RowParquetWriter.Builder(new LocalOutputFile(file))
       .withConf(c)
       .withCompressionCodec(CompressionCodecName.SNAPPY)
       .build()
@@ -129,8 +140,7 @@ private[graft] final class RowParquetWriter(absPath: String,
     * bloom — exactly the re-read job's behavior. */
   def close(): RowParquetWriter.Written = {
     writer.close()
-    val p = new HPath(absPath)
-    val size = p.getFileSystem(conf).getFileStatus(p).getLen
+    val size = Files.size(file)
     def str(v: Any, dt: DataType): String = dt match {
       // timestamps record tz-stable epoch MICROS — the catalyst value
       // itself — matching the re-read job's unix_micros form
@@ -154,10 +164,7 @@ private[graft] final class RowParquetWriter(absPath: String,
 
   def abort(): Unit = {
     try writer.close() catch { case _: Exception => () }
-    try {
-      val p = new HPath(absPath)
-      p.getFileSystem(conf).delete(p, false): Unit
-    } catch { case _: Exception => () }
+    try Files.deleteIfExists(file): Unit catch { case _: Exception => () }
   }
 }
 
@@ -251,10 +258,8 @@ private[graft] object RowParquetWriter {
         if (w != null) w.abort()
         // this attempt's finished files are referenced by no result
         out.foreach { case (r, _) =>
-          try {
-            val p = new HPath(s"$tableDirAbs/$r")
-            p.getFileSystem(conf.value).delete(p, false): Unit
-          } catch { case _: Exception => () }
+          try Files.deleteIfExists(Paths.get(tableDirAbs, r)): Unit
+          catch { case _: Exception => () }
         }
         throw e
       }

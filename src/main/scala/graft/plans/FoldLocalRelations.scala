@@ -54,7 +54,8 @@ import graft.catalog.{GraftCatalog, ManifestFileIndex}
   * relation's format, data schema, pruned required schema, options and
   * Hadoop conf), and its rows are streamed through the tree and counted:
   * nothing but a join's right-side key set is held. For a bare count
-  * that reads the footers and row groups' row counts, as the task does.
+  * that reads only the files' footers and sums their row groups' row
+  * counts, as Spark's Parquet COUNT pushdown does.
   * The tree is checked whole, a join's keys first, before any file is
   * read, so a fold never reads and then gives up. Anything other than a
   * count over a scan stays a scan — a bare, projected, filtered or

@@ -1,12 +1,17 @@
 package graft.sources
 
+import java.nio.file.{Files, StandardCopyOption}
+
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileStatus, FileSystem, FileUtil, Path => HPath}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, FileUtil, LocalFileSystem, Path => HPath}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Storage operators (SURVEY §2.2, S1-S11) over Hadoop FileSystem — the
-  * same API that fronts S3/HDFS/local on a real cluster.
+  * same API that fronts S3/HDFS/local on a real cluster — except where a
+  * file copy has both ends on the local file system: that copy goes
+  * through java.nio ([[copyFile]]), since Hadoop's local file system
+  * starts `chmod` processes for every file it creates.
   *
   * Single-file ops are driver-side conveniences; the operators that matter
   * at 100 TB are the table-valued ones:
@@ -192,33 +197,49 @@ object StorageOps {
   private final case class FileCopy(copied: Boolean, srcLen: Long, dstLen: Long)
 
   /** Copy `src` to `dst` unless `dst` already holds src's length — the
-    * per-file body every copy path shares. */
+    * per-file body every copy path shares. The bytes go to a temp
+    * sibling that is then renamed onto `dst`, so `dst` is either absent
+    * or COMPLETE, never a partial file another worker's exists-guard
+    * would wrongly trust. When both ends are on a `LocalFileSystem` the
+    * copy and the rename go through java.nio (`Files.copy`, an atomic
+    * move): Hadoop's local file system without its native library starts
+    * two `chmod` processes for each file it creates (the file and its
+    * `.crc` sidecar). Any other file system copies through Hadoop. */
   private def copyFile(src: HPath, dst: HPath, conf: Configuration): FileCopy = {
     val dstFs = dst.getFileSystem(conf)
     val srcFs = src.getFileSystem(conf)
     // the exists-guard also re-copies a SIZE-MISMATCHED dst: a crash
     // mid-copy used to leave a truncated dst that the guard then
-    // treated as done — permanent silent corruption
+    // treated as done — permanent silent corruption. The delete goes
+    // through Hadoop, so a stale `.crc` sidecar goes with it: a
+    // sidecar-less copy beside it would fail checksum verification
     val srcLen = srcFs.getFileStatus(src).getLen
     val stale = dstFs.exists(dst) && dstFs.getFileStatus(dst).getLen != srcLen
     if (stale) dstFs.delete(dst, false)
-    val renamed = (stale || !dstFs.exists(dst)) && {
-      dstFs.mkdirs(dst.getParent)
-      // write to a temp sibling and rename: dst is either absent or
-      // COMPLETE, never a partial file another worker's exists-guard
-      // would wrongly trust
-      val tmp = new HPath(dst.getParent,
-        s"._tmp_${dst.getName}.${java.util.UUID.randomUUID()}")
-      try {
-        FileUtil.copy(srcFs, src, dstFs, tmp, false, conf)
-        val ok = dstFs.rename(tmp, dst)
-        if (!ok && !dstFs.exists(dst))
-          throw new java.io.IOException(s"rename $tmp -> $dst failed")
-        ok
-      } finally { if (dstFs.exists(tmp)) dstFs.delete(tmp, false): Unit }
-    }
-    // a lost rename race (speculative task, retry) means the OTHER worker
-    // owns the copy — it does not count as copied here
+    val tmpName = s"._tmp_${dst.getName}.${java.util.UUID.randomUUID()}"
+    val renamed = (stale || !dstFs.exists(dst)) && ((srcFs, dstFs) match {
+      case (s: LocalFileSystem, d: LocalFileSystem) =>
+        val to = d.pathToFile(dst).toPath
+        val tmp = to.resolveSibling(tmpName)
+        Files.createDirectories(to.getParent)
+        try {
+          Files.copy(s.pathToFile(src).toPath, tmp)
+          Files.move(tmp, to, StandardCopyOption.ATOMIC_MOVE)
+          true
+        } finally Files.deleteIfExists(tmp): Unit
+      case _ =>
+        dstFs.mkdirs(dst.getParent)
+        val tmp = new HPath(dst.getParent, tmpName)
+        try {
+          FileUtil.copy(srcFs, src, dstFs, tmp, false, conf)
+          // a lost rename race (speculative task, retry) means the OTHER
+          // worker owns the copy — it does not count as copied here
+          val ok = dstFs.rename(tmp, dst)
+          if (!ok && !dstFs.exists(dst))
+            throw new java.io.IOException(s"rename $tmp -> $dst failed")
+          ok
+        } finally { if (dstFs.exists(tmp)) dstFs.delete(tmp, false): Unit }
+    })
     FileCopy(renamed, srcLen, dstFs.getFileStatus(dst).getLen)
   }
 

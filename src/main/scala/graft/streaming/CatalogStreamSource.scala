@@ -133,9 +133,23 @@ class GraftTableSourceProvider extends StreamSourceProvider with DataSourceRegis
             case _ => None
           }
         }
+      // `latest` is the table's head when the query STARTED: Spark writes
+      // the checkpoint's `metadata` file in `start()`, on the caller's
+      // thread, but creates this source later on the stream's own thread.
+      // Resolving the head here instead would skip every commit that lands
+      // between the two. Without that file, the head now
+      def latestAtQueryStart(): Long = {
+        val meta = new org.apache.hadoop.fs.Path(dir.getParent.getParent, "metadata")
+        val startedAt =
+          try Some(meta.getFileSystem(hconf).getFileStatus(meta).getModificationTime)
+          catch { case _: java.io.IOException => None }
+        startedAt.fold(cat.latest(ns, t).map(_.seq)) { at =>
+          cat.snapshots(ns, t).filter(_.timestampMs < at).map(_.seq).maxOption
+        }.getOrElse(-1L)
+      }
       def claim(attempt: Int): Long = {
         val resolved = parameters.getOrElse("starting-seq", "latest") match {
-          case "latest"   => cat.latest(ns, t).map(_.seq).getOrElse(-1L)
+          case "latest"   => latestAtQueryStart()
           case "earliest" => -1L
           case n          => n.toLong
         }

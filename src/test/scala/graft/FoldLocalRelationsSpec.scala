@@ -3,6 +3,8 @@ package graft
 import java.nio.file.Files
 import java.sql.{Date, Timestamp}
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 
@@ -228,5 +230,80 @@ class FoldLocalRelationsSpec extends SparkSpec {
       (before.count(), afterCommit.count(), cat.read("ns", "t").count()))
     assert(counts === ((150L, 160L, 165L)))
     assert(jobs.isEmpty, s"folded counts ran jobs: $jobs")
+  }
+
+  /** The row counts of a Parquet file's row groups, from its footer. */
+  private def rowGroups(f: java.nio.file.Path): Seq[Long] = {
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(f.toUri), spark.sparkContext.hadoopConfiguration))
+    try reader.getRowGroups.asScala.map(_.getRowCount).toSeq finally reader.close()
+  }
+
+  private def foldedCount(cat: GraftCatalog, name: String): Long = {
+    val (n, jobs) = withJobs(cat.read("ns", name).count())
+    assert(jobs.isEmpty, s"the count of $name ran jobs: $jobs")
+    assert(n === unfolded(cat.read("ns", name).count()), s"the count of $name")
+    n
+  }
+
+  test("a folded count reads footers: a zero-row file counts 0 and a landed file of " +
+       "several row groups counts them all, as the distributed count does") {
+    val cat = freshCatalog()
+    cat.createTable("ns", "e")
+    cat.commitAppend("ns", "e", Seq.empty[Long].toDF("id"))
+    val Seq(empty) = cat.dataFiles("ns", "e", cat.latest("ns", "e").get)
+    assert(rowGroups(cat.tablePath("ns", "e").resolve(empty)) === Nil)
+    assert(foldedCount(cat, "e") === 0L)
+    cat.commitAppend("ns", "e", Seq(1L, 2L, 3L).toDF("id"))
+    assert(foldedCount(cat, "e") === 3L)
+
+    val out = Files.createTempDirectory("graft-fold-groups").resolve("out")
+    spark.range(0, 3000, 1, 1).selectExpr("id", "uuid() AS s")
+      .write.option("parquet.block.size", "16384").parquet(out.toString)
+    val part = {
+      val listed = Files.list(out)
+      try listed.iterator().asScala.filter(_.getFileName.toString.endsWith(".parquet")).toSeq
+      finally listed.close()
+    }
+    assert(part.size === 1)
+    cat.createTable("ns", "landed")
+    // a first append records the schema the landed file is read under
+    cat.commitAppend("ns", "landed", Seq((-1L, "first")).toDF("id", "s"))
+    val rel = "data/landed-0.parquet"
+    Files.copy(part.head, cat.tablePath("ns", "landed").resolve(rel))
+    cat.commitLandedFiles("ns", "landed", Seq(rel), "local")
+    val groups = rowGroups(cat.tablePath("ns", "landed").resolve(rel))
+    assert(groups.size > 1, s"one row group: $groups")
+    assert(foldedCount(cat, "landed") === 3001L)
+  }
+
+  test("the driver reader's shared conf: localRows from 4 threads at once return the " +
+       "rows of sequential reads") {
+    val cat = freshCatalog()
+    cat.createTable("ns", "c")
+    (0 until 8).foreach { i =>
+      cat.commitAppend("ns", "c",
+        (i * 50L until (i + 1) * 50L).map(n => (n, s"v$n", n * 0.5)).toDF("id", "s", "x"))
+    }
+    val head = cat.latest("ns", "c").get
+    def read(): Seq[String] =
+      cat.localRows("ns", "c", head, head.manifests).map(_.toString).sorted
+    val sequential = read()
+    assert(sequential.size === 400)
+    assert(read() === sequential)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+    try {
+      val start = new java.util.concurrent.CountDownLatch(1)
+      val reads = (1 to 4).map { _ =>
+        pool.submit(new java.util.concurrent.Callable[Seq[Seq[String]]] {
+          def call(): Seq[Seq[String]] = { start.await(); (1 to 5).map(_ => read()) }
+        })
+      }
+      start.countDown()
+      reads.flatMap(_.get(120, java.util.concurrent.TimeUnit.SECONDS)).foreach { got =>
+        assert(got === sequential)
+      }
+    } finally pool.shutdownNow()
   }
 }

@@ -833,8 +833,7 @@ class GeoReplicationSpec extends SparkSpec {
     val sys = svc.regions("us-east-1")
     val data = sys.tablePath("_system", "sync_events").resolve("data")
     val listed = Files.list(data)
-    val onDisk = try listed.iterator().asScala.map(p => s"data/${p.getFileName}")
-                   .filterNot(_.endsWith(".crc")).toSet
+    val onDisk = try listed.iterator().asScala.map(p => s"data/${p.getFileName}").toSet
                  finally listed.close()
     val head = sys.latest("_system", "sync_events").get
     val live = (sys.dataFileEntries("_system", "sync_events", head) ++

@@ -645,7 +645,7 @@ class RowLevelOpsSpec extends SparkSpec {
     def onDisk(): Set[String] = {
       val s = Files.walk(root.resolve("data"))
       try s.iterator().asScala.filter(Files.isRegularFile(_))
-        .map(p => root.relativize(p).toString).filterNot(_.endsWith(".crc")).toSet
+        .map(p => root.relativize(p).toString).toSet
       finally s.close()
     }
     val flat = "data/[^/]+\\.parquet".r

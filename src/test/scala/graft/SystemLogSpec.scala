@@ -100,7 +100,7 @@ class SystemLogSpec extends SparkSpec {
       val root = sys.tablePath("_system", name)
       val head = sys.latest("_system", name).get
       val onDisk = walk(root.resolve("data")).map(p => root.relativize(p).toString)
-      assert(onDisk.filterNot(_.endsWith(".crc")).toSet ===
+      assert(onDisk.toSet ===
         sys.dataFiles("_system", name, head).toSet, s"$name data files on disk")
       assert(walk(root.resolve("_meta/manifests")).map(p => root.relativize(p).toString).toSet ===
         head.manifests.toSet, s"$name manifests on disk")
